@@ -6,14 +6,26 @@ The driver materializes a TPC-H-ish star schema plus ``events`` /
 future move to partitioned/bucketed layouts (or HDFS paths — the reference
 deploys HDFS but never writes to it, ``hdfs/docker-compose.yml:4-49``) is a
 one-file change.
+
+Each table's parquet schema is resolved once per ``SparkSession``:
+inferring it from the footer costs one Spark job per load, so ``load``
+keeps the ``StructType`` in a per-session memo and hands it to the reader
+on later loads. An entry is keyed by the table path and holds the file
+status it was inferred from (``st_size``, ``st_mtime_ns``; for a directory
+written by Spark, those of every file under it), so a table rewritten at
+the same path is re-inferred. Paths that are not on the local filesystem
+are read without the memo.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -33,6 +45,46 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
+
+# session -> {path: (file status, schema)}. Leg threads that miss on the
+# same path together each infer it once; the schemas they store are equal.
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[tuple, StructType]]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _file_status(path: str) -> tuple | None:
+    """What a rewrite of ``path`` changes: size and mtime of the file, or
+    of every file under a directory. None when ``path`` is not local."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return st.st_size, st.st_mtime_ns
+        return tuple(
+            sorted(
+                (os.path.join(d, f), s.st_size, s.st_mtime_ns)
+                for d, _, files in os.walk(path)
+                for f in files
+                for s in (os.stat(os.path.join(d, f)),)
+            )
+        )
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema from the session's
+    memo when the file status still matches."""
+    status = _file_status(path)
+    if status is None:
+        return spark.read.parquet(path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == status:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[path] = (status, df.schema)
+    return df
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -57,14 +109,14 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # with the UTC pin above, the NTZ→LTZ cast is value-preserving and
         # matches DuckDB's naive reading.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:

@@ -27,152 +27,71 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 # The driver walks ``queries()`` in dict order and checks exactly the
-# first 50 entries per round (each CORRECTNESS_r0N covers 50). Order is
-# therefore a correctness lever. Round-14 rotation (EXECUTES, name-for-
-# name, the plan the round-13 head froze and the round-13 VERDICT
-# ratified as its #1 ask — the judge independently re-derived the
-# census from CORRECTNESS_r0{1..13}.json and confirmed the enumeration,
-# the 7-name r6 straggler set, and the 19-name post-r14 tail exact;
-# `python tools/rotation.py verify` machine-checks this head, and the
-# derivation is reproduced by `tools/rotation.py next` run at the
-# round-13 post-driver state): 12 never-driver-checked round-13
-# additions + the 7 remaining r6-vintage greens + the alphabetically-
-# first 31 of the 50 r7-vintage greens = 50.
-#
-# Head composition:
-# - positions 0-11: the 12 round-13 additions, in landing order — the
-#   only queries that have never had a driver row (each selfchecked
-#   tuned AND vanilla the day it landed; the round-13 VERDICT
-#   independently re-verified all 12 under the vanilla driver-like
-#   session: 12/12 pass);
-# - positions 12-18: the 7 r6-vintage stragglers, alphabetical
-#   (top_sources_with_other .. weighted_sample_wor) — retiring the r6
-#   vintage completely;
-# - positions 19-49: the alphabetically-first 31 of the 50 r7-vintage
-#   greens (ab_test_uplift .. minhash_signatures).
-#
-# CAPACITY WARNING: the head is at exactly 50 entries. Anything past
-# position 49 gets no driver row this round — add new queries by
-# REPLACING a proven-green head entry, never by growing past 50. Per
-# the standing convention, round-14 additions are BATCHED (<=13) and
-# queue for round 15, NOT the head.
-#
-# ROUND-15 ROTATION PLAN (FROZEN at round-14 close; derived and
-# machine-checked by `python tools/rotation.py next` at the round-14
-# pre-driver state — after ask #1's lifecycle fix the tool's derivation
-# is the authority, and the same command re-run at the round-14
-# post-driver state must reproduce this enumeration exactly.
-# Arithmetic: 11 round-14 additions + the 19 remaining r7-vintage
-# greens + the alphabetically-first 20 of the r8-vintage greens = 50):
-#
-# ROUND-15 AMENDMENT (the r14 VERDICT's ask #4, landed at r15 open):
-# the judge directed that ``lsh_band_sweep`` and ``dedup_release_gate``
-# — the two r14-rewritten plans whose semantic arguments were verified
-# only by the builder's selfcheck — get driver-oracle rows THIS round.
-# They are green at r12 vintage, so the convention alone would not
-# rotate them in for several rounds. The mechanism is PRIORITY_PINS
-# below: judge-directed names slot immediately after the never-checked
-# prefix, displacing the alphabetically-LAST refreshes (here the r8
-# greens domain_doc_stats and eb_shrunk_supplier_rates, which queue for
-# round 16). ``tools/rotation.py verify`` machine-checks the pinned
-# form; the pin list resets each round (a pinned name lands a fresh
-# vintage, so the convention reabsorbs it naturally).
-#   positions 0-10  — the 11 round-14 additions (the backfill /
-#     reprocessing family), in landing (= registration) order:
-#     backfill_dirty_state, backfill_plan, backfill_day_census,
-#     backfill_cost_by_granularity, backfill_priority_schedule,
-#     backfill_chunk_plan, idempotent_replay_audit,
-#     backfill_restatement_summary, reprocessing_watermark,
-#     backfill_verification_diff, backfill_release_gate;
-#   positions 11-29 — the 19 r7 stragglers, alphabetical:
-#     naive_bayes_source_classifier, order_value_percentiles,
-#     pca_power_iteration, pivot_status_by_priority,
-#     recsys_holdout_hitrate, retrieval_mrr_eval, scd2_status_history,
-#     seasonal_naive_backtest, semantic_decontamination,
-#     sketch_join_size_estimate, slo_burn_rate,
-#     sql_cte_above_nation_avg, supplier_shipping_latency,
-#     textrank_keywords, theil_sen_trend, train_test_split,
-#     typo_variant_pairs, udaf_median_order_value, zipf_exponent_fit
-#     — retiring the r7 vintage completely;
-#   positions 30-49 — the alphabetically-first 20 r8-vintage greens:
-#     anova_f_segment_spend, average_precision_holdout,
-#     bradley_terry_nation_strength, brown_forsythe_spend_variance,
-#     calibration_ece_bins, capture_recapture_population,
-#     chao1_vocab_coverage, cochran_armitage_trend,
-#     cohens_kappa_agreement, conformal_interval_coverage,
-#     corpus_end_to_end, corpus_temperature_mix, cross_join_enumeration,
-#     crossval_auc_folds, cuped_adjusted_uplift, date_features,
-#     decile_lift_table, degree_assortativity_trade, domain_doc_stats,
-#     eb_shrunk_supplier_rates.
-# After round 15 the stale tail continues with the remaining r8 greens.
+# first 50 entries per round (each CORRECTNESS_r0N covers 50), so order
+# is a correctness lever. The head follows the rotation convention that
+# ``python tools/rotation.py verify`` checks: never-checked additions in
+# registration order, then judge-directed pins, then the oldest-vintage
+# greens alphabetical. This head is ``python tools/rotation.py next``
+# after CORRECTNESS_r15.json landed: no additions, no pins, and 50
+# refreshes led by the two r8 greens the round-15 pins displaced
+# (domain_doc_stats, eb_shrunk_supplier_rates).
 PRIORITY_HEAD: tuple[str, ...] = (
-    # -- 0-10: the 11 round-14 additions (never driver-checked), the
-    #    backfill/reprocessing family, landing order
-    "backfill_dirty_state",
-    "backfill_plan",
-    "backfill_day_census",
-    "backfill_cost_by_granularity",
-    "backfill_priority_schedule",
-    "backfill_chunk_plan",
-    "idempotent_replay_audit",
-    "backfill_restatement_summary",
-    "reprocessing_watermark",
-    "backfill_verification_diff",
-    "backfill_release_gate",
-    # -- 11-12: the two judge-directed pins (r14 VERDICT ask #4)
-    "lsh_band_sweep",
-    "dedup_release_gate",
-    # -- 13-31: the 19 r7 stragglers, alphabetical — retiring the r7
-    #    vintage completely
-    "naive_bayes_source_classifier",
-    "order_value_percentiles",
-    "pca_power_iteration",
-    "pivot_status_by_priority",
-    "recsys_holdout_hitrate",
-    "retrieval_mrr_eval",
-    "scd2_status_history",
-    "seasonal_naive_backtest",
-    "semantic_decontamination",
-    "sketch_join_size_estimate",
-    "slo_burn_rate",
-    "sql_cte_above_nation_avg",
-    "supplier_shipping_latency",
-    "textrank_keywords",
-    "theil_sen_trend",
-    "train_test_split",
-    "typo_variant_pairs",
-    "udaf_median_order_value",
-    "zipf_exponent_fit",
-    # -- 32-49: the alphabetically-first 18 r8-vintage greens (the
-    #    frozen plan's first 20 minus the two slots the pins displaced)
-    "anova_f_segment_spend",
-    "average_precision_holdout",
-    "bradley_terry_nation_strength",
-    "brown_forsythe_spend_variance",
-    "calibration_ece_bins",
-    "capture_recapture_population",
-    "chao1_vocab_coverage",
-    "cochran_armitage_trend",
-    "cohens_kappa_agreement",
-    "conformal_interval_coverage",
-    "corpus_end_to_end",
-    "corpus_temperature_mix",
-    "cross_join_enumeration",
-    "crossval_auc_folds",
-    "cuped_adjusted_uplift",
-    "date_features",
-    "decile_lift_table",
-    "degree_assortativity_trade",
+    "domain_doc_stats",
+    "eb_shrunk_supplier_rates",
+    "events_json_decode",
+    "gini_stump_threshold",
+    "global_size_stats",
+    "hill_tail_index",
+    "ipf_raking_weights",
+    "isotonic_calibration",
+    "jarque_bera_order_values",
+    "kendall_tau_qty_discount",
+    "kmv_intersection_estimate",
+    "kneser_ney_bigram",
+    "ks_value_drift",
+    "linear_attribution_revenue",
+    "link_prediction_trade",
+    "mahalanobis_outliers",
+    "mann_whitney_segment_spend",
+    "median_ci_orderstat",
+    "metadata_extract",
+    "negative_sampling_pairs",
+    "neyman_allocation",
+    "qini_uplift_curve",
+    "risk_ratio_odds_ratio",
+    "roc_auc_holdout",
+    "sequence_packing",
+    "shapley_variance_attribution",
+    "spearman_qty_price",
+    "stratified_source_cap",
+    "string_functions_showcase",
+    "udtf_bigrams",
+    "woe_information_value",
+    "wordcount",
+    "ann_topk_cosine",
+    "anti_join_idle_customers",
+    "array_map_builders",
+    "bloom_filter_membership",
+    "cramers_v_association",
+    "customer_running_spend",
+    "dedup_char_ngram_jaccard",
+    "dedup_connected_components",
+    "dedup_embedding_cosine",
+    "dedup_exact",
+    "dedup_first_event_per_user_type",
+    "difference_in_differences",
+    "distinct_counts",
+    "doc_fingerprints",
+    "doc_pii_redaction",
+    "doc_quality_scores",
+    "durbin_watson_hourly",
+    "events_hourly_windows",
 )
 
-# Judge-directed pins for THIS round's head (r14 VERDICT ask #4): names
-# with an existing driver row that must be re-adjudicated now rather
-# than when their vintage comes up. Placed immediately after the
-# never-checked prefix; the vintage fill skips them. Reset each round.
-PRIORITY_PINS: tuple[str, ...] = (
-    "lsh_band_sweep",
-    "dedup_release_gate",
-)
+# Judge-directed pins: names with an existing CORRECTNESS row that must
+# be re-checked before their vintage comes up. They sit right after the
+# never-checked prefix, and the vintage fill skips them. Reset each round.
+PRIORITY_PINS: tuple[str, ...] = ()
 
 # Proven green in round 2 against current code: after the 50-row window.
 PRIORITY_TAIL: tuple[str, ...] = ()

@@ -9,6 +9,16 @@ Reproduces the reference's session knobs (AQE + partition coalescing,
 - a shuffle-partition default sized for the local harness but overridable
   via ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (a real cluster would set this to
   ~2-3x total cores, or rely on AQE coalescing from a high initial value).
+
+Cached plans may be re-partitioned
+(``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``). Spark's
+default keeps a persisted shuffle output at ``spark.sql.shuffle.partitions``
+partitions so that its hash partitioning stays visible to later joins; AQE
+then never coalesces the frame, and every read of a cached 100-row frame
+runs one task per shuffle partition. With the setting on, AQE coalesces the
+final shuffle read of a cached plan as it does for an uncached one. The
+trade: a join downstream of a cached frame can no longer reuse the frame's
+hash partitioning, so it may add an exchange.
 """
 
 from __future__ import annotations
@@ -47,6 +57,7 @@ def get_spark(
         # Reference parity: spark/consumer.py:23-24
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Scale posture: runtime skew handling for 100 TB joins/aggs
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow-batched pandas UDFs (the only sanctioned Python hot path)

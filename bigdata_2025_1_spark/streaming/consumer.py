@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,9 +76,11 @@ class StatsSink:
     rows: list[dict] = field(default_factory=list)
 
     def write(self, batch_id: int, stats_df: DataFrame) -> None:
+        # One literal timestamp: the parquet append and the collect are
+        # two actions, and current_timestamp() would differ between them.
         stamped = stats_df.select(
             F.lit(batch_id).cast("bigint").alias("batch_id"),
-            F.current_timestamp().alias("ts"),
+            F.lit(datetime.now(timezone.utc)).alias("ts"),
             "total_documents",
             "domains",
             "size_stats",

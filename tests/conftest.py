@@ -1,10 +1,11 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_2025_1_spark.session import get_spark  # noqa: E402
 

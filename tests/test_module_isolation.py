@@ -15,6 +15,7 @@ rest). No Spark session is needed — pyspark import cost only."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -33,7 +34,7 @@ def test_operator_module_imports_standalone(mod):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         timeout=120,
     )
     assert r.returncode == 0, f"{mod} failed standalone import:\n{r.stderr[-2000:]}"

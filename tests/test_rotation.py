@@ -20,49 +20,29 @@ def test_current_head_obeys_the_rotation_convention():
     assert verify() == []
 
 
-def test_current_head_is_the_frozen_round15_plan():
-    """The landed round-15 head is the enumeration round 14 froze,
-    amended by the r14 VERDICT's ask #4: 11 round-14 additions
-    (registration order) + the two judge-directed pins
-    (lsh_band_sweep, dedup_release_gate) + the 19 r7 stragglers + the
-    alphabetically-first 18 r8 remainders (the pins displaced the last
-    two of the frozen plan's 20)."""
+def test_current_head_is_the_frozen_round16_plan():
+    """The round-16 head is the pin-free derivation made once
+    CORRECTNESS_r15.json landed: no batched additions, so the fill leads
+    with the two r8 greens the round-15 pins displaced, retires the r8
+    vintage (32 names) and fills with the alphabetically-first 18 r9
+    greens. The round-15 pins carry r15 vintage and are absorbed."""
     from bigdata_2025_1_spark.registry import PRIORITY_HEAD, PRIORITY_PINS
 
     head = list(PRIORITY_HEAD)
     assert len(head) == HEAD_SIZE
-    assert head[:11] == [
-        "backfill_dirty_state",
-        "backfill_plan",
-        "backfill_day_census",
-        "backfill_cost_by_granularity",
-        "backfill_priority_schedule",
-        "backfill_chunk_plan",
-        "idempotent_replay_audit",
-        "backfill_restatement_summary",
-        "reprocessing_watermark",
-        "backfill_verification_diff",
-        "backfill_release_gate",
-    ]
-    assert head[11:13] == list(PRIORITY_PINS) == [
-        "lsh_band_sweep",
-        "dedup_release_gate",
-    ]
-    assert head[13] == "naive_bayes_source_classifier"
-    assert head[31] == "zipf_exponent_fit"
-    assert head[32] == "anova_f_segment_spend"
-    assert head[49] == "degree_assortativity_trade"
-    # the two names the pins displaced queue for round 16
-    assert "domain_doc_stats" not in head
-    assert "eb_shrunk_supplier_rates" not in head
+    assert PRIORITY_PINS == ()
+    assert head[:2] == ["domain_doc_stats", "eb_shrunk_supplier_rates"]
+    assert head[31] == "wordcount"
+    assert head[32] == "ann_topk_cosine"
+    assert head[49] == "events_hourly_windows"
+    assert "lsh_band_sweep" not in head
+    assert "dedup_release_gate" not in head
 
 
-def test_next_head_leads_with_the_displaced_r8_greens():
-    """Re-derive the round-16 head (pin-free — pins are one-round
-    directives; once this head lands they carry r15 vintage and the
-    convention reabsorbs them): no batched additions this round, so the
-    fill leads with the two r8 greens the pins displaced, then the rest
-    of the r8 vintage alphabetical."""
+def test_next_head_retires_the_r9_vintage():
+    """Re-derive the round-17 head: no batched additions, no overlap with
+    the current head, the 32 remaining r9 greens alphabetical, then the
+    first 18 r10 greens."""
     from bigdata_2025_1_spark.registry import PRIORITY_HEAD, all_queries
 
     latest = dict(latest_vintage())
@@ -73,9 +53,10 @@ def test_next_head_leads_with_the_displaced_r8_greens():
     nxt = derive_head(additions, latest)
     assert len(nxt) == HEAD_SIZE
     assert additions == []
-    assert nxt[:2] == ["domain_doc_stats", "eb_shrunk_supplier_rates"]
-    assert "lsh_band_sweep" not in nxt
-    assert "dedup_release_gate" not in nxt
+    assert not set(nxt) & set(PRIORITY_HEAD)
+    assert nxt[0] == "events_sliding_windows"
+    assert nxt[31] == "zorder_layout_cells"
+    assert nxt[32] == "ann_ivf_topk"
 
 
 def test_derive_head_places_pins_after_prefix_and_skips_them_in_fill():

@@ -16,11 +16,13 @@ the tool needs no per-round target table.
 from __future__ import annotations
 
 import argparse
+import os
 import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bigdata_2025_1_spark.registry as R
 from bigdata_2025_1_spark.session import get_spark
@@ -35,7 +37,7 @@ def load_old(ref: str, targets: dict[str, str]) -> dict:
     # print 0/N changed and exit 0 — a green CI gate that compared
     # nothing). Only a missing PATH at a valid ref is skippable.
     probe = subprocess.run(
-        ["git", "-C", "/root/repo", "rev-parse", "--verify", f"{ref}^{{commit}}"],
+        ["git", "-C", REPO, "rev-parse", "--verify", f"{ref}^{{commit}}"],
         capture_output=True, text=True,
     )
     if probe.returncode != 0:
@@ -47,7 +49,7 @@ def load_old(ref: str, targets: dict[str, str]) -> dict:
     try:
         for path in sorted(set(targets.values())):
             proc = subprocess.run(
-                ["git", "-C", "/root/repo", "show", f"{ref}:{path}"],
+                ["git", "-C", REPO, "show", f"{ref}:{path}"],
                 capture_output=True, text=True,
             )
             if proc.returncode != 0:
@@ -74,7 +76,7 @@ def module_path(fn) -> str:
     mod = sys.modules[fn.__module__]
     f = mod.__file__
     assert f is not None
-    return f.removeprefix("/root/repo/")
+    return os.path.relpath(f, REPO)
 
 
 def main() -> int:

@@ -15,13 +15,13 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bigdata_2025_1_spark.registry import all_queries  # noqa: E402
 from bigdata_2025_1_spark.session import get_spark  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:

@@ -41,9 +41,10 @@ from __future__ import annotations
 import argparse
 import difflib
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bigdata_2025_1_spark.registry as R
 from bigdata_2025_1_spark.plans.explain import formatted_plan

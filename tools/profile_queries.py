@@ -27,7 +27,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_2025_1_spark.registry import all_queries  # noqa: E402
 from bigdata_2025_1_spark.session import get_spark  # noqa: E402

@@ -11,10 +11,11 @@ driver will write to CORRECTNESS_r{N}.json.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_2025_1_spark.oracle import check_query, connect_oracle  # noqa: E402
 from bigdata_2025_1_spark.registry import all_oracles, all_queries  # noqa: E402
