@@ -1,13 +1,9 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints the headline JSON line:
+sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line on stdout:
 ``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
-preceded by a COMPACT summary line (same fields minus the per-query
-dict) so the total survives the driver's 2000-char stdout window
-(VERDICT r9 #8).
+and a compact summary (same fields minus the per-query dict) on stderr.
 
-Round-end convention (VERDICT r8 #4): tee the full line to a TRACKED
-``bench_local_r{N}.json`` (``python bench.py > bench_local_r{N}.json``) —
-the driver's BENCH_r{N}.json keeps only the last 2000 chars.
+Tee the line to a file to keep it: ``python bench.py > bench_local.json``.
 
 Each query is timed end-to-end (plan + execute + collect). JVM/session
 startup is excluded (it is harness cost, not query cost).
@@ -15,7 +11,6 @@ startup is excluded (it is harness cost, not query cost).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
@@ -26,520 +21,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from bigdata_2025_1_spark.registry import all_queries  # noqa: E402
 from bigdata_2025_1_spark.session import get_spark  # noqa: E402
 
-# Round-5 perf note (controlled A/B, r4 vs r5 code interleaved in ONE
-# session, best-of-4 at sf0.1): the single-partition-window rewrites
-# cost a FIXED extra-stage overhead at toy scale —
-# dedup_sorted_neighborhood 1.32→2.05 s (rank equi-join + Arrow
-# numbering vs one lead() window), quality_threshold_sweep 1.88→2.78 s
-# (value-domain bucketing + boundary pass vs one global rank);
-# corpus_curation_v2 measured at PARITY (7.85 vs 8.03 s — its r4-record
-# 5.43 s was a fast-machine-day number; both codes measure ~8 s today,
-# and the rewrite needed deduped/dn persists to get there, without which
-# the containment pipeline re-executed per gate consumer at 14 s).
-# These constants buy the removal of every doc-sized single-partition
-# window — the shapes that do not survive 100x — and amortize away with
-# data volume: the extra stages are narrow-row shuffles that scale
-# linearly while the removed window funnel scales not at all.
-#
-# Round-6 plan-change note (best-of-4 at sf0.1, clearCache between
-# runs): the two round-6 rewrites measure inside the round-4/5 variance
-# envelope — semantic_dedup_pairs 1.34 (r5) → 1.52 s on the
-# second-level re-split + hard-cap guard (one extra tiny cell-count
-# agg + an eager ≤(cells·subs)-row guard job — the fixed price of
-# never-silently-quadratic), cdc_chunk_dedup 1.56 (r5) → 1.44 s on the
-# skinny-window rewrite (the span window now sorts 16-byte rows). The
-# rank_after_limit migrations are plan-identical (same TakeOrdered +
-# k-row window), not re-measured.
-#
-# Round-6 correctness-fix note (best-of-4 at sf0.1 vs the same-session
-# pre-fix run): persisting with_global_rank/with_prefix_min's
-# post-shuffle frame (the fix for the double-evaluation boundary
-# mismatch that produced missing/duplicate ranks on a theta-join
-# input) costs a fixed cache-write per rank query —
-# dedup_sorted_neighborhood 2.23→2.66 s, quantile_normalize_doclen
-# 1.40→1.73 s, cusum_changepoint 1.00→1.18 s. Correctness price, flat
-# in data volume (one in-memory materialization of the already-shuffled
-# frame that both consumers then read).
-#
-# Round-7 plan-change note (tools/ab_r7.py: old code exec'd from git
-# HEAD vs new, interleaved in ONE session, clearCache between runs,
-# best-of-4 at sf0.1): supplier_shipping_latency 1.06 → 2.41 s — the
-# with_global_rank fixed-stage overhead (range exchange + Arrow
-# numbering + the correctness persist, vs ONE unpartitioned window)
-# paid to remove the last supplier-entity-sized SinglePartition funnel
-# (VERDICT r6 #1; same constant-cost class as the r5/r6 rank rewrites,
-# amortizes with data volume). bpe_merge_sequence 1.78 → 1.90 s on the
-# symbol-space greedy fold (correct Sennrich merge semantics vs the
-# every-second-occurrence-skipping literal replace) + per-round
-# unpersist. pca_power_iteration 3.82 → 3.89 s (the eager int64-bound
-# guard count — noise). naive_bayes_source_classifier 3.25 → 2.79 s —
-# the vocabulary-guard count() warms the shared tokenization cache
-# before the five consumers race it, a net win.
-#
-# Round-7 additions note (measured at sf0.1 during the round, single
-# run, concurrent with a selfcheck — read as order-of-magnitude): all
-# 19 then-benched round-7 queries landed 0.4–2.6 s; the heaviest are
-# spearman_qty_price (2.6 s — the price-cents midrank map is an
-# equi-join on the value key, row-scale by design) and
-# brown_forsythe_spend_variance (1.6 s — two passes: median histogram
-# + ANOVA tail). Mid-round rewrite, same-session A/B at sf0.01:
-# crossval_auc_folds 9.6 → 2.0 s when the per-fold test histogram
-# switched from a second fact scan to algebra over the persisted
-# (fold, d) contingency (4 scans → 1, plan-pinned);
-# bradley_terry_nation_strength 12.1 → 2.3 s when the MM fixed point
-# moved from a checkpointed distributed loop (6 iterations × eager
-# job) into one pandas kernel over the collapsed pair table — the
-# kcore/pagerank collapsed-graph-kernel convention.
-#
-# Round-8 steady-state re-bench (VERDICT r7 ask #6: the three noisiest
-# round-7 numbers, best-of-4 with clearCache between runs, idle
-# machine, sf0.1 — the trustworthy base for round-9 deltas):
-# bradley_terry_nation_strength 5.19 s (driver 4.51 s; the sf0.01 A/B's
-# 2.3 s was a smaller-scale number — at sf0.1 the order-keyed duel
-# self-join IS the cost, and the round-8 guarded driver
-# materialization adds a recorded ~0.4 s fixed probe job: tools/ab.py
-# vs pre-change HEAD~2 measured 4.77 → 5.18 s, the price of zero
-# surviving cache blocks + an enforced kernel bound);
-# recsys_holdout_hitrate 4.45 s (driver 4.19 s was real, not noise);
-# naive_bayes_source_classifier 3.67 s (driver 3.71 s was real; the
-# 2.79 s interleaved-A/B number was the fast tail of the variance
-# envelope, not the steady base).
-#
-# Round-8 additions note (single full-headline run at sf0.1, idle
-# machine): all 13 round-8 queries land 0.36-2.07 s. The heaviest are
-# kruskal_wallis_priority_spend (2.07 s — one fact aggregate whose
-# shuffle four lineages reuse via the persisted (group, value) cell
-# table; its cost is that single fact pass) and cramers_v_association /
-# scc_trade_graph / jsd_source_divergence (1.0-1.2 s — one broadcast-dim
-# fact join each, collapsed at the persist point the plan audit added).
-#
-# Round-8 persist A/B (tools/ab.py --ref b058004^, interleaved
-# best-of-3 at sf0.1): the diamond-collapse persists cost a FIXED
-# overhead at toy scale — kruskal 1.70→2.68 s, cramers 1.72→2.14 s,
-# jsd 1.28→1.54 s, scc 1.52→1.64 s, logrank 1.21→1.29 s. At sf0.1 the
-# replayed lineages are re-scans of a page-cached 23 MB file inside one
-# codegen span, so recomputation beats cache-write + InMemoryTableScan;
-# at 100 TB the replayed lineage is 4-5 FULL FACT SCANS while the
-# cached frame stays value-domain/nation-sized — the same
-# constant-cost-for-scale-posture class as the r5/r7 rank rewrites
-# (amortizes with data volume). Kept deliberately.
-#
-# Round-9 note (full headline run at sf0.1, recorded IN-REPO as
-# bench_local_r9.json — the round-8 verdict's ask #4: the driver's
-# BENCH_r{N}.json keeps only the last 2000 chars of this line, so the
-# tracked file is the complete per-query record for delta analysis).
-# All 14 round-9 headline entries land 0.36-3.00 s. The heaviest are
-# friedman_priority_monthly (3.00 s — the one fact aggregate; the grid
-# rank self-join is calendar-sized), ndcg_retrieval_eval (2.99 s — it
-# re-runs both ANN rankings like retrieval_mrr_eval), and
-# bpe_encode_corpus / tokenizer_fertility_by_lang (2.83/2.84 s — each
-# runs the 3-round BPE training loop; the encode itself is one
-# word-keyed join). recsys_holdout_hitrate re-benched 4.19 s,
-# confirming round-8's 8.51 s driver number as concurrent-load noise
-# (now detectable by plan pin regardless —
-# test_recsys_caps_baskets_before_self_join_and_broadcasts_counts).
-# Shared-57-query subtotal vs the r8 driver bench: 57.1 s vs 66.1 s
-# (-13.6%, inside the documented +/-20% envelope).
-#
-# Round-9 persist A/B (manual interleaved best-of-3 at sf0.1):
-# friedman's persisted (month x priority) cell table costs 1.00 s vs
-# 0.67 s replayed — the SAME fixed cache-write overhead class as the
-# round-8 kruskal/cramers A/B (at sf0.1 the replayed lineage re-scans
-# a page-cached file; at 100 TB it replays THREE full fact scans —
-# months, priorities, and the grid join all consume the cells — while
-# the cached frame stays calendar x value-domain sized). Kept
-# deliberately, same rule as round 8.
-#
-# Round-10 shared-rankings A/B (tools/ab.py --ref 5ae3683, interleaved
-# best-of-4 at sf0.01 — VERDICT r9 ask #3): factoring the exact + IVF
-# rankings into the persisted, per-session-memoized
-# retrieval_rankings() helper cuts retrieval_mrr_eval 1.76 -> 1.19 s
-# and ndcg_retrieval_eval 1.71 -> 1.04 s. The intra-query win is that
-# each metric's plan referenced the exact ranking 2-3 times
-# (n_queries / hits / rr) and re-ran the full brute-force build per
-# reference; the persist collapses that to one build, and the memo
-# additionally lets a same-session eval suite share the builds across
-# metrics. Rankings are probe-bounded (n_probes x k rows) — inside the
-# documented cache contract at any fact scale.
-#
-# Round-11 HDBSCAN level-2 contraction (VERDICT r10 ask #3,
-# strengthened): label-only seeding turned out to save almost nothing —
-# min-label propagation walks one NODE per round, so a seeded frontier
-# crosses new links exactly as slowly (measured 31 vs 32 rounds on a
-# 32-node chain of 16 eps1 pair-clusters). The shipped fix CONTRACTS
-# level 2's core graph by level 1's converged components and propagates
-# over supernodes (valid by the nesting pin; correctness re-proved by
-# the scalar-BFS property suite + oracle). Synthetic chain: 32 -> 17
-# rounds (pinned in test_hdbscan_level2_seeding_reduces_iterations).
-# Real fixture at sf0.1: the eps2 slice barely chains eps1 clusters, so
-# rounds stay [5, 4] — but the contracted per-round edge frame is
-# smaller (intra-cluster edges drop as self-loops), and wall time moved
-# 6.27 -> 5.51 s best-of-3 (interleaved ab.py vs 5c236f8 measured the
-# label-seed-only variant flat at 6.27 -> 6.37; the contraction variant
-# is the one that landed). Deliberate plan change (plandiff flags it).
-#
-# Round-11 BPE-memo A/B (VERDICT r10 ask #2: apply the rankings-memo
-# pattern to _bpe_train). tools/ab.py --ref dd61f8d, interleaved
-# best-of-4 at sf0.1, for the corpus_ops-defined queries (the only ones
-# whose OLD side execs a fully pre-memo train):
-#   bpe_merge_sequence 1.77 -> 0.53 s, bpe_encode_corpus 2.05 -> 1.13 s.
-# Cross-module consumers measured as a suite session instead (old-side
-# exec would import the CURRENT, already-memoized corpus_ops, so ab.py
-# would understate them): best-of-3 cold (memo cleared + clearCache,
-# the pre-memo per-query cost) vs memo-hit (clearCache only, what a
-# suite session now pays):
-#   tokenizer_fertility_by_lang 2.66 -> 1.15 s,
-#   mannwhitney_fertility_drift 2.47 -> 1.25 s,
-#   corpus_release_gate 3.54 -> 2.03 s.
-# ~1.2-1.5 s saved per dependent query, matching the VERDICT's
-# estimate; plans pinned unchanged (tools/plandiff.py --ref dd61f8d:
-# 0/5 changed). The memo-hit path after a clearCache lineage-replays
-# the 50-fold encode chain in ONE job but never re-runs the training
-# loop's per-round argmax collects — those only ever run once per
-# (applicationId, sf_dir).
-#
-# Round-11 tee provenance: four full headline runs measured the
-# shared-187 subtotal at 222.0 / 243.3 / 225.6 / 239.1 s (r10 recorded
-# 240.0) — the 243.3 run started seconds after a 27-minute pytest
-# churned the page cache (the documented load-skew class; round-4
-# variance note below). bench_local_r11.json is the FINAL run, the
-# only one covering all ten round-11 additions (197 queries). Read the
-# round-over-round signal as flat-to-better within the variance
-# envelope; the real perf story is in the controlled A/Bs (BPE memo,
-# CC-init fusion below), which two of the four runs show directly.
-# The ten additions land 0.25-7.8 s each; the two heaviest are
-# dedup_release_gate (the sum of its certified legs) and
-# lsh_band_sweep 6.5 s (the prefix-filter truth side plus FOUR banded
-# self-joins, incl. the deliberately expensive 8x1 config — the cost
-# axis of the tuning table is real work).
-#
-# Round-12 tee provenance: FOUR full headline runs measured the
-# shared-197 subtotal (vs bench_local_r11) at 214.9 / 271.2 / 247.5 /
-# 275.5 s (r11 recorded 260.1 with its own four-run envelope of
-# 222.0-243.3) — the same load-skew class as every round; the 275.5
-# run (the tee) started ~1 min after a 26-minute pytest churned the
-# page cache, the exact condition r11's provenance note flagged. No
-# code shared with r11 changed this round (plandiff 0/5 on the
-# touched-adjacent queries), so read the round-over-round signal as
-# flat within the variance envelope; the controlled numbers are the
-# per-addition best-of-3 idle timings below. bench_local_r12.json is
-# the FINAL run — the only one covering all ten round-12 additions
-# (207 queries). The additions land 0.37-2.2 s each; the two heaviest
-# are ann_release_gate (~2.2 s — the exact sum of its three certified
-# legs; see the deferred shared-assignment experiment below) and
-# session_closure_log (~1.5 s — a 95k-row closure log whose cost is
-# dominated by the collect, not the one-shuffle window plan).
-#
-# Round-12 measured-and-DEFERRED experiment (the negative-memo
-# discipline): ann_release_gate's census and curve legs each run their
-# own Arrow cell-assignment pass over embeddings — the gate costs the
-# exact sum of its legs (2.165 vs 1.21+0.44+0.54 best-of-3, idle).
-# A persisted shared-assignment variant (one `_corpus_cells().persist()`
-# helper consumed by both legs, the dedup `_signatures` pattern) was
-# measured gate-equivalent at ~0.35 s cheaper (one Arrow pass), i.e.
-# ~11-15% of the gate. NOT shipped this round: it would change the
-# physical plans of ivf_ingest_assign and ivf_nprobe_recall_curve,
-# which sit at positions 5 and 7 of the FROZEN round-12 driver head
-# awaiting their first driver rows — plan stability through the first
-# correctness row outranks a 0.35 s win on a query that enters no head
-# before round 13. Queued as a round-13 candidate with the full
-# plandiff + ab discipline.
-#
-# Round-12 pre-pin (VERDICT r11 ask #7): dedup_release_gate enters the
-# round-12 driver head as its heaviest query, so its reference numbers
-# are stamped BEFORE the driver run for instant noise adjudication:
-# normalized-plan sha256 prefix 2d599e5c10c831af (tools/plandiff.py
-# normalization over formatted_plan), idle-machine best-of-3 at sf0.1
-# on local[32] = 7.091 s (runs 7.58 / 7.575 / 7.091; clearCache between
-# runs; measured 2026-08-16 immediately after the rotation landed,
-# before any round-12 code). The r11 driver recorded 7.04 s — any
-# future driver delta beyond the documented +/-20% envelope should be
-# adjudicated against THIS hash first (plan changed?) and this number
-# second (noise?).
-#
-# Round-14 SHIPPED: the round-12 measured-and-deferred shared IVF
-# cell-assignment (VERDICT r13 ask #2 — both blocking driver rows
-# landed green in CORRECTNESS_r13.json). `_corpus_cells()` persists the
-# one Arrow (vec_id, cell) pass; ivf_ingest_assign and both uses inside
-# ivf_nprobe_recall_curve consume it, so ann_release_gate (and the
-# platform apex through it) runs the corpus assignment ONCE.
-# Discipline record, same day:
-# - plandiff --ref HEAD: exactly the 3 intended changes
-#   (ivf_ingest_assign, ivf_nprobe_recall_curve, ann_release_gate).
-#   platform_release_gate read "unchanged" — that is the documented
-#   cross-module plandiff limit (old-side platform_ops composes its
-#   legs through the LIVE registry, so both sides saw the new
-#   similarity code); its true plan did change via the ann leg, and its
-#   new sha is stamped below.
-# - tools/ab.py --ref HEAD --reps 3 (interleaved, clearCache, sf0.1):
-#   ivf_nprobe_recall_curve 2.19 -> 1.98 s, ann_release_gate
-#   2.31 -> 2.26 s, ivf_ingest_assign 0.48 -> 0.56 s (the standalone
-#   census now pays the cache write it doesn't need alone — the win is
-#   a suite/gate win by design, the standalone cost is ~80 ms).
-# - fresh-session idle pins (clearCache best-of-3 at sf0.1, run order
-#   ingest -> curve -> gate -> platform). SHA NOTE: the round-14
-#   normalizer hardening (gid-value shard blanking, below) moved the
-#   three gid-bearing plans' shas AFTER these timings were taken; the
-#   plans themselves did not change again — shas below are the
-#   CURRENT-normalizer values, timings are the original pins:
-#   ivf_ingest_assign       sha 0f9fa59cb48788cb  best 1.836 s
-#   ivf_nprobe_recall_curve sha 24eb8a48ec29d9f2  best 4.827 s
-#     (SESSION-ORDER SENSITIVE: the curve's truth leg is the
-#     brute-force rankings pass whose driver-side memo was cold here;
-#     r13's 1.524 s pin and the ab.py 1.98 s above are warm-session
-#     numbers — compare like with like)
-#   ann_release_gate        sha 00d0c2cfd69e8664  best 2.764 s
-#     (vs 2.806 r13 same methodology; the interleaved ab.py read above
-#     is the controlled one — the saved Arrow pass is partly offset by
-#     the cache materialization, net a modest win that also holds at
-#     any scale since the pass is linear)
-#   platform_release_gate   sha 5df5d29840a7fc79  best 16.312 s
-#     (vs 17.730 r13 pre-pin — inherits the ann leg's saving)
-# Executed-plan evidence the sharing is real: running the gate logs
-# "CacheManager: Asked to cache already cached data" (the second
-# persist() of the identical analyzed plan deduped onto the first) and
-# InMemoryTableScan appears at every consumer site.
-#
-# Round-14 close-out verification record (run in this order): tee
-# FIRST on an idle machine (below), then full `pytest tests/` — 1427
-# passed / 1 skipped / 0 failed in 2146 s (the skip is the
-# protobuf-gated transformWithState twin, as every round); then
-# `tools/selfcheck.py` over ALL 380 queries at sf0.01 — 380/380 pass;
-# then the driver mirror `--vanilla --head 50` — 50/50 pass on the
-# rotated round-14 head; and, after the post-review test additions
-# (foreachBatch redelivery, hypothesis idempotence, tooling
-# regressions, salted-join retry trio), a SECOND complete suite run on
-# the finished tree — 1433 passed / 1 skipped / 0 failed in 1804 s.
-# The backfill family additionally selfchecks 11/11 at sf0.1.
-#
-# Round-14 tee provenance: ONE full headline run (all 232 queries —
-# every round-14 addition), on an idle machine, BEFORE the close-out
-# pytest (the idle-first discipline): bench_local_r14.json, 312.3 s
-# total at sf0.1. Shared-221 subtotal vs bench_local_r13.json: 291.4 s
-# vs 314.1 s (ratio 0.928, median per-query ratio 0.928) — flat-to-
-# better; the committed r13 tee ran third after two earlier runs had
-# warmed and churned the cache, while this one is the clean idle read,
-# plus the shipped shared-IVF saving rides in the ann/platform rows
-# (platform_release_gate 13.3 s in-tee vs 13.4 r13 with the heavier
-# pre-hardening legs). The 11 round-14 additions land 1.1-3.0 s each
-# in-tee with backfill_release_gate at 5.67 s (its idle standalone pin
-# is 7.748 s — in-tee the legs' shared scans are page-cache-warm).
-# No further tee was run: every post-tee commit this round is
-# tooling/tests/docs only (plandiff hardening, foreachBatch test) —
-# the full-registry sweep below certifies the query plans did not move
-# after the tee.
-#
-# Round-14 full-registry plan sweep: tools/plandiff.py --all
-# --ref 7388eb5 over all 380 queries (the --all crash on new-at-ref
-# modules is FIXED this round — backfill_ops' 11 queries report
-# "not present at ref — new query, skipped" instead of crashing).
-# First pass flagged 4 changes: the 3 intended (shared IVF assignment:
-# ivf_ingest_assign, ivf_nprobe_recall_curve, ann_release_gate) plus
-# table_profile — adjudicated as the RESIDUAL gid false-positive class
-# the r13 ADVICE predicted: once the innermost-out sort shears a deeply
-# nested Expand row apart, gid VALUES surface as non-trailing bare-int
-# shards ("6," vs "4,"; "[4, [5]" vs "[5, [6]") that renumber with the
-# session-global counter. normalize() now blanks exactly the integers
-# in the plan's own gid value set (harvested from the raw "gid#_ = N"
-# filters before noise-stripping) — string-level regression test
-# test_non_trailing_gid_value_shards_neutralize pins both directions
-# (shards neutralize; a non-gid literal still flags). Re-sweep:
-# table_profile unchanged, the 3 intended changes remain flagged.
-# NORMALIZER NOTE: this moved the sha of any gid-bearing plan —
-# the three ANN-family pins below are restamped with current-normalizer
-# values (plans unchanged, timings original).
-#
-# Round-14 pre-pins (the standing ask — stamped on an idle machine
-# BEFORE the driver run, best-of-3 at sf0.1 on local[32], clearCache
-# between runs; sha = sha256 prefix of plandiff normalize() over
-# formatted_plan). The backfill/reprocessing additions:
-#   backfill_dirty_state         sha a6518eaba644c3ae  best 2.080 s
-#   backfill_plan                sha 26dce07ba6dd7566  best 1.641 s
-#   backfill_day_census          sha 8eace12966d51e38  best 1.902 s
-#   backfill_cost_by_granularity sha 0296f7bd3fdc5e92  best 2.214 s
-#   backfill_priority_schedule   sha a1e25b70e1f71e3a  best 1.641 s
-#   backfill_chunk_plan          sha 76a5fe72544bdbf9  best 1.670 s
-#   idempotent_replay_audit      sha 003c4098ba4a6c6b  best 3.194 s
-#     (the family's one deliberately fact-heavy row: the (event_id, op)
-#     MERGE-key dedup is a real hash shuffle over the replay set)
-#   backfill_restatement_summary sha 0ce380dc87484244  best 1.695 s
-#   reprocessing_watermark       sha 962b909f49b7746c  best 2.206 s
-#   backfill_verification_diff   sha 58921417ffb88b04  best 1.678 s
-#   backfill_release_gate        sha 7990ede47525f7c5  best 7.748 s
-#     (the sum of its five certified legs, the gate convention's
-#     structural cost — dominated by the audit leg plus the shared
-#     key-state scan; see the negative result below)
-#
-# Round-14 measured-and-REVERTED experiment (the negative-memo
-# discipline): a persisted shared key_state helper (the _corpus_cells
-# pattern — seven queries consume the same bounded per-key frame, and
-# the gate composes four of them) was measured GATE-NEUTRAL: idle
-# best-of-3 7.748 s unpersisted vs 7.828 s persisted, every leg flat.
-# Reason, verified in the executed plan: the gate's identical
-# aggregation subtrees already share via AQE exchange reuse (13
-# ReusedExchange sites in the unpersisted executed plan; the persisted
-# variant had 8 + 10 InMemoryTableScans — the cache REPLACED structural
-# reuse, it didn't add to it), so the cache added churn (7 standalone plans
-# gain an InMemoryRelation they don't need) and no wall-clock. Reverted
-# same day; the stamped pins above are the unpersisted (shipped) plans.
-# Contrast with the round-14 SHIPPED _corpus_cells sharing (above):
-# there the two assignment passes live in DIFFERENT legs' pandas-UDF
-# subtrees that exchange reuse cannot unify — persist() was the only
-# sharing mechanism. Rule of thumb recorded: persist buys wall-clock
-# only when the repeated subtree crosses an exchange-reuse boundary
-# (pandas UDF scans, different post-aggregation shapes); inside one
-# query, AQE reuse already dedupes identical exchanges.
-#
-# Round-13 tee provenance (VERDICT r12 ask #8 executed: every tee ran
-# on an idle machine BEFORE the close-out pytest — not after it, ending
-# the three-round page-cache-skew pattern): THREE full headline runs as
-# additions landed. Run 1 (219 queries): shared-207 subtotal 225.4 s vs
-# r12's 284.2 — median per-query ratio 0.825, i.e. the clean-machine
-# read confirms r12's committed tee was the load-skewed one its own
-# provenance note flagged. Run 2 (220 queries): 294.1 s total,
-# shared-207 282.1, median ratio 0.977 (flat). Run 3 = the committed
-# bench_local_r13.json (ALL 221 headline queries — every round-13
-# addition incl. platform_release_gate, plus the two round-12 additions
-# that missed r12's tee — ask #7): 314.1 s total, with the apex suite
-# row at 13.4 s (vs its 17.7 s idle pre-pin — the legs' shared scans
-# page-cache-warm inside a full run). Read the envelope as 225-282 on
-# the shared-207 set; the idle best-of-3 pre-pins below are the
-# controlled numbers. One adjudication note:
-# ivf_nprobe_recall_curve's tee row moved 1.57 -> 2.38 s between
-# rounds; its PLAN changed intentionally this round (+2 constant
-# telemetry columns) and its idle best-of-3 under the new plan is
-# 1.524 s (= the old number), so the tee delta is load, not the plan —
-# exactly the adjudication the pre-pin exists to make instant.
-#
-# Round-13 full-registry plan sweep: tools/plandiff.py --ref 40e53f4
-# over ALL 357 pre-existing queries (explicit names — --all would crash
-# on cdc_ops, absent at the old ref): exactly the 3 intended changes
-# (ann_release_gate, ivf_nprobe_recall_curve, value_histogram_rollup —
-# the round-12 ADVICE fixes), 354 "unchanged", and ZERO "layout-only"
-# lines — under the fixed normalizer the two historical FP classes
-# produce no noise verdicts at all.
-#
-# Round-13 pre-pins (VERDICT r12 ask #7 — stamped on an idle machine
-# BEFORE the tee and the full pytest, best-of-3 at sf0.1 on local[32],
-# clearCache between runs; sha = sha256 prefix of tools/plandiff.py
-# normalize() over formatted_plan). NORMALIZER NOTE: round 13 fixed
-# plandiff's two false-positive classes (gid renumbering, RDD
-# call-site strings), so shas below are NOT comparable to shas stamped
-# in earlier rounds (e.g. dedup_release_gate's 2d599e5c10c831af) — a
-# mismatch against an OLD sha is the normalizer version, not a plan
-# change; compare plans across that boundary with plandiff --ref
-# directly (it normalizes both sides with the same code).
-# Head entrants whose plans CHANGED this round (round-12 ADVICE fixes,
-# re-certified selfcheck tuned+vanilla the day they changed):
-#   ann_release_gate        sha 5459cf301e775a3c  best 2.806 s
-#     (runs 4.905/3.011/2.806; + n_queries/n_truth telemetry and the
-#     broken-probe no-decision branch; r12 idle best-of-3 was 2.165 —
-#     the delta is the extra curve-leg columns riding the same plan
-#     shape plus load; the driver's first row lands this round)
-#   ingest_release_gate     sha 68cf347fd2f80fc3  best 0.979 s
-#     (runs 1.728/1.202/0.979; untouched this round)
-#   ivf_nprobe_recall_curve sha 3620f6f54868272d  best 1.524 s
-#     (+2 constant telemetry columns, same two Arrow passes)
-#   value_histogram_rollup  sha a12acf9cd2a2b7ce  best 0.961 s
-#     (integer-div rank targets, plan-shape-identical)
-# Round-13 additions (first bench rows land with this round's tee):
-#   cdc_corrected_rollup    sha 56ed0edbb6bbf4a6  best 0.794 s
-#   cdc_delta_log           sha e07786a4769eca56  best 0.913 s
-#   cdc_feed_daily_profile  sha 90df25ec69ea0f08  best 0.975 s
-#   correction_latency_profile sha 4fec8d80f088b304 best 0.539 s
-#   reconciliation_window_audit sha ee4da85ff27c678d best 0.784 s
-#   corrected_rollup_as_of  sha ba2e649b44d55b8a  best 1.181 s
-#   event_version_census    sha 29f4ded69829968c  best 0.479 s
-#   stale_state_audit       sha ddf430be8c5fc47c  best 0.671 s
-#   cdc_net_effect_by_type  sha d04fb7a7bfa7016a  best 0.571 s
-#   correction_bias_sign_test sha 4629d44953e070ec best 1.023 s
-#   cdc_release_gate        sha afacb9c64d78782b  best 1.852 s
-#   platform_release_gate   sha 44768731c68d3410  best 17.730 s
-#     (~ the sum of its three legs, the gate convention's structural
-#     cost)
-#
-# Round-13 status of the round-12 DEFERRED shared IVF cell-assignment:
-# still deferred, per the round-12 verdict's own sequencing — "land it
-# AFTER the driver run or early in round 14's window". The blocking
-# legs (ivf_ingest_assign, ivf_nprobe_recall_curve, ann_release_gate)
-# receive their first driver rows in THIS round's head, so the ~0.35 s
-# saving ships at the top of round 14 with the full plandiff + ab
-# discipline and fresh pins.
-#
-# platform_release_gate (the round-12 verdict's named apex candidate,
-# BUILT as the 12th round-13 addition, extended to the sixth family):
-# pre-pin sha 44768731c68d3410, idle best-of-3 at sf0.1 = 17.730 s
-# (runs 23.6/22.8/17.7) — inside the 15-20 s projection, the SUM of
-# its six certified legs with dedup_release_gate (~7 s) dominating.
-# This is the repo's most expensive query BY DESIGN: the once-nightly
-# top of the certified-gate pyramid (see platform_ops.py's COST
-# FRAMING) — composing the registered gates is the convention's whole
-# point; recomputing cheaper proxies inline would let the apex drift
-# from what each family's correctness gate certifies. Read its bench
-# row as a suite row, not an operator row.
-#
-# Round-11 CC-init fusion (idle machine, best-of-2 at sf0.1, clearCache
-# between runs): dedup_connected_components' label initialization now
-# computes label0(v) = min(v, min neighbor) in the SAME aggregation
-# that deduplicates the node set (replacing distinct()), which fuses
-# the first propagation round into init for free. On a loop that
-# converges in ~3 rounds that is a third of the iteration budget:
-# canonical_doc_per_cluster 10.54 -> 4.67 s, dedup_release_gate
-# 22.78 -> 10.51 s (the gate inherits CC through its cluster-stats
-# leg). Confirmed by the interleaved harness under background load
-# (tools/ab.py --ref 9742bca, best-of-3): canonical 6.96 -> 3.89 s,
-# dedup_connected_components 3.74 -> 2.68 s. A double-step-per-convergence-check variant was ALSO measured
-# and REJECTED: chaining two join+agg steps per materialized round made
-# canonical 10.5 -> 19.9 s — the extra stages per job cost more than
-# the saved count jobs. Output identical (recursive-CTE oracle + graph
-# property suites green).
-#
-# Round-11 negative result (measured, then NOT shipped): applying the
-# same memo to dedup's _signatures is redundant. Controlled suite-
-# session A/B at sf0.1 (dedup_minhash_lsh then lsh_recall_eval in one
-# session, no clearCache between, interleaved best-of-3): memo-off
-# 4.17/4.41 s vs memo-on 4.38/4.08 s — parity. Spark's CacheManager
-# already dedupes identical ANALYZED PLANS at persist() time, so the
-# second query's fresh _signatures().persist() resolves to the first's
-# cached blocks with no Python-side memo at all. The BPE/rankings
-# memos win because their cost is DRIVER-side Python (per-round argmax
-# collects / index-build orchestration), which plan caching cannot
-# skip; _signatures is pure lineage. Memo reverted — the cache
-# manager is the memo.
-#
-# Round-10 note (full headline run at sf0.1, recorded IN-REPO as
-# bench_local_r10.json — the full line only, so json.load works on it;
-# the original r10 tee accidentally captured the compact headline line
-# too, so json.load failed with 'Extra data' until round 11 stripped it
-# back to one line and moved the compact print to stderr).
-# Shared-174-query subtotal vs bench_local_r9.json: 210.7 -> 210.6 s
-# (-0.0%: flat, zero regressions beyond the documented noise class —
-# worst single delta bradley_terry_nation_strength +1.12 s,
-# code-unchanged, the same query that swung -0.48 s in r9). The
-# shared-rankings refactor confirmed at sf0.1: ndcg_retrieval_eval
-# 2.99 -> 1.22 s (-1.78, the round's biggest mover); retrieval_mrr_eval
-# measured 1.86 -> 2.02 s here (noise-level — the controlled
-# interleaved A/B above, 1.76 -> 1.19 s, is the honest read for it).
-# The 6 round-10 additions land 0.42-5.29 s:
-# ks_doclen_drift 0.42 / cusum_online_hourly 0.51 (value-domain
-# histograms + hour-spine scans), retrieval_eval_suite 1.60 (ONE index
-# build for recall+MRR+nDCG via the shared rankings — cheaper than
-# either standalone eval was in r9), mannwhitney_fertility_drift 2.32
-# (the BPE train loop, same cost class as bpe_encode_corpus 2.75),
-# corpus_release_gate 3.05 (four corpus legs incl. the BPE train), and
-# hdbscan_lite_clusters 5.29 — the heaviest: TWO min-label-propagation
-# loops (one per eps level) each paying per-iteration driver
-# convergence counts; a fused multi-level loop would halve it if the
-# suite ever needs more levels (noted, not needed at 2).
-#
-# Round-4 variance note: five full runs on the same code measured the
-# 34-query shared subtotal at 24.7 / 27.8 / 29.8 / 31.1 / 34.9 s (r3
-# recorded 27.5 s) and single queries swung 2.5x between consecutive
-# identical runs (ann_ivf_topk 1.10 vs 2.73 s) — background load and
-# GC/JIT state, not code. Hence best-of-3 below. Read round-over-round
-# deltas inside that envelope as noise; per-query regressions are real
-# only when the plan pin or a clearCache steady-state loop confirms
-# them.
 HEADLINE = [
     # reference-parity core
     "domain_doc_stats",
@@ -572,13 +53,6 @@ HEADLINE = [
     "sequence_packing",
     "ann_topk_cosine",
     "ann_srp_lsh_pairs",
-    # NOTE r4 on ann_ivf_topk's r2→r3 drift (0.88→1.05 s): its code and
-    # kernels are byte-identical across the rounds (git: similarity.py
-    # +355/-0, vectors.py additions only) — the delta is run-order/JIT
-    # state in a longer bench list, not a plan change; stage profile at
-    # sf0.1 is ~0.34 s probe encode + ~0.59 s candidate join/score +
-    # window top-k, all fixed Python-worker/broadcast latency that
-    # amortizes away at real scale (plan pin unchanged-green).
     "ann_ivf_topk",
     "ann_pq_adc_topk",
     "ann_ivfpq_topk",
@@ -632,7 +106,7 @@ HEADLINE = [
     "bootstrap_mean_ci",
     "harmonic_centrality_trade",
     "contrastive_triplet_mining",
-    "sq8_quantization_error",  # ADVICE r5: was the one r5 query unbenched
+    "sq8_quantization_error",
     # round-6 additions
     "benchmark_decontamination",
     "char_entropy_quality",
@@ -769,11 +243,8 @@ HEADLINE = [
     "ivf_nprobe_recall_curve",
     "retention_expiry_plan",
     "lsh_band_sweep",
-    # round-12 additions: the ANN index release gate (completes the
-    # release-decision convention across corpus/dedup/layout/index)
-    # and the incremental-aggregate-maintenance family (keyed MERGE
-    # rollup + write-log, late-data audit, incremental sessionizer,
-    # distinct-users curve)
+    # round-12 additions: the ANN index release gate and the
+    # incremental-aggregate-maintenance family
     "ann_release_gate",
     "events_rollup_upsert",
     "rollup_delta_log",
@@ -787,10 +258,6 @@ HEADLINE = [
     "value_histogram_rollup",
     "merge_touch_profile",
     # round-13 additions: the CDC corrections/retractions family
-    # (signed-delta encoding over the arrival model: retraction-aware
-    # rollup + I/U/D write-log, feed profile with the cancellation-storm
-    # monitor, reconciliation-window sizing, stale-state audit, and the
-    # sixth-family release gate)
     "cdc_corrected_rollup",
     "cdc_delta_log",
     "cdc_feed_daily_profile",
@@ -802,17 +269,9 @@ HEADLINE = [
     "cdc_net_effect_by_type",
     "correction_bias_sign_test",
     "cdc_release_gate",
-    # round-13 apex (see platform_ops.py's COST FRAMING: this row costs
-    # the sum of all six family gates by design — the once-nightly top
-    # of the certified-gate pyramid, not a hot-path query)
+    # costs the sum of all six family gates by design (platform_ops.py)
     "platform_release_gate",
-    # round-14 additions: the backfill/reprocessing family (the
-    # maintenance trilogy's third leg — dirty-state diff under the
-    # deterministic bug/fix model, the partition-level backfill plan,
-    # cost-by-granularity, priority schedule, chunk shards, the
-    # exactly-once replay audit, restatement summary, reprocessing
-    # watermark, post-replay verification, and the seventh-family
-    # release gate)
+    # round-14 additions: the backfill/reprocessing family
     "backfill_dirty_state",
     "backfill_plan",
     "backfill_day_census",
@@ -824,13 +283,8 @@ HEADLINE = [
     "reprocessing_watermark",
     "backfill_verification_diff",
     "backfill_release_gate",
-    # round-14 optimization additions (never remove/rename above — the
-    # driver's shared_with_prev comparison depends on stable names):
-    # the two registry kernels the r14 optimization round rewrote after
-    # full-registry profiling found them pathological (grouped-map
-    # 53.7 -> 2.7 s, embedding-cosine anchor 6.4 -> 3.0 s at sf0.1);
-    # benched from now on so a regression to the per-group / per-pair
-    # shapes is visible round-over-round.
+    # kernels rewritten from per-group / per-pair shapes: benched so a
+    # regression to those shapes shows
     "grouped_map_spend_share",
     "dedup_embedding_cosine",
 ]
@@ -883,59 +337,10 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
     }
-    # Round-over-round honesty: the headline set grows, so the all-queries
-    # total is not comparable across rounds. Also report the subtotal over
-    # the queries shared with the most recent recorded BENCH_r{N}.json.
-    prev = sorted(glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json")))
-    if prev:
-        # NOTHING in this comparison may prevent the JSON line from
-        # printing — the driver greps stdout for it (round 6 found the
-        # r5 file carrying "parsed": null, which crashed the old
-        # narrower handler BEFORE the print).
-        try:
-            with open(prev[-1]) as f:
-                prev_data = json.load(f)
-            # the driver wraps our JSON line under a "parsed" key; when
-            # that is null only a TRUNCATED tail of stdout survives —
-            # recover whatever per-query pairs are visible (best-effort:
-            # the shared subtotal stays apples-to-apples because both
-            # sides sum over the same recovered name set)
-            parsed = prev_data.get("parsed") if isinstance(prev_data, dict) else None
-            if isinstance(parsed, dict):
-                prev_q = parsed.get("queries", {})
-            else:
-                import re as _re
-
-                tail = prev_data.get("tail", "") if isinstance(prev_data, dict) else ""
-                frag = tail.split('"sf"')[0]
-                prev_q = {
-                    k: float(v)
-                    for k, v in _re.findall(r'"([a-z0-9_]+)": ([0-9.]+)', frag)
-                }
-            shared = sorted(set(prev_q) & set(timings))
-            out["shared_with_prev"] = {
-                "prev_file": os.path.basename(prev[-1]),
-                "n_queries": len(shared),
-                "value": round(sum(timings[q] for q in shared), 3),
-                "prev_value": round(sum(prev_q[q] for q in shared), 3),
-            }
-        except Exception:  # noqa: BLE001 — comparison is best-effort
-            pass
-    # VERDICT r9 #8 / ADVICE r10: the driver's BENCH record keeps only
-    # a 2000-char tail window of stdout, and the full line's queries
-    # dict outgrew it rounds ago ("parsed": null every round). A
-    # COMPACT headline object gives humans (and logs) a short, complete
-    # JSON summary — but it must NOT share stdout with the full line,
-    # or the documented tee (`python bench.py > bench_local_r{N}.json`)
-    # produces a two-line file that json.load rejects ('Extra data', as
-    # the round-10 tee did). Compact goes to stderr; stdout stays the
-    # documented ONE-JSON-LINE contract. The driver's surviving stdout
-    # tail still carries the full line's shared_with_prev comparison,
-    # which is the round-over-round signal.
+    # The compact summary goes to stderr: stdout stays ONE JSON line,
+    # so a tee of stdout is a file json.load accepts.
     compact = {k: out[k] for k in ("metric", "value", "unit", "sf")}
     compact["n_queries"] = len(timings)
-    if "shared_with_prev" in out:
-        compact["shared_with_prev"] = out["shared_with_prev"]
     print(json.dumps(compact), file=sys.stderr)
     print(json.dumps(out))
     spark.stop()

@@ -11,30 +11,19 @@ whole extra pass over two label frames.
 
 This helper fixes both:
 
-- **Chunked convergence checks.** ``CC_CHUNK`` propagation rounds run
-  lazily inside ONE job, then one materialization + one convergence
-  check. Exactness: min-label propagation is MONOTONE (labels only ever
-  decrease — ``least(label, min neighbor label)``), so "chunk start ==
-  chunk end" holds iff every round in the chunk was the identity, i.e.
-  the fixed point was already reached; and extra rounds past the fixed
-  point are identities, so the converged labels are byte-identical to
-  the per-round-checked loop's. The divergence bound is unchanged: the
-  loop still gives up after ``max_rounds`` total propagation rounds.
-
-- **Join-free convergence count.** The chunk-start label rides the
+- **Join-free convergence count.** The round-start label rides the
   frame as a ``label0`` column, so the check is a filter+count over the
   just-checkpointed blocks instead of a join of two label frames.
 
-- **Lineage truncation.** Chunk boundaries ``localCheckpoint()``, so the
-  logical plan stays O(chunk) deep regardless of how many rounds the
-  graph's diameter needs (the dbscan site documented Catalyst analysis
-  blowing up past iteration 4 without truncation).
+- **Lineage truncation.** Every round ends in a ``localCheckpoint()``,
+  so the logical plan stays one round deep regardless of how many
+  rounds the graph's diameter needs (the dbscan site documented
+  Catalyst analysis blowing up past iteration 4 without truncation).
 
-At 100 TB the trade is explicit: each wasted post-fixed-point round
-inside the last chunk is one extra co-keyed shuffle of the label frame,
-so a deployment where rounds are expensive sets ``CC_CHUNK`` low (1 or
-2); where the graph is shallow and wide, higher values amortize the
-per-action overhead. The default 4 suits shallow dup/density clusters.
+Batching several propagation rounds per convergence check was measured
+at sf0.1 and regressed every site: under AQE each shuffle inside the
+batch still runs as its own job, so batching saved no scheduling while
+the rounds past the fixed point were wasted work.
 """
 
 from __future__ import annotations
@@ -42,24 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-CC_CHUNK = 1  # propagation rounds per materialization + convergence check
-# — measured at sf0.1 (interleaved A/B): chunk=4 REGRESSED every site
-# (dedup_connected_components 2.95 -> 7.79 s) because under AQE each
-# shuffle inside the lazy chunk still materializes as its own stage
-# job, so chunking saves almost no scheduling while the always-
-# completed chunk wastes up to chunk-1 post-fixed-point propagation
-# rounds (each one a join+agg over the edge frame). The join-free
-# convergence check is the part that pays at every chunk size; the
-# parameter stays for non-AQE deployments where a chunk really is one
-# job.
-
 
 def min_label_propagate(
     edges: DataFrame,
     labels0: DataFrame,
     *,
     max_rounds: int = 32,
-    chunk: int = CC_CHUNK,
     reliable: bool = False,
     err: str = "min-label propagation did not converge",
 ) -> DataFrame:
@@ -68,11 +45,12 @@ def min_label_propagate(
 
     ``edges`` is the DIRECTED propagation edge list ``(a, b)`` (labels
     flow a -> b; pass both directions for an undirected graph);
-    ``labels0`` the initial ``(v, label)`` assignment. Raises
-    RuntimeError(err) when the round budget (``max_rounds`` plus one
-    confirming grace chunk — see the loop comment) passes without
-    reaching the fixed point (component diameter too large) — returning
-    partial labels would silently split real clusters.
+    ``labels0`` the initial ``(v, label)`` assignment. A component of
+    diameter d needs d changing rounds plus one confirming identity
+    round, so the loop runs at most ``max_rounds + 1`` rounds and
+    raises RuntimeError(err) when the last one still changed a label
+    (component diameter above ``max_rounds``) — returning partial
+    labels would silently split real clusters.
 
     Fault-tolerance trade (``reliable=``): the default
     ``localCheckpoint()`` stores each round's label blocks on the
@@ -83,32 +61,23 @@ def min_label_propagate(
     executors should pass ``reliable=True`` to use plain
     ``checkpoint()`` (fault-tolerant, written to the directory the
     caller must first set via ``spark.sparkContext.setCheckpointDir``)
-    at the cost of a filesystem write per chunk. Local default stays
+    at the cost of a filesystem write per round. Local default stays
     executor-local: same plan shape, no checkpoint dir needed."""
     labels = labels0
-    rounds = 0
-    # The per-round-checked loop converged as soon as ONE round was the
-    # identity, so it needed diameter+1 rounds within max_rounds. The
-    # chunked loop detects convergence only at chunk boundaries, so it
-    # gets ONE confirming grace chunk past max_rounds — a graph whose
-    # diameter is exactly max_rounds now converges (correct labels)
-    # instead of raising; anything deeper still raises.
-    while rounds < max_rounds + chunk:
-        k = min(chunk, max_rounds + chunk - rounds)
+    for _ in range(max_rounds + 1):
         cur = labels.select("v", "label", F.col("label").alias("label0"))
-        for _ in range(k):
-            prop = (
-                edges.join(cur.select("v", "label"), edges["a"] == F.col("v"))
-                .groupBy(edges["b"].alias("v2"))
-                .agg(F.min("label").alias("nlabel"))
-            )
-            cur = cur.join(prop, cur["v"] == F.col("v2"), "left").select(
-                "v",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-                "label0",
-            )
+        prop = (
+            edges.join(cur.select("v", "label"), edges["a"] == F.col("v"))
+            .groupBy(edges["b"].alias("v2"))
+            .agg(F.min("label").alias("nlabel"))
+        )
+        cur = cur.join(prop, cur["v"] == F.col("v2"), "left").select(
+            "v",
+            F.least(
+                F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
+            ).alias("label"),
+            "label0",
+        )
         # LAZY checkpoint (round 15): eager=False defers materialization
         # into the convergence count below, so each round costs ONE
         # driver action (compute + store blocks + count changes in the
@@ -121,7 +90,6 @@ def min_label_propagate(
         )
         changed = cur.filter(F.col("label") != F.col("label0")).count()
         labels = cur.select("v", "label")
-        rounds += k
         if changed == 0:
             return labels
     raise RuntimeError(err)

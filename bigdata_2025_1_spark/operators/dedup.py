@@ -711,10 +711,9 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side convergence check — the standard Spark shape for iterative
     graph algorithms (bounded by graph diameter, each step one join+agg).
     The oracle computes the same closure with a recursive CTE."""
-    # Round-14 loop shape: the chunked, join-free-convergence min-label
-    # propagation helper (functions/iterate.py) — CC_CHUNK rounds per
-    # materialization + check instead of two driver actions per round,
-    # with localCheckpoint lineage truncation at chunk boundaries (the
+    # The join-free-convergence min-label propagation helper
+    # (functions/iterate.py): one driver action per round instead of
+    # two, with localCheckpoint lineage truncation every round (the
     # round-13 plan for this query had grown to a 409 KB logical tree;
     # the checks themselves no longer join old-vs-new label frames).
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
@@ -734,8 +733,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_rounds=32,  # diameter bound; tiny real-world dup clusters
         err=(
             "dedup_connected_components: label propagation did not converge "
-            "within the 32-round diameter bound plus its confirming grace "
-            "chunk (component diameter > 32?) — returning partial labels "
+            "within the 32-round diameter bound plus one confirming "
+            "round (component diameter > 32?) — returning partial labels "
             "would silently split real clusters"
         ),
     )

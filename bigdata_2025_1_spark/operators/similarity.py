@@ -1950,18 +1950,17 @@ def dbscan_roles_from_pairs(
         .select("a", "b")
         .localCheckpoint()
     )
-    # min-label propagation, the shared chunked loop (round 14:
-    # CC_CHUNK rounds per materialization + join-free convergence
-    # check instead of two driver actions per round — see
-    # functions/iterate.py for the exactness argument)
+    # min-label propagation, the shared loop (round 14: one driver
+    # action per round with a join-free convergence check — see
+    # functions/iterate.py)
     labels = min_label_propagate(
         cedges,
         core.select(F.col("vec_id").alias("v"), F.col("vec_id").alias("label")),
         max_rounds=32,  # diameter bound; dense clusters are shallow
         err=(
             "density_core_clusters: label propagation did not converge "
-            "within the 32-round diameter bound plus its confirming grace "
-            "chunk (core-graph diameter > 32?)"
+            "within the 32-round diameter bound plus one confirming "
+            "round (core-graph diameter > 32?)"
         ),
     )
     clab = labels.select(F.col("v").alias("vec_id"), F.col("label").alias("cluster_id"))

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_2025_1_spark.functions import text as T
@@ -98,3 +99,25 @@ def test_min_label_propagate_reliable_checkpoint(spark, tmp_path):
         for r in min_label_propagate(edges, labels0, reliable=True).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
+
+
+def _path_labels(spark, n):
+    el = [(v, v + 1) for v in range(1, n)]
+    edges = spark.createDataFrame(el + [(b, a) for a, b in el], ["a", "b"])
+    labels0 = spark.createDataFrame([(v, v) for v in range(1, n + 1)], ["v", "label"])
+    return edges, labels0
+
+
+def test_min_label_propagate_round_bound(spark):
+    """``max_rounds`` bounds the component diameter: a path whose
+    diameter equals the bound converges in its confirming extra round,
+    one edge longer raises ``err``."""
+    from bigdata_2025_1_spark.functions.iterate import min_label_propagate
+
+    edges, labels0 = _path_labels(spark, 4)
+    got = {r.v: r.label for r in min_label_propagate(edges, labels0, max_rounds=3).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
+
+    edges, labels0 = _path_labels(spark, 5)
+    with pytest.raises(RuntimeError, match="path too long"):
+        min_label_propagate(edges, labels0, max_rounds=3, err="path too long")

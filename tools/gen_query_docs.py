@@ -4,8 +4,7 @@ Run: python tools/gen_query_docs.py   (rewrites QUERIES.md at repo root)
 
 The registry is the source of truth; this file just renders it so a
 reader can navigate 150+ queries without grepping decorators. Grouped by
-module, ordered by name; the driver-checked head (first 50 of
-``queries()``) is marked so the rotation state is visible at a glance.
+module, ordered by name.
 """
 
 from __future__ import annotations
@@ -22,7 +21,6 @@ from bigdata_2025_1_spark import registry  # noqa: E402
 
 def main() -> None:
     registry.load_all()
-    head = set(list(registry.all_queries())[:50])
     by_module: dict[str, list[tuple[str, str]]] = defaultdict(list)
     for name, fn in registry.QUERIES.items():
         doc = (fn.__doc__ or "").strip().splitlines()
@@ -34,8 +32,6 @@ def main() -> None:
         "",
         f"{len(registry.QUERIES)} registered queries, "
         f"{len(registry.ORACLES)} with DuckDB oracles. "
-        "`*` marks the current driver-checked head (first 50 of `queries()`; "
-        "see the rotation plan in `registry.py`). "
         "Generated by `tools/gen_query_docs.py` — do not edit by hand.",
         "",
     ]
@@ -43,8 +39,7 @@ def main() -> None:
         lines.append(f"## {mod}")
         lines.append("")
         for name, doc in sorted(by_module[mod]):
-            star = "\\*" if name in head else ""
-            lines.append(f"- **{name}**{star} — {doc}")
+            lines.append(f"- **{name}** — {doc}")
         lines.append("")
     with open(os.path.join(REPO, "QUERIES.md"), "w", encoding="utf-8") as f:
         f.write("\n".join(lines))

@@ -1,6 +1,6 @@
 """Per-query job/stage profiler (optimization round tooling, guide §1).
 
-Runs the named queries (default: the bench HEADLINE list) once warm +
+Runs the named queries (default: every registered query) once warm +
 once measured in ONE session with the Spark event log enabled, each
 run labeled via ``setJobDescription`` (guide §1.5), then parses the
 event log into per-query job/stage aggregates:

@@ -1,12 +1,11 @@
-"""Local mirror of the driver's correctness gate (CLI).
+"""The full oracle sweep (CLI): every registered query against its
+DuckDB oracle over the same parquet.
 
-Usage: python tools/selfcheck.py [--vanilla] [--head N] [sf_dir] [query ...]
+Usage: python tools/selfcheck.py [--vanilla] [sf_dir] [query ...]
 
 ``--vanilla`` runs under an untuned SparkSession (plain builder, default
-configs — the driver's environment) instead of the repo's tuned session;
-queries must pass BOTH ways. ``--head N`` checks only the first N
-registry entries — ``--head 50`` reproduces exactly the set the round
-driver will write to CORRECTNESS_r{N}.json.
+configs) instead of the repo's tuned session; queries must pass BOTH
+ways.
 """
 
 from __future__ import annotations
@@ -25,23 +24,16 @@ from bigdata_2025_1_spark.session import get_spark  # noqa: E402
 def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--vanilla"]
     vanilla = "--vanilla" in sys.argv[1:]
-    head = 0
-    if "--head" in args:
-        i = args.index("--head")
-        head = int(args[i + 1])
-        del args[i : i + 2]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
     queries = all_queries()
-    if head:
-        queries = dict(list(queries.items())[:head])
     oracles = all_oracles()
     # Carriage-return stage bars interleave with the `ok <name>` result
     # lines in a non-tty log (gluing bars onto results and breaking
     # `grep -c "^ok"`); keep the selfcheck log machine-parseable. The
     # config only affects console noise, so the vanilla session stays
-    # driver-representative.
+    # untuned.
     if vanilla:
         from pyspark.sql import SparkSession
 
