@@ -1,39 +1,40 @@
-"""Overlapping independent job chains from the driver (guide §2.6).
+"""The release-gate combinator: one verdict row from independent legs.
 
-Spark happily runs several jobs at once inside one application; actions
-are only sequential because driver code calls them sequentially. The
-release-gate compositions are the textbook case: each family gate
-reduces to a tiny verdict frame through its own chain of jobs (scans,
-shuffles, convergence loops), the chains are mutually independent, and
-profiled serially the apex wall equals the SUM of the legs with most
-cores idle (platform_release_gate at sf0.1: 13.8 s wall, 175 jobs,
-~4 s of perfectly-parallel task time).
+Every release gate reduces a few registered queries (its *legs*) to one
+row of verdicts and their conjunction, the same way the gate's DuckDB
+oracle does: each leg is a one-row CTE, the CTEs are CROSS JOINed, a
+few cross-leg ratios are derived, and the verdicts are ANDed. The
+contract :func:`release_gate` keeps:
 
-:func:`materialize_legs` builds and MATERIALIZES each leg in its own
-driver thread, so one leg's straggler/loop tail back-fills executors
-the other legs free (FIFO scheduler back-fill). Materialization is
-``localCheckpoint()`` — eager, executor-local, and exactly right for
-the 1-row/tiny verdict frames the gates produce (the frames are
-reconstructed per run, so nothing survives across bench reps).
-
-Results are unchanged: every leg computes exactly what it computes
-standalone (deterministic per leg, no cross-leg data dependency), and
-the caller assembles the returned materialized frames in declaration
-order. Cross-leg SHARED cached subtrees (e.g. a gate-registered
-persist) must be registered BEFORE calling this, so every thread's
-action plans against the registered entry; concurrent materialization
-of one cache coordinates through the block manager's per-block
-get-or-compute.
+- **One-row legs.** Each builder reduces its query to one row *inside*
+  the leg, so materializing it is cheap. A leg that filters a spine to
+  one operating point (``WHERE nprobe = ...``) keeps the oracle's CROSS
+  JOIN semantics: zero matching rows give a zero-row gate.
+- **Overlapped legs.** The legs are mutually independent job chains, so
+  :func:`materialize_legs` builds and materializes each in its own
+  driver thread; one leg's straggler tail back-fills executors the
+  others free. Materialization is ``localCheckpoint()``: eager,
+  executor-local and right for one-row frames that are rebuilt per run.
+  Every leg computes exactly what it computes standalone.
+- **Shared persists first.** A cached subtree that several legs read
+  must be registered (``persist=True``) BEFORE the gate is called, so
+  every thread's action plans against the registered entry; concurrent
+  materialization of one cache coordinates through the block manager's
+  per-block get-or-compute.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import operator
+from collections.abc import Callable, Mapping, Sequence
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
+# Looked up at call time: perfbench/tracing.py swaps it to time each leg.
 def materialize_legs(
     *builders: "Callable[[], DataFrame]",
 ) -> "list[DataFrame]":
@@ -41,3 +42,51 @@ def materialize_legs(
     driver thread; return the materialized frames in argument order."""
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
         return list(pool.map(lambda build: build().localCheckpoint(), builders))
+
+
+def ratio(num: "Column | str", den: "Column | str") -> Column:
+    """``num / den`` as a double, NULL unless ``den > 0`` (the oracles'
+    ``CASE WHEN den > 0 THEN num::DOUBLE / den END``)."""
+    num, den = (F.col(c) if isinstance(c, str) else c for c in (num, den))
+    return F.when(den > 0, num.cast("double") / den)
+
+
+def release_gate(
+    legs: "Sequence[Callable[[], DataFrame]]",
+    *,
+    out: "Sequence[str]",
+    verdicts: "Mapping[str, Column]",
+    ok: str,
+    derived: "Mapping[str, Column] | None" = None,
+    empty: "Column | None" = None,
+) -> DataFrame:
+    """Assemble a release gate's one verdict row from its leg builders.
+
+    The legs are materialized concurrently (:func:`materialize_legs`)
+    and cross-joined in order, the later ones broadcast; ``derived``
+    columns (cross-leg ratios) are added over the joined row. The
+    result has the columns ``out``, then each verdict, then ``ok``, the
+    verdicts' conjunction.
+
+    Null semantics, identical to the oracles' three-valued logic: any
+    FALSE verdict makes ``ok`` FALSE; otherwise any NULL (unknown)
+    verdict makes it NULL. When ``empty`` is given and TRUE (the gate's
+    input table is empty), every verdict and ``ok`` is NULL: an empty
+    input is a no-decision, not a pass. Vacuous passes (TRUE for a
+    verdict with nothing to judge on live input) belong in the
+    verdict's own expression. A leg with zero rows yields a zero-row
+    gate, as the oracles' CROSS JOIN does.
+    """
+    first, *rest = materialize_legs(*legs)
+    gate = reduce(lambda acc, leg: acc.crossJoin(F.broadcast(leg)), rest, first)
+    if derived:
+        gate = gate.withColumns(dict(derived))
+    if empty is not None:
+        no_decision = F.lit(None).cast("boolean")
+        verdicts = {
+            name: F.when(empty, no_decision).otherwise(v)
+            for name, v in verdicts.items()
+        }
+    return gate.select(
+        *out, *(v.alias(name) for name, v in verdicts.items())
+    ).withColumn(ok, reduce(operator.and_, map(F.col, verdicts)))

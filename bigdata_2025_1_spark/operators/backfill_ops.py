@@ -62,6 +62,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdata_2025_1_spark.functions.overlap import ratio, release_gate
 from bigdata_2025_1_spark.io import load
 from bigdata_2025_1_spark.operators.cdc_ops import (
     _CDC_SQL,
@@ -1225,130 +1226,78 @@ def backfill_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys (zero/negative gross — a broken cents pipeline) is a NULL
     no-decision, never a silent pass (the ann_release_gate hardening).
 
-    Scale shape: the legs are bounded aggregates; the gate reduces them
-    to five 1-row frames assembled by broadcast cross-joins — its cost
-    is the sum of its legs (they share the one flagged record scan
-    shape, and Spark's cache manager dedupes any persisted identical
-    plans)."""
-    # Overlap the five leg job chains (guide §2.6, functions/overlap.py
-    # — the platform_release_gate pattern; values unchanged, each leg
-    # is the registered query computed exactly as standalone). The
-    # shared flagged-stream persist is registered BEFORE the threads
-    # spawn so every leg's plan substitutes the one cached derivation.
-    from bigdata_2025_1_spark.functions.overlap import materialize_legs
-
+    Scale shape: the legs are bounded aggregates; the gate's cost is
+    the sum of its legs (they share the one flagged record scan shape,
+    and Spark's cache manager dedupes any persisted identical plans)."""
+    # Registered BEFORE the gate's leg threads spawn, so every leg's
+    # plan substitutes the one cached flagged-stream derivation.
     _flagged(spark, sf_dir, persist=True)
-    st, cost, summ, idem, ver = materialize_legs(
-        lambda: backfill_dirty_state(spark, sf_dir).agg(
-            F.count("*").cast("bigint").alias("n_keys"),
-            F.coalesce(
-                F.sum(F.when(F.col("is_dirty"), 1).otherwise(0)), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("n_dirty_keys"),
-            F.max("fix_date").alias("fix_date"),
-        ),
-        lambda: backfill_cost_by_granularity(spark, sf_dir)
-        .filter(F.col("granularity") == "key")
-        .select("n_replay_records"),
-        lambda: backfill_restatement_summary(spark, sf_dir).agg(
-            F.coalesce(F.sum("restatement_cents"), F.lit(0))
-            .cast("bigint")
-            .alias("restatement_cents"),
-            F.coalesce(F.sum("abs_restatement_cents"), F.lit(0))
-            .cast("bigint")
-            .alias("abs_restatement_cents"),
-            F.coalesce(F.sum("gross_cents"), F.lit(0))
-            .cast("bigint")
-            .alias("gross_cents"),
-        ),
-        lambda: idempotent_replay_audit(spark, sf_dir).agg(
-            F.coalesce(
-                F.sum(F.when(F.col("exactly_once_ok"), 0).otherwise(1)),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("n_bad_types")
-        ),
-        lambda: backfill_verification_diff(spark, sf_dir).agg(
-            F.coalesce(
-                F.sum(F.when(F.col("verified_ok"), 0).otherwise(1)), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("n_unverified")
-        ),
-    )
-    vals = (
-        st.crossJoin(F.broadcast(cost))
-        .crossJoin(F.broadcast(summ))
-        .crossJoin(F.broadcast(idem))
-        .crossJoin(F.broadcast(ver))
-        .withColumn(
+    return release_gate(
+        [
+            lambda: backfill_dirty_state(spark, sf_dir).agg(
+                F.count("*").cast("bigint").alias("n_keys"),
+                F.coalesce(
+                    F.sum(F.when(F.col("is_dirty"), 1).otherwise(0)), F.lit(0)
+                )
+                .cast("bigint")
+                .alias("n_dirty_keys"),
+                F.max("fix_date").alias("fix_date"),
+            ),
+            lambda: backfill_cost_by_granularity(spark, sf_dir)
+            .filter(F.col("granularity") == "key")
+            .select("n_replay_records"),
+            lambda: backfill_restatement_summary(spark, sf_dir).agg(
+                F.coalesce(F.sum("restatement_cents"), F.lit(0))
+                .cast("bigint")
+                .alias("restatement_cents"),
+                F.coalesce(F.sum("abs_restatement_cents"), F.lit(0))
+                .cast("bigint")
+                .alias("abs_restatement_cents"),
+                F.coalesce(F.sum("gross_cents"), F.lit(0))
+                .cast("bigint")
+                .alias("gross_cents"),
+            ),
+            lambda: idempotent_replay_audit(spark, sf_dir).agg(
+                F.coalesce(
+                    F.sum(F.when(F.col("exactly_once_ok"), 0).otherwise(1)),
+                    F.lit(0),
+                )
+                .cast("bigint")
+                .alias("n_bad_types")
+            ),
+            lambda: backfill_verification_diff(spark, sf_dir).agg(
+                F.coalesce(
+                    F.sum(F.when(F.col("verified_ok"), 0).otherwise(1)), F.lit(0)
+                )
+                .cast("bigint")
+                .alias("n_unverified")
+            ),
+        ],
+        derived={
+            "dirty_frac": ratio("n_dirty_keys", "n_keys"),
+            "restatement_impact": ratio("abs_restatement_cents", "gross_cents"),
+        },
+        out=[
+            "n_keys",
+            "n_dirty_keys",
             "dirty_frac",
-            F.when(
-                F.col("n_keys") > 0,
-                F.col("n_dirty_keys").cast("double") / F.col("n_keys"),
-            ),
-        )
-        .withColumn(
+            "fix_date",
+            "n_replay_records",
+            "restatement_cents",
             "restatement_impact",
-            F.when(
-                F.col("gross_cents") > 0,
-                F.col("abs_restatement_cents").cast("double")
-                / F.col("gross_cents"),
+        ],
+        verdicts={
+            "ok_scope": F.col("dirty_frac") <= F.lit(float(MAX_DIRTY_FRAC)),
+            # nothing dirty: vacuous pass; impact undefined despite dirty
+            # keys stays NULL (impact <= x is NULL).
+            "ok_impact": F.when(F.col("n_dirty_keys") == 0, F.lit(True)).otherwise(
+                F.col("restatement_impact") <= F.lit(float(MAX_RESTATE_IMPACT))
             ),
-        )
-    )
-    oks = (
-        vals.withColumn(
-            "ok_scope",
-            F.when(F.col("n_keys") == 0, F.lit(None).cast("boolean"))
-            .otherwise(
-                F.col("dirty_frac") <= F.lit(float(MAX_DIRTY_FRAC))
-            ),
-        )
-        .withColumn(
-            "ok_impact",
-            F.when(F.col("n_keys") == 0, F.lit(None).cast("boolean"))
-            .when(F.col("n_dirty_keys") == 0, F.lit(True))
-            .when(
-                F.col("restatement_impact").isNull(),
-                F.lit(None).cast("boolean"),
-            )
-            .otherwise(
-                F.col("restatement_impact")
-                <= F.lit(float(MAX_RESTATE_IMPACT))
-            ),
-        )
-        .withColumn(
-            "ok_idempotent",
-            F.when(F.col("n_keys") == 0, F.lit(None).cast("boolean"))
-            .otherwise(F.col("n_bad_types") == 0),
-        )
-        .withColumn(
-            "ok_verified",
-            F.when(F.col("n_keys") == 0, F.lit(None).cast("boolean"))
-            .otherwise(F.col("n_unverified") == 0),
-        )
-    )
-    return oks.select(
-        "n_keys",
-        "n_dirty_keys",
-        "dirty_frac",
-        "fix_date",
-        "n_replay_records",
-        "restatement_cents",
-        "restatement_impact",
-        "ok_scope",
-        "ok_impact",
-        "ok_idempotent",
-        "ok_verified",
-        (
-            F.col("ok_scope")
-            & F.col("ok_impact")
-            & F.col("ok_idempotent")
-            & F.col("ok_verified")
-        ).alias("backfill_ok"),
+            "ok_idempotent": F.col("n_bad_types") == 0,
+            "ok_verified": F.col("n_unverified") == 0,
+        },
+        ok="backfill_ok",
+        empty=F.col("n_keys") == 0,
     )
 
 

@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_2025_1_spark.functions.hashing import md5_int, sql_md5_int
+from bigdata_2025_1_spark.functions.overlap import ratio, release_gate
 from bigdata_2025_1_spark.io import load
 from bigdata_2025_1_spark.operators.incremental_ops import (
     _ARR_SQL,
@@ -1336,114 +1337,78 @@ def cdc_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL no-decision, never a silent pass.
 
     Scale shape: the legs are already bounded aggregates (each one
-    map-side-combinable collapse); the gate reduces them to three
-    1-row frames assembled by broadcast cross-joins — its cost is the
-    sum of its legs, which share the event scan shape."""
-    # Overlap the three leg job chains (guide §2.6, functions/overlap.py
-    # — the platform gate pattern; values unchanged). The legs share
-    # only the UNpersisted event-scan shape (the r14 negative memo kept
-    # the shared-stream cache out), so the threads contend on nothing.
-    from bigdata_2025_1_spark.functions.overlap import materialize_legs
-
-    net, win, feed = materialize_legs(
-        lambda: cdc_net_effect_by_type(spark, sf_dir).agg(
-            F.coalesce(F.sum("n_events_gross"), F.lit(0))
-            .cast("bigint")
-            .alias("n_events_gross"),
-            F.coalesce(F.sum("n_corrected"), F.lit(0))
-            .cast("bigint")
-            .alias("n_corrected"),
-            F.coalesce(F.sum("n_retracted"), F.lit(0))
-            .cast("bigint")
-            .alias("n_retracted"),
-            F.coalesce(F.sum("gross_cents"), F.lit(0))
-            .cast("bigint")
-            .alias("gross_cents"),
-            F.coalesce(F.sum("correction_delta_cents"), F.lit(0))
-            .cast("bigint")
-            .alias("corr_delta_cents"),
-        ),
-        lambda: reconciliation_window_audit(spark, sf_dir)
-        .filter(F.col("window_days") == RECON_WINDOW_DAYS)
-        .select(
+    map-side-combinable collapse); the gate's cost is the sum of its
+    legs, which share the event scan shape."""
+    # The legs share only the UNpersisted event-scan shape (the r14
+    # negative memo kept the shared-stream cache out), so the leg
+    # threads contend on nothing.
+    impact = F.col("correction_impact")
+    return release_gate(
+        [
+            lambda: cdc_net_effect_by_type(spark, sf_dir).agg(
+                F.coalesce(F.sum("n_events_gross"), F.lit(0))
+                .cast("bigint")
+                .alias("n_events_gross"),
+                F.coalesce(F.sum("n_corrected"), F.lit(0))
+                .cast("bigint")
+                .alias("n_corrected"),
+                F.coalesce(F.sum("n_retracted"), F.lit(0))
+                .cast("bigint")
+                .alias("n_retracted"),
+                F.coalesce(F.sum("gross_cents"), F.lit(0))
+                .cast("bigint")
+                .alias("gross_cents"),
+                F.coalesce(F.sum("correction_delta_cents"), F.lit(0))
+                .cast("bigint")
+                .alias("corr_delta_cents"),
+            ),
+            lambda: reconciliation_window_audit(spark, sf_dir)
+            .filter(F.col("window_days") == RECON_WINDOW_DAYS)
+            .select(
+                "n_changes_total",
+                F.col("frac_missed").alias("frac_missed_at_deployed"),
+            ),
+            lambda: cdc_feed_daily_profile(spark, sf_dir).agg(
+                F.coalesce(
+                    F.sum(F.when(F.col("is_retraction_spike"), 1).otherwise(0)),
+                    F.lit(0),
+                )
+                .cast("bigint")
+                .alias("n_spike_days"),
+                F.count("*").cast("bigint").alias("n_feed_days"),
+            ),
+        ],
+        derived={
+            "retraction_rate_total": ratio("n_retracted", "n_events_gross"),
+            "correction_impact": ratio(
+                F.abs(F.col("corr_delta_cents")), "gross_cents"
+            ),
+        },
+        out=[
+            "n_events_gross",
             "n_changes_total",
-            F.col("frac_missed").alias("frac_missed_at_deployed"),
-        ),
-        lambda: cdc_feed_daily_profile(spark, sf_dir).agg(
-            F.coalesce(
-                F.sum(F.when(F.col("is_retraction_spike"), 1).otherwise(0)),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("n_spike_days"),
-            F.count("*").cast("bigint").alias("n_feed_days"),
-        ),
-    )
-    vals = (
-        net.crossJoin(F.broadcast(win))
-        .crossJoin(F.broadcast(feed))
-        .select(
-            "*",
-            F.when(
-                F.col("n_events_gross") > 0,
-                F.col("n_retracted").cast("double")
-                / F.col("n_events_gross"),
-            ).alias("retraction_rate_total"),
-            F.when(
-                F.col("gross_cents") > 0,
-                F.abs(F.col("corr_delta_cents")).cast("double")
-                / F.col("gross_cents"),
-            ).alias("correction_impact"),
-        )
-    )
-    empty = F.col("n_events_gross") == 0
-    null_bool = F.lit(None).cast("boolean")
-    oks = vals.select(
-        "*",
-        F.when(empty, null_bool)
-        .when(F.col("frac_missed_at_deployed").isNull(), F.lit(True))
-        .otherwise(
-            F.col("frac_missed_at_deployed") <= float(CDC_GATE_MAX_MISSED)
-        )
-        .alias("ok_window"),
-        F.when(empty, null_bool)
-        .otherwise(
-            F.col("retraction_rate_total")
-            <= float(CDC_GATE_MAX_RETRACTION)
-        )
-        .alias("ok_retractions"),
-        F.when(empty, null_bool)
-        .when(
-            F.col("correction_impact").isNull()
-            & (F.col("n_corrected") == 0),
-            F.lit(True),
-        )
-        .when(F.col("correction_impact").isNull(), null_bool)
-        .otherwise(
-            F.col("correction_impact") <= float(CDC_GATE_MAX_CORR_IMPACT)
-        )
-        .alias("ok_corrections"),
-        F.when(empty, null_bool)
-        .otherwise(F.col("n_spike_days") == 0)
-        .alias("ok_stability"),
-    )
-    return oks.select(
-        "n_events_gross",
-        "n_changes_total",
-        "frac_missed_at_deployed",
-        "retraction_rate_total",
-        "correction_impact",
-        "n_spike_days",
-        "ok_window",
-        "ok_retractions",
-        "ok_corrections",
-        "ok_stability",
-        (
-            F.col("ok_window")
-            & F.col("ok_retractions")
-            & F.col("ok_corrections")
-            & F.col("ok_stability")
-        ).alias("cdc_ok"),
+            "frac_missed_at_deployed",
+            "retraction_rate_total",
+            "correction_impact",
+            "n_spike_days",
+        ],
+        verdicts={
+            "ok_window": F.when(
+                F.col("frac_missed_at_deployed").isNull(), F.lit(True)
+            ).otherwise(
+                F.col("frac_missed_at_deployed") <= float(CDC_GATE_MAX_MISSED)
+            ),
+            "ok_retractions": F.col("retraction_rate_total")
+            <= float(CDC_GATE_MAX_RETRACTION),
+            # impact undefined with no corrections: vacuous pass; despite
+            # live corrections it stays NULL (impact <= x is NULL).
+            "ok_corrections": F.when(
+                impact.isNull() & (F.col("n_corrected") == 0), F.lit(True)
+            ).otherwise(impact <= float(CDC_GATE_MAX_CORR_IMPACT)),
+            "ok_stability": F.col("n_spike_days") == 0,
+        },
+        ok="cdc_ok",
+        empty=F.col("n_events_gross") == 0,
     )
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from bigdata_2025_1_spark.functions import text as T
 from bigdata_2025_1_spark.functions.hashing import md5_int, sql_md5_int
 from bigdata_2025_1_spark.functions.iterate import min_label_propagate
+from bigdata_2025_1_spark.functions.overlap import ratio, release_gate
 from bigdata_2025_1_spark.functions.ranks import with_global_rank
 from bigdata_2025_1_spark.io import load, spread
 from bigdata_2025_1_spark.registry import query
@@ -2204,101 +2205,64 @@ def dedup_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies) — a clean corpus must release.
 
     Scale shape: both legs are already scale-audited standalone (the
-    prefix-filter truth side, banded candidates, diameter-bounded CC),
-    reduced here to three 1-row aggregates and the CC label frame's
-    tiny per-cluster counts, assembled by broadcast cross-joins. The
-    legs' shared ``_signatures`` input dedupes at the block level via
-    Spark's plan-keyed CacheManager (measured round 11 — see bench.py's
-    negative-memo note), so the gate pays the signature pass once."""
-    # Overlap the leg job chains (guide §2.6, functions/overlap.py —
-    # the platform gate pattern; values unchanged). The recall leg and
-    # the CC chain share the persisted _signatures/_cand_jaccard
-    # frames; concurrent materialization coordinates per block. The
-    # canonical-doc frame is materialized ONCE in its thread (label
-    # rows are cluster-member-sized) and its two aggregates read the
-    # checkpointed blocks at assembly.
-    from bigdata_2025_1_spark.functions.overlap import materialize_legs
-
-    lr, cd, nd = materialize_legs(
-        lambda: lsh_recall_eval(spark, sf_dir).select(
-            "n_true_pairs",
-            F.col("recall").alias("lsh_recall"),
-            "candidate_precision",
-            "lsh_ok",
-        ),
-        lambda: canonical_doc_per_cluster(spark, sf_dir).select(
-            "cluster_id", "is_keeper"
-        ),
-        lambda: load(spark, sf_dir, "documents").agg(
-            F.count("*").cast("bigint").alias("n_docs")
-        ),
-    )
-    drops = cd.agg(
-        F.coalesce(
-            F.sum(F.when(~F.col("is_keeper"), 1).otherwise(0)), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("n_dropped")
-    )
-    sizes = (
-        cd.groupBy("cluster_id")
-        .agg(F.count("*").cast("bigint").alias("csz"))
-        .agg(F.max("csz").alias("max_raw"))
-    )
-    vals = (
-        nd.crossJoin(F.broadcast(lr))
-        .crossJoin(F.broadcast(drops))
-        .crossJoin(F.broadcast(sizes))
-        .select(
+    prefix-filter truth side, banded candidates, diameter-bounded CC).
+    The canonical-doc leg folds its per-cluster sizes and non-keeper
+    count into one row inside the leg, so no cluster-member-sized frame
+    is materialized. The legs' shared ``_signatures`` input dedupes at
+    the block level via Spark's plan-keyed CacheManager (measured round
+    11; the negative-memo note is in ``git show 6f8e198:bench.py``), so
+    the gate pays the signature pass once."""
+    return release_gate(
+        [
+            lambda: lsh_recall_eval(spark, sf_dir).select(
+                "n_true_pairs",
+                F.col("recall").alias("lsh_recall"),
+                "candidate_precision",
+                "lsh_ok",
+            ),
+            lambda: canonical_doc_per_cluster(spark, sf_dir)
+            .groupBy("cluster_id")
+            .agg(
+                F.count("*").cast("bigint").alias("csz"),
+                F.sum(F.when(~F.col("is_keeper"), 1).otherwise(0)).alias("nk"),
+            )
+            .agg(
+                F.max("csz").alias("max_raw"),
+                F.coalesce(F.sum("nk"), F.lit(0)).cast("bigint").alias("n_dropped"),
+            ),
+            lambda: load(spark, sf_dir, "documents").agg(
+                F.count("*").cast("bigint").alias("n_docs")
+            ),
+        ],
+        derived={
+            "near_dup_rate": ratio("n_dropped", "n_docs"),
+            "max_cluster_size": F.when(
+                F.col("n_docs") > 0,
+                F.coalesce(F.col("max_raw"), F.lit(0)).cast("bigint"),
+            ),
+        },
+        out=[
             "n_docs",
             "n_true_pairs",
             "lsh_recall",
             "candidate_precision",
-            "lsh_ok",
-            F.when(
-                F.col("n_docs") > 0,
-                F.col("n_dropped").cast("double") / F.col("n_docs"),
-            ).alias("near_dup_rate"),
-            F.when(
-                F.col("n_docs") > 0,
-                F.coalesce(F.col("max_raw"), F.lit(0)).cast("bigint"),
-            ).alias("max_cluster_size"),
-        )
-    )
-    ok_recall = (
-        F.when(F.col("n_docs") == 0, F.lit(None).cast("boolean"))
-        .when(F.col("lsh_ok").isNull(), F.lit(True))
-        .otherwise(F.col("lsh_ok"))
-    )
-    ok_precision = (
-        F.when(F.col("n_docs") == 0, F.lit(None).cast("boolean"))
-        .when(F.col("candidate_precision").isNull(), F.lit(True))
-        .otherwise(
-            F.col("candidate_precision") >= float(DEDUP_GATE_MIN_PRECISION)
-        )
-    )
-    ok_neardup = F.col("near_dup_rate") <= float(DEDUP_GATE_MAX_NEARDUP)
-    ok_blowup = F.col("max_cluster_size") <= int(DEDUP_GATE_MAX_CLUSTER)
-    oks = vals.select(
-        "n_docs",
-        "n_true_pairs",
-        "lsh_recall",
-        "candidate_precision",
-        "near_dup_rate",
-        "max_cluster_size",
-        ok_recall.alias("ok_recall"),
-        ok_precision.alias("ok_precision"),
-        ok_neardup.alias("ok_neardup"),
-        ok_blowup.alias("ok_blowup"),
-    )
-    return oks.select(
-        "*",
-        (
-            F.col("ok_recall")
-            & F.col("ok_precision")
-            & F.col("ok_neardup")
-            & F.col("ok_blowup")
-        ).alias("dedup_ok"),
+            "near_dup_rate",
+            "max_cluster_size",
+        ],
+        verdicts={
+            "ok_recall": F.when(F.col("lsh_ok").isNull(), F.lit(True)).otherwise(
+                F.col("lsh_ok")
+            ),
+            "ok_precision": F.when(
+                F.col("candidate_precision").isNull(), F.lit(True)
+            ).otherwise(
+                F.col("candidate_precision") >= float(DEDUP_GATE_MIN_PRECISION)
+            ),
+            "ok_neardup": F.col("near_dup_rate") <= float(DEDUP_GATE_MAX_NEARDUP),
+            "ok_blowup": F.col("max_cluster_size") <= int(DEDUP_GATE_MAX_CLUSTER),
+        },
+        ok="dedup_ok",
+        empty=F.col("n_docs") == 0,
     )
 
 

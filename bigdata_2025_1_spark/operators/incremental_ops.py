@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_2025_1_spark.functions.hashing import md5_int, sql_md5_int
+from bigdata_2025_1_spark.functions.overlap import ratio, release_gate
 from bigdata_2025_1_spark.io import load
 from bigdata_2025_1_spark.registry import query
 
@@ -944,82 +945,66 @@ def ingest_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     EMPTY events table yields NULL verdicts and a NULL (unknown)
     ingest_ok — a no-decision, not a pass.
 
-    Scale shape: the legs are already calendar-bounded aggregates;
-    the gate reduces them to three 1-row frames assembled by broadcast
-    joins (the curve's final row rides a keep-the-spine-on-empty
-    ``ON TRUE`` left join)."""
-    # Overlap the three leg job chains (guide §2.6, functions/overlap.py
-    # — the platform gate pattern; values unchanged).
-    from bigdata_2025_1_spark.functions.overlap import materialize_legs
-
-    audit, wm, cv = materialize_legs(
-        lambda: late_event_audit(spark, sf_dir).agg(
-            F.count("*").cast("bigint").alias("n_batches"),
-            F.coalesce(F.sum("n_events"), F.lit(0))
-            .cast("bigint")
-            .alias("n_events_total"),
-            F.coalesce(F.sum("n_late"), F.lit(0))
-            .cast("bigint")
-            .alias("n_late_total"),
-            F.max("max_lateness_days")
-            .cast("bigint")
-            .alias("max_lateness_days"),
-            F.coalesce(F.sum("n_dropped_wm2"), F.lit(0))
-            .cast("bigint")
-            .alias("wm2_dropped_total"),
-        ),
-        lambda: watermarked_rollup_compare(spark, sf_dir).agg(
-            F.coalesce(F.sum("n_lost"), F.lit(0))
-            .cast("bigint")
-            .alias("wm1_lost"),
-            F.coalesce(F.sum("n_events_exact"), F.lit(0))
-            .cast("bigint")
-            .alias("n_exact"),
-        ),
-        lambda: distinct_users_ingest_curve(spark, sf_dir)
-        .orderBy(F.col("batch_date").desc())
-        .limit(1)
-        .select(F.col("new_user_frac").alias("final_new_user_frac")),
-    )
-    vals = (
-        audit.crossJoin(F.broadcast(wm))
-        .join(F.broadcast(cv), F.lit(True), "left")
-        .select(
+    Scale shape: the legs are already calendar-bounded aggregates. The
+    curve leg aggregates its final trigger's row (latest ``batch_date``,
+    a group key) to one row that is NULL on an empty table, equal to
+    the oracle's ``LEFT JOIN cv ON TRUE``."""
+    return release_gate(
+        [
+            lambda: late_event_audit(spark, sf_dir).agg(
+                F.count("*").cast("bigint").alias("n_batches"),
+                F.coalesce(F.sum("n_events"), F.lit(0))
+                .cast("bigint")
+                .alias("n_events_total"),
+                F.coalesce(F.sum("n_late"), F.lit(0))
+                .cast("bigint")
+                .alias("n_late_total"),
+                F.max("max_lateness_days")
+                .cast("bigint")
+                .alias("max_lateness_days"),
+                F.coalesce(F.sum("n_dropped_wm2"), F.lit(0))
+                .cast("bigint")
+                .alias("wm2_dropped_total"),
+            ),
+            lambda: watermarked_rollup_compare(spark, sf_dir).agg(
+                F.coalesce(F.sum("n_lost"), F.lit(0))
+                .cast("bigint")
+                .alias("wm1_lost"),
+                F.coalesce(F.sum("n_events_exact"), F.lit(0))
+                .cast("bigint")
+                .alias("n_exact"),
+            ),
+            # Aggregating the final row (not max_by over the curve) keeps
+            # the top-1 plan: max_by leaves the curve's range sort in
+            # place, three more jobs per call.
+            lambda: distinct_users_ingest_curve(spark, sf_dir)
+            .orderBy(F.col("batch_date").desc())
+            .limit(1)
+            .agg(F.max("new_user_frac").alias("final_new_user_frac")),
+        ],
+        derived={
+            "late_frac_total": ratio("n_late_total", "n_events_total"),
+            "wm1_lost_frac": ratio("wm1_lost", "n_exact"),
+        },
+        out=[
             "n_batches",
             "n_events_total",
             "n_late_total",
-            F.when(
-                F.col("n_events_total") > 0,
-                F.col("n_late_total").cast("double") / F.col("n_events_total"),
-            ).alias("late_frac_total"),
+            "late_frac_total",
             "max_lateness_days",
             "wm2_dropped_total",
-            F.when(
-                F.col("n_exact") > 0,
-                F.col("wm1_lost").cast("double") / F.col("n_exact"),
-            ).alias("wm1_lost_frac"),
+            "wm1_lost_frac",
             "final_new_user_frac",
-        )
-    )
-    empty = F.col("n_events_total") == 0
-    null_bool = F.lit(None).cast("boolean")
-    oks = vals.select(
-        "*",
-        F.when(empty, null_bool)
-        .otherwise(F.col("late_frac_total") <= float(INGEST_MAX_LATE_FRAC))
-        .alias("ok_lateness"),
-        F.when(empty, null_bool)
-        .otherwise(F.col("wm2_dropped_total") == 0)
-        .alias("ok_watermark"),
-        F.when(empty, null_bool)
-        .otherwise(F.col("final_new_user_frac") <= float(INGEST_MAX_NOVELTY))
-        .alias("ok_novelty"),
-    )
-    return oks.select(
-        "*",
-        (
-            F.col("ok_lateness") & F.col("ok_watermark") & F.col("ok_novelty")
-        ).alias("ingest_ok"),
+        ],
+        verdicts={
+            "ok_lateness": F.col("late_frac_total")
+            <= float(INGEST_MAX_LATE_FRAC),
+            "ok_watermark": F.col("wm2_dropped_total") == 0,
+            "ok_novelty": F.col("final_new_user_frac")
+            <= float(INGEST_MAX_NOVELTY),
+        },
+        ok="ingest_ok",
+        empty=F.col("n_events_total") == 0,
     )
 
 

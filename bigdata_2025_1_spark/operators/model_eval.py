@@ -1484,7 +1484,8 @@ def bradley_terry_nation_strength(spark: SparkSession, sf_dir: str) -> DataFrame
     # pair/win table — the kcore/pagerank convention: state is
     # collapsed-graph-sized (|nations|), so a driver-shaped kernel beats
     # 2·ITERS tiny distributed stages (A/B at sf0.1: 12.1 s as a
-    # checkpointed distributed loop → kernel, see bench.py). For an
+    # checkpointed distributed loop → kernel, see the notes in
+    # `git show 6f8e198:bench.py`). For an
     # ITEM-level BT whose vocabulary outgrows a partition, keep the
     # distributed-stage shape (the TextRank counterpart) instead.
     packed = pairs.select(

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from bigdata_2025_1_spark.functions import text as T
 from bigdata_2025_1_spark.functions.hashing import md5_int, sql_md5_int
+from bigdata_2025_1_spark.functions.overlap import ratio, release_gate
 from bigdata_2025_1_spark.io import load, spread
 from bigdata_2025_1_spark.registry import query
 
@@ -923,12 +924,11 @@ def corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: four independent corpus passes, each already
     scale-audited in its standalone form (scan-side exprs, value-domain
-    windows, the vocabulary-sized encode join), reduced to four 1-row
-    aggregates cross-joined by broadcast. The heavyweight leg (the BPE
-    train for the drift test) is session-memoized since round 11
-    (``corpus_ops._bpe_train``, the retrieval_rankings convention), so
-    a suite session running the gate next to any other BPE-family
-    query trains the tokenizer once."""
+    windows, the vocabulary-sized encode join), each reduced to one row
+    inside its leg. The heavyweight leg (the BPE train for the drift
+    test) is session-memoized since round 11 (``corpus_ops._bpe_train``,
+    the retrieval_rankings convention), so a suite session running the
+    gate next to any other BPE-family query trains the tokenizer once."""
     from bigdata_2025_1_spark.operators.dedup import dedup_exact
     from bigdata_2025_1_spark.operators.text_analysis import (
         blocklist_filter_rates,
@@ -943,73 +943,58 @@ def corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2.26 s). platform_release_gate — where the dedup leg makes it
     # four consumers and the CC chain re-reads signatures — registers
     # it instead, and these legs' identical subtrees substitute there.
-    # Overlap the four leg job chains (guide §2.6, functions/overlap.py
-    # — the platform gate pattern; values unchanged).
-    from bigdata_2025_1_spark.functions.overlap import materialize_legs
-
-    q, b, d, f = materialize_legs(
-        lambda: gopher_quality_flags(spark, sf_dir).agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.coalesce(
-                F.sum(F.when(F.col("gopher_pass"), 1).otherwise(0)), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("n_quality_pass"),
-        ),
-        lambda: blocklist_filter_rates(spark, sf_dir).agg(
-            F.coalesce(F.sum("n_docs"), F.lit(0)).cast("bigint").alias("bn"),
-            F.coalesce(F.sum("n_dropped"), F.lit(0))
-            .cast("bigint")
-            .alias("bd"),
-        ),
-        lambda: dedup_exact(spark, sf_dir).agg(
-            F.count("*").cast("bigint").alias("dn"),
-            F.coalesce(
-                F.sum(F.when(F.col("is_duplicate"), 1).otherwise(0)), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("dd"),
-        ),
-        lambda: mannwhitney_fertility_drift(spark, sf_dir).select(
-            F.col("z_score").alias("fert_drift_z")
-        ),
-    )
-    rates = (
-        q.crossJoin(F.broadcast(b))
-        .crossJoin(F.broadcast(d))
-        .crossJoin(F.broadcast(f))
-        .select(
+    return release_gate(
+        [
+            lambda: gopher_quality_flags(spark, sf_dir).agg(
+                F.count("*").cast("bigint").alias("n_docs"),
+                F.coalesce(
+                    F.sum(F.when(F.col("gopher_pass"), 1).otherwise(0)),
+                    F.lit(0),
+                )
+                .cast("bigint")
+                .alias("n_quality_pass"),
+            ),
+            lambda: blocklist_filter_rates(spark, sf_dir).agg(
+                F.coalesce(F.sum("n_docs"), F.lit(0)).cast("bigint").alias("bn"),
+                F.coalesce(F.sum("n_dropped"), F.lit(0))
+                .cast("bigint")
+                .alias("bd"),
+            ),
+            lambda: dedup_exact(spark, sf_dir).agg(
+                F.count("*").cast("bigint").alias("dn"),
+                F.coalesce(
+                    F.sum(F.when(F.col("is_duplicate"), 1).otherwise(0)),
+                    F.lit(0),
+                )
+                .cast("bigint")
+                .alias("dd"),
+            ),
+            lambda: mannwhitney_fertility_drift(spark, sf_dir).select(
+                F.col("z_score").alias("fert_drift_z")
+            ),
+        ],
+        derived={
+            "quality_pass_rate": ratio("n_quality_pass", "n_docs"),
+            "blocklist_drop_rate": ratio("bd", "bn"),
+            "dup_rate": ratio("dd", "dn"),
+        },
+        out=[
             "n_docs",
+            "quality_pass_rate",
+            "blocklist_drop_rate",
+            "dup_rate",
             "fert_drift_z",
-            F.when(
-                F.col("n_docs") > 0,
-                F.col("n_quality_pass").cast("double") / F.col("n_docs"),
-            ).alias("quality_pass_rate"),
-            F.when(
-                F.col("bn") > 0, F.col("bd").cast("double") / F.col("bn")
-            ).alias("blocklist_drop_rate"),
-            F.when(
-                F.col("dn") > 0, F.col("dd").cast("double") / F.col("dn")
-            ).alias("dup_rate"),
-        )
-    )
-    ok_q = F.col("quality_pass_rate") >= float(GATE_MIN_QUALITY_PASS)
-    ok_b = F.col("blocklist_drop_rate") <= float(GATE_MAX_BLOCKLIST_DROP)
-    ok_d = F.col("dup_rate") <= float(GATE_MAX_DUP_RATE)
-    ok_f = F.col("fert_drift_z").isNull() | (
-        F.abs(F.col("fert_drift_z")) <= float(GATE_MAX_ABS_DRIFT_Z)
-    )
-    return rates.select(
-        "n_docs",
-        "quality_pass_rate",
-        "blocklist_drop_rate",
-        "dup_rate",
-        "fert_drift_z",
-        ok_q.alias("ok_quality"),
-        ok_b.alias("ok_blocklist"),
-        ok_d.alias("ok_dedup"),
-        ok_f.alias("ok_fertility"),
-        (ok_q & ok_b & ok_d & ok_f).alias("release_ok"),
+        ],
+        verdicts={
+            "ok_quality": F.col("quality_pass_rate")
+            >= float(GATE_MIN_QUALITY_PASS),
+            "ok_blocklist": F.col("blocklist_drop_rate")
+            <= float(GATE_MAX_BLOCKLIST_DROP),
+            "ok_dedup": F.col("dup_rate") <= float(GATE_MAX_DUP_RATE),
+            "ok_fertility": F.col("fert_drift_z").isNull()
+            | (F.abs(F.col("fert_drift_z")) <= float(GATE_MAX_ABS_DRIFT_Z)),
+        },
+        ok="release_ok",
     )
 
 

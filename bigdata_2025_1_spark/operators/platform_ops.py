@@ -16,29 +16,13 @@ all (its consumer prints per-batch stats to stdout,
 ``/root/reference/spark/consumer.py:33-100``); this is charter scope —
 the operational readout a 100 TB deployment runs nightly.
 
-ROUND-15 EXTENSION (deferred by sequencing, not scope): round 14
-shipped a SEVENTH family gate — ``backfill_release_gate``
-(backfill_ops.py). Composing it here is deferred until its legs clear
-their first driver rows in CORRECTNESS_r15 (the same
-land-legs-first-extend-apex-after sequencing the shared-IVF change and
-this gate itself followed). The planned change is mechanical: a
-``bf`` CTE reading ``backfill_ok`` from
-``_O["backfill_release_gate"]``, a seventh verdict column, and
-``backfill_ok`` joining the conjunction — plus re-pin (sha + idle
-best-of-3) and same-day selfcheck tuned+vanilla, since both the plan
-and the oracle change.
-
-COST FRAMING (deliberate, documented): the gate convention composes by
-CALLING the registered queries, so this row costs the SUM of all six
-gates (idle best-of-3 at sf0.1 in bench.py's round-13 notes: ~7.1 +
-2.8 + 1.0 + 1.0 + 1.9 + ~1 s ≈ 15 s, dominated by dedup_release_gate's
-LSH legs). That is structural, not accidental: each leg is individually
-scale-audited and certified, the apex adds only five broadcast
-cross-joins of 1-row frames, and the row is the once-nightly top of the
-pyramid — not a hot-path query. The alternative (recomputing cheaper
-proxies inline) would let the apex drift from what the per-family
+COST FRAMING (deliberate): the gate composes by CALLING the registered
+family gates, so this row costs the sum of its six legs by design. Each
+leg is individually scale-audited and certified; recomputing cheaper
+proxies inline would let the apex drift from what the per-family
 correctness gates certify, which is exactly what the convention exists
-to prevent.
+to prevent. The row is the once-nightly top of the pyramid, not a
+hot-path query.
 """
 
 from __future__ import annotations
@@ -46,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata_2025_1_spark.functions.overlap import materialize_legs
+from bigdata_2025_1_spark.functions.overlap import release_gate
 from bigdata_2025_1_spark.registry import query
 
 
@@ -129,10 +113,9 @@ def platform_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_platform_gate.py; the deny and no-decision branches are
     exercised on crafted multi-table fixtures.
 
-    Scale shape and cost: the module docstring's COST FRAMING — this
-    row costs the sum of its six certified legs (the heavy one is the
-    dedup gate's LSH banding); the apex itself adds five broadcast
-    cross-joins of 1-row frames. Run nightly, not per-query."""
+    Cost: the module docstring's COST FRAMING — this row costs the sum
+    of its six certified legs (the heavy one is the dedup gate's LSH
+    banding). Run nightly, not per-query."""
     from bigdata_2025_1_spark.operators.cdc_ops import cdc_release_gate
     from bigdata_2025_1_spark.operators.dedup import dedup_release_gate
     from bigdata_2025_1_spark.operators.incremental_ops import (
@@ -157,61 +140,29 @@ def platform_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # i.e. the dedup leg's CC chain during construction). Standalone,
     # the corpus gate measured the cache write as a net loss (see the
     # note there), so the apex — where the fan-out is widest — is the
-    # registration site.
+    # registration site. It is registered BEFORE the leg threads spawn
+    # so every leg's plan sees it.
     doc_lt_toks(spark, sf_dir, persist=True)
-
-    # Overlap the six independent family-gate job chains (guide §2.6,
-    # functions/overlap.py). Profiled serial at sf0.1: the apex wall
-    # (13.8 s, 175 jobs) was EXACTLY the sum of its legs
-    # (54+23+45+19+14+21 jobs) with only ~4 s of perfectly-parallel
-    # task time — the row was scheduler-bound, not compute-bound.
-    # Values are unchanged: each leg is the registered gate, computed
-    # exactly as standalone; the assembly below reads the six
-    # materialized verdict rows. Interleaved A/B at sf0.1:
-    # 17.2 -> 11.1 s. The doc_lt_toks persist above is registered
-    # BEFORE the threads spawn so every leg's plan sees it.
-    builders = (
-        lambda: corpus_release_gate(spark, sf_dir).select(
-            "n_docs", F.col("release_ok").alias("corpus_ok")
-        ),
-        lambda: dedup_release_gate(spark, sf_dir).select("dedup_ok"),
-        lambda: layout_maintenance_plan(spark, sf_dir).select(
-            "n_input_files",
-            (~(F.col("needs_compaction") | F.col("needs_recluster"))).alias(
-                "layout_ok"
+    family_oks = ("corpus_ok", "dedup_ok", "layout_ok", "ann_ok", "ingest_ok", "cdc_ok")
+    return release_gate(
+        [
+            lambda: corpus_release_gate(spark, sf_dir).select(
+                "n_docs", F.col("release_ok").alias("corpus_ok")
             ),
-        ),
-        lambda: ann_release_gate(spark, sf_dir).select("n_vecs", "ann_ok"),
-        lambda: ingest_release_gate(spark, sf_dir).select(
-            "n_events_total", "ingest_ok"
-        ),
-        lambda: cdc_release_gate(spark, sf_dir).select("cdc_ok"),
-    )
-    corpus, ddp, layout, ann, ingest, cdc = materialize_legs(*builders)
-    return (
-        corpus.crossJoin(F.broadcast(ddp))
-        .crossJoin(F.broadcast(layout))
-        .crossJoin(F.broadcast(ann))
-        .crossJoin(F.broadcast(ingest))
-        .crossJoin(F.broadcast(cdc))
-        .select(
-            "n_docs",
-            "n_vecs",
-            "n_events_total",
-            "n_input_files",
-            "corpus_ok",
-            "dedup_ok",
-            "layout_ok",
-            "ann_ok",
-            "ingest_ok",
-            "cdc_ok",
-            (
-                F.col("corpus_ok")
-                & F.col("dedup_ok")
-                & F.col("layout_ok")
-                & F.col("ann_ok")
-                & F.col("ingest_ok")
-                & F.col("cdc_ok")
-            ).alias("platform_ok"),
-        )
+            lambda: dedup_release_gate(spark, sf_dir).select("dedup_ok"),
+            lambda: layout_maintenance_plan(spark, sf_dir).select(
+                "n_input_files",
+                (~(F.col("needs_compaction") | F.col("needs_recluster"))).alias(
+                    "layout_ok"
+                ),
+            ),
+            lambda: ann_release_gate(spark, sf_dir).select("n_vecs", "ann_ok"),
+            lambda: ingest_release_gate(spark, sf_dir).select(
+                "n_events_total", "ingest_ok"
+            ),
+            lambda: cdc_release_gate(spark, sf_dir).select("cdc_ok"),
+        ],
+        out=["n_docs", "n_vecs", "n_events_total", "n_input_files"],
+        verdicts={name: F.col(name) for name in family_oks},
+        ok="platform_ok",
     )

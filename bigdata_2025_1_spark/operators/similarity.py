@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from bigdata_2025_1_spark.functions import vectors as V
 from bigdata_2025_1_spark.functions.iterate import min_label_propagate
+from bigdata_2025_1_spark.functions.overlap import release_gate
 from bigdata_2025_1_spark.io import load, spread
 from bigdata_2025_1_spark.functions.ranks import rank_after_limit
 from bigdata_2025_1_spark.registry import query
@@ -2524,7 +2525,8 @@ def hdbscan_lite_from_pairs(
             # frontier advances exactly as slowly through new links;
             # contraction shortens the walk itself to the contracted
             # diameter (measured: 32 -> 17 rounds on a 32-node chain of
-            # 16 pair-clusters; real-fixture numbers in bench.py notes).
+            # 16 pair-clusters; real-fixture numbers in the notes of
+            # `git show 6f8e198:bench.py`).
             node_sn = (
                 cores.join(prev_labels, "v", "left")
                 .select("v", F.coalesce(F.col("label"), F.col("v")).alias("sn"))
@@ -3480,97 +3482,68 @@ def ann_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: all three legs are already scale-audited standalone
     (one Arrow assignment pass collapsing to {N_CELLS} rows; the
-    value-domain KS histogram; the broadcast-tiny curve joins), reduced
-    here to three 1-row frames assembled by broadcast cross-joins. The
-    gate costs the SUM of its legs, MINUS the corpus cell-assignment
-    pass it used to pay twice: since round 14 both the census and curve
-    legs read the persisted shared ``_corpus_cells`` frame (the
-    round-12 measured-and-deferred experiment, shipped once the legs'
-    first driver rows landed green in CORRECTNESS_r13.json), so the
-    Arrow assignment runs ONCE per gate evaluation (~0.35 s back at
-    sf0.1). Not a scale question either way — the pass is linear and
-    embarrassingly parallel — purely a constant-factor win."""
-    # Overlap the three leg job chains (guide §2.6, functions/overlap.py
-    # — the platform gate pattern; values unchanged). The shared corpus
-    # cell-assignment persist is registered BEFORE the threads spawn so
-    # both the census and the curve plan against the one cached Arrow
-    # pass regardless of which thread's job runs first.
-    from bigdata_2025_1_spark.functions.overlap import materialize_legs
-
+    value-domain KS histogram; the broadcast-tiny curve joins). Both
+    the census and the curve legs read the persisted shared
+    ``_corpus_cells`` frame, so the Arrow assignment runs ONCE per gate
+    evaluation (~0.35 s back at sf0.1) instead of once per leg — a
+    constant-factor win, the pass itself is linear and embarrassingly
+    parallel."""
+    # Registered BEFORE the gate's leg threads spawn, so the census and
+    # the curve plan against the one cached Arrow pass.
     _corpus_cells(spark, sf_dir, persist=True)
-    census, drift, curve = materialize_legs(
-        lambda: ivf_ingest_assign(spark, sf_dir).agg(
-            F.count("*").cast("bigint").alias("n_cells_occupied"),
-            F.coalesce(F.sum(F.col("needs_split").cast("int")), F.lit(0))
-            .cast("bigint")
-            .alias("n_cells_need_split"),
-            F.coalesce(F.sum("n_vecs"), F.lit(0))
-            .cast("bigint")
-            .alias("n_vecs"),
-            F.max("fill_ratio").alias("max_fill_ratio"),
-        ),
-        lambda: embedding_norm_drift(spark, sf_dir).select(
-            F.col("reject_05").alias("ks_reject")
-        ),
-        lambda: ivf_nprobe_recall_curve(spark, sf_dir)
-        .filter(F.col("nprobe") == N_PROBE)
-        .select(
-            F.col("recall_at_k").alias("recall_at_deployed"),
-            F.col("scanned_frac").alias("scanned_frac_at_deployed"),
+    recall, scanned = F.col("recall_at_deployed"), F.col("scanned_frac_at_deployed")
+    idle = F.col("n_queries") == 0
+    return release_gate(
+        [
+            lambda: ivf_ingest_assign(spark, sf_dir).agg(
+                F.count("*").cast("bigint").alias("n_cells_occupied"),
+                F.coalesce(F.sum(F.col("needs_split").cast("int")), F.lit(0))
+                .cast("bigint")
+                .alias("n_cells_need_split"),
+                F.coalesce(F.sum("n_vecs"), F.lit(0))
+                .cast("bigint")
+                .alias("n_vecs"),
+                F.max("fill_ratio").alias("max_fill_ratio"),
+            ),
+            lambda: embedding_norm_drift(spark, sf_dir).select(
+                F.col("reject_05").alias("ks_reject")
+            ),
+            lambda: ivf_nprobe_recall_curve(spark, sf_dir)
+            .filter(F.col("nprobe") == N_PROBE)
+            .select(
+                F.col("recall_at_k").alias("recall_at_deployed"),
+                F.col("scanned_frac").alias("scanned_frac_at_deployed"),
+                "n_truth",
+                "n_queries",
+            ),
+        ],
+        out=[
+            "n_vecs",
+            "n_cells_occupied",
+            "n_cells_need_split",
+            "max_fill_ratio",
+            "ks_reject",
+            "recall_at_deployed",
+            "scanned_frac_at_deployed",
             "n_truth",
             "n_queries",
-        ),
-    )
-    vals = census.crossJoin(F.broadcast(drift)).crossJoin(F.broadcast(curve))
-    empty = F.col("n_vecs") == 0
-    null_bool = F.lit(None).cast("boolean")
-    oks = vals.select(
-        "n_vecs",
-        "n_cells_occupied",
-        "n_cells_need_split",
-        "max_fill_ratio",
-        "ks_reject",
-        "recall_at_deployed",
-        "scanned_frac_at_deployed",
-        "n_truth",
-        "n_queries",
-        F.when(empty, null_bool)
-        .otherwise(F.col("n_cells_need_split") == 0)
-        .alias("ok_balance"),
-        F.when(empty, null_bool)
-        .when(F.col("ks_reject").isNull(), F.lit(True))
-        .otherwise(~F.col("ks_reject"))
-        .alias("ok_drift"),
-        # vacuous pass ONLY when nobody queries (n_queries = 0 — an
-        # index nobody queries must not block release); metrics missing
-        # DESPITE a live probe set is a broken probe pipeline -> NULL
-        # no-decision, never a silent pass (round-12 ADVICE item).
-        F.when(empty, null_bool)
-        .when(
-            F.col("recall_at_deployed").isNull() & (F.col("n_queries") == 0),
-            F.lit(True),
-        )
-        .when(F.col("recall_at_deployed").isNull(), null_bool)
-        .otherwise(F.col("recall_at_deployed") >= float(ANN_GATE_MIN_RECALL))
-        .alias("ok_recall"),
-        F.when(empty, null_bool)
-        .when(
-            F.col("scanned_frac_at_deployed").isNull()
-            & (F.col("n_queries") == 0),
-            F.lit(True),
-        )
-        .when(F.col("scanned_frac_at_deployed").isNull(), null_bool)
-        .otherwise(
-            F.col("scanned_frac_at_deployed") <= float(ANN_GATE_MAX_SCAN)
-        )
-        .alias("ok_scan"),
-    )
-    return oks.select(
-        "*",
-        (
-            F.col("ok_balance")
-            & F.col("ok_drift")
-            & F.col("ok_recall")
-            & F.col("ok_scan")
-        ).alias("ann_ok"),
+        ],
+        verdicts={
+            "ok_balance": F.col("n_cells_need_split") == 0,
+            "ok_drift": F.when(F.col("ks_reject").isNull(), F.lit(True)).otherwise(
+                ~F.col("ks_reject")
+            ),
+            # vacuous pass ONLY when nobody queries (an index nobody
+            # queries must not block release); metrics missing DESPITE
+            # a live probe set fall through to a NULL comparison — a
+            # broken probe pipeline is a no-decision, never a pass.
+            "ok_recall": F.when(recall.isNull() & idle, F.lit(True)).otherwise(
+                recall >= float(ANN_GATE_MIN_RECALL)
+            ),
+            "ok_scan": F.when(scanned.isNull() & idle, F.lit(True)).otherwise(
+                scanned <= float(ANN_GATE_MAX_SCAN)
+            ),
+        },
+        ok="ann_ok",
+        empty=F.col("n_vecs") == 0,
     )
