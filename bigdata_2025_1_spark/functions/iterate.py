@@ -1,35 +1,77 @@
-"""Iterative fixed-point helpers (optimization round 14).
+"""One loop for the engine's lineage-truncating Spark iterations.
 
-The repo's three connected-components sites (``dedup_connected_components``,
-``dbscan_roles_from_pairs``, ``hdbscan_lite_from_pairs``) all ran the same
-min-label-propagation loop with TWO driver actions per round: an eager
-frontier materialization (persist/localCheckpoint) and a convergence count
-that re-joined the new frontier against the old. At bench scale the loops
-are job-count-bound (each action costs a fixed scheduling round-trip; the
-propagation itself is tiny), and at any scale the convergence join is a
-whole extra pass over two label frames.
+``iterate(step, state, rounds=..., changed=...)`` applies ``step`` to a
+DataFrame state round by round and decides, in one place, how the loop
+keeps its plan small and when it stops:
 
-This helper fixes both:
+- **Lazy per-round truncation.** Every round's state is
+  ``localCheckpoint(eager=False)`` (``checkpoint(eager=False)`` with
+  ``reliable=True``), so the logical plan stays one round deep however
+  many rounds run — without it a loop that reads its state twice per
+  round doubles its plan every round and Catalyst analysis blows up
+  within a handful of rounds. Lazy means a round's blocks are stored by
+  the job that first computes them, not by a job of their own. (Under
+  AQE, truncating a round whose step shuffles still runs that round's
+  shuffle stages, each as a job; a narrow step runs none.)
+- **One action per round, only with ``changed``.** A fixed-round loop
+  (``changed=None``) runs no action of its own; each round's last
+  stage runs inside the next round's jobs or the consumer's. A
+  fixed-point loop counts the rows of the just-truncated state that
+  match ``changed`` — the job that computes and stores the round is
+  the one that counts it — and stops at the first round that changed
+  nothing. Reaching the bound with rows still changing raises
+  ``RuntimeError(err)``: a partial fixed point would be a silently
+  wrong answer.
 
-- **Join-free convergence count.** The round-start label rides the
-  frame as a ``label0`` column, so the check is a filter+count over the
-  just-checkpointed blocks instead of a join of two label frames.
-
-- **Lineage truncation.** Every round ends in a ``localCheckpoint()``,
-  so the logical plan stays one round deep regardless of how many
-  rounds the graph's diameter needs (the dbscan site documented
-  Catalyst analysis blowing up past iteration 4 without truncation).
-
-Batching several propagation rounds per convergence check was measured
-at sf0.1 and regressed every site: under AQE each shuffle inside the
-batch still runs as its own job, so batching saved no scheduling while
-the rounds past the fixed point were wasted work.
+Rounds are not batched between convergence checks: under AQE each
+shuffle inside a batch still runs as its own job, so batching saved no
+scheduling while the rounds past the fixed point were wasted work
+(measured at sf0.1 on every min-label site).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def iterate(
+    step: Callable[[DataFrame], DataFrame],
+    state: DataFrame,
+    *,
+    rounds: int,
+    changed: Column | None = None,
+    err: str = "iteration did not converge",
+    reliable: bool = False,
+) -> tuple[DataFrame, int]:
+    """Run ``state = step(state)`` for up to ``rounds`` rounds and return
+    ``(state, rounds_run)``.
+
+    Without ``changed`` all ``rounds`` run. With it, the loop returns
+    after the first round whose state has no row matching ``changed``,
+    and raises ``RuntimeError(err)`` if round ``rounds`` still had one.
+
+    Fault-tolerance trade (``reliable=``): the default
+    ``localCheckpoint`` stores each round's blocks on the executors, so
+    under executor loss the blocks are unrecoverable (no lineage to
+    replay) and the job fails back to its last external snapshot —
+    acceptable for a nightly batch. A long loop on preemptible executors
+    should pass ``reliable=True`` for ``checkpoint()``, which writes each
+    round to the directory set by ``sparkContext.setCheckpointDir``."""
+    for n in range(1, rounds + 1):
+        state = step(state)
+        state = (
+            state.checkpoint(eager=False)
+            if reliable
+            else state.localCheckpoint(eager=False)
+        )
+        if changed is not None and state.filter(changed).count() == 0:
+            return state, n
+    if changed is not None:
+        raise RuntimeError(err)
+    return state, rounds
 
 
 def min_label_propagate(
@@ -50,46 +92,32 @@ def min_label_propagate(
     round, so the loop runs at most ``max_rounds + 1`` rounds and
     raises RuntimeError(err) when the last one still changed a label
     (component diameter above ``max_rounds``) — returning partial
-    labels would silently split real clusters.
+    labels would silently split real clusters. The round-start label
+    rides each round as ``label0``, so the convergence check is a
+    filter over the round's own blocks, not a join of two label
+    frames. ``reliable`` is :func:`iterate`'s checkpoint choice."""
 
-    Fault-tolerance trade (``reliable=``): the default
-    ``localCheckpoint()`` stores each round's label blocks on the
-    EXECUTORS and truncates lineage, so under executor loss at cluster
-    scale the blocks are unrecoverable (no lineage to replay) and the
-    whole job fails back to its last external snapshot — standard and
-    acceptable for a nightly batch, but a long loop on preemptible
-    executors should pass ``reliable=True`` to use plain
-    ``checkpoint()`` (fault-tolerant, written to the directory the
-    caller must first set via ``spark.sparkContext.setCheckpointDir``)
-    at the cost of a filesystem write per round. Local default stays
-    executor-local: same plan shape, no checkpoint dir needed."""
-    labels = labels0
-    for _ in range(max_rounds + 1):
+    def step(labels: DataFrame) -> DataFrame:
         cur = labels.select("v", "label", F.col("label").alias("label0"))
         prop = (
             edges.join(cur.select("v", "label"), edges["a"] == F.col("v"))
             .groupBy(edges["b"].alias("v2"))
             .agg(F.min("label").alias("nlabel"))
         )
-        cur = cur.join(prop, cur["v"] == F.col("v2"), "left").select(
+        return cur.join(prop, cur["v"] == F.col("v2"), "left").select(
             "v",
             F.least(
                 F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
             ).alias("label"),
             "label0",
         )
-        # LAZY checkpoint (round 15): eager=False defers materialization
-        # into the convergence count below, so each round costs ONE
-        # driver action (compute + store blocks + count changes in the
-        # same job) instead of two. The blocks are still stored when
-        # the job computes the RDD; the next round reads them.
-        cur = (
-            cur.checkpoint(eager=False)
-            if reliable
-            else cur.localCheckpoint(eager=False)
-        )
-        changed = cur.filter(F.col("label") != F.col("label0")).count()
-        labels = cur.select("v", "label")
-        if changed == 0:
-            return labels
-    raise RuntimeError(err)
+
+    labels, _ = iterate(
+        step,
+        labels0,
+        rounds=max_rounds + 1,
+        changed=F.col("label") != F.col("label0"),
+        err=err,
+        reliable=reliable,
+    )
+    return labels.select("v", "label")

@@ -270,10 +270,10 @@ WITH RECURSIVE bounds AS (
   SELECT CAST(date_trunc('month', MIN(o_orderdate)) AS DATE) AS m0,
          CAST(date_trunc('month', MAX(o_orderdate)) AS DATE) AS m1
   FROM orders
-), months(m) AS (
-  SELECT m0 FROM bounds
+), months(m, m1) AS (
+  SELECT m0, m1 FROM bounds
   UNION ALL
-  SELECT CAST(m + INTERVAL 1 MONTH AS DATE) FROM months, bounds WHERE m < m1
+  SELECT CAST(m + INTERVAL 1 MONTH AS DATE), m1 FROM months WHERE m < m1
 ), cnt AS (
   SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mm, COUNT(*) AS n
   FROM orders GROUP BY 1
@@ -295,7 +295,10 @@ def recursive_cte_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the recursion materializes ~tens of rows per step on the
     driver-side loop Spark runs for recursive CTEs — calendar-sized, not
     data-sized; the data-sized work stays in the one count aggregate
-    (events_gap_filled_hourly shows the F.sequence alternative)."""
+    (events_gap_filled_hourly shows the F.sequence alternative). The
+    upper bound ``m1`` rides every spine row, so the recursive step
+    reads only the previous step's rows: a step that joined ``bounds``
+    would re-run the ``orders`` aggregate on every iteration."""
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_RECURSIVE_MONTHS_SQL)
 

@@ -712,11 +712,6 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side convergence check — the standard Spark shape for iterative
     graph algorithms (bounded by graph diameter, each step one join+agg).
     The oracle computes the same closure with a recursive CTE."""
-    # The join-free-convergence min-label propagation helper
-    # (functions/iterate.py): one driver action per round instead of
-    # two, with localCheckpoint lineage truncation every round (the
-    # round-13 plan for this query had grown to a 409 KB logical tree;
-    # the checks themselves no longer join old-vs-new label frames).
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     fwd = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     rev = pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdata_2025_1_spark.functions.iterate import iterate
 from bigdata_2025_1_spark.io import load, spread
 from bigdata_2025_1_spark.registry import query
 
@@ -1201,10 +1202,9 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges and the fixed point runs as one Arrow kernel; here the state is
     the vocabulary (Heaps-law sublinear but NOT driver-sized at 100 TB —
     tens of millions of types), so the iteration is the DISTRIBUTED
-    loop-of-joins with a localCheckpoint'd rank frontier per step (the
-    ``density_core_clusters`` lineage-truncation pattern; persist alone
-    doubles the logical plan per iteration). The only driver scalar is
-    the node COUNT (one job) feeding the integer base rank.
+    loop-of-joins run by ``functions/iterate.py iterate``, which keeps
+    the plan one round deep. The only driver scalar is the node COUNT
+    (one job) feeding the integer base rank.
 
     Determinism: identical int64 arithmetic to PageRank (ppm edge
     normalization by floor division, rank*w_ppm // 1e6 contributions,
@@ -1258,23 +1258,23 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     r0 = PR_ONE // n
     base = (15 * r0) // 100
-    ranks = nodes.select(
-        "w", F.lit(r0).cast("bigint").alias("rank")
-    ).localCheckpoint()
-    for _ in range(TR_ITERS):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = (
             edges.join(ranks, edges.src == ranks.w)
             .groupBy(F.col("dst").alias("w2"))
             .agg(F.sum(F.expr(f"rank * w_ppm div {PR_PPM}")).alias("contrib"))
         )
-        ranks = (
-            nodes.join(contrib, nodes.w == F.col("w2"), "left")
-            .select(
-                "w",
-                F.expr(f"{base} + (85 * coalesce(contrib, 0)) div 100").alias("rank"),
-            )
-            .localCheckpoint()
+        return nodes.join(contrib, nodes.w == F.col("w2"), "left").select(
+            "w",
+            F.expr(f"{base} + (85 * coalesce(contrib, 0)) div 100").alias("rank"),
         )
+
+    ranks, _ = iterate(
+        step,
+        nodes.select("w", F.lit(r0).cast("bigint").alias("rank")),
+        rounds=TR_ITERS,
+    )
     scored = ranks.select(
         F.col("w").alias("token"),
         F.col("rank").alias("rank_scaled"),

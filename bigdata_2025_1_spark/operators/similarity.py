@@ -1888,8 +1888,8 @@ def density_core_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pair finding inherits the cell equi-join (+ re-split
     cap) from SemDeDup; degree/core are map-side-combinable aggregates;
     the component loop iterates on the CORE-CORE edge list only
-    (diameter-bounded, each step one join+MIN-agg, localCheckpoint'd
-    frontier so the logical plan stays O(1) per iteration);
+    (diameter-bounded, each step one join+MIN-agg, run by
+    ``min_label_propagate`` so the logical plan stays one round deep);
     the border join touches the pair list once."""
     emb = load(spark, sf_dir, "embeddings")
     keyed = semdedup_keyed_assignment(emb, SEM_CELL_CAP)
@@ -1927,14 +1927,10 @@ def dbscan_roles_from_pairs(
     universe ``ids(vec_id)`` — module-level so the degree/core/
     component/border algebra is directly property-testable against a
     scalar BFS reference (``tests/test_r6_property.py``)."""
-    # Lineage truncation, NOT just caching: the loop below references
-    # `labels` twice per iteration (in prop and in the convergence join),
-    # so with persist() alone the LOGICAL plan doubles every round — at
-    # iteration 4 Catalyst analysis already takes >60 s on 160 edges and
-    # the full query OOMs formatting the tree. localCheckpoint()
-    # materializes AND cuts the plan at each step, keeping analysis O(1)
-    # per iteration. (On a real cluster with dynamic allocation, swap for
-    # reliable checkpoint() — localCheckpoint blocks die with executors.)
+    # The component loop's per-round truncation and convergence check
+    # live in functions/iterate.py (``iterate``); ``sym`` is truncated
+    # once here because the degrees, core edges and border join all
+    # read it.
     sym = dpairs.unionByName(
         dpairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()
@@ -1951,9 +1947,6 @@ def dbscan_roles_from_pairs(
         .select("a", "b")
         .localCheckpoint()
     )
-    # min-label propagation, the shared loop (round 14: one driver
-    # action per round with a join-free convergence check — see
-    # functions/iterate.py)
     labels = min_label_propagate(
         cedges,
         core.select(F.col("vec_id").alias("v"), F.col("vec_id").alias("label")),
@@ -2428,12 +2421,6 @@ HDB_K = 3  # core distance = distance to the HDB_K-th in-cell neighbor
 HDB_EPS = (0.8, 0.85)  # cosine-DISTANCE levels (d = 1 - cosine), eps1 < eps2
 # — two slices of the HDBSCAN hierarchy: eps1 clusters nest inside eps2's
 
-# Diagnostic: propagation iterations per eps level of the LAST
-# hdbscan_lite_from_pairs call (driver-local, overwritten per call).
-# Exists so tests can pin that level-2 seeding actually reduces the
-# iteration count — the observable the VERDICT r10 optimization targets.
-_HDB_LAST_ITERS: list[int] = []
-
 
 def hdbscan_lite_from_pairs(
     ids: DataFrame, dpairs: DataFrame, k: int, eps_levels: tuple[float, ...]
@@ -2464,9 +2451,8 @@ def hdbscan_lite_from_pairs(
     Scale shape: the pair frame is persisted at its collapse point
     (cell-bounded candidates, the cache contract); core distances are
     one bounded window per candidate list; each level's components run
-    the min-label-propagation loop on the filtered core graph with
-    localCheckpoint'd frontiers (the dbscan/dedup_cc shape, diameter
-    bounded)."""
+    ``min_label_propagate`` (functions/iterate.py) on the filtered core
+    graph, the dbscan/dedup_cc loop with the same diameter bound."""
     dpairs = dpairs.persist()
     sym = dpairs.unionByName(
         dpairs.select(F.col("b").alias("a"), F.col("a").alias("b"), "d")
@@ -2499,7 +2485,6 @@ def hdbscan_lite_from_pairs(
     out = None
     prev_labels = None
     prev_eps = None
-    _HDB_LAST_ITERS.clear()
     for eps in eps_levels:
         el = mr.filter(F.col("dmr") <= eps).select("a", "b")
         edges = el.unionByName(
@@ -2532,7 +2517,7 @@ def hdbscan_lite_from_pairs(
                 .select("v", F.coalesce(F.col("label"), F.col("v")).alias("sn"))
                 .localCheckpoint()
             )
-            cedges = (
+            prop_edges = (
                 edges.join(
                     node_sn.select(F.col("v").alias("a"), F.col("sn").alias("sa")),
                     "a",
@@ -2546,7 +2531,6 @@ def hdbscan_lite_from_pairs(
                 .distinct()
                 .localCheckpoint()
             )
-            prop_edges = cedges
             prop_labels = (
                 node_sn.select(F.col("sn").alias("v"))
                 .distinct()
@@ -2559,44 +2543,16 @@ def hdbscan_lite_from_pairs(
             prop_labels = cores.select(
                 "v", F.col("v").alias("label")
             ).localCheckpoint()
-        labels = prop_labels
-        n_iters = 0
-        for _ in range(32):  # diameter bound (dense clusters are shallow)
-            n_iters += 1
-            prop = (
-                prop_edges.join(labels, prop_edges.a == labels.v)
-                .groupBy(F.col("b").alias("v2"))
-                .agg(F.min("label").alias("nlabel"))
-            )
-            new_labels = (
-                labels.join(prop, labels.v == F.col("v2"), "left")
-                .select(
-                    "v",
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("nlabel"), F.col("label")),
-                    ).alias("label"),
-                    # round-start label rides along so the convergence
-                    # check below is a filter over the checkpointed
-                    # blocks, not a join of two label frames (round 14)
-                    F.col("label").alias("label0"),
-                )
-                # lazy: materializes inside the convergence count — one
-                # driver action per round, not two (round 15)
-                .localCheckpoint(eager=False)
-            )
-            changed = new_labels.filter(
-                F.col("label") != F.col("label0")
-            ).count()
-            labels = new_labels.select("v", "label")
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
+        labels = min_label_propagate(
+            prop_edges,
+            prop_labels,
+            max_rounds=32,  # diameter bound; dense clusters are shallow
+            err=(
                 "hdbscan_lite_from_pairs: label propagation did not "
-                "converge in 32 iterations (core-graph diameter > 32?)"
-            )
-        _HDB_LAST_ITERS.append(n_iters)
+                "converge within the 32-round diameter bound plus one "
+                "confirming round (core-graph diameter > 32?)"
+            ),
+        )
         if node_sn is not None:
             # expand supernode labels back to nodes
             labels = (
@@ -2702,8 +2658,8 @@ def hdbscan_lite_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pair generation inherits the cell equi-join; the
     algebra (``hdbscan_lite_from_pairs``) persists the cell-bounded
     pair list once, computes core distances in one bounded window, and
-    runs each level's components on the filtered core graph with
-    localCheckpoint'd frontiers — never all-pairs, never a fact-sized
+    runs each level's components on the filtered core graph through
+    ``min_label_propagate`` — never all-pairs, never a fact-sized
     window."""
     emb = load(spark, sf_dir, "embeddings")
     keyed = semdedup_keyed_assignment(emb, SEM_CELL_CAP)

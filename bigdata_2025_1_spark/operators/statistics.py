@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from bigdata_2025_1_spark.functions.exact import int_div_exact
 from bigdata_2025_1_spark.functions.hashing import md5_int, sql_md5_int
+from bigdata_2025_1_spark.functions.iterate import iterate
 from bigdata_2025_1_spark.functions.ranks import (
     cum_counts_over_values,
     with_global_rank,
@@ -1976,8 +1977,10 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = monthly.persist()
     a = monthly.select(F.col("m").alias("ma"), F.col("rev_c").alias("ra"))
     b = monthly.select(F.col("m").alias("mb"), F.col("rev_c").alias("rb"))
+    # both sides are the same cached frame, so AQE's build side is a
+    # runtime tie; the hint pins it (BuildRight) for a repeatable plan
     pairs = (
-        a.join(b, F.col("ma") < F.col("mb"))
+        a.join(F.broadcast(b), F.col("ma") < F.col("mb"))
         .select(
             (F.col("rb") - F.col("ra")).alias("num"),
             (F.col("mb") - F.col("ma")).alias("den"),
@@ -3321,13 +3324,8 @@ def ipf_weights_from_grid(grid: DataFrame, iters: int = IPF_ITERS) -> DataFrame:
     bounded), so the 2·iters stages are tiny; at 100 TB only the
     initial cell-count aggregate touches the fact table."""
     dec = "decimal(38,0)"
-    w = grid.withColumn("w", F.lit(IPF_PPM).cast(dec))
-    for _ in range(iters):
-        # truncate lineage per iteration (the DBSCAN/TextRank convention):
-        # without it the 2·iters nested broadcast-join stages send
-        # Catalyst analysis superlinear — the measured blowup class
-        # documented at operators/similarity.py's min-label loop
-        w = w.localCheckpoint(eager=True)
+
+    def rake(w: DataFrame) -> DataFrame:
         rt = w.groupBy("g1").agg(
             F.sum(F.col("w") * F.col("n")).alias("row_tot")
         )
@@ -3345,7 +3343,7 @@ def ipf_weights_from_grid(grid: DataFrame, iters: int = IPF_ITERS) -> DataFrame:
         ct = w.groupBy("g2").agg(
             F.sum(F.col("w") * F.col("n")).alias("col_tot")
         )
-        w = (
+        return (
             w.join(F.broadcast(ct), "g2")
             .withColumn(
                 "w",
@@ -3356,7 +3354,13 @@ def ipf_weights_from_grid(grid: DataFrame, iters: int = IPF_ITERS) -> DataFrame:
             )
             .drop("col_tot")
         )
-    return w
+
+    # round 1 reads the initial grid twice (the row totals and the join
+    # back), so it is truncated too; later rounds are cut by iterate
+    w0 = grid.withColumn("w", F.lit(IPF_PPM).cast(dec)).localCheckpoint(
+        eager=False
+    )
+    return iterate(rake, w0, rounds=iters)[0]
 
 
 def _sql_ipf_stage(i: int) -> str:

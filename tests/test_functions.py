@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -121,3 +123,62 @@ def test_min_label_propagate_round_bound(spark):
     edges, labels0 = _path_labels(spark, 5)
     with pytest.raises(RuntimeError, match="path too long"):
         min_label_propagate(edges, labels0, max_rounds=3, err="path too long")
+
+
+def _plus_one(df):
+    return df.select((F.col("x") + 1).alias("x"))
+
+
+@pytest.mark.parametrize("rounds", [2, 8])
+def test_iterate_fixed_rounds_are_lazy_and_one_round_deep(spark, rounds):
+    """A fixed-round ``iterate`` runs every round, starts no job while
+    the frame is built, and truncates each round so the plan holds one
+    checkpointed scan however many rounds ran."""
+    from bigdata_2025_1_spark.functions.iterate import iterate
+    from bigdata_2025_1_spark.plans.explain import formatted_plan
+    from tests.test_session_io import _jobs_started_by
+
+    x0 = spark.range(4).select(F.col("id").alias("x"))
+    built = []
+
+    def build():
+        built.extend(iterate(_plus_one, x0, rounds=rounds))
+
+    assert _jobs_started_by(spark, build) == []
+    state, n = built
+    assert n == rounds
+    assert len(re.findall(r"^\(\d+\) Scan ExistingRDD", formatted_plan(state), re.M)) == 1
+    assert sorted(r.x for r in state.collect()) == [rounds + i for i in range(4)]
+
+
+def _min_label_hop(edges):
+    def step(labels):
+        cur = labels.select("v", "label", F.col("label").alias("label0"))
+        nb = (
+            edges.join(cur.select(F.col("v").alias("a"), "label"), "a")
+            .groupBy(F.col("b").alias("v"))
+            .agg(F.min("label").alias("nlabel"))
+        )
+        return cur.join(nb, "v", "left").select(
+            "v", F.least("label", F.coalesce("nlabel", "label")).alias("label"), "label0"
+        )
+
+    return step
+
+
+def test_iterate_until_unchanged(spark):
+    """With ``changed``, a path of diameter d converges in d changing
+    rounds plus one confirming round; a bound of d rounds raises
+    ``RuntimeError(err)``."""
+    from bigdata_2025_1_spark.functions.iterate import iterate
+
+    d = 3
+    edges, labels0 = _path_labels(spark, d + 1)
+    changed = F.col("label") != F.col("label0")
+    state, n = iterate(_min_label_hop(edges), labels0, rounds=d + 1, changed=changed)
+    assert n == d + 1
+    assert {r.v: r.label for r in state.collect()} == {v: 1 for v in range(1, d + 2)}
+    with pytest.raises(RuntimeError, match="still changing"):
+        iterate(
+            _min_label_hop(edges), labels0, rounds=d, changed=changed, err="still changing"
+        )

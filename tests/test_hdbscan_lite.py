@@ -135,15 +135,27 @@ def test_hdbscan_lite_under_k_candidates_is_all_noise(spark):
 
 
 @pytest.mark.slow
-def test_hdbscan_level2_seeding_reduces_iterations(spark):
+def test_hdbscan_level2_seeding_reduces_iterations(spark, monkeypatch):
     """VERDICT r10 ask #3: level 2 seeds its labels from level 1's
     converged components (valid by the nesting property), so on a graph
     where eps2 chains many eps1 clusters the propagation loop needs
     roughly half the hops. Pin BOTH the correctness (output identical
     to running level 2 alone, which uses identity init) and the
     iteration saving on a 16-segment chain: eps1 links pairs
-    (2i, 2i+1); eps2 links the whole chain."""
-    from bigdata_2025_1_spark.operators import similarity as S
+    (2i, 2i+1); eps2 links the whole chain. The round counts are read
+    from ``functions.iterate.iterate``, which each level's propagation
+    calls once."""
+    from bigdata_2025_1_spark.functions import iterate as it
+
+    rounds_run: list[int] = []
+    real_iterate = it.iterate
+
+    def recording_iterate(*args, **kwargs):
+        state, n_rounds = real_iterate(*args, **kwargs)
+        rounds_run.append(n_rounds)
+        return state, n_rounds
+
+    monkeypatch.setattr(it, "iterate", recording_iterate)
 
     n = 32  # nodes 0..31 in a path; intra-pair d=0.1, cross-pair d=0.5
     ids_df = spark.createDataFrame([(i,) for i in range(n)], "vec_id long")
@@ -160,14 +172,15 @@ def test_hdbscan_level2_seeding_reduces_iterations(spark):
             ids_df, pairs_df, 1, (0.2, 0.6)
         ).collect()
     }
-    seeded_iters = list(S._HDB_LAST_ITERS)
+    seeded_iters = list(rounds_run)
     # correctness: identical to the scalar reference at both levels
     assert got == _ref_hdbscan_lite(
         list(range(n)), pairs, 1, (0.2, 0.6)
     )
     # identity-init baseline for level 2: run eps2 as the FIRST level
+    rounds_run.clear()
     hdbscan_lite_from_pairs(ids_df, pairs_df, 1, (0.6,)).collect()
-    identity_iters = S._HDB_LAST_ITERS[0]
+    identity_iters = rounds_run[0]
     assert len(seeded_iters) == 2
     # label 0 walks the 31-hop chain one hop per round under identity
     # init; seeding pre-collapses each eps1 pair so it walks pair-blocks
@@ -176,4 +189,20 @@ def test_hdbscan_level2_seeding_reduces_iterations(spark):
         seeded_iters,
         identity_iters,
     )
+    spark.catalog.clearCache()
+
+
+def test_hdbscan_converges_at_diameter_32(spark):
+    """The propagation bound is 32 changing rounds plus one confirming
+    round, the same as every other min-label site: a 33-node path (core
+    graph of diameter 32) at one eps level is one cluster, not an
+    error."""
+    n = 33
+    ids_df = spark.createDataFrame([(i,) for i in range(n)], "vec_id long")
+    pairs_df = spark.createDataFrame(
+        [(i, i + 1, 0.1) for i in range(n - 1)], "a long, b long, d double"
+    )
+    rows = hdbscan_lite_from_pairs(ids_df, pairs_df, 1, (0.2,)).collect()
+    assert len(rows) == n
+    assert {r.cluster_id for r in rows} == {0}
     spark.catalog.clearCache()
