@@ -27,14 +27,17 @@ reference is cited by file:line in docstrings for semantic parity only).
 Cache contract
 --------------
 Registered queries return LAZY DataFrames; some ``persist()`` shared
-intermediates (LSH signatures, graph edge lists, tokenization passes)
-that must stay cached until the caller materializes the result — so
-queries cannot unpersist before returning. The contract: the CALLER
-releases with ``spark.catalog.clearCache()`` after consuming each
-query's result. Both shipped harnesses do (``bench.py`` per run,
-``tools/selfcheck.py`` per query; ``tests/test_observe.py`` pins that
-this leaves zero cached blocks); an interactive consumer embedding this
-package should do the same.
+intermediates (LSH signatures, graph edge lists, ranking frames) that
+must stay cached until the caller materializes the result — so queries
+cannot unpersist before returning. The one exception is a release
+gate's ``shared`` frames (``functions.overlap.release_gate``): the gate
+has materialized every leg before it returns, so it frees them itself.
+Every other per-query persist is the CALLER's to release, with
+``spark.catalog.clearCache()`` after consuming each query's result.
+Both shipped harnesses do (``bench.py`` per run, ``tools/selfcheck.py``
+per query; ``tests/test_observe.py`` pins that this leaves zero cached
+blocks); an interactive consumer embedding this package should do the
+same.
 """
 
 __version__ = "0.1.0"

@@ -16,11 +16,15 @@ contract :func:`release_gate` keeps:
   others free. Materialization is ``localCheckpoint()``: eager,
   executor-local and right for one-row frames that are rebuilt per run.
   Every leg computes exactly what it computes standalone.
-- **Shared persists first.** A cached subtree that several legs read
-  must be registered (``persist=True``) BEFORE the gate is called, so
-  every thread's action plans against the registered entry; concurrent
-  materialization of one cache coordinates through the block manager's
-  per-block get-or-compute.
+- **Shared frames are the gate's.** A subtree that several legs read is
+  passed as ``shared=``: the gate persists it before the leg threads
+  spawn, so every leg plans against the one cache entry (concurrent
+  reads coordinate through the block manager's per-block
+  get-or-compute), and unpersists it once the legs have returned. The
+  legs are checkpointed by then, so the assembled row never reads it.
+- **Legs run as the caller.** Each leg thread inherits the caller's
+  local properties (job group, description, job tags) and session tags,
+  so its jobs are attributed to the query that started the gate.
 """
 
 from __future__ import annotations
@@ -30,7 +34,8 @@ from collections.abc import Callable, Mapping, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -39,9 +44,19 @@ def materialize_legs(
     *builders: "Callable[[], DataFrame]",
 ) -> "list[DataFrame]":
     """Build each leg and materialize it (localCheckpoint) in its own
-    driver thread; return the materialized frames in argument order."""
-    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        return list(pool.map(lambda build: build().localCheckpoint(), builders))
+    driver thread; return the materialized frames in argument order.
+
+    Each leg gets its own ``inheritable_thread_target``: one call
+    clones the caller's local properties once and installs that copy in
+    every thread it wraps, and Spark writes each thread's SQL execution
+    id into it."""
+    session = SparkSession.active()
+    legs = [
+        inheritable_thread_target(session)(lambda b=build: b().localCheckpoint())
+        for build in builders
+    ]
+    with ThreadPoolExecutor(max_workers=len(legs)) as pool:
+        return list(pool.map(lambda leg: leg(), legs))
 
 
 def ratio(num: "Column | str", den: "Column | str") -> Column:
@@ -59,6 +74,7 @@ def release_gate(
     ok: str,
     derived: "Mapping[str, Column] | None" = None,
     empty: "Column | None" = None,
+    shared: "Sequence[DataFrame]" = (),
 ) -> DataFrame:
     """Assemble a release gate's one verdict row from its leg builders.
 
@@ -76,8 +92,17 @@ def release_gate(
     verdict with nothing to judge on live input) belong in the
     verdict's own expression. A leg with zero rows yields a zero-row
     gate, as the oracles' CROSS JOIN does.
+
+    ``shared`` frames are persisted while the legs run and unpersisted
+    when they have returned.
     """
-    first, *rest = materialize_legs(*legs)
+    for df in shared:
+        df.persist()
+    try:
+        first, *rest = materialize_legs(*legs)
+    finally:
+        for df in shared:
+            df.unpersist()
     gate = reduce(lambda acc, leg: acc.crossJoin(F.broadcast(leg)), rest, first)
     if derived:
         gate = gate.withColumns(dict(derived))

@@ -180,21 +180,14 @@ def key_state(rec: DataFrame) -> DataFrame:
     )
 
 
-def _flagged(spark: SparkSession, sf_dir: str, persist: bool = False) -> DataFrame:
-    """The flagged CDC record stream. ``persist=True`` at the sites that
-    fan it into several consuming lineages (the replay audit, the day
-    census, the watermark — and through them the release gate): the
-    stream's own lineage contains TWO cdc-stream derivations (the
-    fix_date cross-join agg plus the main branch), so each extra
-    consumer replays the events scan + version explode + flag without
-    the cache. Single-collapse queries (``key_state(_flagged(...))``)
-    stay unpersisted — the cache write is pure overhead for one pass
-    (measured +0.3-0.6 s each at sf0.1) — yet still benefit inside the
-    release gate: the CacheManager substitutes ANY identical analyzed
-    subtree once a persisting leg has registered the frame, so the
-    gate pays the derivation once regardless of which leg runs first."""
-    rec = with_fix_flags(with_changes(load(spark, sf_dir, "events")))
-    return rec.persist() if persist else rec
+def _flagged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagged CDC record stream. Its lineage holds two cdc-stream
+    derivations (the fix_date cross-join aggregate and the main branch),
+    so every extra consumer replays the events scan, version explode and
+    flag unless the frame is cached. Queries that read it several times
+    persist it; a single-pass reader does not, since the cache write is
+    pure overhead for one read."""
+    return with_fix_flags(with_changes(load(spark, sf_dir, "events")))
 
 
 # --- 1. the dirty-state diff (what the bug actually did) ----------------------
@@ -838,7 +831,7 @@ def idempotent_replay_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the dedup is a hash repartition by the MERGE key —
     exactly the shuffle a real idempotent writer pays, linear in the
     replay set; the per-type collapses are map-side combinable."""
-    rec = _flagged(spark, sf_dir, persist=True)
+    rec = _flagged(spark, sf_dir).persist()
     dks = (
         rec.filter(F.col("is_bad"))
         .select("event_date", "event_type")
@@ -1007,7 +1000,7 @@ def reprocessing_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: broadcast-joined filter of the record scan down to
     dirty keys, then one map-side-combinable per-type collapse."""
-    rec = _flagged(spark, sf_dir, persist=True)
+    rec = _flagged(spark, sf_dir).persist()
     dks = (
         rec.filter(F.col("is_bad"))
         .select("event_date", "event_type")
@@ -1227,11 +1220,7 @@ def backfill_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-decision, never a silent pass (the ann_release_gate hardening).
 
     Scale shape: the legs are bounded aggregates; the gate's cost is
-    the sum of its legs (they share the one flagged record scan shape,
-    and Spark's cache manager dedupes any persisted identical plans)."""
-    # Registered BEFORE the gate's leg threads spawn, so every leg's
-    # plan substitutes the one cached flagged-stream derivation.
-    _flagged(spark, sf_dir, persist=True)
+    the sum of its legs, which read one cached flagged record stream."""
     return release_gate(
         [
             lambda: backfill_dirty_state(spark, sf_dir).agg(
@@ -1298,6 +1287,7 @@ def backfill_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         ok="backfill_ok",
         empty=F.col("n_keys") == 0,
+        shared=[_flagged(spark, sf_dir)],
     )
 
 

@@ -1458,11 +1458,11 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # running several BPE-family queries (bpe_merge_sequence,
 # bpe_encode_corpus, tokenizer_fertility_by_lang,
 # mannwhitney_fertility_drift, corpus_release_gate's fertility leg)
-# trains the tokenizer ONCE — the exact _RANKINGS_MEMO pattern
-# (similarity.py) the round-10 VERDICT asked to replicate here (ask
-# #2). Bounded: oldest entry evicted (and its vocabulary unpersisted)
-# past 8 keys. Same documented caveat as the rankings memo: keys are
-# PATH identity — the test corpus is immutable; a mutable deployment
+# trains the tokenizer once. Training runs on the driver (one argmax
+# collect per merge round), so Spark's CacheManager cannot share it:
+# only the merge log held here skips those jobs. Bounded: the oldest
+# entry is evicted (and its vocabulary unpersisted) past 8 keys. Keys
+# are path identity: the test corpus is immutable; a mutable deployment
 # should key on a table snapshot id.
 _BPE_MEMO: dict[tuple[str, str], tuple[list, DataFrame]] = {}
 

@@ -79,13 +79,11 @@ def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted (doc_id, shingles, sig) frame — it feeds both the
     band join and the verify join.
 
-    Round-15: the tokenize step under the shingles is the shared
+    The tokenize step under the shingles is the shared
     :func:`doc_lt_toks` subtree (``word_shingles(text) ==
     word_shingles_from_tokens(ws_tokens(lower(text)))`` by definition),
-    so inside ``platform_release_gate`` this leg reads the ONE cached
-    tokenize pass the corpus leg registers instead of re-tokenizing the
-    corpus. Standalone dedup queries collapse the projection into the
-    same scan-side pass as before (nothing registers the cache)."""
+    so inside ``platform_release_gate``, which shares that frame, this
+    leg reads the one cached tokenize pass."""
     from bigdata_2025_1_spark.operators.shared_text import doc_lt_toks
 
     toks = doc_lt_toks(spark, sf_dir).select(

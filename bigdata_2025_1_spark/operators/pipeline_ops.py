@@ -926,9 +926,9 @@ def corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-audited in its standalone form (scan-side exprs, value-domain
     windows, the vocabulary-sized encode join), each reduced to one row
     inside its leg. The heavyweight leg (the BPE train for the drift
-    test) is session-memoized since round 11 (``corpus_ops._bpe_train``,
-    the retrieval_rankings convention), so a suite session running the
-    gate next to any other BPE-family query trains the tokenizer once."""
+    test) is session-memoized (``corpus_ops._bpe_train``), so a session
+    running the gate next to any other BPE-family query trains the
+    tokenizer once."""
     from bigdata_2025_1_spark.operators.dedup import dedup_exact
     from bigdata_2025_1_spark.operators.text_analysis import (
         blocklist_filter_rates,
@@ -936,13 +936,9 @@ def corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         mannwhitney_fertility_drift,
     )
 
-    # Three of the four legs below tokenize documents with the shared
-    # doc_lt_toks subtree. The persist is NOT registered here: measured
-    # standalone, the (lt, toks) cache write costs more than the two
-    # extra scan-side tokenizes it saves (interleaved A/B 1.77 ->
-    # 2.26 s). platform_release_gate — where the dedup leg makes it
-    # four consumers and the CC chain re-reads signatures — registers
-    # it instead, and these legs' identical subtrees substitute there.
+    # Three legs tokenize documents with doc_lt_toks, yet the gate
+    # shares nothing: for three consumers the (lt, toks) cache write
+    # costs more than the two scan-side tokenizes it saves.
     return release_gate(
         [
             lambda: gopher_quality_flags(spark, sf_dir).agg(

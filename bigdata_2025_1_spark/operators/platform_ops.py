@@ -130,19 +130,6 @@ def platform_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_2025_1_spark.operators.shared_text import doc_lt_toks
     from bigdata_2025_1_spark.operators.similarity import ann_release_gate
 
-    # Register the shared documents tokenize pass (round 15, the r14
-    # VERDICT's #1 ask): FOUR legs below tokenize documents with the
-    # doc_lt_toks subtree — the corpus gate's gopher/blocklist/
-    # fertility legs and the dedup gate's _signatures. Registering the
-    # persist here makes the CacheManager substitute all four identical
-    # analyzed subtrees with ONE cached pass (registration only — the
-    # blocks materialize inside whichever consuming job runs first,
-    # i.e. the dedup leg's CC chain during construction). Standalone,
-    # the corpus gate measured the cache write as a net loss (see the
-    # note there), so the apex — where the fan-out is widest — is the
-    # registration site. It is registered BEFORE the leg threads spawn
-    # so every leg's plan sees it.
-    doc_lt_toks(spark, sf_dir, persist=True)
     family_oks = ("corpus_ok", "dedup_ok", "layout_ok", "ann_ok", "ingest_ok", "cdc_ok")
     return release_gate(
         [
@@ -165,4 +152,7 @@ def platform_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         out=["n_docs", "n_vecs", "n_events_total", "n_input_files"],
         verdicts={name: F.col(name) for name in family_oks},
         ok="platform_ok",
+        # Four legs tokenize documents: corpus's gopher, blocklist and
+        # fertility legs and dedup's _signatures.
+        shared=[doc_lt_toks(spark, sf_dir)],
     )

@@ -1,20 +1,13 @@
-"""The shared documents tokenization pass (optimization round 15).
+"""The shared documents tokenization pass.
 
-Four operator families tokenize ``documents`` with the SAME expression
-— ``ws_tokens(lower(text))`` — yet each built its own copy of the
-subtree, so the release-gate compositions paid the regex tokenize once
-per leg: ``gopher_quality_flags``, ``blocklist_filter_rates`` and
-``mannwhitney_fertility_drift`` inside ``corpus_release_gate``, and the
-dedup family's ``_signatures`` under ``dedup_release_gate`` — all four
-under ``platform_release_gate`` (the r14 VERDICT's #1 ask).
-
-:func:`doc_lt_toks` is that pass as ONE canonical frame. Consumers
-build from it unconditionally (a pure projection — standalone physical
-plans are unchanged after projection collapse); the multi-consumer
-GATES register it with ``persist=True`` (the ``_flagged(persist=)``
-pattern), and Spark's plan-keyed CacheManager then substitutes every
-leg's identical analyzed subtree with the one cached tokenize pass.
-Standalone queries never pay the cache write.
+``gopher_quality_flags``, ``blocklist_filter_rates``,
+``mannwhitney_fertility_drift`` and the dedup family's ``_signatures``
+all tokenize ``documents`` with the same expression,
+``ws_tokens(lower(text))``. They build it from :func:`doc_lt_toks`, so a
+gate that composes several of them can pass the one frame as
+``release_gate(shared=...)``; Spark's plan-keyed CacheManager then
+substitutes every leg's identical subtree with the one cached pass.
+Built standalone, the frame is a plain projection and is not cached.
 """
 
 from __future__ import annotations
@@ -26,17 +19,13 @@ from bigdata_2025_1_spark.functions import text as T
 from bigdata_2025_1_spark.io import load, spread
 
 
-def doc_lt_toks(
-    spark: SparkSession, sf_dir: str, persist: bool = False
-) -> DataFrame:
+def doc_lt_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, source, lt, toks)`` over the spread documents scan:
     ``lt`` = lowercased text, ``toks`` = the shared whitespace
-    tokenization. ``persist=True`` ONLY at fan-out sites (the release
-    gates); the cache holds ~2x the text width, which single-consumer
-    lineages must not pay (the cdc_release_gate negative memo)."""
+    tokenization. Cached only where several consumers read it: the
+    cache holds about twice the text width."""
     docs = spread(load(spark, sf_dir, "documents"))
     lt = F.lower(F.col("text"))
-    frame = docs.select(
+    return docs.select(
         "doc_id", "source", lt.alias("lt"), T.ws_tokens(lt).alias("toks")
     )
-    return frame.persist() if persist else frame

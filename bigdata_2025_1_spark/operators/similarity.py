@@ -1986,12 +1986,6 @@ def dbscan_roles_from_pairs(
 
 from bigdata_2025_1_spark.registry import ORACLES as _ORACLES  # noqa: E402
 
-# Memo for retrieval_rankings, keyed by (applicationId, sf_dir) so an
-# eval suite running several metrics in ONE session builds each index
-# once. Bounded: oldest entry evicted past 8 keys (stale applicationIds
-# from stopped sessions age out the same way).
-_RANKINGS_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
 
 def retrieval_rankings(
     spark: SparkSession, sf_dir: str
@@ -2000,30 +1994,13 @@ def retrieval_rankings(
     (``retrieval_mrr_eval``, ``ndcg_retrieval_eval``): returns
     ``(exact, system)`` where exact is ``ann_topk_cosine``'s
     (query_id, neighbor_id, rank) and system is ``ann_ivf_topk``'s with
-    rank aliased ``rank_s`` — both PERSISTED at the collapse point
-    (probe-bounded: n_probes x k rows, within the documented cache
-    contract) and memoized per (applicationId, sf_dir).
+    rank aliased ``rank_s``, both persisted at the collapse point
+    (probe-bounded: n_probes x k rows).
 
-    Why (VERDICT r9, "What's wrong" #2): each eval metric previously
-    rebuilt BOTH rankings from scratch, and each metric's own plan then
-    referenced the exact ranking 2-3 times (n_queries / hits / rr),
-    re-running the full index build per reference. The persist collapses
-    the intra-query reuses to one build; the memo extends that to a
-    same-session eval SUITE. ``spark.catalog.clearCache()`` between
-    tests drops the persisted blocks but the memoized frames stay valid
-    (they transparently recompute), so test isolation is unaffected."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _RANKINGS_MEMO.get(key)
-    if hit is not None:
-        # a spark.catalog.clearCache() since the last call silently
-        # unpersisted the memoized frames (they stay valid, just
-        # lineage-replayed); re-persist so the suite keeps its
-        # one-build-per-session contract across cache clears
-        for df_ in hit:
-            lvl = df_.storageLevel
-            if not (lvl.useMemory or lvl.useDisk):
-                df_.persist()
-        return hit
+    Each eval reads the exact ranking two or three times (n_queries,
+    hits, rr); the persist builds it once. Spark's plan-keyed
+    CacheManager gives a second call in the same session the same cache
+    entries, so ``retrieval_eval_suite`` builds each index once."""
     exact = (
         ann_topk_cosine(spark, sf_dir)
         .select("query_id", "neighbor_id", "rank")
@@ -2034,19 +2011,6 @@ def retrieval_rankings(
         .select("query_id", "neighbor_id", F.col("rank").alias("rank_s"))
         .persist()
     )
-    while len(_RANKINGS_MEMO) >= 8:
-        # ADVICE r10: unpersist what we evict, or the evicted pair's
-        # cached blocks stay pinned in the Spark cache until a global
-        # clearCache(). Non-blocking: callers may still hold the
-        # frames (they remain valid, just lineage-replayed). Caveat
-        # (documented contract): the memo keys on (applicationId,
-        # sf_dir) PATH identity — rewriting the parquet under an
-        # unchanged path mid-session would serve stale persisted
-        # rankings; the test corpus is immutable, and a mutable
-        # deployment should key on a table snapshot id instead.
-        for df_ in _RANKINGS_MEMO.pop(next(iter(_RANKINGS_MEMO))):
-            df_.unpersist(blocking=False)
-    _RANKINGS_MEMO[key] = (exact, system)
     return exact, system
 
 
@@ -2725,13 +2689,11 @@ def retrieval_eval_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     an index swap on (index_ok = recall >= {SUITE_MIN_RECALL} AND mrr
     >= {SUITE_MIN_MRR} AND nDCG >= {SUITE_MIN_NDCG}, shared literals).
 
-    This is the query the shared ``retrieval_rankings`` helper exists
-    for (VERDICT r9 ask #3): both composed evals draw the exact and IVF
-    rankings from the same persisted, session-memoized frames, so the
-    suite builds each index ONCE where the standalone queries each paid
-    their own build — the plan pin asserts the memo is actually shared
-    (one cache entry pair, not two). Sub-scalars are reconciled against
-    the standalone queries by tests/test_release_gate.py.
+    Both composed evals draw the exact and IVF rankings from
+    ``retrieval_rankings``, whose persisted frames resolve to one cache
+    entry each, so the suite builds each index once. Sub-scalars are
+    reconciled against the standalone queries by
+    tests/test_release_gate.py.
 
     Determinism: inherits both evals' integer-exact contracts (integer
     sixtieths, integer 1e-12 gain literals); the gate comparisons are
@@ -2765,36 +2727,20 @@ IVF_SPLIT_FACTOR = 3  # a cell holding >3x its ideal share needs a re-split
 # is the monitoring row that decides WHEN to apply it)
 
 
-def _corpus_cells(
-    spark: SparkSession, sf_dir: str, persist: bool = False
-) -> DataFrame:
-    """The corpus's coarse-quantizer assignment, (vec_id, cell), ONE
-    Arrow pass — the shared leg of the index-maintenance family (the
-    dedup ``_signatures`` pattern; the round-12 measured-and-deferred
-    experiment, shipped round 14 once the consuming legs' first driver
-    rows landed green in CORRECTNESS_r13.json).
-
-    ``persist=True`` at the sites that fan the frame into several
-    consuming lineages (the ``_flagged(persist=)`` pattern, r14 VERDICT
-    ask #3): ``ivf_nprobe_recall_curve`` reads it twice (cell sizes +
-    truth join), and through its persist ``ann_release_gate`` — which
-    composes the curve AND the census — pays the Arrow pass once (~0.35
-    s at sf0.1, measured). The single-collapse census
-    (``ivf_ingest_assign`` standalone) stays UNPERSISTED: the r14
-    driver bench measured the unconditional cache write as a +33%
-    standalone regression (0.40 -> 0.53 s) with zero reuse. It still
-    shares inside the gate: Spark's CacheManager substitutes ANY
-    identical analyzed subtree once a persisting leg registered it
-    (verified: two separately-created pandas-UDF frames over the same
-    table share one cache entry). ``spark.catalog.clearCache()``
-    between selfcheck/pytest queries drops the blocks; the frame stays
-    valid (lineage replay)."""
+def _corpus_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus's coarse-quantizer assignment, (vec_id, cell), in one
+    Arrow pass: the shared leg of the index-maintenance family.
+    ``ivf_nprobe_recall_curve`` reads it twice (cell sizes and the truth
+    join) and persists it; ``ann_release_gate``, which composes the
+    curve and the census, shares it so the Arrow pass runs once. The
+    single-read census (``ivf_ingest_assign`` standalone) stays
+    uncached: the cache write cost it a third of its wall with no
+    reuse."""
     emb = load(spark, sf_dir, "embeddings")
     cell_pd = V.make_ivf_cell_pandas(_CENTROIDS)
-    cells = emb.select(
+    return emb.select(
         "vec_id", cell_pd(F.col("embedding")).getField("cell").alias("cell")
     )
-    return cells.persist() if persist else cells
 
 
 @query(
@@ -3239,7 +3185,7 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside ``ann_release_gate`` all read ONE Arrow pass."""
     emb = load(spark, sf_dir, "embeddings")
     truth = ann_topk_cosine(spark, sf_dir).select("query_id", "neighbor_id")
-    corpus = _corpus_cells(spark, sf_dir, persist=True).select(
+    corpus = _corpus_cells(spark, sf_dir).persist().select(
         F.col("vec_id").alias("neighbor_id"), "cell"
     )
     cell_sizes = corpus.groupBy("cell").agg(
@@ -3439,14 +3385,9 @@ def ann_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: all three legs are already scale-audited standalone
     (one Arrow assignment pass collapsing to {N_CELLS} rows; the
     value-domain KS histogram; the broadcast-tiny curve joins). Both
-    the census and the curve legs read the persisted shared
-    ``_corpus_cells`` frame, so the Arrow assignment runs ONCE per gate
-    evaluation (~0.35 s back at sf0.1) instead of once per leg — a
-    constant-factor win, the pass itself is linear and embarrassingly
-    parallel."""
-    # Registered BEFORE the gate's leg threads spawn, so the census and
-    # the curve plan against the one cached Arrow pass.
-    _corpus_cells(spark, sf_dir, persist=True)
+    the census and the curve legs read the gate's shared
+    ``_corpus_cells`` frame, so the Arrow assignment runs once per gate
+    evaluation instead of once per leg."""
     recall, scanned = F.col("recall_at_deployed"), F.col("scanned_frac_at_deployed")
     idle = F.col("n_queries") == 0
     return release_gate(
@@ -3502,4 +3443,5 @@ def ann_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         ok="ann_ok",
         empty=F.col("n_vecs") == 0,
+        shared=[_corpus_cells(spark, sf_dir)],
     )

@@ -590,12 +590,10 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules compare IEEE doubles built from identical integer inputs on
     both engines.
 
-    Round-15: the tokenization is the shared :func:`doc_lt_toks`
-    subtree (spread + lower + ws_tokens), so inside the release gates
-    this leg reads the ONE persisted tokenize pass the gate registers
-    instead of re-tokenizing; standalone the projection collapses into
-    the same scan-side pass as before (now spread across cores like
-    every other compute-heavy documents query)."""
+    The tokenization is the shared :func:`doc_lt_toks` subtree (spread
+    + lower + ws_tokens), so inside ``platform_release_gate``, which
+    shares it, this leg reads the one cached tokenize pass; standalone
+    the projection collapses into the scan-side pass."""
     from bigdata_2025_1_spark.operators.shared_text import doc_lt_toks
 
     docs = doc_lt_toks(spark, sf_dir)
@@ -2245,8 +2243,9 @@ def blocklist_filter_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same shape holds to ~MBs of literals; past that, broadcast-join
     an exploded token table against a terms dimension instead.
 
-    Tokenization is the shared :func:`doc_lt_toks` subtree (round 15):
-    inside the release gates this leg reads the one persisted pass."""
+    Tokenization is the shared :func:`doc_lt_toks` subtree: inside
+    ``platform_release_gate``, which shares it, this leg reads the one
+    cached pass."""
     from bigdata_2025_1_spark.operators.shared_text import doc_lt_toks
 
     docs = doc_lt_toks(spark, sf_dir)
@@ -2387,8 +2386,8 @@ def mannwhitney_fertility_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_2025_1_spark.operators.shared_text import doc_lt_toks
 
     enc = encoded_word_types(spark, sf_dir)
-    # the shared doc_lt_toks tokenize subtree (round 15): one persisted
-    # pass inside the release gates, a collapsed projection standalone
+    # the shared doc_lt_toks tokenize subtree: one cached pass inside
+    # platform_release_gate, a collapsed projection standalone
     tok = doc_lt_toks(spark, sf_dir).select(
         "doc_id", F.explode(F.col("toks")).alias("w")
     )

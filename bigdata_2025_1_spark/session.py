@@ -28,6 +28,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+# The directory holding this package: Python workers unpickle UDFs by
+# importing it, whatever the driver's working directory.
+_CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -62,6 +65,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow-batched pandas UDFs (the only sanctioned Python hot path)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", _CHECKOUT_ROOT)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Deterministic timestamp semantics: the oracle (DuckDB) reads
         # parquet timestamps as naive; pinning UTC makes Spark's LTZ

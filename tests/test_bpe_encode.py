@@ -240,8 +240,7 @@ def test_encode_unicode_matches_scalar_and_oracle(spark, tmp_path):
 def test_bpe_train_memo_is_shared_within_a_session(spark, sf_dir):
     """VERDICT r10 ask #2: a second BPE-family query in the same
     session must receive the SAME trained (log, vocabulary) pair, not
-    re-run the merge-training loop (the retrieval_rankings memo
-    convention applied to _bpe_train)."""
+    re-run the merge-training loop."""
     from bigdata_2025_1_spark.operators import corpus_ops as C
 
     C._BPE_MEMO.clear()
@@ -272,8 +271,7 @@ def test_bpe_train_repersist_after_clearcache(spark, sf_dir):
 
 def test_bpe_train_eviction_unpersists(spark, sf_dir):
     """Evicting the oldest memo entry past the cap must unpersist the
-    evicted vocabulary (the ADVICE-r10 rankings-memo fix, applied here
-    from day one)."""
+    evicted vocabulary."""
     from pyspark import StorageLevel
 
     from bigdata_2025_1_spark.operators import corpus_ops as C

@@ -84,3 +84,37 @@ def test_legs_go_through_the_module_materialize_legs(spark, monkeypatch):
         ok="gate_ok",
     ).collect()
     assert calls == [3]
+
+
+def test_shared_frames_are_cached_while_the_legs_run(spark):
+    cached = []
+
+    def leg():
+        cached.append(spark.range(7).storageLevel.useMemory)
+        return spark.range(7).agg(F.count("*").alias("n"))
+
+    gate = release_gate(
+        [leg, _leg(spark, "z bigint", (0,))],
+        out=["n"],
+        verdicts={"ok_z": F.col("z") == 0},
+        ok="gate_ok",
+        shared=[spark.range(7)],
+    )
+    assert cached == [True]
+    assert not spark.range(7).storageLevel.useMemory
+    assert gate.first().n == 7
+
+
+def test_leg_jobs_run_in_the_callers_job_group(spark):
+    sc = spark.sparkContext
+    sc.setJobGroup("overlap-legs", "release_gate legs")
+    try:
+        release_gate(
+            [_leg(spark, "a bigint", (1,)), _leg(spark, "b bigint", (2,))],
+            out=["a", "b"],
+            verdicts={"ok": F.col("a") < F.col("b")},
+            ok="gate_ok",
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("overlap-legs")) >= 2

@@ -2,8 +2,9 @@
 
 Runs the named queries (default: every registered query) once warm +
 once measured in ONE session with the Spark event log enabled, each
-run labeled via ``setJobDescription`` (guide §1.5), then parses the
-event log into per-query job/stage aggregates:
+run labeled via ``setJobDescription`` (guide §1.5; release-gate leg
+threads inherit the label, so their jobs count toward the gate), then
+parses the event log into per-query job/stage aggregates:
 
     python tools/profile_queries.py [--sf DIR] [--reps N] [query ...]
 
