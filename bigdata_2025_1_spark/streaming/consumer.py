@@ -10,8 +10,11 @@ This version:
   — Kafka in production (``format("kafka")``, same options incl.
   maxOffsetsPerTrigger, the working spelling of the reference's no-op
   maxRatePerPartition, consumer.py:25), file/memory streams in tests;
-- ONE aggregation job per micro-batch (the reference runs 4+ and counts
-  twice — consumer.py:36,47,53,71);
+- ONE distributed aggregate per micro-batch, a per-domain groupBy whose
+  few rows fold into the stats row in Python (the reference runs 4+
+  aggregations and counts twice — consumer.py:36,47,53,71); with the
+  one-row parquet append that is 3 Spark jobs per batch, and nothing
+  is cached;
 - stats go to a STRUCTURED sink (parquet append / in-memory list), shaped
   per export_stats.py:36-42, never scraped from logs;
 - registers the batch as temp view ``documents`` so the reference's SQL
@@ -22,49 +25,55 @@ from __future__ import annotations
 
 import json
 import os
+import time
 from dataclasses import dataclass, field
-from datetime import datetime, timezone
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
-from bigdata_2025_1_spark.functions.exact import int_avg
 from bigdata_2025_1_spark.sources.kafka_shape import consumer_parse
 
-STATS_SCHEMA = (
-    "batch_id BIGINT, ts TIMESTAMP, total_documents BIGINT, "
-    "domains MAP<STRING, BIGINT>, "
+STATS_BODY = (
+    "total_documents BIGINT, domains MAP<STRING, BIGINT>, "
     "size_stats STRUCT<min_size: BIGINT, max_size: BIGINT, avg_size: DOUBLE, total_size: BIGINT>"
 )
+STATS_SCHEMA = "batch_id BIGINT, ts TIMESTAMP, " + STATS_BODY
 
 
-def batch_stats(batch_df: DataFrame) -> DataFrame:
-    """All of the reference's per-batch statistics as ONE aggregate:
-    total count, per-domain counts (as a map), min/max/avg/sum of content
-    length (consumer.py:33-100 semantics, single job)."""
+def batch_stats(batch_df: DataFrame) -> dict:
+    """All of the reference's per-batch statistics (consumer.py:33-100
+    semantics): total count, per-domain counts, min/max/avg/sum of content
+    length. One distributed groupBy (2 jobs under AQE) gives at most one
+    row per domain; those rows fold in Python into one ``STATS_BODY``
+    row. A batch with no rows gives NULL counts and sizes and an empty
+    ``domains`` map."""
     ln = F.length("content")
-    per_domain = (
+    per_domain = sorted(
         batch_df.groupBy("domain")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.min(ln).alias("min_size"),
-            F.max(ln).alias("max_size"),
-            F.sum(ln).alias("total_size"),
-        )
+        .agg(F.count("*").alias("n"), F.min(ln).alias("lo"), F.max(ln).alias("hi"), F.sum(ln).alias("size"))
+        .collect(),
+        key=lambda r: r.domain,
     )
-    return per_domain.agg(
-        F.sum("doc_count").alias("total_documents"),
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("domain", "doc_count")))
-        ).alias("domains"),
-        F.struct(
-            F.min("min_size").cast("bigint").alias("min_size"),
-            F.max("max_size").cast("bigint").alias("max_size"),
-            (F.sum("total_size").cast("double") / F.sum("doc_count")).alias("avg_size"),
-            F.sum("total_size").cast("bigint").alias("total_size"),
-        ).alias("size_stats"),
-    )
+    if not per_domain:
+        return {
+            "total_documents": None,
+            "domains": {},
+            "size_stats": dict.fromkeys(("min_size", "max_size", "avg_size", "total_size")),
+        }
+    n = sum(r.n for r in per_domain)
+    size = sum(r.size for r in per_domain)
+    return {
+        "total_documents": n,
+        "domains": {r.domain: r.n for r in per_domain},
+        "size_stats": {
+            "min_size": min(r.lo for r in per_domain),
+            "max_size": max(r.hi for r in per_domain),
+            "avg_size": float(size) / n,  # == Spark's CAST(sum AS DOUBLE) / count
+            "total_size": size,
+        },
+    }
 
 
 @dataclass
@@ -75,22 +84,27 @@ class StatsSink:
     parquet_path: str | None = None
     rows: list[dict] = field(default_factory=list)
 
-    def write(self, batch_id: int, stats_df: DataFrame) -> None:
-        # One literal timestamp: the parquet append and the collect are
-        # two actions, and current_timestamp() would differ between them.
-        stamped = stats_df.select(
-            F.lit(batch_id).cast("bigint").alias("batch_id"),
-            F.lit(datetime.now(timezone.utc)).alias("ts"),
-            "total_documents",
-            "domains",
-            "size_stats",
-        )
+    def write(self, batch_id: int, stats: dict) -> None:
+        """Stamp a ``batch_stats`` row and store it. The parquet copy is a
+        one-row frame of JVM literals, so the append runs no Python-RDD
+        scan and never re-reads the batch; it finishes before returning."""
+        ts_us = time.time_ns() // 1000
         if self.parquet_path:
-            stamped.write.mode("append").parquet(self.parquet_path)
-        for r in stamped.collect():
-            d = r.asDict(recursive=True)
-            d["ts"] = d["ts"].isoformat()
-            self.rows.append(d)
+            (
+                SparkSession.active()
+                .range(1, numPartitions=1)
+                .select(
+                    F.lit(batch_id).cast("bigint").alias("batch_id"),
+                    F.timestamp_micros(F.lit(ts_us)).alias("ts"),
+                    F.from_json(F.lit(json.dumps(stats)), STATS_BODY).alias("s"),
+                )
+                .select("batch_id", "ts", "s.*")
+                .write.mode("append")
+                .parquet(self.parquet_path)
+            )
+        # ts as a collect of the parquet copy would return it
+        ts = TimestampType().fromInternal(ts_us).isoformat()
+        self.rows.append({"batch_id": batch_id, "ts": ts, **stats})
 
     def dump_json(self, path: str) -> None:
         with open(path, "w", encoding="utf-8") as fh:
@@ -100,25 +114,22 @@ class StatsSink:
 def make_foreach_batch(
     sink: StatsSink, register_view: bool = True, verbose: bool = False
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch body (F3). Cache once; one agg job; optional sample
-    print; temp-view registration for the live-SQL path (EP2)."""
+    """foreachBatch body (F3). Reads the batch once: ``batch_stats``'s
+    aggregate (2 jobs under AQE) plus the sink's parquet append (1 job);
+    nothing is cached. Optional sample print; temp-view registration for
+    the live-SQL path (EP2)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            stats = batch_stats(batch_df)
-            sink.write(batch_id, stats)
-            if register_view:
-                # foreachBatch runs in a cloned session; a plain temp view
-                # would be invisible to the main session. Global temp views
-                # are app-wide → query as global_temp.documents (EP2,
-                # spark/visualize.py:27 semantics).
-                batch_df.createOrReplaceGlobalTempView("documents")
-            if verbose:
-                for row in batch_df.select("domain", "filename").limit(5).collect():
-                    print(f"  sample: {row.domain}/{row.filename}")
-        finally:
-            batch_df.unpersist()
+        sink.write(batch_id, batch_stats(batch_df))
+        if register_view:
+            # foreachBatch runs in a cloned session; a plain temp view
+            # would be invisible to the main session. Global temp views
+            # are app-wide → query as global_temp.documents (EP2,
+            # spark/visualize.py:27 semantics).
+            batch_df.createOrReplaceGlobalTempView("documents")
+        if verbose:
+            for row in batch_df.select("domain", "filename").limit(5).collect():
+                print(f"  sample: {row.domain}/{row.filename}")
 
     return process
 

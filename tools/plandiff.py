@@ -14,8 +14,9 @@ Usage:
     python tools/plandiff.py [--ref REF] [--sf DIR] [--full] query ...
     python tools/plandiff.py --all            # every registered query
 
-Exit status: 0 = all plans unchanged, 1 = at least one differs (so CI
-or a pre-commit hook can gate on it).
+Exit status: 0 = all plans unchanged, 1 = at least one differs or could
+not be compared because its OLD side failed to plan (so CI or a
+pre-commit hook can gate on it).
 
 Known limits (measured over all 328 queries vs the round-9 ref):
 - queries composing persisted helpers can read "unchanged" when the
@@ -233,7 +234,7 @@ def main() -> int:
         return 2
     targets = {q: module_path(new[q]) for q in names}
     old = load_old(args.ref, targets)
-    changed = []
+    changed, uncompared = [], []
     for q in names:
         if q not in old:
             print(f"{q}: not present at {args.ref} — new query, skipped")
@@ -242,7 +243,10 @@ def main() -> int:
         try:
             p_old = normalize(formatted_plan(old[q](spark, args.sf)))
         except Exception as e:  # noqa: BLE001 — old code may predate a query
-            print(f"{q}: OLD side failed to plan ({e.__class__.__name__}) — new query?")
+            # e.g. a function-local import in the old module binds the
+            # working tree's helper, whose signature has since changed
+            uncompared.append(q)
+            print(f"{q}: OLD side failed to plan ({e.__class__.__name__}) — NOT COMPARED")
             continue
         spark.catalog.clearCache()
         p_new = normalize(formatted_plan(new[q](spark, args.sf)))
@@ -265,8 +269,9 @@ def main() -> int:
             )
             print()
     print(f"\n{len(changed)}/{len(names)} plans changed"
-          + (f": {', '.join(changed)}" if changed else ""))
-    return 1 if changed else 0
+          + (f": {', '.join(changed)}" if changed else "")
+          + (f"; {len(uncompared)} NOT COMPARED: {', '.join(uncompared)}" if uncompared else ""))
+    return 1 if changed or uncompared else 0
 
 
 if __name__ == "__main__":
