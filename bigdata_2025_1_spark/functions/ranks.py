@@ -3,33 +3,104 @@
 ``row_number().over(Window.orderBy(...))`` is the classic
 does-not-survive-100x shape: Spark moves EVERY row into one window
 partition (and logs "No Partition Defined for Window operation"). But a
-global dense rank over a total order does not need a global funnel:
+global rank over a total order does not need a global funnel.
+:func:`with_global_rank` and :func:`with_prefix_min` share one skeleton
+(:func:`_ranged`) built from native Spark expressions only, so no Python
+worker starts:
 
 1. ``repartitionByRange`` on the order columns — Spark's sampling range
    partitioner gives non-overlapping, ordered partitions (partition i
-   holds strictly lower keys than partition i+1);
-2. number rows *within* each partition (an Arrow-batched streaming
-   counter over the partition-local sort — no shuffle, no Python
-   row-at-a-time loop);
-3. the global rank of a row is its partition-local position plus the
-   total row count of all earlier partitions — a partition-count-sized
-   offset table, broadcast back.
+   holds strictly lower keys than partition i+1) — then
+   ``sortWithinPartitions``;
+2. one ``monotonically_increasing_id()`` over the sorted partitions
+   gives each row its partition ``_pid`` (the id's high bits) and its
+   1-based partition-local position ``_pos`` (the low 33 bits, plus
+   one), persisted with the rows;
+3. a per-``_pid`` aggregate (row count, value sum or value min) is
+   folded over all EARLIER partitions into an offset — a
+   partition-count-sized table, broadcast back. A row's global rank is
+   its offset plus ``_pos``; running sums and minimums add a window
+   partitioned by ``_pid``.
 
-The only non-partition-parallel step is the offset prefix-sum over
+The only non-partition-parallel step is the offset fold over
 ``n_partitions`` rows (a deliberate triangular broadcast join, n^2 pairs
 of a tiny table, so no unpartitioned Window appears anywhere and the
 single-partition warning never fires). ``tests/test_plans.py`` pins the
 absence of ``Exchange SinglePartition`` for the operators built on this.
+
+Limits: the id layout holds at most 2^33 (about 8.6e9) rows per range
+partition. Running sums are ``long``; one that overflows raises under
+ANSI mode (Spark 4's default) rather than wrapping.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField
+
+# monotonically_increasing_id() = partition index << 33 | row index
+_POS_BITS = 33
+
+
+def _total(c: Column) -> Column:
+    return F.coalesce(F.sum(c), F.lit(0))
+
+
+def _non_null(col: str, msg: str) -> Column:
+    return F.coalesce(F.col(col), F.raise_error(F.lit(msg)))
+
+
+def _ranged(
+    df: DataFrame,
+    order_cols: list[str],
+    n: int,
+    offsets: dict[str, tuple[Column, Callable[[Column], Column]]],
+) -> DataFrame:
+    """``df`` range-partitioned on ``order_cols`` into ``n`` ordered
+    partitions and sorted within each, with ``_pid`` and ``_pos`` plus
+    one column per ``offsets`` entry ``name: (agg, fold)``: the
+    aggregate ``fold`` over the per-partition ``agg`` of every EARLIER
+    partition (NULL for the first partition unless ``fold`` says
+    otherwise)."""
+    # persist() is CORRECTNESS here, not caching: `parts` is consumed
+    # twice (the per-partition aggregate and the rows that join its
+    # offsets), and each un-persisted evaluation plans its own
+    # repartitionByRange whose RangePartitioner samples independently —
+    # boundaries can differ between the two runs (observed on a
+    # theta-join input: ranks went missing/duplicated), making the
+    # offset of a _pid disagree with the rows that carry it. _pid and
+    # _pos are computed below persist(), so both consumers read ONE
+    # materialization and one partition layout by construction. (Cache
+    # released by the harnesses' per-query clearCache. The default
+    # MEMORY_AND_DISK level spills rather than OOMs on a 100 TB input;
+    # clusters that cannot spare the disk should swap persist() for a
+    # reliable checkpoint() — the requirement is ONE materialization,
+    # not caching per se.)
+    parts = (
+        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols)
+        .withColumn("_pid", F.monotonically_increasing_id())
+        .withColumn("_pos", F.col("_pid").bitwiseAND((1 << _POS_BITS) - 1) + 1)
+        .withColumn("_pid", F.shiftright("_pid", _POS_BITS))
+        .persist()
+    )
+    per = parts.groupBy("_pid").agg(*[a.alias(k) for k, (a, _) in offsets.items()])
+    earlier = per.select(*[F.col(c).alias(f"_b{c}") for c in per.columns])
+    offs = (
+        per.select("_pid")
+        .join(F.broadcast(earlier), F.col("_b_pid") < F.col("_pid"), "left")
+        .groupBy("_pid")
+        .agg(*[fold(F.col(f"_b{k}")).alias(k) for k, (_, fold) in offsets.items()])
+    )
+    return parts.join(F.broadcast(offs), "_pid")
+
+
+def _in_partition(end: int) -> WindowSpec:
+    """Rows of the same range partition, from its first up to ``end``."""
+    w = Window.partitionBy("_pid").orderBy("_pos")
+    return w.rowsBetween(Window.unboundedPreceding, end)
 
 
 def with_global_rank(
@@ -44,9 +115,10 @@ def with_global_rank(
     the total order given by ``order_cols`` (which must be a unique key
     for the rank to be deterministic). With ``prefix_of`` set, also
     append ``prefix_col``: the INCLUSIVE global running sum of that
-    int64 column over the same order (the distributed form of
-    ``sum(x).over(orderBy(...).rowsBetween(unboundedPreceding,
-    currentRow))`` — running totals, Pareto prefixes, CDFs).
+    non-null integer column over the same order (the distributed form
+    of ``sum(x).over(orderBy(...).rowsBetween(unboundedPreceding,
+    currentRow))`` — running totals, Pareto prefixes, CDFs). A NULL in
+    it raises; a sum that overflows ``long`` raises under ANSI mode.
 
     Determinism: range-partition boundaries come from Spark's seeded
     reservoir sampling of a deterministic scan, and partitions are
@@ -54,83 +126,29 @@ def with_global_rank(
     position/sum`` is the true global rank/prefix regardless of where
     boundaries land.
 
-    Scale shape: ONE full-data shuffle (the range exchange, reused by
-    both the numbering branch and the tiny per-partition totals); the
-    offset table is ``n_partitions`` rows (its prefix sum is a
-    deliberate triangular broadcast join — n^2 pairs of a tiny table, so
-    no single-partition exchange exists anywhere here) broadcast back;
-    output rank is int64 (a 100 TB table overflows row_number's int32).
+    Scale shape: a rank-only call has ONE full-data shuffle (the range
+    exchange, read by both the numbering and the tiny per-partition
+    counts). The ``prefix_of`` form adds one hash exchange on ``_pid``
+    for its partition-local running-sum window. The offset table is
+    ``n_partitions`` rows, broadcast back; output rank is int64 (a 100
+    TB table overflows row_number's int32).
     """
-    spark = df.sparkSession
-    n = num_parts or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # persist() is CORRECTNESS here, not caching: `parts` is consumed
-    # twice (the per-partition size/sum table and the mapInPandas
-    # numbering), and each un-persisted evaluation plans its own
-    # repartitionByRange whose RangePartitioner samples independently —
-    # boundaries can differ between the two runs (observed on a
-    # theta-join input: ranks went missing/duplicated), making
-    # offset(pid) disagree with the partition layout the kernel saw.
-    # With the post-shuffle frame persisted, both consumers read ONE
-    # materialization, so _pid and row order are identical by
-    # construction. (Same contract in with_prefix_min; cache released
-    # by the harnesses' per-query clearCache. The default
-    # MEMORY_AND_DISK level spills rather than OOMs on a 100 TB input;
-    # clusters that cannot spare the disk should swap persist() for a
-    # reliable checkpoint() — the requirement is ONE materialization,
-    # not caching per se.)
-    parts = (
-        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-
-    size_aggs = [F.count("*").alias("_c")]
+    n = num_parts or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    offsets = {"_off": (F.count("*"), _total)}
     if prefix_of is not None:
-        size_aggs.append(F.coalesce(F.sum(prefix_of), F.lit(0)).alias("_vc"))
-    sizes = parts.groupBy("_pid").agg(*size_aggs)
-    contrib = sizes.select(
-        *[F.col(c).alias(f"_b{c.lstrip('_')}") for c in sizes.columns]
-    )
-    off_aggs = [F.coalesce(F.sum("_bc"), F.lit(0)).alias("_off")]
-    if prefix_of is not None:
-        off_aggs.append(F.coalesce(F.sum("_bvc"), F.lit(0)).alias("_voff"))
-    offs = (
-        sizes.join(F.broadcast(contrib), F.col("_bpid") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(*off_aggs)
-    )
-
-    out_fields = list(parts.schema.fields) + [StructField("_pos", LongType(), False)]
-    if prefix_of is not None:
-        out_fields.append(StructField("_vpos", LongType(), False))
-
-    def _number(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pos = 0
-        vpos = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["_pos"] = range(pos + 1, pos + 1 + len(pdf))
-            pos += len(pdf)
-            if prefix_of is not None:
-                if pdf[prefix_of].isna().any():
-                    raise ValueError(
-                        f"with_global_rank: prefix_of column {prefix_of!r} "
-                        "must be non-null int64 (coalesce before ranking)"
-                    )
-                c = pdf[prefix_of].astype("int64").cumsum() + vpos
-                pdf["_vpos"] = c
-                vpos = int(c.iloc[-1]) if len(c) else vpos
-            yield pdf
-
-    numbered = parts.mapInPandas(_number, schema=type(parts.schema)(out_fields))
-    out = (
-        numbered.join(F.broadcast(offs), "_pid")
-        .withColumn(rank_col, F.col("_off") + F.col("_pos"))
+        val = _non_null(
+            prefix_of,
+            f"with_global_rank: prefix_of column {prefix_of!r} must be "
+            "non-null int64 (coalesce before ranking)",
+        )
+        offsets["_voff"] = (F.sum(val), _total)
+    out = _ranged(df, order_cols, n, offsets).withColumn(
+        rank_col, F.col("_off") + F.col("_pos")
     )
     if prefix_of is not None:
-        out = out.withColumn(prefix_col, F.col("_voff") + F.col("_vpos")).drop("_voff")
-    return out.drop("_pid", "_pos", "_off", "_vpos")
+        run = F.sum(val).over(_in_partition(Window.currentRow))
+        out = out.withColumn(prefix_col, F.col("_voff") + run)
+    return out.drop("_pid", "_pos", "_off", "_voff")
 
 
 def with_prefix_min(
@@ -139,72 +157,23 @@ def with_prefix_min(
     value_col: str,
     out_col: str = "prefix_min",
 ) -> DataFrame:
-    """Append ``out_col``: the EXCLUSIVE global running minimum of int64
-    ``value_col`` over the total order given by ``order_cols`` (NULL for
-    the globally-first row — nothing precedes it). The distributed form
-    of ``min(x).over(orderBy(...).rowsBetween(unboundedPreceding, -1))``
-    — the sweep primitive behind skyline/frontier operators — built the
-    same way as :func:`with_global_rank`: ONE range exchange, partition-
-    local Arrow cummin, and a partition-count-sized min-offset table
-    broadcast back (no single-partition window anywhere)."""
-    spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # persist() is CORRECTNESS, not caching (same contract as
-    # with_global_rank): `parts` is consumed twice, and un-persisted
-    # evaluations each plan their own range exchange whose boundary
-    # sampling can differ — observed producing missing/duplicated ranks
-    # on a theta-join input in the global-rank twin. One
-    # materialization, one partition layout for both consumers.
-    parts = (
-        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    sizes = parts.groupBy("_pid").agg(F.min(value_col).alias("_m"))
-    contrib = sizes.select(F.col("_pid").alias("_bpid"), F.col("_m").alias("_bm"))
-    offs = (
-        sizes.join(F.broadcast(contrib), F.col("_bpid") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.min("_bm").alias("_moff"))
-    )
-
-    out_fields = list(parts.schema.fields) + [StructField("_lmin", LongType(), True)]
-
-    def _cummin(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        run = None  # inclusive min over all prior rows of this partition
-        for pdf in batches:
-            pdf = pdf.copy()
-            if pdf[value_col].isna().any():
-                raise ValueError(
-                    f"with_prefix_min: {value_col!r} must be non-null int64"
-                )
-            # all-integer path — a float64 shift/fillna round-trip would
-            # silently lose precision for |value| >= 2^53 (the e12-scaled
-            # fixed-point range this repo actually uses)
-            vals = pdf[value_col].to_numpy(dtype="int64")
-            n_rows = len(vals)
-            out = pd.array([pd.NA] * n_rows, dtype="Int64")
-            if n_rows:
-                inc = np.minimum.accumulate(vals)
-                exc = np.empty(n_rows, dtype="int64")
-                exc[1:] = inc[:-1]
-                if run is None:
-                    out[1:] = exc[1:]
-                else:
-                    exc[0] = run
-                    out[:] = np.minimum(exc, run)
-                run = int(inc[-1]) if run is None else min(run, int(inc[-1]))
-            pdf["_lmin"] = out
-            yield pdf
-
-    numbered = parts.mapInPandas(_cummin, schema=type(parts.schema)(out_fields))
+    """Append ``out_col``: the EXCLUSIVE global running minimum of
+    non-null int64 ``value_col`` over the total order given by
+    ``order_cols`` (NULL for the globally-first row — nothing precedes
+    it; a NULL value raises). The distributed form of
+    ``min(x).over(orderBy(...).rowsBetween(unboundedPreceding, -1))`` —
+    the sweep primitive behind skyline/frontier operators — built on the
+    same skeleton as :func:`with_global_rank`: the range exchange, one
+    hash exchange on ``_pid`` for the partition-local running-min
+    window, and a partition-count-sized min-offset table broadcast back
+    (no single-partition window anywhere)."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    val = _non_null(value_col, f"with_prefix_min: {value_col!r} must be non-null int64")
+    run = F.min(val).over(_in_partition(-1))
     return (
-        numbered.join(F.broadcast(offs), "_pid")
-        .withColumn(out_col, F.least(F.col("_lmin"), F.col("_moff")))
-        .drop("_pid", "_lmin", "_moff")
+        _ranged(df, order_cols, n, {"_moff": (F.min(val), F.min)})
+        .withColumn(out_col, F.least(run, F.col("_moff")))
+        .drop("_pid", "_pos", "_moff")
     )
 
 

@@ -1453,8 +1453,9 @@ def skyline_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition.
 
     Scale shape: DISTINCT + min-per-price are map-side-combinable
-    reductions to the value domain; the sweep is ONE range exchange +
-    Arrow cummin + a partition-count-sized broadcast (no
+    reductions to the value domain; the sweep is the range exchange, a
+    hash exchange on the range-partition id for the partition-local
+    running-min window, and a partition-count-sized broadcast (no
     single-partition window — the trap a row_number-over-global-order
     formulation would hit). Dimensions beyond 2 generalize by sweeping
     the first dimension and testing dominance in the rest against a

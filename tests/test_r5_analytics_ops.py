@@ -6,7 +6,11 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from bigdata_2025_1_spark.plans.explain import formatted_plan
+from bigdata_2025_1_spark.plans.explain import (
+    formatted_plan,
+    single_partition_exchange_inputs,
+    window_node_inputs,
+)
 from bigdata_2025_1_spark.registry import all_queries
 
 QUERIES = all_queries()
@@ -48,7 +52,9 @@ def test_skyline_no_single_partition_window(spark, sf_dir):
     df = QUERIES["skyline_price_size"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "Exchange SinglePartition" not in plan
-    assert ") Window" not in plan  # sweep, not a global window
+    assert single_partition_exchange_inputs(df) == []
+    # sweep, not a global window: every window is partition-local
+    assert all("_pid" in i for i in window_node_inputs(df))
     rows = df.collect()
     # frontier shape: strictly increasing price, strictly decreasing size
     prices = [r.price_cents for r in rows]
@@ -155,3 +161,32 @@ def test_prefix_min_rejects_nulls(spark):
     df = spark.createDataFrame([(1, 5), (2, None)], "k long, v long")
     with _pytest.raises(Exception, match="non-null"):
         with_prefix_min(df, ["k"], "v").collect()
+
+
+def test_global_rank_prefix_rejects_nulls(spark):
+    import pytest as _pytest
+
+    from bigdata_2025_1_spark.functions.ranks import with_global_rank
+
+    df = spark.createDataFrame([(1, 5), (2, None)], "k long, v long")
+    with _pytest.raises(Exception, match="non-null"):
+        with_global_rank(df, ["k"], prefix_of="v").collect()
+
+
+def test_rank_helpers_start_no_python_worker(spark):
+    """Every form of the ranking helpers plans with native expressions
+    only: no Python evaluation node, so no Python worker starts."""
+    from pyspark.sql import functions as F
+
+    from bigdata_2025_1_spark.functions.ranks import with_global_rank, with_prefix_min
+
+    df = spark.range(0, 50).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+    for out in (
+        with_global_rank(df, ["k"]),
+        with_global_rank(df, ["k"], prefix_of="v"),
+        with_prefix_min(df, ["k"], "v"),
+    ):
+        plan = formatted_plan(out)
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+            assert node not in plan, node
+    spark.catalog.clearCache()

@@ -1,82 +1,98 @@
 """Interleaved perf A/B for registered queries: OLD code from any git
-ref vs the working tree, in ONE session (bench.py discipline:
-clearCache between runs, best-of-N, sf0.1 by default). Promoted from
-the one-off ab_r7.py per the round-7 VERDICT ask #7 — the git ref,
-query list, scale dir, and repeat count are now parameters.
+ref vs the working tree, each side in its own fresh process.
 
 Usage:
-    python tools/ab.py [--ref REF] [--sf DIR] [--reps N] query [query ...]
+    python tools/ab.py --ref REF [--sf DIR] [--reps N] query [query ...]
 
-The old side is exec'd from ``git show REF:<module path>`` with the
-@query decorator stubbed so nothing re-registers; module paths resolve
-from the CURRENT registry (each query function's defining module), so
-the tool needs no per-round target table.
+Each side runs in a child Python process that can import only its own
+engine: the working tree for NEW, and a ``git archive REF
+bigdata_2025_1_spark`` extract for OLD. So a change anywhere in the
+package is seen, a shared helper module as much as a query's defining
+module. The tool runs ``--reps`` rounds and alternates which side goes
+first; in every round each child runs each query once to warm up, then
+once timed (clearCache between runs, ``collect()`` as the action, at
+``local[4]``). It prints each side's median and every timed wall.
+
+:func:`checkout` and :func:`run_side` are shared with
+``tools/plandiff.py`` and ``tools/capture_plans.py``.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
+import statistics
 import subprocess
 import sys
-import time
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+_MARK = "SIDE_RESULT "
 
-import bigdata_2025_1_spark.registry as R
+# Child program: wall of one warm run per query.
+_TIME = """
+import json, sys, time
+from bigdata_2025_1_spark.registry import all_queries
 from bigdata_2025_1_spark.session import get_spark
+sf, names = sys.argv[1], sys.argv[2:]
+spark = get_spark("ab", master="local[4]")
+qs = all_queries()
+out = {}
+for q in names:
+    if q in qs:
+        qs[q](spark, sf).collect()
+        spark.catalog.clearCache()
+        t0 = time.monotonic()
+        qs[q](spark, sf).collect()
+        out[q] = time.monotonic() - t0
+        spark.catalog.clearCache()
+spark.stop()
+print("SIDE_RESULT " + json.dumps(out))
+"""
 
 
-def load_old(ref: str, targets: dict[str, str]) -> dict:
-    """Exec each target's defining module from ``ref`` and return the
-    old query functions. ``targets`` maps query name -> repo-relative
-    module path."""
-    # An invalid REF must stay loud (self-review r14: silently treating
-    # a typo'd sha as "every module is new" would make plandiff --all
-    # print 0/N changed and exit 0 — a green CI gate that compared
-    # nothing). Only a missing PATH at a valid ref is skippable.
+@contextmanager
+def checkout(ref: str | None) -> Iterator[str]:
+    """Yield the root of an engine checkout: the working tree when
+    ``ref`` is None, else a temporary ``git archive`` extract of the
+    package at ``ref``."""
+    if ref is None:
+        yield REPO
+        return
+    # An invalid REF must stay loud: silently comparing nothing would
+    # make plandiff --all print 0/N changed and exit 0.
     probe = subprocess.run(
         ["git", "-C", REPO, "rev-parse", "--verify", f"{ref}^{{commit}}"],
         capture_output=True, text=True,
     )
     if probe.returncode != 0:
-        raise SystemExit(f"ab/plandiff: invalid git ref {ref!r}: "
-                         f"{probe.stderr.strip()}")
-    orig = R.query
-    R.query = lambda name, oracle=None: (lambda fn: fn)
-    out = {}
-    try:
-        for path in sorted(set(targets.values())):
-            proc = subprocess.run(
-                ["git", "-C", REPO, "show", f"{ref}:{path}"],
-                capture_output=True, text=True,
-            )
-            if proc.returncode != 0:
-                # module absent at ref (a whole new family landed since)
-                # — its queries just won't appear in ``out``; callers
-                # report them as new-at-ref instead of crashing
-                # (plandiff --all crashed here each new-module round)
-                continue
-            src = proc.stdout
-            ns = {"__name__": f"old_{path.rsplit('/', 1)[-1][:-3]}"}
-            exec(compile(src, f"old:{path}", "exec"), ns)
-            for q, p in targets.items():
-                if p == path and q in ns:
-                    # absent = the query didn't exist at ``ref`` yet;
-                    # callers decide whether that's an error (ab.py)
-                    # or expected (plandiff.py's new-query case)
-                    out[q] = ns[q]
-    finally:
-        R.query = orig
-    return out
+        raise SystemExit(f"invalid git ref {ref!r}: {probe.stderr.strip()}")
+    with tempfile.TemporaryDirectory(prefix="engine-") as root:
+        archive = subprocess.run(
+            ["git", "-C", REPO, "archive", ref, "bigdata_2025_1_spark"],
+            capture_output=True, check=True,
+        )
+        subprocess.run(["tar", "-x", "-C", root], input=archive.stdout, check=True)
+        yield root
 
 
-def module_path(fn) -> str:
-    mod = sys.modules[fn.__module__]
-    f = mod.__file__
-    assert f is not None
-    return os.path.relpath(f, REPO)
+def run_side(root: str, code: str, *argv: str) -> dict:
+    """Run ``code`` in a fresh Python process whose only engine on the
+    import path is the one under ``root``; return the JSON object it
+    prints after the ``SIDE_RESULT`` mark."""
+    env = dict(os.environ, PYTHONPATH=root)
+    # cwd=root: `python -c` puts the working directory first on sys.path
+    proc = subprocess.run(
+        [sys.executable, "-c", code, *argv],
+        cwd=root, env=env, stdout=subprocess.PIPE, text=True,
+    )
+    for line in proc.stdout.splitlines():
+        if line.startswith(_MARK):
+            return json.loads(line[len(_MARK):])
+    raise SystemExit(f"side at {root} exited {proc.returncode} without a result")
 
 
 def main() -> int:
@@ -91,30 +107,25 @@ def main() -> int:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    spark = get_spark("ab", master="local[32]")
-    # load the CURRENT registry first: old modules do module-level
-    # QUERIES lookups (retrieval compositions) that must resolve
-    R.load_all()
-    new = dict(R.all_queries())
-    missing = [q for q in args.queries if q not in new]
-    if missing:
-        print(f"unknown queries: {missing}", file=sys.stderr)
-        return 2
-    targets = {q: module_path(new[q].__wrapped__ if hasattr(new[q], "__wrapped__") else new[q]) for q in args.queries}
-    old = load_old(args.ref, targets)
-    absent = [q for q in args.queries if q not in old]
-    if absent:
-        print(f"not present at {args.ref}: {absent}", file=sys.stderr)
-        return 2
-    for q in args.queries:
-        best = {"old": 1e9, "new": 1e9}
-        for _ in range(args.reps):
-            for tag, fn in (("old", old[q]), ("new", new[q])):
-                spark.catalog.clearCache()
-                t0 = time.monotonic()
-                fn(spark, args.sf).collect()
-                best[tag] = min(best[tag], time.monotonic() - t0)
-        print(f"{q}: old({args.ref}) {best['old']:.2f} s -> new {best['new']:.2f} s")
+    walls: dict[str, dict[str, list[float]]] = {
+        q: {"old": [], "new": []} for q in args.queries
+    }
+    with checkout(args.ref) as old_root:
+        roots = {"old": old_root, "new": REPO}
+        for rep in range(args.reps):
+            order = ("old", "new") if rep % 2 == 0 else ("new", "old")
+            for side in order:
+                got = run_side(roots[side], _TIME, args.sf, *args.queries)
+                for q in args.queries:
+                    if q not in got:
+                        print(f"{q}: not present on the {side} side", file=sys.stderr)
+                        return 2
+                    walls[q][side].append(got[q])
+    for q, w in walls.items():
+        old, new = statistics.median(w["old"]), statistics.median(w["new"])
+        print(f"{q}: old({args.ref}) {old:.2f} s -> new {new:.2f} s (medians; "
+              f"old {' '.join(f'{x:.2f}' for x in w['old'])}, "
+              f"new {' '.join(f'{x:.2f}' for x in w['new'])})")
     return 0
 
 

@@ -3,10 +3,11 @@
     python tools/capture_plans.py [--ref REF] [--round rN] before|after q [q ...]
 
 Writes plans/<round>/<query>_<tag>.txt — the optimization-round evidence
-files (the judge checks plan claims against these). With ``--ref`` the
-query functions are exec'd from that git ref (tools/ab.py's loader), so
-BEFORE plans can be captured after the change has landed. The round
-directory defaults to $PLANS_ROUND or r15.
+files. The plans come from a fresh process that imports only one engine:
+the working tree, or with ``--ref`` a ``git archive`` extract of that
+ref (``tools/plandiff.py side_plans``), so BEFORE plans can be captured
+after the change has landed. The round directory defaults to
+$PLANS_ROUND or r15.
 """
 
 from __future__ import annotations
@@ -18,8 +19,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bigdata_2025_1_spark.registry import all_queries  # noqa: E402
-from bigdata_2025_1_spark.session import get_spark  # noqa: E402
+from tools.ab import checkout  # noqa: E402
+from tools.plandiff import side_plans  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -35,28 +36,19 @@ def main() -> None:
     args = ap.parse_args()
     out_dir = os.path.join(REPO, "plans", args.rnd)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("plans", master="local[4]")
-    qs = all_queries()
-    if args.ref:
-        from tools.ab import load_old, module_path
-
-        targets = {n: module_path(qs[n]) for n in args.names}
-        old = load_old(args.ref, targets)
-        missing = [n for n in args.names if n not in old]
-        if missing:
-            raise SystemExit(f"not present at {args.ref}: {missing}")
-        qs = old
+    with checkout(args.ref) as root:
+        plans = side_plans(root, SF, args.names, master="local[4]")
+    missing = [n for n in args.names if n not in plans]
+    if missing:
+        raise SystemExit(f"not present at {args.ref or 'the working tree'}: {missing}")
     for name in args.names:
-        df = qs[name](spark, SF)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plans[name]
+        if isinstance(plan, dict):
+            raise SystemExit(f"{name}: planning failed ({plan['error']})")
         path = os.path.join(out_dir, f"{name}_{args.tag}.txt")
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({len(plan)} chars)")
-        spark.catalog.clearCache()
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -1,7 +1,6 @@
 """Plan-shape regression harness (explain-diff): compare the NORMALIZED
 formatted physical plan of registered queries between a git ref (old
-code) and the working tree, in one session — the plan-level counterpart
-of tools/ab.py (VERDICT r9 ask #2's explain()-diff candidate).
+code) and the working tree — the plan-level counterpart of tools/ab.py.
 
 Plans are deterministic, so unlike ab.py there is no run-to-run noise
 and ``--ref HEAD`` (the default) is the meaningful "did my uncommitted
@@ -10,18 +9,18 @@ ids, plan ids, statistics, and file paths; what remains is the shape a
 scale review cares about — node kinds, join strategies, exchange
 placement, pushed filters.
 
+Each side plans in its own fresh process that imports only its own
+engine (``tools/ab.py`` ``checkout``/``run_side``): the OLD side a
+``git archive REF bigdata_2025_1_spark`` extract, so a change to a
+shared helper module shows up in every query that calls it.
+
 Usage:
     python tools/plandiff.py [--ref REF] [--sf DIR] [--full] query ...
     python tools/plandiff.py --all            # every registered query
 
 Exit status: 0 = all plans unchanged, 1 = at least one differs or could
-not be compared because its OLD side failed to plan (so CI or a
-pre-commit hook can gate on it).
-
-Known limits (measured over all 328 queries vs the round-9 ref):
-- queries composing persisted helpers can read "unchanged" when the
-  OLD side's identical plan fragment is substituted from the cache
-  manager — run such queries standalone (fresh memo) for a clean read.
+not be compared because a side failed to plan (so CI or a pre-commit
+hook can gate on it).
 
 Fixed FP classes (round-12 VERDICT ask #3 — both fired that round on
 exactly the queries a bench panic checks first):
@@ -41,16 +40,43 @@ from __future__ import annotations
 
 import argparse
 import difflib
+import json
 import re
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bigdata_2025_1_spark.registry as R
+from tools.ab import REPO, checkout, run_side
+
+# Child program: the formatted plan of each named query, or the class of
+# the error its planning raised; a query the side does not register is
+# left out. argv[1] is JSON: {"sf", "queries", "session": get_spark kwargs}.
+PLANS = """
+import json, sys
 from bigdata_2025_1_spark.plans.explain import formatted_plan
+from bigdata_2025_1_spark.registry import all_queries
 from bigdata_2025_1_spark.session import get_spark
-from tools.ab import load_old, module_path
+spec = json.loads(sys.argv[1])
+spark = get_spark("plans", **spec["session"])
+qs = all_queries()
+out = {}
+for q in spec["queries"]:
+    if q in qs:
+        spark.catalog.clearCache()
+        try:
+            out[q] = formatted_plan(qs[q](spark, spec["sf"]))
+        except Exception as e:
+            out[q] = {"error": e.__class__.__name__}
+spark.stop()
+print("SIDE_RESULT " + json.dumps(out))
+"""
+
+
+def side_plans(root: str, sf: str, queries: list[str], **session) -> dict:
+    """Formatted plans of ``queries`` from the engine under ``root``."""
+    spec = {"sf": sf, "queries": queries, "session": session}
+    return run_side(root, PLANS, json.dumps(spec))
 
 _NOISE = [
     (re.compile(r"#\d+L?"), "#_"),
@@ -221,35 +247,36 @@ def main() -> int:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    spark = get_spark("plandiff", master="local[8]", shuffle_partitions=8)
-    R.load_all()
-    new = dict(R.all_queries())
-    names = list(new) if args.all else args.queries
-    missing = [q for q in names if q not in new]
+    from bigdata_2025_1_spark.registry import all_queries
+
+    registered = all_queries()
+    names = list(registered) if args.all else args.queries
+    missing = [q for q in names if q not in registered]
     if missing:
         print(f"unknown queries: {missing}", file=sys.stderr)
         return 2
     if not names:
         print("no queries given (use --all or list names)", file=sys.stderr)
         return 2
-    targets = {q: module_path(new[q]) for q in names}
-    old = load_old(args.ref, targets)
+    session = {"master": "local[8]", "shuffle_partitions": 8}
+    with checkout(args.ref) as old_root:
+        old = side_plans(old_root, args.sf, names, **session)
+    new = side_plans(REPO, args.sf, names, **session)
     changed, uncompared = [], []
     for q in names:
         if q not in old:
             print(f"{q}: not present at {args.ref} — new query, skipped")
             continue
-        spark.catalog.clearCache()
-        try:
-            p_old = normalize(formatted_plan(old[q](spark, args.sf)))
-        except Exception as e:  # noqa: BLE001 — old code may predate a query
-            # e.g. a function-local import in the old module binds the
-            # working tree's helper, whose signature has since changed
+        errs = [
+            f"{side} side failed to plan ({plan['error']})"
+            for side, plan in (("OLD", old[q]), ("NEW", new[q]))
+            if isinstance(plan, dict)
+        ]
+        if errs:
             uncompared.append(q)
-            print(f"{q}: OLD side failed to plan ({e.__class__.__name__}) — NOT COMPARED")
+            print(f"{q}: {'; '.join(errs)} — NOT COMPARED")
             continue
-        spark.catalog.clearCache()
-        p_new = normalize(formatted_plan(new[q](spark, args.sf)))
+        p_old, p_new = normalize(old[q]), normalize(new[q])
         if p_old == p_new:
             print(f"{q}: unchanged")
             continue
