@@ -96,14 +96,3 @@ def signer(text: Column) -> Column:
         F.split(py_strip(last), PY_WS_CLASS + "+", -1), lambda w: w != F.lit("")
     )
     return F.when(F.size(words) >= 2, F.array_join(words, " "))
-
-
-def metadata_struct(text: Column) -> Column:
-    """D5-D8 assembled into one struct (E4, extract_document_info.py:54-61)."""
-    return F.struct(
-        main_code(text).alias("main_code"),
-        related_codes(text).alias("related_codes"),
-        agency(text).alias("agency"),
-        issue_date(text).alias("issue_date"),
-        signer(text).alias("signer"),
-    )

@@ -98,33 +98,12 @@ def srp_planes(bits: int = 16, dim: int = 64) -> list[list[int]]:
     return _md5_pm1_matrix("srp", bits, dim)
 
 
-def srp_signature(emb: Column, planes: list[list[int]]) -> Column:
-    """SRP signature as bigint: bit j = [Σ_i round(emb_i·1e9)·w_ji > 0].
-
-    The projection sum is int64-exact (same trick as dot_scaled), so the
-    sign — hence the signature — is engine-independent."""
-    sig = F.lit(0).cast("bigint")
-    for j, row in enumerate(planes):
-        w = F.array(*[F.lit(v) for v in row])
-        proj = F.aggregate(
-            F.zip_with(
-                emb,
-                w,
-                lambda x, wv: F.round(x.cast("double") * F.lit(1e9)).cast("bigint") * wv,
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        )
-        sig = sig + F.when(proj > 0, F.lit(2**j)).otherwise(F.lit(0)).cast("bigint")
-    return sig
-
-
 def make_srp_signature_pandas(planes: list[list[int]]):
-    """Arrow-vectorized twin of :func:`srp_signature`: exact int64
-    ``round(emb·1e9) @ Wᵀ`` (integer matmul — associative, exact), sign →
-    bits → bigint. Bit-identical to the expression form and to
-    :func:`sql_srp_signature_from`; ~10× faster once rows × planes × dims
-    is large (numpy vs interpreted expression trees)."""
+    """Arrow-vectorized SRP signature as bigint: bit j =
+    [Σ_i round(emb_i·1e9)·w_ji > 0], computed as the exact int64
+    ``round(emb·1e9) @ Wᵀ`` (integer matmul — associative, exact), so
+    the sign — hence the signature — is engine-independent and
+    bit-identical to :func:`sql_srp_signature_from`."""
     from pyspark.sql.functions import pandas_udf
 
     W = np.array(planes, dtype=np.int64)  # (bits, dim)
@@ -155,7 +134,7 @@ def make_srp_sig_and_norm_pandas(planes: list[list[int]]):
     @pandas_udf("struct<srp_sig: bigint, nsq: bigint>")
     def srp_and_norm_pd(emb: pd.Series) -> pd.DataFrame:
         E = np.stack(emb.to_numpy()).astype(np.float64)
-        # signature from round(e*1e9) (matches srp_signature)
+        # signature from round(e*1e9) (matches sql_srp_signature_from)
         S9 = (np.sign(E * 1e9) * np.floor(np.abs(E * 1e9) + 0.5)).astype(np.int64)
         proj = S9 @ W.T
         sig = ((proj > 0).astype(np.int64) * powers).sum(axis=1)
@@ -187,7 +166,7 @@ def _sql_plane_dot(se: str, row: list[int]) -> str:
 
 
 def sql_srp_signature_from(se: str, planes: list[list[int]]) -> str:
-    """DuckDB mirror of :func:`srp_signature`, reading the precomputed
+    """DuckDB mirror of :func:`make_srp_signature_pandas`, reading the precomputed
     scaled list ``se`` (see :func:`sql_scaled_e9`)."""
     parts = [
         f"CASE WHEN {_sql_plane_dot(se, row)} > 0 THEN {2**j} ELSE 0 END"

@@ -119,7 +119,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return _read_parquet(spark, path)
 
 
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to all cores before CPU-heavy per-row work.
 
     The fixture tables are single small parquet files, which Spark scans as
@@ -127,8 +127,7 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     stages (hashing, signatures, regex scans). On a real cluster the input
     would already be split; this keeps the local plan shaped the same way.
     """
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:

@@ -31,6 +31,106 @@ from bigdata_2025_1_spark.registry import query
 PR_ITERS = 10
 PR_ONE = 10**12  # rank unit: 1.0 == 1e12
 PR_PPM = 10**6  # edge-weight normalization denominator
+HOP_INF = 10**6  # hop-count sentinel for "not reached"
+
+
+def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The directed nation trade graph every trade-graph query reads:
+    ``(src, dst, w)`` = (customer nation, supplier nation, lineitem
+    count), one row per nation pair, self-loops kept. One fact-fact
+    shuffle (lineitem ⋈ orders) with both dimensions broadcast collapses
+    the facts to ≤|nations|² rows."""
+    li = load(spark, sf_dir, "lineitem")
+    orders = load(spark, sf_dir, "orders")
+    cust = load(spark, sf_dir, "customer")
+    supp = load(spark, sf_dir, "supplier")
+    return (
+        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
+        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
+        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
+        .groupBy(
+            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
+        )
+        .agg(F.count("*").alias("w"))
+    )
+
+
+def _arcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(src, dst)``: the directed trade pairs, self-loops dropped."""
+    edges = trade_edges(spark, sf_dir)
+    return edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """``(a < b, w)``: self-loops dropped, both directions of a nation
+    pair summed into one edge."""
+    return (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"), "w"
+        )
+        .groupBy("a", "b")
+        .agg(F.sum("w").alias("w"))
+    )
+
+
+def _strong(edges: DataFrame) -> DataFrame:
+    """The edges whose volume exceeds the graph average — integer test
+    625·w > Σw, no float fraction — without their weight column."""
+    total = edges.agg(F.sum("w").alias("tw"))
+    return (
+        edges.crossJoin(F.broadcast(total))
+        .filter(625 * F.col("w") > F.col("tw"))
+        .drop("w", "tw")
+    )
+
+
+def hop_distances(
+    edges: DataFrame, nodes: DataFrame, *, rounds: int, source: int | None = None
+) -> DataFrame:
+    """Hop counts ``(src, nation_key, dist)`` after ``rounds``
+    synchronous min-plus relaxations over the directed ``edges (src,
+    dst)``: dist' = min(dist, 1 + min over in-neighbours), 0 at the
+    source itself, ``HOP_INF`` where no path of ≤ ``rounds`` hops
+    exists. ``source=None`` relaxes from every node of ``nodes
+    (nation_key)`` at once (the all-sources matrix); an int relaxes from
+    that one node. Each round is one edge equi-join + MIN aggregate run
+    through :func:`iterate`, which keeps the plan one round deep."""
+    e = edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
+    if source is None:
+        starts = nodes.select(F.col("nation_key").alias("src")).crossJoin(nodes)
+    else:
+        starts = nodes.select(F.lit(source).alias("src"), "nation_key")
+    dist0 = starts.select(
+        "src",
+        "nation_key",
+        F.when(F.col("src") == F.col("nation_key"), F.lit(0))
+        .otherwise(F.lit(HOP_INF))
+        .alias("dist"),
+    )
+
+    def step(dist: DataFrame) -> DataFrame:
+        best = (
+            e.join(
+                dist.filter(F.col("dist") < HOP_INF),
+                F.col("e_src") == F.col("nation_key"),
+            )
+            .groupBy(F.col("src").alias("rsrc"), F.col("e_dst").alias("nk"))
+            .agg(F.min("dist").alias("best"))
+        )
+        return dist.join(
+            best,
+            (F.col("src") == F.col("rsrc")) & (F.col("nation_key") == F.col("nk")),
+            "left",
+        ).select(
+            "src",
+            "nation_key",
+            # LEAST skips NULLs in BOTH engines (no-in-edge nodes keep
+            # their current dist), verified: DuckDB LEAST(5,NULL)=5
+            F.least(F.col("dist"), F.col("best") + 1).alias("dist"),
+        )
+
+    return iterate(step, dist0, rounds=rounds)[0]
 
 
 def pagerank_int_kernel(df):
@@ -138,21 +238,8 @@ def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     components over billions of nodes — use the distributed
     loop-of-joins pattern instead (``dedup_connected_components`` in
     this repo demonstrates it, frontier persisted per step)."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
-
-    raw_edges = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count("*").alias("w"))
-    )
+    raw_edges = trade_edges(spark, sf_dir)
     out_w = raw_edges.groupBy("src").agg(F.sum("w").alias("total"))
     # Cache contract (applies to every .persist() inside a registered
     # query): the returned DataFrame is lazy, so there is no in-function
@@ -267,24 +354,8 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     stay partitioned by src, each step is one co-keyed shuffle, and the
     frontier persists per step (see ``dedup_connected_components`` for
     the loop-until-converged variant of that shape)."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
-    raw = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .groupBy(F.col("c_nationkey").alias("u"), F.col("s_nationkey").alias("v"))
-        .agg(F.count("*").alias("w"))
-    )
-    und = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"), "w")
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-    )
+    und = _undirected(trade_edges(spark, sf_dir))
     sym = (
         und.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
         .unionAll(und.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))
@@ -368,32 +439,8 @@ def triangle_count_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planner degree-orders vertices first (the "compact-forward"
     optimization) — the query's shape is unchanged, only the join
     strategy shifts from broadcast to shuffle."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    raw = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .groupBy(F.col("c_nationkey").alias("u"), F.col("s_nationkey").alias("v"))
-        .agg(F.count("*").alias("w"))
-    )
-    und = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"), "w"
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-    )
-    total = und.agg(F.sum("w").alias("tw"))
-    strong = (
-        und.crossJoin(F.broadcast(total))
-        .filter(625 * F.col("w") > F.col("tw"))
-        .select("a", "b")
-        .persist()  # tiny (≤ |nations|²); released by harness clearCache
-    )
+    # tiny (≤ |nations|²); released by harness clearCache
+    strong = _strong(_undirected(trade_edges(spark, sf_dir))).persist()
     e1 = strong.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = strong.select(F.col("a").alias("y2"), F.col("b").alias("z"))
     e3 = strong.select(F.col("a").alias("x3"), F.col("b").alias("z3"))
@@ -474,58 +521,29 @@ def bfs_trade_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: distances are integers; min is total; no floats exist
     anywhere in the query.
 
-    Scale shape: the DISTINCT fact-fact shuffle builds a ≤|nations|²
-    edge list once (broadcast dims); each round is one join+MIN-agg on
-    the persisted edges. At billion-node scale the same loop runs with
-    edges partitioned by src and the frontier persisted per round —
-    and frontier-only propagation (join from last round's CHANGED
+    Scale shape: ``trade_edges`` builds the ≤|nations|² edge list once
+    (broadcast dims); each round is one join+MIN-agg on the persisted
+    edges (``hop_distances``, the one-source case of the
+    harmonic-centrality step), truncated per round by ``iterate``. At
+    billion-node scale the same loop runs with edges partitioned by src
+    — and frontier-only propagation (join from last round's CHANGED
     nodes) is the standard optimization the small fixture doesn't
     need."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
-    INF = 10**6
-    edges = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .distinct()
-        .persist()  # tiny (≤ |nations|²); released by harness clearCache
+    # tiny (≤ |nations|²); released by harness clearCache
+    edges = _arcs(spark, sf_dir).persist()
+    dist = hop_distances(
+        edges,
+        nation.select(F.col("n_nationkey").alias("nation_key")),
+        rounds=BFS_HOPS,
+        source=BFS_SOURCE,
     )
-    dist = nation.select(
-        F.col("n_nationkey").alias("nation_key"),
-        F.when(F.col("n_nationkey") == BFS_SOURCE, F.lit(0))
-        .otherwise(F.lit(INF))
-        .alias("dist"),
-    )
-    for _ in range(BFS_HOPS):
-        relaxed = (
-            edges.join(
-                dist.filter(F.col("dist") < INF),
-                edges.src == F.col("nation_key"),
-            )
-            .groupBy(F.col("dst").alias("nk"))
-            .agg(F.min("dist").alias("best"))
-        )
-        dist = (
-            dist.join(relaxed, dist.nation_key == relaxed.nk, "left")
-            .select(
-                "nation_key",
-                # LEAST skips NULLs in BOTH engines (no-in-edge nodes keep
-                # their current dist), verified: DuckDB LEAST(5,NULL)=5
-                F.least(F.col("dist"), F.col("best") + 1).alias("dist"),
-            )
-        )
     return (
         dist.join(F.broadcast(nation), dist.nation_key == nation.n_nationkey)
         .select(
             F.col("n_name").alias("nation"),
-            F.when(F.col("dist") < INF, F.col("dist").cast("int")).alias("hops"),
-            (F.col("dist") < INF).alias("reachable"),
+            F.when(F.col("dist") < HOP_INF, F.col("dist").cast("int")).alias("hops"),
+            (F.col("dist") < HOP_INF).alias("reachable"),
         )
         .orderBy("nation")
     )
@@ -575,20 +593,9 @@ def trade_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one DISTINCT fact-fact shuffle builds the edge list
     (broadcast dims); degrees are map-side-combinable counts; the
     reciprocity self-join runs on the ≤|nations|² edge set."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
-    raw = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .distinct()
-        .persist()  # tiny (≤ |nations|²); released by harness clearCache
-    )
+    # tiny (≤ |nations|²); released by harness clearCache
+    raw = _arcs(spark, sf_dir).persist()
     outd = raw.groupBy(F.col("src").alias("nk")).agg(F.count("*").alias("out_degree"))
     ind = raw.groupBy(F.col("dst").alias("nk")).agg(F.count("*").alias("in_degree"))
     b = raw.select(F.col("src").alias("b_src"), F.col("dst").alias("b_dst"))
@@ -690,51 +697,12 @@ def harmonic_centrality_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     web scale swap to the IMPLEMENTED sketch twin
     ``hyperball_harmonic_trade``: same loop, O(|V|·m) register state
     instead of the |V|² matrix."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
-    INF = 10**6
-    edges = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(F.col("c_nationkey").alias("src_n"), F.col("s_nationkey").alias("dst"))
-        .distinct()
-        .persist()  # tiny (≤ |nations|²); released by harness clearCache
+    # tiny (≤ |nations|²); released by harness clearCache
+    edges = _arcs(spark, sf_dir).persist()
+    dist = hop_distances(
+        edges, nation.select(F.col("n_nationkey").alias("nation_key")), rounds=HC_HOPS
     )
-    a = nation.select(F.col("n_nationkey").alias("src"))
-    b = nation.select(F.col("n_nationkey").alias("nation_key"))
-    dist = a.crossJoin(b).select(
-        "src",
-        "nation_key",
-        F.when(F.col("src") == F.col("nation_key"), F.lit(0))
-        .otherwise(F.lit(INF))
-        .alias("dist"),
-    )
-    for _ in range(HC_HOPS):
-        relaxed = (
-            edges.join(
-                dist.filter(F.col("dist") < INF),
-                edges.src_n == F.col("nation_key"),
-            )
-            .groupBy(F.col("src").alias("rsrc"), F.col("dst").alias("nk"))
-            .agg(F.min("dist").alias("best"))
-        )
-        dist = (
-            dist.join(
-                relaxed,
-                (F.col("src") == F.col("rsrc")) & (F.col("nation_key") == F.col("nk")),
-                "left",
-            )
-            .select(
-                "src",
-                "nation_key",
-                F.least(F.col("dist"), F.col("best") + 1).alias("dist"),
-            )
-        )
     recip = F.when(
         F.col("src") == F.col("nation_key"), F.lit(0).cast("bigint")
     ).otherwise(
@@ -745,7 +713,7 @@ def harmonic_centrality_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = (
         dist.select("src", "nation_key", F.coalesce(recip, F.lit(0)).alias("r_i6"),
-                    ((F.col("src") != F.col("nation_key")) & (F.col("dist") < INF))
+                    ((F.col("src") != F.col("nation_key")) & (F.col("dist") < HOP_INF))
                     .cast("int").alias("reached"))
         .groupBy("nation_key")
         .agg(
@@ -893,29 +861,7 @@ def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     run as DataFrame steps — each round one degree agg + one semi-join)."""
     import pandas as pd
 
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    raw = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .groupBy(F.col("c_nationkey").alias("uu"), F.col("s_nationkey").alias("vv"))
-        .agg(F.count("*").alias("w"))
-    )
-    und = (
-        raw.filter(F.col("uu") != F.col("vv"))
-        .select(F.least("uu", "vv").alias("a"), F.greatest("uu", "vv").alias("b"), "w")
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-    )
-    total = und.agg(F.sum("w").alias("tw"))
-    strong = (
-        und.crossJoin(F.broadcast(total))
-        .filter(625 * F.col("w") > F.col("tw"))
-        .select("a", "b")
-    )
+    strong = _strong(_undirected(trade_edges(spark, sf_dir)))
     sym = strong.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
         strong.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -1054,20 +1000,9 @@ def hyperball_harmonic_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     |V|·m-row state. At web scale registers pack into a single
     BINARY(m) column updated by an Arrow kernel — the plan shape (join,
     MAX-merge) is unchanged."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
-    edges = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(F.col("c_nationkey").alias("src_n"), F.col("s_nationkey").alias("dst"))
-        .distinct()
-        .persist()  # tiny (≤ |nations|²); released by harness clearCache
-    )
+    # tiny (≤ |nations|²); released by harness clearCache
+    edges = _arcs(spark, sf_dir).persist()
     h = F.md5(F.col("v").cast("string"))
     x = F.conv(F.substring(h, 2, 12), 16, 10).cast("bigint")
     state = nation.select(F.col("n_nationkey").alias("v")).select(
@@ -1095,7 +1030,7 @@ def hyperball_harmonic_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     ests = [est(state, 0)]
     for r in range(1, HB_ROUNDS + 1):
         contrib = (
-            edges.join(state, edges.src_n == state.v)
+            edges.join(state, edges.src == state.v)
             .groupBy(F.col("dst").alias("v"), "bucket")
             .agg(F.max("reg").alias("reg"))
         )
@@ -1315,23 +1250,7 @@ _SQL_UND = """
 def _und_adj(spark: SparkSession, sf_dir: str):
     """Spark twin of ``_SQL_UND``: the undirected nation trade graph as
     (und pairs a<b, directed adj, integer degrees)."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    raw = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .distinct()
-    )
-    und = raw.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
+    und = _undirected(trade_edges(spark, sf_dir)).drop("w")
     adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -1625,32 +1544,13 @@ def scc_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     billion-node graphs keep the distributed forward/backward label
     propagation shape (``dedup_connected_components`` demonstrates the
     loop) instead of the closure matrix."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
     # persisted: the threshold scalar, the strong-edge filter, and the
     # two downstream consumers of the kernel labels would otherwise
     # replay the fact-fact shuffle. Cache contract: see
     # pagerank_nation_trade.
-    raw = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count("*").alias("w"))
-        .persist()
-    )
-    wtot = raw.agg(F.sum("w").alias("wt"))
-    strong = (
-        raw.crossJoin(F.broadcast(wtot))
-        .filter(625 * F.col("w") > F.col("wt"))
-        .select("src", "dst", F.lit(1).cast("bigint").alias("w"))
-    )
+    raw = trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst")).persist()
+    strong = _strong(raw).withColumn("w", F.lit(1).cast("bigint"))
     markers = nation.select(
         F.col("n_nationkey").alias("src"),
         F.col("n_nationkey").alias("dst"),
@@ -1745,32 +1645,8 @@ def local_clustering_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge lists the identical algebra runs distributed with
     degree-ordered joins (the compact-forward note on
     triangle_count_trade)."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    raw = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .groupBy(F.col("c_nationkey").alias("u"), F.col("s_nationkey").alias("v"))
-        .agg(F.count("*").alias("w"))
-    )
-    und = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"), "w"
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-    )
-    total = und.agg(F.sum("w").alias("tw"))
-    strong = (
-        und.crossJoin(F.broadcast(total))
-        .filter(625 * F.col("w") > F.col("tw"))
-        .select("a", "b")
-        .persist()  # tiny (<= |nations|^2); released by harness clearCache
-    )
+    # tiny (<= |nations|^2); released by harness clearCache
+    strong = _strong(_undirected(trade_edges(spark, sf_dir))).persist()
     e1 = strong.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = strong.select(F.col("a").alias("y2"), F.col("b").alias("z"))
     e3 = strong.select(F.col("a").alias("x3"), F.col("b").alias("z3"))

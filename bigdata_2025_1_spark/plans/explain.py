@@ -32,16 +32,6 @@ def plan_has(df: DataFrame, *needles: str) -> dict[str, bool]:
     return {n: (n in plan) for n in needles}
 
 
-def count_single_partition_exchanges(df: DataFrame) -> int:
-    """Number of ``Exchange SinglePartition`` nodes — the whole-data
-    funnel that unpartitioned windows and global sorts insert. Scalar
-    aggregates also produce one (they move one row per input partition:
-    harmless); tests pin the exact expected count per query so an
-    accidental doc-sized unpartitioned window fails CI."""
-    plan = formatted_plan(df)
-    return len(re.findall(r"^Arguments: SinglePartition", plan, flags=re.MULTILINE))
-
-
 def single_partition_exchange_inputs(df: DataFrame) -> list[str]:
     """The ``Input`` column list of every ``Exchange SinglePartition``
     node in the formatted plan. The scale pin: none of these may carry a

@@ -1,4 +1,4 @@
-"""File sources & sinks (SURVEY §2.A4, A6-A9, A12).
+"""File sources & sinks (SURVEY §2.A4, A6-A8, A12).
 
 The reference reads per-document ``.txt`` files from per-domain folders
 (kafka/push_data_to_kafka.py:16-35), writes one file per document
@@ -71,9 +71,3 @@ def write_links_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 def read_links_json(spark: SparkSession, path: str) -> DataFrame:
     """A8."""
     return spark.read.schema("name STRING, link STRING").json(path)
-
-
-def write_stats_json(df: DataFrame, path: str, mode: str = "append") -> None:
-    """A9: stats records as an appendable JSON table (the structured
-    replacement for spark_stats.json, export_stats.py:69-73)."""
-    df.write.mode(mode).json(path)

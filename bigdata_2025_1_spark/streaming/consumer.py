@@ -111,25 +111,19 @@ class StatsSink:
             json.dump(self.rows, fh, ensure_ascii=False, indent=2)
 
 
-def make_foreach_batch(
-    sink: StatsSink, register_view: bool = True, verbose: bool = False
-) -> Callable[[DataFrame, int], None]:
+def make_foreach_batch(sink: StatsSink) -> Callable[[DataFrame, int], None]:
     """foreachBatch body (F3). Reads the batch once: ``batch_stats``'s
     aggregate (2 jobs under AQE) plus the sink's parquet append (1 job);
-    nothing is cached. Optional sample print; temp-view registration for
-    the live-SQL path (EP2)."""
+    nothing is cached. Registers the batch as a temp view for the
+    live-SQL path (EP2)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sink.write(batch_id, batch_stats(batch_df))
-        if register_view:
-            # foreachBatch runs in a cloned session; a plain temp view
-            # would be invisible to the main session. Global temp views
-            # are app-wide → query as global_temp.documents (EP2,
-            # spark/visualize.py:27 semantics).
-            batch_df.createOrReplaceGlobalTempView("documents")
-        if verbose:
-            for row in batch_df.select("domain", "filename").limit(5).collect():
-                print(f"  sample: {row.domain}/{row.filename}")
+        # foreachBatch runs in a cloned session; a plain temp view would
+        # be invisible to the main session. Global temp views are
+        # app-wide → query as global_temp.documents (EP2,
+        # spark/visualize.py:27 semantics).
+        batch_df.createOrReplaceGlobalTempView("documents")
 
     return process
 

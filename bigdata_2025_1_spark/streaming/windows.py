@@ -1,6 +1,6 @@
 """Event-time streaming operators (F6 — the extension surface the
 reference imported but never used, spark/consumer.py:5): watermarks,
-tumbling/sliding/session windows, watermarked dedup.
+tumbling/session windows, watermarked dedup.
 
 Each builder takes a streaming DataFrame with an event-time column and
 returns the transformed streaming DataFrame; batch twins of the same
@@ -31,22 +31,6 @@ def tumbling_counts(
             exact_sum(F.col("value"), 2).alias("sum_value"),
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked sliding windows (each event in window/slide buckets)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
     )
 
 

@@ -305,3 +305,38 @@ def test_local_clustering_matches_brute_force(spark, trade_edges):
     }
     assert got == want and len(got) > 0
     spark.catalog.clearCache()
+
+
+def test_trade_edges_matches_dict_join(spark, trade_edges):
+    """The one Spark edge list every trade-graph query reads equals the
+    plain-Python dict join: same pairs (self-loops kept), same counts."""
+    from bigdata_2025_1_spark.operators import graph_ops as G
+
+    got = {(r.src, r.dst): r.w for r in G.trade_edges(spark, SF01).collect()}
+    assert got == dict(trade_edges)
+    assert any(u == v for u, v in got)  # self-loops are kept
+
+
+def test_hop_distances_on_a_chain(spark):
+    """Three min-plus rounds over the chain 0→1→2→3→4 reach 3 hops and
+    no further, from one source and from every source at once."""
+    from bigdata_2025_1_spark.operators.graph_ops import HOP_INF, hop_distances
+
+    edges = spark.createDataFrame(
+        [(k, k + 1) for k in range(4)], "src bigint, dst bigint"
+    )
+    nodes = spark.createDataFrame([(k,) for k in range(5)], "nation_key bigint")
+
+    def expect(s: int, v: int) -> int:
+        return v - s if 0 <= v - s <= 3 else HOP_INF
+
+    one = {
+        r.nation_key: r.dist
+        for r in hop_distances(edges, nodes, rounds=3, source=0).collect()
+    }
+    assert one == {0: 0, 1: 1, 2: 2, 3: 3, 4: HOP_INF}
+    every = {
+        (r.src, r.nation_key): r.dist
+        for r in hop_distances(edges, nodes, rounds=3).collect()
+    }
+    assert every == {(s, v): expect(s, v) for s in range(5) for v in range(5)}

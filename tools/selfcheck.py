@@ -6,6 +6,9 @@ Usage: python tools/selfcheck.py [--vanilla] [sf_dir] [query ...]
 ``--vanilla`` runs under an untuned SparkSession (plain builder, default
 configs) instead of the repo's tuned session; queries must pass BOTH
 ways.
+
+Exit status: 0 = every query passes, 1 = at least one fails, 2 = a
+named query is not registered (nothing runs).
 """
 
 from __future__ import annotations
@@ -29,6 +32,10 @@ def main() -> int:
 
     queries = all_queries()
     oracles = all_oracles()
+    missing = sorted(only - set(queries))
+    if missing:
+        print(f"unknown queries: {missing}", file=sys.stderr)
+        return 2
     # Carriage-return stage bars interleave with the `ok <name>` result
     # lines in a non-tty log (gluing bars onto results and breaking
     # `grep -c "^ok"`); keep the selfcheck log machine-parseable. The
