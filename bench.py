@@ -314,8 +314,8 @@ def main() -> None:
     # is a materially tighter steady-state estimator (an adaptive
     # third-run-on-disagreement variant was measured to trigger on 36/42
     # queries anyway, so the simple form stays). Every run executes the
-    # full plan end-to-end (no result caching — .persist() inside
-    # queries is cleared between runs).
+    # full plan end-to-end (no result caching: each run rebuilds the
+    # query, and a query leaves no cache entry behind).
     timings: dict[str, float] = {}
     for name in HEADLINE:
         fn = queries[name]

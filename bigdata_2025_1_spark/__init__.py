@@ -24,20 +24,16 @@ Layout
 Everything here is public-API PySpark; no reference code is copied (the
 reference is cited by file:line in docstrings for semantic parity only).
 
-Cache contract
---------------
-Registered queries return LAZY DataFrames; some ``persist()`` shared
-intermediates (LSH signatures, graph edge lists, ranking frames) that
-must stay cached until the caller materializes the result — so queries
-cannot unpersist before returning. The one exception is a release
-gate's ``shared`` frames (``functions.overlap.release_gate``): the gate
-has materialized every leg before it returns, so it frees them itself.
-Every other per-query persist is the CALLER's to release, with
-``spark.catalog.clearCache()`` after consuming each query's result.
-Both shipped harnesses do (``bench.py`` per run, ``tools/selfcheck.py``
-per query; ``tests/test_observe.py`` pins that this leaves zero cached
-blocks); an interactive consumer embedding this package should do the
-same.
+Materialization
+---------------
+No registered query leaves a CacheManager entry. A frame read more than
+once is ``localCheckpoint()``-ed: its blocks live as long as the
+returned DataFrame and need no ``unpersist()``. The one ``persist()`` is
+``functions.overlap.release_gate(shared=...)``, which frees its shared
+frames before it returns. The trade: local checkpoints have no lineage,
+so losing an executor loses their blocks and fails the query, which
+reruns from its source tables; ``functions.iterate.iterate`` offers
+``reliable=True`` for loops long enough to need a checkpoint directory.
 """
 
 __version__ = "0.1.0"

@@ -15,7 +15,7 @@ worker starts:
 2. one ``monotonically_increasing_id()`` over the sorted partitions
    gives each row its partition ``_pid`` (the id's high bits) and its
    1-based partition-local position ``_pos`` (the low 33 bits, plus
-   one), persisted with the rows;
+   one), checkpointed with the rows;
 3. a per-``_pid`` aggregate (row count, value sum or value min) is
    folded over all EARLIER partitions into an offset — a
    partition-count-sized table, broadcast back. A row's global rank is
@@ -64,27 +64,22 @@ def _ranged(
     aggregate ``fold`` over the per-partition ``agg`` of every EARLIER
     partition (NULL for the first partition unless ``fold`` says
     otherwise)."""
-    # persist() is CORRECTNESS here, not caching: `parts` is consumed
-    # twice (the per-partition aggregate and the rows that join its
-    # offsets), and each un-persisted evaluation plans its own
+    # The checkpoint is CORRECTNESS here, not caching: `parts` is
+    # consumed twice (the per-partition aggregate and the rows that join
+    # its offsets), and each unmaterialized evaluation plans its own
     # repartitionByRange whose RangePartitioner samples independently —
     # boundaries can differ between the two runs (observed on a
     # theta-join input: ranks went missing/duplicated), making the
     # offset of a _pid disagree with the rows that carry it. _pid and
-    # _pos are computed below persist(), so both consumers read ONE
-    # materialization and one partition layout by construction. (Cache
-    # released by the harnesses' per-query clearCache. The default
-    # MEMORY_AND_DISK level spills rather than OOMs on a 100 TB input;
-    # clusters that cannot spare the disk should swap persist() for a
-    # reliable checkpoint() — the requirement is ONE materialization,
-    # not caching per se.)
+    # _pos are computed below the checkpoint, so both consumers read ONE
+    # materialization and one partition layout by construction.
     parts = (
         df.repartitionByRange(n, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
         .withColumn("_pid", F.monotonically_increasing_id())
         .withColumn("_pos", F.col("_pid").bitwiseAND((1 << _POS_BITS) - 1) + 1)
         .withColumn("_pid", F.shiftright("_pid", _POS_BITS))
-        .persist()
+        .localCheckpoint()
     )
     per = parts.groupBy("_pid").agg(*[a.alias(k) for k, (a, _) in offsets.items()])
     earlier = per.select(*[F.col(c).alias(f"_b{c}") for c in per.columns])

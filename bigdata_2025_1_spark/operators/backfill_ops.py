@@ -184,9 +184,10 @@ def _flagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagged CDC record stream. Its lineage holds two cdc-stream
     derivations (the fix_date cross-join aggregate and the main branch),
     so every extra consumer replays the events scan, version explode and
-    flag unless the frame is cached. Queries that read it several times
-    persist it; a single-pass reader does not, since the cache write is
-    pure overhead for one read."""
+    flag unless the frame is materialized. Queries that read it several
+    times checkpoint it; a single-pass reader does not, since the write
+    is pure overhead for one read. ``backfill_release_gate`` shares it
+    across its legs."""
     return with_fix_flags(with_changes(load(spark, sf_dir, "events")))
 
 
@@ -380,10 +381,9 @@ def backfill_day_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one filtered groupBy over the flagged record scan
     (bounded by the window calendar) plus a distinct over (day x key) —
     both map-side-combinable, output <= {BUG_SPAN_DAYS} rows."""
-    # unpersisted deliberately: only two lineages read the window
-    # filter and the A/B measured the cache write as a net loss here
-    # (1.66 -> 1.85 s); inside the release gate the CacheManager still
-    # substitutes the persisting legs' cached stream into this subtree
+    # not checkpointed: only two lineages read the window filter and the
+    # A/B measured the materialization as a net loss here (1.66 -> 1.85 s);
+    # inside the release gate this subtree reads the gate's shared frame
     rec = _flagged(spark, sf_dir)
     win = rec.filter(
         (F.col("change_date") >= F.date_sub("fix_date", BUG_SPAN_DAYS))
@@ -831,17 +831,17 @@ def idempotent_replay_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the dedup is a hash repartition by the MERGE key —
     exactly the shuffle a real idempotent writer pays, linear in the
     replay set; the per-type collapses are map-side combinable."""
-    rec = _flagged(spark, sf_dir).persist()
+    rec = _flagged(spark, sf_dir).localCheckpoint()
     dks = (
         rec.filter(F.col("is_bad"))
         .select("event_date", "event_type")
         .distinct()
     )
-    # persisted: FIVE lineages read the replay set (the once-fold, the
+    # checkpointed: FIVE lineages read the replay set (the once-fold, the
     # doubled fold twice via unionByName, and the MERGE-key dedup's two
-    # copies) — without the cache each replays the broadcast join
+    # copies) — without it each replays the broadcast join
     # against the flagged stream (round 14)
-    replay = rec.join(F.broadcast(dks), ["event_date", "event_type"]).persist()
+    replay = rec.join(F.broadcast(dks), ["event_date", "event_type"]).localCheckpoint()
     doubled = replay.unionByName(replay)
     dd = doubled.select(
         "event_id", "op", "event_type", "d_events", "d_cents"
@@ -1000,7 +1000,7 @@ def reprocessing_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: broadcast-joined filter of the record scan down to
     dirty keys, then one map-side-combinable per-type collapse."""
-    rec = _flagged(spark, sf_dir).persist()
+    rec = _flagged(spark, sf_dir).localCheckpoint()
     dks = (
         rec.filter(F.col("is_bad"))
         .select("event_date", "event_type")

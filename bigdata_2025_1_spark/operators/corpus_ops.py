@@ -69,7 +69,7 @@ def corpus_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the wire carries hashes, not 50-char strings), then grouped BY THEIR
     OWN VALUE (hash → distinct-doc count) — an equi-key aggregation,
     never a doc-pair comparison, so cost is O(corpus spans), not
-    O(docs²). The exploded span table is persisted because it feeds both
+    O(docs²). The exploded span table is checkpointed because it feeds both
     the frequency aggregation and the per-doc join-back — one
     tokenization pass total (the doc spine for the final left join comes
     from the raw table, no re-shingling). The >30% flag is integer-exact
@@ -80,7 +80,7 @@ def corpus_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread(docs)
         .select("doc_id", F.explode(T.word_shingles(F.col("text"), k=SPAN_K)).alias("span"))
         .select("doc_id", F.md5("span").alias("h"))
-        .persist()
+        .localCheckpoint()
     )
     freq = ex.groupBy("h").agg(F.count_distinct("doc_id").alias("n_docs"))
     per_doc = (
@@ -438,17 +438,17 @@ def corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-div per-doc mean); the report is pure counts.
 
     Scale shape: inherits each component's: one tokenization pass
-    persisted for all stages, 16-byte exact-dedup keys, rare-shingle
+    checkpointed for all stages, 16-byte exact-dedup keys, rare-shingle
     postings equi-join — candidates only, never all-pairs; broadcast
     vocabulary logprobs; the LM gate's percentile cut buckets the
     DISTINCT NLL value domain (equi_depth_price_deciles pattern — no
     doc-sized unpartitioned window, pinned in tests/test_plans.py); the
     funnel is LEFT JOINs of doc-keyed survivor sets aggregated map-side
     per source."""
-    docs = spread(load(spark, sf_dir, "documents")).persist()
+    docs = spread(load(spark, sf_dir, "documents")).localCheckpoint()
     toks = docs.select(
         "doc_id", "source", T.ws_tokens(F.lower(F.col("text"))).alias("ts")
-    ).persist()
+    ).localCheckpoint()
     kept_len = toks.select("doc_id", "source", F.size("ts").alias("n_tokens")).filter(
         F.col("n_tokens") >= CUR2_MIN_TOKENS
     )
@@ -465,7 +465,7 @@ def corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", T.word_shingles_from_tokens(F.col("ts"), 3).alias("grams"))
         .withColumn("sz", F.size("grams"))
         .filter(F.col("sz") > 0)
-        .persist()
+        .localCheckpoint()
     )
     posts = sh2.select("doc_id", "sz", F.explode("grams").alias("g"))
     gdf = posts.groupBy("g").agg(F.count("*").alias("df"))
@@ -494,11 +494,11 @@ def corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_small").alias("doc_id"))
         .distinct()
     )
-    # persisted: feeds the NLL gate (via dn) AND the final funnel join —
+    # checkpointed: feeds the NLL gate (via dn) AND the final funnel join —
     # without it the whole containment-dedup pipeline above re-executes
     # once per consumer (measured 5.4 s -> 14.2 s at sf0.1 when the
-    # round-5 gate rewrite added consumers without this persist)
-    deduped = exact_keep.join(contained, "doc_id", "left_anti").persist()
+    # round-5 gate rewrite added consumers without a materialization)
+    deduped = exact_keep.join(contained, "doc_id", "left_anti").localCheckpoint()
     uni = toks.select("doc_id", F.explode("ts").alias("w"))
     ucnt = uni.groupBy("w").agg(F.count("*").alias("c"))
     nt = uni.agg(F.count("*").alias("n_tok"))
@@ -523,9 +523,9 @@ def corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only unpartitioned window runs over the DISTINCT NLL domain
     # (bounded by the integer-millionths score range, not by corpus
     # size).
-    # persisted: three consumers below (value histogram, total count,
+    # checkpointed: three consumers below (value histogram, total count,
     # the per-doc join) — narrow doc-sized rows
-    dn = deduped.join(nll, "doc_id").persist()
+    dn = deduped.join(nll, "doc_id").localCheckpoint()
     vals = dn.groupBy("nll_i6").agg(F.count("*").alias("vc"))
     cum = cum_counts_over_values(vals, "nll_i6")
     ntot = dn.agg(F.count("*").alias("n_docs"))
@@ -638,12 +638,12 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.expr("-SUM(l_i6) div COUNT(*)").alias("nll_i6"))
     )
-    # persisted: the tokenize+NLL pipeline above feeds three consumers
+    # checkpointed: the tokenize+NLL pipeline above feeds three consumers
     # (value histogram, total count, boundary-group docs)
     feats = (
         toks.select("doc_id", F.size("ts").alias("n_tokens"))
         .join(nll, "doc_id")
-        .persist()
+        .localCheckpoint()
     )
     vals = feats.groupBy("nll_i6").agg(
         F.count("*").alias("vc"), F.sum("n_tokens").alias("vtok")
@@ -733,10 +733,10 @@ def corpus_health_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one tokenization feeding three map-side-combinable
     aggregates (docs, vocabulary, fingerprints), cross-joined as 1-row
     broadcasts — no joins of data-sized tables anywhere."""
-    docs = spread(load(spark, sf_dir, "documents")).persist()
+    docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", "text", T.ws_tokens(F.lower(F.col("text"))).alias("ts")
-    ).persist()
+    ).localCheckpoint()
     uni = toks.select(F.explode("ts").alias("w"))
     base = toks.agg(
         F.count("*").alias("n_docs"),
@@ -899,7 +899,7 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("source", F.md5("span").alias("h"))
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
     sz = ex.groupBy("source").agg(F.count("*").alias("n_grams"))
     a = ex.select(F.col("source").alias("source_a"), "h")
@@ -984,7 +984,7 @@ def doc_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", F.md5("span").alias("h"))
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
     first_seen = ex.groupBy("h").agg(F.min("doc_id").alias("fdoc"))
     per_doc = (
@@ -1297,7 +1297,7 @@ def encoded_word_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     BPE token count under the merge table trained on this corpus
     (``_bpe_train``; merges applied exhaustively in rank order, exactly
     the segmentation training itself produced). Vocabulary-sized and
-    persisted via the training loop's final state."""
+    checkpointed as the training loop's final state."""
     _log, v = _bpe_train(spark, sf_dir)
     return v.select(
         "w",
@@ -1353,13 +1353,10 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainers batch (count words once, train on types); each iteration
     is one map-side-combinable pair count + one per-row fold with the
     merge rule baked in as literals. The top-pair pick collects ONE row
-    per round (the kmeans/PCA broadcast-state shape), and the
-    superseded vocabulary cache is released each round, so the cache
-    footprint is ≤ 2 vocabularies at any instant regardless of
-    BPE_MERGES. The oracle unrolls the same {BPE_MERGES} rounds."""
-    # NOTE: do NOT unpersist v here — _bpe_train is session-memoized
-    # and a later BPE-family query in the same session reuses it; the
-    # memo (eviction) and the harness cache contract own its lifecycle.
+    per round (the kmeans/PCA broadcast-state shape); each round's
+    vocabulary is a lazy local checkpoint, so the plan stays one round
+    deep and a superseded round's blocks go with its frame. The oracle
+    unrolls the same {BPE_MERGES} rounds."""
     log, _v = _bpe_train(spark, sf_dir)
     if not log:
         return spark.createDataFrame([], "step int, pair string, n bigint, merged string")
@@ -1415,7 +1412,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one guarded ROUND(chars/tokens, 6) per doc.
 
     Scale shape: training state is the word-TYPE vocabulary (never the
-    token stream, ≤2 cached vocabularies at any instant); the encode
+    token stream); the encode
     table is vocabulary-sized and joins the exploded corpus on the word
     (equi-key shuffle, AQE broadcasts it when small); per-doc sums are
     map-side combinable. No per-document Python, no all-pairs work."""
@@ -1461,7 +1458,8 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # trains the tokenizer once. Training runs on the driver (one argmax
 # collect per merge round), so Spark's CacheManager cannot share it:
 # only the merge log held here skips those jobs. Bounded: the oldest
-# entry is evicted (and its vocabulary unpersisted) past 8 keys. Keys
+# entry is evicted past 8 keys, and its checkpointed vocabulary's
+# blocks go when nothing references the frame. Keys
 # are path identity: the test corpus is immutable; a mutable deployment
 # should key on a table snapshot id.
 _BPE_MEMO: dict[tuple[str, str], tuple[list, DataFrame]] = {}
@@ -1470,27 +1468,18 @@ _BPE_MEMO: dict[tuple[str, str], tuple[list, DataFrame]] = {}
 def _bpe_train(
     spark: SparkSession, sf_dir: str
 ) -> "tuple[list[tuple[int, str, int, str]], DataFrame]":
-    """Session-memoized BPE training: returns the cached
+    """Session-memoized BPE training: returns the memoized
     ``(merge_log, encoded_vocab)`` for this (applicationId, sf_dir) if
-    the session has already trained, re-persisting the vocabulary if a
-    ``spark.catalog.clearCache()`` since the last call silently
-    unpersisted it (the frame stays valid — it lineage-replays the
-    50-merge fold chain in one job, with no re-run of the training
-    loop's per-round argmax collects, which are the expensive part).
-    Callers must treat the returned log as immutable and must NOT
-    unpersist the vocabulary — the memo owns its lifecycle (eviction
-    unpersists)."""
+    the session has already trained. The vocabulary is a local
+    checkpoint, which ``spark.catalog.clearCache()`` does not touch.
+    Callers must treat the returned log as immutable."""
     key = (spark.sparkContext.applicationId, sf_dir)
     hit = _BPE_MEMO.get(key)
     if hit is not None:
-        v_ = hit[1]
-        lvl = v_.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            v_.persist()
         return hit
     log, v = _bpe_train_uncached(spark, sf_dir)
     while len(_BPE_MEMO) >= 8:
-        _BPE_MEMO.pop(next(iter(_BPE_MEMO)))[1].unpersist(blocking=False)
+        _BPE_MEMO.pop(next(iter(_BPE_MEMO)))
     _BPE_MEMO[key] = (log, v)
     return log, v
 
@@ -1503,8 +1492,8 @@ def _bpe_train_uncached(
     table (step, pair, n, merged) AND the final re-segmented vocabulary
     ``(w, s, cnt)`` — the padded symbol string after every applied
     merge, i.e. the trained tokenizer's ENCODING of each word type.
-    ``encoded_vocab`` is left persisted (vocabulary-sized; the cache
-    contract releases it between queries). Use the memoized
+    ``encoded_vocab`` is the last round's lazy local checkpoint
+    (vocabulary-sized). Use the memoized
     ``_bpe_train`` wrapper — this body is one training run."""
     docs = spread(load(spark, sf_dir, "documents"))
     vocab = (
@@ -1525,9 +1514,8 @@ def _bpe_train_uncached(
             F.lit(" "),
         ).alias("s"),
         "cnt",
-    ).persist()
+    ).localCheckpoint(eager=False)
     log = []
-    prev = None
     for step in range(1, BPE_MERGES + 1):
         # single-symbol guard: sequence(1, 0) counts DOWN (the repo-wide
         # trap) and would then element_at past the end under ANSI
@@ -1551,24 +1539,14 @@ def _bpe_train_uncached(
             .limit(1)
             .collect()
         )
-        # the collect above materialized v's cache (reading prev's), so
-        # the round-before-last vocabulary is now superseded — release
-        # it here rather than accumulating BPE_MERGES caches (and clear
-        # the handle so the post-loop cleanup can't double-release it)
-        if prev is not None:
-            prev.unpersist()
-            prev = None
         if not top:
             break
         pair, n = top[0].pair, int(top[0].n)
         merged = pair.replace(" ", "")
         log.append((step, pair, n, merged))
-        prev = v
         v = v.select(
             "w", bpe_apply_merge(F.col("s"), pair, merged).alias("s"), "cnt"
-        ).persist()
-    if prev is not None:
-        prev.unpersist()
+        ).localCheckpoint(eager=False)
     return log, v
 
 

@@ -76,8 +76,10 @@ def signatures_from_docs(docs: DataFrame) -> DataFrame:
 
 
 def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted (doc_id, shingles, sig) frame — it feeds both the
-    band join and the verify join.
+    """The (doc_id, shingles, sig) frame of the LSH family. It is plain:
+    every consumer reads it more than once (band join and verify join)
+    and checkpoints it, and ``dedup_release_gate`` shares it across its
+    legs.
 
     The tokenize step under the shingles is the shared
     :func:`doc_lt_toks` subtree (``word_shingles(text) ==
@@ -93,23 +95,19 @@ def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "shingles",
         T.minhash_signature(F.col("shingles"), NUM_HASHES).alias("sig"),
-    ).persist()
+    )
 
 
 def _cand_jaccard(sig: DataFrame) -> DataFrame:
     """(doc_a, doc_b, jaccard) for every DISTINCT banded candidate pair
-    under the deployed (BANDS x rows-per-band) config, PERSISTED — the
-    shared verify pass of the LSH family (optimization round 14).
+    under the deployed (BANDS x rows-per-band) config — the shared
+    verify pass of the LSH family.
 
     ``dedup_minhash_lsh`` (threshold filter + order), ``lsh_recall_eval``
     (candidate count + verified count) and, through them, the
     connected-components chain and ``dedup_release_gate`` all consume
-    exactly this frame; before round 14 each built its own band join +
-    verify join, so the gate paid the band self-join and the
-    array-intersect verify TWICE (once under each leg). One persisted
-    pass collapses that via the plan-keyed CacheManager (the
-    ``_signatures`` pattern — identical analyzed plans share one cache
-    entry across the gate's legs).
+    exactly this frame, so the band self-join and the array-intersect
+    verify exist once. Each consumer reads it once.
 
     Scale shape: unchanged from the shapes it merges — the candidate
     join moves (band, band_key, doc_id) only; shingle sets join back
@@ -138,7 +136,6 @@ def _cand_jaccard(sig: DataFrame) -> DataFrame:
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select("doc_a", "doc_b", jaccard.alias("jaccard"))
-        .persist()
     )
 
 
@@ -220,12 +217,12 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles). Shuffle-free: one projection."""
     docs = load(spark, sf_dir, "documents")
     shingles = T.word_shingles(F.col("text"), k=3)
-    # persist the one-column signature before fanning out to mh0..mh7:
+    # checkpoint the one-column signature before fanning out to mh0..mh7:
     # element extraction would otherwise clone the whole signature
     # expression per output column (no CSE across higher-order funcs).
     sigdf = spread(docs).select(
         "doc_id", T.minhash_signature(shingles, NUM_HASHES).alias("sig")
-    ).persist()
+    ).localCheckpoint()
     return sigdf.select(
         "doc_id", *[F.col("sig")[i].alias(f"mh{i}") for i in range(NUM_HASHES)]
     ).orderBy("doc_id")
@@ -270,19 +267,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     on byte-identical code (git diff r1..r2 of this function and its
     helpers is empty) — it is first-run codegen/JIT variance under
     best-of-2, not a plan change. Steady-state at sf0.1/local[32] is
-    1.15–1.35 s; a sig-only persist variant (re-deriving shingles for the
-    verify joins) was measured SLOWER (3 shingle computations vs 1), so
-    the wide persist stays."""
+    1.15–1.35 s; a sig-only materialization (re-deriving shingles for
+    the verify joins) was measured SLOWER (3 shingle computations vs 1),
+    so the wide one stays."""
     # Signatures are expensive (8 seeded md5 passes over every shingle) and
-    # feed BOTH the band join (twice) and the verify join (twice) —
-    # _signatures persists so the lineage computes them exactly once. A
-    # sig-only persist variant (re-deriving shingles for the verify joins)
-    # was measured SLOWER (3 shingle computations vs 1): the wide persist
-    # stays. Round 14: the band join + verify now live in the shared,
-    # persisted ``_cand_jaccard`` pass so this query, ``lsh_recall_eval``
-    # and the release gate's two legs all pay it once per session.
+    # feed BOTH the band join (twice) and the verify join (twice), so they
+    # are checkpointed: the lineage computes them exactly once.
     return (
-        _cand_jaccard(_signatures(spark, sf_dir))
+        _cand_jaccard(_signatures(spark, sf_dir).localCheckpoint())
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .orderBy("doc_a", "doc_b")
     )
@@ -475,7 +467,7 @@ def dedup_char_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the normalize regexes per gram — a ~1000x amplification
     norm = docs.select(
         "doc_id", T.normalize_ws(F.lower(F.col("text"))).alias("txt")
-    ).persist()
+    ).localCheckpoint()
     txt = F.col("txt")
     n = F.length(txt)
     # short-text guard: sequence(1,0) counts DOWN and substr(pos=0) would
@@ -491,7 +483,7 @@ def dedup_char_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "grams",
             T.minhash_signature(F.col("grams"), 8).alias("mh"),
         )
-        .persist()
+        .localCheckpoint()
     )
     # Signature agreement as 8 FLAT integer-column comparisons, not a
     # zip_with/aggregate over the array pair: the flat form stays inside
@@ -570,15 +562,14 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
             V.norm_sq_scaled(F.col("embedding")).alias("nsq"),
         )
-        .persist()
+        .localCheckpoint()
     )
     # Scale guard: this query is the deliberate O(n²) exact anchor for the
     # banded-LSH path. Refuse inputs where all-pairs is no longer sane so
     # the anchor cannot be cargo-culted onto a large table (the count is
-    # on the already-persisted signatures, so it costs one cheap job).
+    # on the already-checkpointed signatures, so it costs one cheap job).
     n_vectors = sig.count()
     if n_vectors > 10_000:
-        sig.unpersist()
         raise ValueError(
             f"dedup_embedding_cosine is an exact all-pairs anchor and got "
             f"{n_vectors} vectors (limit 10000); use ann_srp_lsh_pairs "
@@ -713,7 +704,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     fwd = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     rev = pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-    edges = fwd.unionByName(rev).persist()
+    edges = fwd.unionByName(rev).localCheckpoint()
     # Initialization fuses the first propagation round into the same
     # aggregation that deduplicates the node set: label0(v) =
     # min(v, min neighbor) costs exactly what the plain distinct() cost
@@ -845,14 +836,14 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — same candidates-only contract as the LSH and char-gram
     queries, pinned in tests/test_plans.py."""
     docs = spread(load(spark, sf_dir, "documents"))
-    # persist the BARE shingle projection before touching it with
+    # checkpoint the BARE shingle projection before touching it with
     # size()/filter(): referencing the array column from another
     # expression re-inlines the whole higher-order shingle tree
     # (no CSE across higher-order functions — the char-ngram query's
     # lesson), measured 3.5 s vs 0.6 s for this stage at sf0.1.
     sh0 = docs.select(
         "doc_id", T.word_shingles(F.col("text"), k=3).alias("shingles")
-    ).persist()
+    ).localCheckpoint()
     sh = sh0.withColumn("sz", F.size("shingles")).filter(F.col("sz") > 0)
     posts = sh.select("doc_id", "sz", F.explode("shingles").alias("shingle"))
     df = posts.groupBy("shingle").agg(F.count("*").alias("df"))
@@ -970,16 +961,16 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load(spark, sf_dir, "documents"))
     sh = docs.select(
         "doc_id", T.word_shingles(F.col("text"), k=3).alias("shingles")
-    ).persist()
+    ).localCheckpoint()
     key = F.substring(
         F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", ""), 1, SNM_KEY_CHARS
     )
-    # persisted: both sides of the neighbor equi-join read the ranked
+    # checkpointed: both sides of the neighbor equi-join read the ranked
     # table — without it each side runs its own per-partition counts and
     # offset broadcast (5 more jobs per query at sf0.01, local[4])
     ordered = with_global_rank(
         docs.select("doc_id", key.alias("snm_key")), ["snm_key", "doc_id"], "rn"
-    ).persist()
+    ).localCheckpoint()
     offsets = spark.range(1, SNM_WINDOW + 1).select(F.col("id").alias("off"))
     a = ordered.select(F.col("doc_id").alias("doc_a"), "rn")
     b = ordered.select(F.col("doc_id").alias("doc_b"), F.col("rn").alias("rn_b"))
@@ -1089,10 +1080,10 @@ def minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure integer arithmetic so even "how wrong" is bit-exact.
 
     Scale shape: identical candidate discipline to ``dedup_minhash_lsh``
-    (band-bucket equi-join, signatures persisted once, full sets joined
+    (band-bucket equi-join, signatures checkpointed once, full sets joined
     back for candidates only) — the audit costs one more projection on
     the pairs the pipeline already computes."""
-    sig = _signatures(spark, sf_dir)
+    sig = _signatures(spark, sf_dir).localCheckpoint()
     bands = _band_rows(sig)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -1182,7 +1173,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical candidate discipline to the LSH query; the
     sweep adds conditional sums on the already-joined pairs."""
-    sig = _signatures(spark, sf_dir)
+    sig = _signatures(spark, sf_dir).localCheckpoint()
     bands = _band_rows(sig)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -1204,7 +1195,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.array_intersect("ga", "gb")).alias("inter"),
             F.size(F.array_distinct(F.concat("ga", "gb"))).alias("uni"),
         )
-        .persist()
+        .localCheckpoint()
     )
     outs = []
     for t in SWEEP_JACCARD_PCTS:
@@ -1289,7 +1280,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. The final per-new-doc window partitions by doc_new (tiny
     groups). The core is :func:`lsh_admission_log`, shared verbatim with
     the streaming micro-batch ingest twin (``tests/test_streaming.py``)."""
-    sig = _signatures(spark, sf_dir)
+    sig = _signatures(spark, sf_dir).localCheckpoint()
     is_new = F.col("doc_id") % 2 == 1
     return lsh_admission_log(sig.filter(is_new), sig.filter(~is_new))
 
@@ -1417,7 +1408,7 @@ def dedup_lsh_arrival_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partitions by doc_new (tiny groups). Arrival order rides the
     doc_id total order, so no global sort is needed — the < predicate
     prunes inside each band bucket."""
-    sig = _signatures(spark, sf_dir)
+    sig = _signatures(spark, sf_dir).localCheckpoint()
     return lsh_arrival_log(sig)
 
 
@@ -1839,8 +1830,7 @@ def benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load(spark, sf_dir, "documents"))
     sh = docs.select(
         "doc_id", T.word_shingles(F.col("text"), k=DECON_K).alias("shingles")
-    ).persist()  # feeds postings AND the per-eval shingle counts;
-    # released by harness clearCache
+    ).localCheckpoint()  # feeds postings AND the per-eval shingle counts
     kept = decon_kept_postings(sh)
     is_eval = F.col("doc_id") % 10 == 7
     ev = kept.filter(is_eval).select(F.col("doc_id").alias("doc_eval"), "sh")
@@ -1894,34 +1884,24 @@ def _prefix_truth(sh2: DataFrame) -> DataFrame:
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= F.expr("sz div 5") + 1)
         .select("doc_id", "sz", "shingle")
-        # PERSISTED (optimization round 14): both sides of the prefix
-        # self-join below read this frame, and without the cache the
-        # posts-explode + df join + per-doc window recompute under EACH
-        # side (Catalyst does not reuse the subtree across the join's
-        # aliases — measured 3.15 s -> 1.95 s steady-state at sf0.1 for
-        # the whole truth side from this one persist). 55 k skinny rows
-        # at sf0.1; prefix postings stay ~sz/5 of the corpus at scale.
-        .persist()
     )
-    pa = pfx.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sz").alias("sz_a"),
-        F.col("shingle").alias("sh_key_a"),
-    )
-    pb = pfx.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sz").alias("sz_b"),
-        F.col("shingle").alias("sh_key_b"),
-    )
+    # Both sides of the prefix self-join are DataFrame aliases of the one
+    # pfx frame, so their shuffles are identical and AQE reuses one
+    # (ReusedExchange): the posts-explode + df join + per-doc window run
+    # once with no materialization. Renaming the columns on each side
+    # instead defeats the reuse, and a checkpointed pfx runs the truth
+    # side serially ahead of the band side (lsh_recall_eval at sf0.1,
+    # local[4]: 1.5-1.8 s this way, 2.5-2.6 s checkpointed).
+    a, b = pfx.alias("a"), pfx.alias("b")
     tcand = (
-        pa.join(
-            pb,
-            (F.col("sh_key_a") == F.col("sh_key_b"))
-            & (F.col("doc_a") < F.col("doc_b"))
-            & (5 * F.col("sz_a") >= 4 * F.col("sz_b"))
-            & (5 * F.col("sz_b") >= 4 * F.col("sz_a")),
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (5 * F.col("a.sz") >= 4 * F.col("b.sz"))
+            & (5 * F.col("b.sz") >= 4 * F.col("a.sz")),
         )
-        .select("doc_a", "doc_b")
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
     sa = sh2.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
@@ -2052,7 +2032,7 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal; empty corpus -> 0-count rows -> NULL metrics and a NULL
     (no-decision) verdict via identical CASE/three-valued logic.
 
-    Scale shape: ONE shingle+signature pass (the persisted
+    Scale shape: ONE shingle+signature pass (the checkpointed
     ``_signatures`` frame feeds prefix ranking, band join, and both
     verify joins); document-frequency is a map-side-combinable
     groupBy(shingle); prefix rank is a doc_id-partitioned window
@@ -2063,27 +2043,24 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus grows (the PPJoin argument); a pathological
     shared-prefix corpus degrades the TRUTH side only — the LSH side
     under eval stays banded."""
-    sig = _signatures(spark, sf_dir)
+    sig = _signatures(spark, sf_dir).localCheckpoint()
     sh = sig.select("doc_id", "shingles", F.size("shingles").alias("sz"))
     sh2 = sh.filter(F.col("sz") > 0)
     truth = _prefix_truth(sh2)
-    # ---- the system under eval: band candidates + exact verify, both
-    # read from the shared persisted ``_cand_jaccard`` pass (round 14:
-    # one band join + one verify join per session instead of one per
-    # consuming query — the candidate count and the verified count are
-    # two aggregates over the same cached frame)
-    cj = _cand_jaccard(sig)
-    lpairs = cj.filter(F.col("jaccard") >= JACCARD_THRESHOLD).select(
-        "doc_a", "doc_b"
+    # ---- the system under eval: band candidates + exact verify, the
+    # candidate count and the verified count in one aggregate over the
+    # ``_cand_jaccard`` pass
+    cv = _cand_jaccard(sig).agg(
+        F.count("*").alias("n_lsh_candidates"),
+        F.count(F.when(F.col("jaccard") >= JACCARD_THRESHOLD, 1)).alias(
+            "n_lsh_pairs"
+        ),
     )
     tn = truth.agg(F.count("*").alias("n_true_pairs"))
-    cn = cj.agg(F.count("*").alias("n_lsh_candidates"))
-    vn = lpairs.agg(F.count("*").alias("n_lsh_pairs"))
     no_truth = F.col("n_true_pairs") == 0
     recall = F.col("n_lsh_pairs").cast("double") / F.col("n_true_pairs")
     return (
-        tn.crossJoin(F.broadcast(cn))
-        .crossJoin(F.broadcast(vn))
+        tn.crossJoin(F.broadcast(cv))
         .select(
             "n_true_pairs",
             "n_lsh_candidates",
@@ -2202,10 +2179,8 @@ def dedup_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-filter truth side, banded candidates, diameter-bounded CC).
     The canonical-doc leg folds its per-cluster sizes and non-keeper
     count into one row inside the leg, so no cluster-member-sized frame
-    is materialized. The legs' shared ``_signatures`` input dedupes at
-    the block level via Spark's plan-keyed CacheManager (measured round
-    11; the negative-memo note is in ``git show 6f8e198:bench.py``), so
-    the gate pays the signature pass once."""
+    is materialized. Both legs read ``_signatures``; the gate shares it,
+    so it pays the signature pass once."""
     return release_gate(
         [
             lambda: lsh_recall_eval(spark, sf_dir).select(
@@ -2257,6 +2232,7 @@ def dedup_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         ok="dedup_ok",
         empty=F.col("n_docs") == 0,
+        shared=[_signatures(spark, sf_dir)],
     )
 
 
@@ -2372,7 +2348,7 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     already scale-audited in ``lsh_recall_eval``; assembly explodes a
     4-struct array out of one aggregate row cross-joined with one
     broadcast scalar."""
-    sig = _signatures(spark, sf_dir)
+    sig = _signatures(spark, sf_dir).localCheckpoint()
     sh = sig.select("doc_id", "shingles", F.size("shingles").alias("sz"))
     sh2 = sh.filter(F.col("sz") > 0)
     # ONE band self-join for all four configs (optimization round 14;

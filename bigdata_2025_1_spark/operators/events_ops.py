@@ -1706,7 +1706,7 @@ def slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join back; the ``rolling_weekly_active_users`` idiom), so no
     range join and no data-sized window ever appears."""
     ev = load(spark, sf_dir, "events")
-    return burn_from_hourly(hourly_error_counts(ev).persist())
+    return burn_from_hourly(hourly_error_counts(ev).localCheckpoint())
 
 
 def hourly_error_counts(ev: DataFrame) -> DataFrame:
@@ -1999,7 +1999,7 @@ def hourly_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600)
         .cast("bigint")
         .alias("hidx")
-    ).agg(F.count("*").alias("x")).persist()
+    ).agg(F.count("*").alias("x")).localCheckpoint()
     lags = spark.createDataFrame([(l,) for l in ACF_LAGS], "lag_hours bigint")
     a = hourly.select("hidx", F.col("x").alias("xa"))
     b = hourly.select(F.col("hidx").alias("hidx_b"), F.col("x").alias("xb"))
@@ -2166,7 +2166,7 @@ def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600)
         .cast("bigint")
         .alias("hidx")
-    ).agg(F.count("*").alias("x")).persist()
+    ).agg(F.count("*").alias("x")).localCheckpoint()
     mx = hourly.agg(F.max("hidx").alias("mh"))
     holdout = hourly.crossJoin(F.broadcast(mx)).filter(
         F.col("hidx") > F.col("mh") - BACKTEST_SEASON_HOURS
@@ -2820,10 +2820,9 @@ def logrank_priority_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # the day-domain collapse is the single fact-join consumer; group
-    # totals re-reduce IT (not the join), and the persist keeps the
+    # totals re-reduce IT (not the join), and the checkpoint keeps the
     # remaining three tiny lineages (totals, cums, output) from
-    # replaying the spans ⋈ orders shuffle. Cache contract: see
-    # pagerank_nation_trade.
+    # replaying the spans ⋈ orders shuffle.
     daily = (
         durs.groupBy(F.col("dur").alias("t"))
         .agg(
@@ -2832,7 +2831,7 @@ def logrank_priority_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("g").cast("bigint").alias("l1"),
             F.sum(1 - F.col("g")).cast("bigint").alias("l2"),
         )
-        .persist()
+        .localCheckpoint()
     )
     totals = daily.agg(
         F.sum("l1").cast("bigint").alias("n_a"),

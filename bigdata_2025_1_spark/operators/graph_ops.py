@@ -237,21 +237,12 @@ def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     data). When the ITERATION STATE itself is huge — per-URL PageRank,
     components over billions of nodes — use the distributed
     loop-of-joins pattern instead (``dedup_connected_components`` in
-    this repo demonstrates it, frontier persisted per step)."""
+    this repo demonstrates it, frontier checkpointed per step)."""
     nation = load(spark, sf_dir, "nation")
     raw_edges = trade_edges(spark, sf_dir)
     out_w = raw_edges.groupBy("src").agg(F.sum("w").alias("total"))
-    # Cache contract (applies to every .persist() inside a registered
-    # query): the returned DataFrame is lazy, so there is no in-function
-    # point to unpersist without defeating the cache. Both harnesses
-    # release between queries (bench.py clearCache per run,
-    # tools/selfcheck.py clearCache per query); a long-lived interactive
-    # session should likewise spark.catalog.clearCache() after
-    # materializing the result.
-    edges = (
-        raw_edges.join(out_w, "src")
-        .select("src", "dst", F.expr(f"w * {PR_PPM} div total").alias("w_ppm"))
-        .persist()
+    edges = raw_edges.join(out_w, "src").select(
+        "src", "dst", F.expr(f"w * {PR_PPM} div total").alias("w_ppm")
     )
     nodes = nation.select(F.col("n_nationkey").alias("nation_key"))
     # Node rows ride along as w_ppm = -1 markers so the kernel sees the
@@ -349,17 +340,17 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale shape: like PageRank/triangles above, the fact tables collapse
     to a ≤|nations|² edge list in one shuffle with broadcast dims. Each
-    iteration is then join→agg→window on the tiny persisted edge set.
+    iteration is then join→agg→window on the tiny checkpointed edge set.
     For billion-node graphs the SAME loop body runs distributed — edges
     stay partitioned by src, each step is one co-keyed shuffle, and the
-    frontier persists per step (see ``dedup_connected_components`` for
+    frontier is checkpointed per step (see ``dedup_connected_components`` for
     the loop-until-converged variant of that shape)."""
     nation = load(spark, sf_dir, "nation")
     und = _undirected(trade_edges(spark, sf_dir))
     sym = (
         und.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
         .unionAll(und.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))
-        .persist()  # tiny (≤ |nations|²); released by harness clearCache
+        .localCheckpoint()  # tiny (≤ |nations|²)
     )
     labels = nation.select(
         F.col("n_nationkey").alias("nation_key"), F.col("n_nationkey").alias("label")
@@ -439,8 +430,7 @@ def triangle_count_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planner degree-orders vertices first (the "compact-forward"
     optimization) — the query's shape is unchanged, only the join
     strategy shifts from broadcast to shuffle."""
-    # tiny (≤ |nations|²); released by harness clearCache
-    strong = _strong(_undirected(trade_edges(spark, sf_dir))).persist()
+    strong = _strong(_undirected(trade_edges(spark, sf_dir))).localCheckpoint()
     e1 = strong.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = strong.select(F.col("a").alias("y2"), F.col("b").alias("z"))
     e3 = strong.select(F.col("a").alias("x3"), F.col("b").alias("z3"))
@@ -522,7 +512,7 @@ def bfs_trade_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere in the query.
 
     Scale shape: ``trade_edges`` builds the ≤|nations|² edge list once
-    (broadcast dims); each round is one join+MIN-agg on the persisted
+    (broadcast dims); each round is one join+MIN-agg on the checkpointed
     edges (``hop_distances``, the one-source case of the
     harmonic-centrality step), truncated per round by ``iterate``. At
     billion-node scale the same loop runs with edges partitioned by src
@@ -530,8 +520,7 @@ def bfs_trade_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes) is the standard optimization the small fixture doesn't
     need."""
     nation = load(spark, sf_dir, "nation")
-    # tiny (≤ |nations|²); released by harness clearCache
-    edges = _arcs(spark, sf_dir).persist()
+    edges = _arcs(spark, sf_dir).localCheckpoint()
     dist = hop_distances(
         edges,
         nation.select(F.col("n_nationkey").alias("nation_key")),
@@ -594,8 +583,7 @@ def trade_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast dims); degrees are map-side-combinable counts; the
     reciprocity self-join runs on the ≤|nations|² edge set."""
     nation = load(spark, sf_dir, "nation")
-    # tiny (≤ |nations|²); released by harness clearCache
-    raw = _arcs(spark, sf_dir).persist()
+    raw = _arcs(spark, sf_dir).localCheckpoint()
     outd = raw.groupBy(F.col("src").alias("nk")).agg(F.count("*").alias("out_degree"))
     ind = raw.groupBy(F.col("dst").alias("nk")).agg(F.count("*").alias("in_degree"))
     b = raw.select(F.col("src").alias("b_src"), F.col("dst").alias("b_dst"))
@@ -698,8 +686,7 @@ def harmonic_centrality_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``hyperball_harmonic_trade``: same loop, O(|V|·m) register state
     instead of the |V|² matrix."""
     nation = load(spark, sf_dir, "nation")
-    # tiny (≤ |nations|²); released by harness clearCache
-    edges = _arcs(spark, sf_dir).persist()
+    edges = _arcs(spark, sf_dir).localCheckpoint()
     dist = hop_distances(
         edges, nation.select(F.col("n_nationkey").alias("nation_key")), rounds=HC_HOPS
     )
@@ -1001,8 +988,7 @@ def hyperball_harmonic_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     BINARY(m) column updated by an Arrow kernel — the plan shape (join,
     MAX-merge) is unchanged."""
     nation = load(spark, sf_dir, "nation")
-    # tiny (≤ |nations|²); released by harness clearCache
-    edges = _arcs(spark, sf_dir).persist()
+    edges = _arcs(spark, sf_dir).localCheckpoint()
     h = F.md5(F.col("v").cast("string"))
     x = F.conv(F.substring(h, 2, 12), 16, 10).cast("bigint")
     state = nation.select(F.col("n_nationkey").alias("v")).select(
@@ -1012,7 +998,7 @@ def hyperball_harmonic_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(49))
         .cast("int")
         .alias("reg"),
-    ).persist()
+    ).localCheckpoint()
 
     def est(s: DataFrame, r: int) -> DataFrame:
         den = F.sum(
@@ -1038,7 +1024,7 @@ def hyperball_harmonic_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
             state.unionByName(contrib)
             .groupBy("v", "bucket")
             .agg(F.max("reg").alias("reg"))
-            .persist()
+            .localCheckpoint()
         )
         ests.append(est(state, r))
     joined = nation.select(F.col("n_nationkey").alias("v"), F.col("n_name").alias("nation"))
@@ -1545,11 +1531,10 @@ def scc_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation shape (``dedup_connected_components`` demonstrates the
     loop) instead of the closure matrix."""
     nation = load(spark, sf_dir, "nation")
-    # persisted: the threshold scalar, the strong-edge filter, and the
+    # checkpointed: the threshold scalar, the strong-edge filter, and the
     # two downstream consumers of the kernel labels would otherwise
-    # replay the fact-fact shuffle. Cache contract: see
-    # pagerank_nation_trade.
-    raw = trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst")).persist()
+    # replay the fact-fact shuffle.
+    raw = trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst")).localCheckpoint()
     strong = _strong(raw).withColumn("w", F.lit(1).cast("bigint"))
     markers = nation.select(
         F.col("n_nationkey").alias("src"),
@@ -1645,8 +1630,7 @@ def local_clustering_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge lists the identical algebra runs distributed with
     degree-ordered joins (the compact-forward note on
     triangle_count_trade)."""
-    # tiny (<= |nations|^2); released by harness clearCache
-    strong = _strong(_undirected(trade_edges(spark, sf_dir))).persist()
+    strong = _strong(_undirected(trade_edges(spark, sf_dir))).localCheckpoint()
     e1 = strong.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = strong.select(F.col("a").alias("y2"), F.col("b").alias("z"))
     e3 = strong.select(F.col("a").alias("x3"), F.col("b").alias("z3"))

@@ -264,8 +264,7 @@ def clustering_depth_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("d").cast("bigint").alias("f_min"),
             F.max("d").cast("bigint").alias("f_max"),
         )
-        .persist()  # manifest-sized; feeds overlaps AND stats — released
-        # by the harness clearCache
+        .localCheckpoint()  # manifest-sized; feeds overlaps AND stats
     )
     fa, fb = files.alias("a"), files.alias("b")
     overlaps = (

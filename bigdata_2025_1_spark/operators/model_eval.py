@@ -697,14 +697,14 @@ def crossval_auc_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_returnflag") == "R").cast("bigint").alias("pos"),
         ((F.col("l_orderkey") * _PRIME) % N_FOLDS).alias("fold"),
     )
-    # persist the (folds × |score-domain|)-row contingency: four frames
+    # checkpoint the (folds × |score-domain|)-row contingency: four frames
     # (model join both sides, AUC moments, cross-fold summary) re-derive
-    # from it, and without the cache each re-derivation re-scans the
+    # from it, and without it each re-derivation re-scans the
     # fact table (4 scans → 1, plan-pinned)
     fd = (
         rows.groupBy("fold", "d")
         .agg(F.sum("pos").alias("p"), F.count("*").alias("n"))
-        .persist()
+        .localCheckpoint()
     )
     dtot = fd.groupBy("d").agg(F.sum("p").alias("pt"), F.sum("n").alias("nt"))
     pred = fd.join(F.broadcast(dtot), "d").select(

@@ -338,7 +338,7 @@ def corpus_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "shingles",
         T.minhash_signature(F.col("shingles"), 4).alias("sig"),
-    ).persist()
+    ).localCheckpoint()
     band_key = F.md5(F.concat(*[F.col("sig")[i] for i in range(4)]))
     keyed = sig.select("doc_id", "shingles", band_key.alias("bk"))
     a = keyed.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa"), F.col("bk").alias("bk_a"))
@@ -704,7 +704,7 @@ def heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         spread(docs)
         .select(F.explode(T.ws_tokens(F.lower(F.col("text")))).alias("w"))
-        .persist()
+        .localCheckpoint()
     )
     cand = toks.mapInPandas(_mg_partition_summaries, "w string").distinct()
     total = toks.agg(F.count("*").alias("n"))

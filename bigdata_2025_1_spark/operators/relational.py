@@ -1320,7 +1320,7 @@ def item_cofiltering_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = baskets.groupBy("ck").agg(F.count("*").alias("_bs")).filter(
         F.col("_bs") <= COFILTER_BASKET_CAP
     )
-    kept = baskets.join(sized.select("ck"), "ck").persist()
+    kept = baskets.join(sized.select("ck"), "ck").localCheckpoint()
     pop = kept.groupBy("pk").agg(F.count("*").alias("n"))
     a = kept.select("ck", F.col("pk").alias("part_a"))
     b = kept.select("ck", F.col("pk").alias("part_b"))
@@ -1453,13 +1453,13 @@ def recsys_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = train_b.groupBy("ck").agg(F.count("*").alias("_bs")).filter(
         F.col("_bs") <= COFILTER_BASKET_CAP
     )
-    train = train_b.join(sized.select("ck"), "ck").persist()
+    train = train_b.join(sized.select("ck"), "ck").localCheckpoint()
     test = (
         all_b.filter(F.col("o_orderdate") >= REC_SPLIT_DATE)
         .select("ck", "pk")
         .distinct()
         .join(train, ["ck", "pk"], "left_anti")
-        .persist()
+        .localCheckpoint()
     )
     a = train.select("ck", F.col("pk").alias("src"))
     b = train.select("ck", F.col("pk").alias("rec"))

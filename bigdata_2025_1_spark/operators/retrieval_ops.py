@@ -317,7 +317,7 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         V.norm_sq_scaled(F.col("embedding")).alias("nsq"),
         s.alias("s"),
         codes.alias("codes"),
-    ).persist()
+    ).localCheckpoint()
     probes = coded.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("query_id"), F.col("codes").alias("q_codes")
     )

@@ -151,7 +151,7 @@ def ann_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket equi-join → exact cosine verify ≥ 0.45. The scale path: the
     join key is one byte; embeddings rejoin only for candidates."""
     emb = load(spark, sf_dir, "embeddings")
-    # persist: signatures/norms feed the band join and the verify join on
+    # checkpoint: signatures/norms feed the band join and the verify join on
     # both sides — compute the 16 projections once per vector. The fused
     # sig+norm kernel ships each embedding batch to Python ONCE; no
     # spread() (trivial-per-row numpy kernel — see ann_ivf_topk's note,
@@ -166,7 +166,7 @@ def ann_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sn.srp_sig").alias("srp_sig"),
             F.col("sn.nsq").alias("nsq"),
         )
-        .persist()
+        .localCheckpoint()
     )
     keyed = sig.select("vec_id", "srp_sig")
     hi = keyed.select("vec_id", F.lit(0).alias("band"), F.expr("srp_sig div 256").alias("band_key"))
@@ -439,7 +439,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy kernels (see ann_ivf_topk's note)."""
     emb = load(spark, sf_dir, "embeddings")
     enc = V.make_pq_encode_pandas(_PQ_CB)
-    # persist: the encode kernel feeds corpus codes, probe LUTs, AND both
+    # checkpoint: the encode kernel feeds corpus codes, probe LUTs, AND both
     # re-rank sides — one Python pass per vector total.
     coded = (
         emb.select("vec_id", "embedding", enc(F.col("embedding")).alias("pq"))
@@ -450,7 +450,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("pq.projs").alias("projs"),
             F.col("pq.nsq").alias("nsq"),
         )
-        .persist()
+        .localCheckpoint()
     )
     corpus = coded.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -591,7 +591,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e.cell").alias("cell"),
         F.col("e.codes").alias("c_codes"),
         F.col("e.nsq").alias("c_nsq"),
-    ).persist()
+    ).localCheckpoint()
     probes = (
         emb.filter(F.col("vec_id") < N_QUERY_VECS)
         .select(
@@ -745,7 +745,7 @@ def kmeans_lloyd_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding"),
         lambda v: F.round(v.cast("double") * 1e4).cast("bigint") + F.lit(KM_SHIFT),
     )
-    xs = emb.select("vec_id", x.alias("x")).persist()
+    xs = emb.select("vec_id", x.alias("x")).localCheckpoint()
     seeds = xs.filter(F.col("vec_id") < KM_K).select(
         F.col("vec_id").alias("c"), F.col("x").alias("cx")
     )
@@ -775,8 +775,8 @@ def kmeans_lloyd_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
         "n",
         F.array(*[F.expr(f"s{i} div n") for i in range(KM_DIM)]).alias("cx"),
-    ).persist()  # k rows, used twice (assignment + output) — without the
-    # persist the whole a1 pass re-executes for the output join
+    ).localCheckpoint()  # k rows, used twice (assignment + output) — without
+    # the checkpoint the whole a1 pass re-executes for the output join
     a2 = assign(cent2.select("c", "cx"))
     c0 = (F.element_at("cx", 1) - KM_SHIFT).cast("double") / 1e4
     c1 = (F.element_at("cx", 2) - KM_SHIFT).cast("double") / 1e4
@@ -1059,7 +1059,7 @@ def semdedup_keyed_assignment(emb: DataFrame, cell_cap: int) -> DataFrame:
     than ``cell_cap`` by the second-level key (``subkey = sub`` inside
     oversized cells, 0 elsewhere — small cells pair whole, exactly as
     the un-split operator did). Returns (vec_id, embedding, cell, nsq,
-    subkey); persisted — it feeds both sides of the pair self-join AND
+    subkey); checkpointed — it feeds both sides of the pair self-join AND
     the hard-cap guard."""
     cell2_pd = V.make_ivf_cell2_pandas(_CENTROIDS, _SUB_CENTROIDS)
     assigned = (
@@ -1071,8 +1071,8 @@ def semdedup_keyed_assignment(emb: DataFrame, cell_cap: int) -> DataFrame:
             F.col("cn.sub").alias("sub"),
             F.col("cn.nsq").alias("nsq"),
         )
-        .persist()  # feeds both join sides + the guard count — without
-        # this the Arrow encode pass runs 3x; released by harness clearCache
+        .localCheckpoint()  # feeds both join sides + the guard count — without
+        # this the Arrow encode pass runs 3x
     )
     sizes = assigned.groupBy("cell").agg(F.count("*").alias("n_cell"))
     return (
@@ -1284,7 +1284,7 @@ def margin_candidate_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src_id", "tgt_id", cosine.alias("cosine"))
         .withColumn("rk", F.row_number().over(wk))
         .filter(F.col("rk") <= MARGIN_K)
-    ).persist()  # k rows per source, feeds numerator AND denominator
+    ).localCheckpoint()  # k rows per source, feeds numerator AND denominator
     # e12-rounded integer sum — a 4-double SUM would be partition-order-
     # dependent in the last bits (the exact.py contract)
     denom = ranked.groupBy("src_id").agg(
@@ -1471,7 +1471,7 @@ def contrastive_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         cands.join(F.broadcast(anchors), F.col("anchor_id") != F.col("cand_id"))
         .select("anchor_id", "cand_id", cosine.alias("cosine"))
-        .persist()  # feeds both argmax branches; released by harness clearCache
+        .localCheckpoint()  # feeds both argmax branches
     )
     w = Window.partitionBy("anchor_id").orderBy(F.desc("cosine"), "cand_id")
     pos = (
@@ -1627,7 +1627,7 @@ def margin_candidate_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src_id", "tgt_id", cosine.alias("cosine"))
         .withColumn("rk", F.row_number().over(wk))
         .filter(F.col("rk") <= MARGIN_K)
-    ).persist()  # k rows per source, feeds numerator AND denominator
+    ).localCheckpoint()  # k rows per source, feeds numerator AND denominator
     denom = ranked.groupBy("src_id").agg(
         (
             F.sum(F.round(F.col("cosine") * F.lit(1e12)).cast("bigint")).cast("double")
@@ -1736,12 +1736,12 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding"),
         lambda x: F.round(x.cast("double") * F.lit(1e6)).cast("bigint"),
     )
-    sem = emb.select(se6.alias("se")).persist()
+    sem = emb.select(se6.alias("se")).localCheckpoint()
     # Never-silently-wrong guard (ADVICE r6): the per-dimension
     # Σ dq·xv accumulates |term| ≤ 6.4e7 · 1e6 = 6.4e13, so int64
     # (9.2e18) is exact only to ~1.4e5 rows. Past the bound raise with
     # the rescale route instead of returning silently-overflowed
-    # loadings (count() doubles as the cache materialization).
+    # loadings.
     n_rows = sem.count()
     if n_rows > PCA_MAX_ROWS:
         raise ValueError(
@@ -1938,7 +1938,7 @@ def dbscan_roles_from_pairs(
         sym.groupBy("a")
         .agg(F.count("*").alias("degree"))
         .withColumnRenamed("a", "vec_id")
-        .persist()
+        .localCheckpoint()
     )
     core = deg.filter(F.col("degree") >= minpts).select("vec_id")
     cedges = (
@@ -1994,22 +1994,14 @@ def retrieval_rankings(
     (``retrieval_mrr_eval``, ``ndcg_retrieval_eval``): returns
     ``(exact, system)`` where exact is ``ann_topk_cosine``'s
     (query_id, neighbor_id, rank) and system is ``ann_ivf_topk``'s with
-    rank aliased ``rank_s``, both persisted at the collapse point
-    (probe-bounded: n_probes x k rows).
+    rank aliased ``rank_s`` (probe-bounded: n_probes x k rows).
 
-    Each eval reads the exact ranking two or three times (n_queries,
-    hits, rr); the persist builds it once. Spark's plan-keyed
-    CacheManager gives a second call in the same session the same cache
-    entries, so ``retrieval_eval_suite`` builds each index once."""
-    exact = (
-        ann_topk_cosine(spark, sf_dir)
-        .select("query_id", "neighbor_id", "rank")
-        .persist()
-    )
-    system = (
-        ann_ivf_topk(spark, sf_dir)
-        .select("query_id", "neighbor_id", F.col("rank").alias("rank_s"))
-        .persist()
+    Both frames are plain. Each eval reads them several times and
+    checkpoints them; ``retrieval_eval_suite`` shares them across its
+    two legs, so it builds each index once."""
+    exact = ann_topk_cosine(spark, sf_dir).select("query_id", "neighbor_id", "rank")
+    system = ann_ivf_topk(spark, sf_dir).select(
+        "query_id", "neighbor_id", F.col("rank").alias("rank_s")
     )
     return exact, system
 
@@ -2057,10 +2049,10 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator), one double chain at the end.
 
     Scale shape: two candidate-bounded rankings (brute force is
-    probe-bounded, IVF is cell-pruned) built ONCE via the shared
-    persisted ``retrieval_rankings`` helper, two equi-joins on
+    probe-bounded, IVF is cell-pruned) built ONCE from the shared
+    ``retrieval_rankings`` helper and checkpointed, two equi-joins on
     (query, neighbor), three scalar aggregates broadcast into one row."""
-    exact, system = retrieval_rankings(spark, sf_dir)
+    exact, system = (df.localCheckpoint() for df in retrieval_rankings(spark, sf_dir))
     nq = exact.agg(F.count_distinct("query_id").alias("n_queries"))
     hits = exact.join(system, ["query_id", "neighbor_id"]).agg(
         F.count("*").alias("n_hits")
@@ -2247,11 +2239,11 @@ def ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator both < 2^53).
 
     Scale shape: inherits the candidate-bounded rankings, built ONCE
-    via the shared persisted ``retrieval_rankings`` helper; one
+    from the shared ``retrieval_rankings`` helper and checkpointed; one
     (query, neighbor) equi-join, one query-keyed map-side-combinable
     sum, scalar assembly broadcast."""
     exact, system = retrieval_rankings(spark, sf_dir)
-    exact = exact.select("query_id", "neighbor_id")
+    exact = exact.select("query_id", "neighbor_id").localCheckpoint()
     gains = F.array(*[F.lit(g) for g in DCG_GAINS_I12])
     nq = exact.agg(F.count_distinct("query_id").alias("n_queries"))
     perq = (
@@ -2412,12 +2404,12 @@ def hdbscan_lite_from_pairs(
     tie-permutation-free (row_number orders by (d, b) anyway); max and
     the eps comparisons are order-free; component ids MIN-total-ordered.
 
-    Scale shape: the pair frame is persisted at its collapse point
-    (cell-bounded candidates, the cache contract); core distances are
+    Scale shape: the pair frame is checkpointed at its collapse point
+    (cell-bounded candidates); core distances are
     one bounded window per candidate list; each level's components run
     ``min_label_propagate`` (functions/iterate.py) on the filtered core
     graph, the dbscan/dedup_cc loop with the same diameter bound."""
-    dpairs = dpairs.persist()
+    dpairs = dpairs.localCheckpoint()
     sym = dpairs.unionByName(
         dpairs.select(F.col("b").alias("a"), F.col("a").alias("b"), "d")
     )
@@ -2426,7 +2418,7 @@ def hdbscan_lite_from_pairs(
         sym.withColumn("rn", F.row_number().over(wk))
         .filter(F.col("rn") == k)
         .select(F.col("a").alias("vec_id"), F.col("d").alias("core_dist"))
-        .persist()
+        .localCheckpoint()
     )
     mr = (
         dpairs.join(
@@ -2444,7 +2436,7 @@ def hdbscan_lite_from_pairs(
         .select(
             "a", "b", F.greatest("d", "ca", "cb").alias("dmr")
         )
-        .persist()
+        .localCheckpoint()
     )
     out = None
     prev_labels = None
@@ -2620,7 +2612,7 @@ def hdbscan_lite_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise at every level via identical LEFT-JOIN/COALESCE guards.
 
     Scale shape: pair generation inherits the cell equi-join; the
-    algebra (``hdbscan_lite_from_pairs``) persists the cell-bounded
+    algebra (``hdbscan_lite_from_pairs``) checkpoints the cell-bounded
     pair list once, computes core distances in one bounded window, and
     runs each level's components on the filtered core graph through
     ``min_label_propagate`` — never all-pairs, never a fact-sized
@@ -2689,11 +2681,10 @@ def retrieval_eval_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     an index swap on (index_ok = recall >= {SUITE_MIN_RECALL} AND mrr
     >= {SUITE_MIN_MRR} AND nDCG >= {SUITE_MIN_NDCG}, shared literals).
 
-    Both composed evals draw the exact and IVF rankings from
-    ``retrieval_rankings``, whose persisted frames resolve to one cache
-    entry each, so the suite builds each index once. Sub-scalars are
-    reconciled against the standalone queries by
-    tests/test_release_gate.py.
+    The two evals are the legs of one ``release_gate``, which shares the
+    exact and IVF rankings (``retrieval_rankings``) across them, so the
+    suite builds each index once. Sub-scalars are reconciled against
+    the standalone queries by tests/test_release_gate.py.
 
     Determinism: inherits both evals' integer-exact contracts (integer
     sixtieths, integer 1e-12 gain literals); the gate comparisons are
@@ -2703,20 +2694,21 @@ def retrieval_eval_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: candidate-bounded rankings built once, two equi-joins,
     scalar assembly broadcast — the suite costs ONE index build plus
     joins, not 2x."""
-    m = retrieval_mrr_eval(spark, sf_dir)
-    n = ndcg_retrieval_eval(spark, sf_dir).select("n_perfect", "mean_ndcg_at_k")
-    return m.crossJoin(F.broadcast(n)).select(
-        "n_queries",
-        "n_hits",
-        "recall_at_k",
-        "mrr",
-        "n_perfect",
-        "mean_ndcg_at_k",
-        (
-            (F.col("recall_at_k") >= float(SUITE_MIN_RECALL))
+    return release_gate(
+        [
+            lambda: retrieval_mrr_eval(spark, sf_dir),
+            lambda: ndcg_retrieval_eval(spark, sf_dir).select(
+                "n_perfect", "mean_ndcg_at_k"
+            ),
+        ],
+        out=["n_queries", "n_hits", "recall_at_k", "mrr", "n_perfect", "mean_ndcg_at_k"],
+        verdicts={
+            "index_ok": (F.col("recall_at_k") >= float(SUITE_MIN_RECALL))
             & (F.col("mrr") >= float(SUITE_MIN_MRR))
             & (F.col("mean_ndcg_at_k") >= float(SUITE_MIN_NDCG))
-        ).alias("index_ok"),
+        },
+        ok="index_ok",
+        shared=retrieval_rankings(spark, sf_dir),
     )
 
 
@@ -2731,10 +2723,10 @@ def _corpus_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus's coarse-quantizer assignment, (vec_id, cell), in one
     Arrow pass: the shared leg of the index-maintenance family.
     ``ivf_nprobe_recall_curve`` reads it twice (cell sizes and the truth
-    join) and persists it; ``ann_release_gate``, which composes the
+    join) and checkpoints it; ``ann_release_gate``, which composes the
     curve and the census, shares it so the Arrow pass runs once. The
-    single-read census (``ivf_ingest_assign`` standalone) stays
-    uncached: the cache write cost it a third of its wall with no
+    single-read census (``ivf_ingest_assign`` standalone) reads it
+    plain: a materialization cost it a third of its wall with no
     reuse."""
     emb = load(spark, sf_dir, "embeddings")
     cell_pd = V.make_ivf_cell_pandas(_CENTROIDS)
@@ -2801,9 +2793,9 @@ def ivf_ingest_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ints; fill_ratio one double division; needs_split integer-only.
 
     Scale shape: one Arrow-vectorized assignment pass (the shared
-    ``_corpus_cells`` frame — unpersisted here, the standalone census
-    is a single collapse; inside ``ann_release_gate`` the curve leg's
-    persist makes this subtree read the one cached pass), map-side
+    ``_corpus_cells`` frame — not materialized here, the standalone
+    census is a single collapse; inside ``ann_release_gate`` this
+    subtree reads the gate's shared frame), map-side
     combinable groupBy(cell) to {N_CELLS} rows, broadcast 1-row total.
     Empty table -> empty result in both engines."""
     per_cell = (
@@ -3180,12 +3172,13 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     {TOP_K}); rankings are {N_QUERY_VECS} x {N_PROBE}; cell sizes are
     {N_CELLS} rows — every join after the two Arrow assignment passes
     is broadcast-tiny, and the nprobe spine is a constant range. The
-    corpus assignment is the persisted shared ``_corpus_cells`` frame:
-    its two uses here (cell sizes, truth join) and ``ivf_ingest_assign``
-    inside ``ann_release_gate`` all read ONE Arrow pass."""
+    corpus assignment is the shared ``_corpus_cells`` frame, checkpointed
+    for its two uses here (cell sizes, truth join); inside
+    ``ann_release_gate`` it and ``ivf_ingest_assign`` read the gate's
+    one shared Arrow pass."""
     emb = load(spark, sf_dir, "embeddings")
     truth = ann_topk_cosine(spark, sf_dir).select("query_id", "neighbor_id")
-    corpus = _corpus_cells(spark, sf_dir).persist().select(
+    corpus = _corpus_cells(spark, sf_dir).localCheckpoint().select(
         F.col("vec_id").alias("neighbor_id"), "cell"
     )
     cell_sizes = corpus.groupBy("cell").agg(

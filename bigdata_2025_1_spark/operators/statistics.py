@@ -1975,10 +1975,10 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("rev_c")
     )
-    monthly = monthly.persist()
+    monthly = monthly.localCheckpoint()
     a = monthly.select(F.col("m").alias("ma"), F.col("rev_c").alias("ra"))
     b = monthly.select(F.col("m").alias("mb"), F.col("rev_c").alias("rb"))
-    # both sides are the same cached frame, so AQE's build side is a
+    # both sides are the same checkpointed frame, so AQE's build side is a
     # runtime tie; the hint pins it (BuildRight) for a repeatable plan
     pairs = (
         a.join(F.broadcast(b), F.col("ma") < F.col("mb"))
@@ -1987,7 +1987,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("mb") - F.col("ma")).alias("den"),
         )
         .withColumn("slope_d", F.col("num").cast("double") / F.col("den"))
-        .persist()
+        .localCheckpoint()
     )
     np_ = pairs.agg(F.count("*").alias("n_pairs"))
     ranked = with_global_rank(pairs, ["slope_d", "num", "den"], rank_col="rn")
@@ -4126,11 +4126,10 @@ def kruskal_wallis_priority_spend(spark: SparkSession, sf_dir: str) -> DataFrame
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("v"),
     )
     # ONE fact scan: the (group, value) cell table is the only fact
-    # aggregate, persisted because FOUR lineages consume it (hv -> tie,
-    # rg -> m, and both join back for the output) — without the cache
-    # the scan replays per consumer (measured: 5 scans). Cache contract:
-    # see pagerank_nation_trade (both harnesses clearCache per query).
-    gv = rows.groupBy("g", "v").agg(F.count("*").alias("c_gv")).persist()
+    # aggregate, checkpointed because FOUR lineages consume it (hv -> tie,
+    # rg -> m, and both join back for the output) — without it the scan
+    # replays per consumer (measured: 5 scans).
+    gv = rows.groupBy("g", "v").agg(F.count("*").alias("c_gv")).localCheckpoint()
     hv = cum_counts_over_values(
         gv.groupBy("v").agg(F.sum("c_gv").alias("ct")), "v", "ct", "cb"
     )
@@ -4551,9 +4550,9 @@ def cramers_v_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     the statistic are arithmetic on that provably tiny aggregate."""
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
-    # persisted: THREE lineages consume the collapsed cell table (the
-    # margins rr/cc and the grid) — without the cache the fact join
-    # replays per consumer. Cache contract: see pagerank_nation_trade.
+    # checkpointed: THREE lineages consume the collapsed cell table (the
+    # margins rr/cc and the grid) — without it the fact join replays per
+    # consumer.
     obs0 = (
         orders.join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
         .groupBy(
@@ -4561,7 +4560,7 @@ def cramers_v_association(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority").alias("pri"),
         )
         .agg(F.count("*").alias("observed"))
-        .persist()
+        .localCheckpoint()
     )
     rr = obs0.select("seg").distinct()
     cc = obs0.select("pri").distinct()
@@ -4806,9 +4805,8 @@ def friedman_priority_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE fact aggregate collapses orders to the
     (month x priority) grid — calendar x value-domain sized (~420 cells
-    at every SF), persisted because three lineages consume it (months,
-    priorities, the grid join; cache contract: see
-    pagerank_nation_trade). The rank self-join, tie reduction, and
+    at every SF), checkpointed because three lineages consume it
+    (months, priorities, the grid join). The rank self-join, tie reduction, and
     statistic all run on that bounded grid; the only fact-scale work is
     the first groupBy."""
     orders = load(spark, sf_dir, "orders")
@@ -4823,7 +4821,7 @@ def friedman_priority_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("m", "g")
         .agg(F.sum("vc").cast("bigint").alias("v"))
-        .persist()
+        .localCheckpoint()
     )
     months = cells.select("m").distinct()
     prios = cells.select("g").distinct()
@@ -4943,11 +4941,11 @@ def cochran_q_yearly_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (map-side combinable), then a customer-keyed count for R_i and
     a year-keyed count for C_j — the k-row year spine is a literal;
     subject rows never pairwise-join (Q needs only sum(R_i^2), unlike
-    the rank tests). Scalar assembly is broadcast. Cache bound: the
-    persisted frame is the distinct (customer, year) activity table —
+    the rank tests). Scalar assembly is broadcast. Size bound: the
+    checkpointed frame is the distinct (customer, year) activity table —
     at most k*|customers| skinny rows (two ints; ~50 GB at 1e9
     customers, spilling gracefully under MEMORY_AND_DISK), the largest
-    SUBJECT-scaled frame under the cache contract but far cheaper than
+    SUBJECT-scaled materialization in the module but far cheaper than
     the second full fact scan + distinct shuffle its two consumers
     would otherwise replay (exchange reuse does not fire here: the
     left-join consumer's subtree differs structurally)."""
@@ -4960,7 +4958,7 @@ def cochran_q_yearly_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("y").isin(*CQ_YEARS))
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
     cj = (
         years.join(yr, "y", "left")
@@ -5076,7 +5074,7 @@ def mann_kendall_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("m")
         .agg(F.sum("vc").cast("bigint").alias("rev_c"))
-        .persist()
+        .localCheckpoint()
     )
     b = monthly.select(F.col("m").alias("bm"), F.col("rev_c").alias("brev"))
     s = (
@@ -5216,7 +5214,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.col("d_tot").cast(dec) * F.col("k")
         ).alias("t_num"),
         (F.col("k").cast(dec) * F.col("n_tot")).alias("t_den"),
-    ).persist()
+    ).localCheckpoint()
     mx = scored.agg(
         F.max(F.col("t_num").cast("double") / F.col("t_den").cast("double")).alias(
             "max_t"

@@ -1637,14 +1637,14 @@ def naive_bayes_source_classifier(spark: SparkSession, sf_dir: str) -> DataFrame
     each token by at most n_classes; the argmax window partitions by
     doc_id over exactly n_classes rows — never data-sized."""
     docs = spread(load(spark, sf_dir, "documents"))
-    # five consumers (wc, ncls, vv, ev, dl) — persist so the corpus is
+    # five consumers (wc, ncls, vv, ev, dl) — checkpoint so the corpus is
     # tokenized once, not five times (A/B at sf0.1, best-of-4: 3.8 -> 3.3 s).
-    # At 100 TB this is a corpus-sized MEMORY_AND_DISK cache (spills, never
-    # OOMs); if executor disk is the constraint, drop the persist and pay
-    # five scans — a pure time/space knob, not a correctness one
+    # At 100 TB this is a corpus-sized MEMORY_AND_DISK block set (spills,
+    # never OOMs); if executor disk is the constraint, drop the checkpoint
+    # and pay five scans — a pure time/space knob, not a correctness one
     uni = docs.select(
         "doc_id", "source", F.explode(T.ws_tokens(F.lower(F.col("text")))).alias("w")
-    ).persist()
+    ).localCheckpoint()
     cls = docs.groupBy(F.col("source").alias("cls")).agg(
         F.count("*").alias("n_docs_c")
     )
@@ -1682,8 +1682,7 @@ def naive_bayes_source_classifier(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # Enforced broadcast bound (VERDICT r6 #6): the wl table is
     # (vocabulary x classes)-sized. Count the type vocabulary off the
-    # persisted tokenization (this action also materializes the cache
-    # the five consumers share) and only broadcast while it fits; past
+    # checkpointed tokenization and only broadcast while it fits; past
     # the bound a w-keyed shuffle join is the correct plan, not a
     # driver/executor OOM.
     n_types = uni.select("w").distinct().count()
@@ -2126,24 +2125,21 @@ def jsd_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = sw.filter(F.col("source") == JSD_SRC_B).select(
         F.col("w").alias("wb"), F.col("c").alias("cb0")
     )
-    # persisted: both the totals and the divergence reduce the union
-    # support — without the cache the token explode + counts replay per
-    # consumer. Cache contract: see pagerank_nation_trade. Size bound:
-    # this frame is VOCABULARY-sized — one skinny (ca, cb) row per
-    # UNIQUE token across the two sources, not per token occurrence —
-    # the largest frame held under the cache contract (natural-language
-    # vocabularies plateau in the low millions of types; ~16 bytes/row
-    # ≈ tens of MB at web scale). If sources ever carry unbounded
-    # vocabularies (e.g. raw URLs as "words"), spill is graceful
-    # (MEMORY_AND_DISK is not needed at this size) but revisit this
-    # persist first — the judge flagged it as the frame to watch.
+    # checkpointed: both the totals and the divergence reduce the union
+    # support — without it the token explode + counts replay per
+    # consumer. Size bound: this frame is VOCABULARY-sized — one skinny
+    # (ca, cb) row per UNIQUE token across the two sources, not per
+    # token occurrence (natural-language vocabularies plateau in the low
+    # millions of types; ~16 bytes/row ≈ tens of MB at web scale). If
+    # sources ever carry unbounded vocabularies (e.g. raw URLs as
+    # "words"), revisit this checkpoint first.
     joined = (
         a.join(b, F.col("wb") == F.col("w"), "full_outer")
         .select(
             F.coalesce(F.col("ca0"), F.lit(0)).alias("ca"),
             F.coalesce(F.col("cb0"), F.lit(0)).alias("cb"),
         )
-        .persist()
+        .localCheckpoint()
     )
     ns = joined.agg(
         F.sum("ca").cast("bigint").alias("na"),

@@ -570,7 +570,7 @@ def ljung_box_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t",
         "n",
         (F.col("n") * F.col("x") - F.col("s")).cast(dec).alias("c"),
-    ).persist()
+    ).localCheckpoint()
     dn = c.agg(F.sum(F.col("c") * F.col("c")).alias("den"))
     lags = spark.range(1, LB_MAX_LAG + 1).select(F.col("id").cast("int").alias("k"))
     a = c.select(F.col("t").alias("ta"), F.col("c").alias("ca"))

@@ -92,17 +92,28 @@ def compare_dtype_kinds(spark_pdf, duck_pdf) -> list[str]:
     return problems
 
 
+def cache_entries(spark) -> int:
+    """The session's CacheManager entry count."""
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
 def check_query(spark, con, fn, sql: str | None, sf_dir: str) -> list[str]:
-    """Run one registered query against its oracle; [] = pass."""
+    """Run one registered query against its oracle; [] = pass. A query
+    that leaves a CacheManager entry behind fails too: queries
+    materialize with ``localCheckpoint()``, and ``release_gate`` frees
+    the frames it shares before it returns."""
+    before = cache_entries(spark)
     sdf = fn(spark, sf_dir)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
+    left = cache_entries(spark) - before
+    leaks = [f"left {left} CacheManager entries"] if left > 0 else []
     if sql is None:
-        return []  # rows-only check
+        return leaks  # rows-only check
     res = con.execute(sql)
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()
-    problems = compare(srows, scols, drows, dcols)
+    problems = leaks + compare(srows, scols, drows, dcols)
     if not problems:
         # dtype-kind check on schema-only frames: LIMIT 0 keeps both
         # engines' declared dtypes (HUGEINT/DECIMAL still surface as

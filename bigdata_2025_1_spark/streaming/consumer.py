@@ -106,10 +106,6 @@ class StatsSink:
         ts = TimestampType().fromInternal(ts_us).isoformat()
         self.rows.append({"batch_id": batch_id, "ts": ts, **stats})
 
-    def dump_json(self, path: str) -> None:
-        with open(path, "w", encoding="utf-8") as fh:
-            json.dump(self.rows, fh, ensure_ascii=False, indent=2)
-
 
 def make_foreach_batch(sink: StatsSink) -> Callable[[DataFrame, int], None]:
     """foreachBatch body (F3). Reads the batch once: ``batch_stats``'s

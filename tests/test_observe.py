@@ -39,27 +39,22 @@ def test_observe_on_streaming_batch(spark, sf_dir, tmp_path):
     assert m["n"] == load(spark, sf_dir, "events").count()
 
 
-def test_clear_cache_contract_releases_all_blocks(spark, sf_dir):
-    """Package cache contract (bigdata_2025_1_spark/__init__.py): queries
-    may persist() shared intermediates; the caller's clearCache() must
-    release every block the query ADDED — pinned here on a persisting
-    query from each family (LSH dedup, graph, corpus capstone).
-    Baseline-relative on RDD ids: earlier tests' localCheckpoint blocks
-    (the lineage-truncation artifact clearCache deliberately does NOT
-    touch — they are GC-freed) may linger in the shared session, so a
-    zero-blocks assertion would fail on test ORDER, not on a leak."""
+def test_queries_leave_no_cache_entries(spark, sf_dir):
+    """Materialization rule (bigdata_2025_1_spark/__init__.py): a
+    registered query leaves no CacheManager entry behind, with no
+    clearCache() by the caller — pinned on queries that read a frame
+    several times, one from each family (LSH dedup, graph, corpus
+    capstone). ``oracle.check_query`` applies the same rule to every
+    query it checks."""
+    from bigdata_2025_1_spark.oracle import cache_entries
     from bigdata_2025_1_spark.registry import all_queries
 
     queries = all_queries()
-    sc = spark.sparkContext
-
-    def block_ids() -> set[int]:
-        return {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
-
-    for q in ("dedup_minhash_lsh", "pagerank_nation_trade", "corpus_curation_v2"):
-        spark.catalog.clearCache()
-        base = block_ids()
-        queries[q](spark, sf_dir).count()  # materialize → persists fill
-        assert block_ids() - base, f"{q} did not cache"
-        spark.catalog.clearCache()
-        assert not (block_ids() - base), f"{q} left cached blocks"
+    for q in (
+        "dedup_minhash_lsh",
+        "hyperball_harmonic_trade",
+        "corpus_curation_v2",
+    ):
+        before = cache_entries(spark)
+        queries[q](spark, sf_dir).collect()
+        assert cache_entries(spark) == before, f"{q} left cache entries"

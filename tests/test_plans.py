@@ -22,6 +22,23 @@ pytestmark = _pytest_mark.mark.slow
 QUERIES = all_queries()
 
 
+@_pytest_mark.fixture
+def checkpointed(spark, monkeypatch):
+    """Formatted plans of the frames a query local-checkpoints while it
+    is built, in order: what a checkpoint materializes no longer shows
+    in the returned frame's plan."""
+    plans = []
+    frame = type(spark.range(1))
+    checkpoint = frame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(formatted_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    return plans
+
+
 def test_q1_scan_pushdown_and_codegen(spark, sf_dir):
     plan = formatted_plan(QUERIES["q1_pricing_summary"](spark, sf_dir))
     # the shipdate filter reaches the parquet reader
@@ -793,11 +810,12 @@ def test_decontamination_postings_join_no_cartesian(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_margin_ivf_broadcasts_probes_no_cartesian(spark, sf_dir):
+def test_margin_ivf_broadcasts_probes_no_cartesian(spark, sf_dir, checkpointed):
     plan = formatted_plan(QUERIES["margin_candidate_mining_ivf"](spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan  # probes broadcast against corpus cells
+    plans = "\n".join([plan, *checkpointed])
+    assert "CartesianProduct" not in plans
+    assert "BroadcastNestedLoopJoin" not in plans
+    assert "BroadcastHashJoin" in plans  # probes broadcast against corpus cells
     spark.catalog.clearCache()
 
 
@@ -881,7 +899,7 @@ def test_density_clusters_roles_and_truncated_lineage(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_cusum_prefix_sum_is_distributed(spark, sf_dir):
+def test_cusum_prefix_sum_is_distributed(spark, sf_dir, checkpointed):
     """The CUSUM running sum must come from the distributed prefix-sum
     primitive, not a global unpartitioned window over the hour spine:
     no SinglePartition exchange carries hour-spine rows (the only
@@ -892,8 +910,10 @@ def test_cusum_prefix_sum_is_distributed(spark, sf_dir):
     df = QUERIES["cusum_changepoint"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "TakeOrderedAndProject" in plan
-    # with_global_rank: the range exchange, numbered without a Python kernel
-    assert "rangepartitioning" in plan and "MapInPandas" not in plan
+    # with_global_rank: the range exchange (inside its checkpointed
+    # partitions), numbered without a Python kernel
+    plans = "\n".join([plan, *checkpointed])
+    assert "rangepartitioning" in plans and "MapInPandas" not in plans
     bad = [i for i in single_partition_exchange_inputs(df) if "hour_ts" in i or ("h#" in i and "cnt#" in i)]
     assert not bad, bad
     spark.catalog.clearCache()
@@ -1015,7 +1035,7 @@ def test_theil_sen_bounded_domain(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_zipf_fit_single_scalar_pass(spark, sf_dir):
+def test_zipf_fit_single_scalar_pass(spark, sf_dir, checkpointed):
     """The Zipf fit is one vocabulary groupBy + one distributed rank +
     one scalar moment aggregate; r2 is a valid coefficient and n_types
     matches the true vocabulary size."""
@@ -1025,9 +1045,10 @@ def test_zipf_fit_single_scalar_pass(spark, sf_dir):
     from bigdata_2025_1_spark.io import load
 
     df = QUERIES["zipf_exponent_fit"](spark, sf_dir)
-    plan = formatted_plan(df)
-    # with_global_rank: the range exchange, numbered without a Python kernel
-    assert "rangepartitioning" in plan and "MapInPandas" not in plan
+    plans = "\n".join([formatted_plan(df), *checkpointed])
+    # with_global_rank: the range exchange (inside its checkpointed
+    # partitions), numbered without a Python kernel
+    assert "rangepartitioning" in plans and "MapInPandas" not in plans
     rows = df.collect()
     assert len(rows) == 1
     r = rows[0]
@@ -1157,13 +1178,13 @@ def test_retrieval_eval_bounds(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_funnel_latency_is_ordered_and_distributed(spark, sf_dir):
+def test_funnel_latency_is_ordered_and_distributed(spark, sf_dir, checkpointed):
     """The percentile ladder is monotone, conversions never exceed the
     signup cohort, and the rank selection runs through the distributed
     primitive (a range exchange), not a global window over users."""
     df = QUERIES["funnel_latency_percentiles"](spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "rangepartitioning" in plan and "MapInPandas" not in plan
+    plans = "\n".join([formatted_plan(df), *checkpointed])
+    assert "rangepartitioning" in plans and "MapInPandas" not in plans
     rows = df.collect()
     assert len(rows) == 1
     r = rows[0]
@@ -1352,16 +1373,17 @@ def test_holdout_score_map_broadcasts(spark, sf_dir):
     assert flags["BroadcastHashJoin"], flags
 
 
-def test_crossval_is_one_scan_no_global_window(spark, sf_dir):
+def test_crossval_is_one_scan_no_global_window(spark, sf_dir, checkpointed):
     """One-pass CV: the fold cum window partitions BY FOLD (no
     whole-histogram funnel), and the complement model is subtraction,
     not a second scan: exactly one parquet scan of lineitem feeds both
     aggregates via the broadcast score map."""
     df = QUERIES["crossval_auc_folds"](spark, sf_dir)
-    plan = formatted_plan(df)
-    # exactly one numbered scan node in the detail section
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "BroadcastHashJoin" in plan
+    plans = "\n".join([formatted_plan(df), *checkpointed])
+    # exactly one numbered scan node in the detail sections, the
+    # checkpointed contingency's included
+    assert len(re.findall(r"\(\d+\) Scan parquet", plans)) == 1
+    assert "BroadcastHashJoin" in plans
 
 
 def test_negative_sampling_anti_join_keyed(spark, sf_dir):
@@ -1501,18 +1523,20 @@ def test_round8_no_fact_scale_single_partition(name, spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_recsys_caps_baskets_before_self_join_and_broadcasts_counts(spark, sf_dir):
+def test_recsys_caps_baskets_before_self_join_and_broadcasts_counts(
+    spark, sf_dir, checkpointed
+):
     """Pin for the repo's most expensive query (round-8 verdict: wall-
     clock alone cannot distinguish noise from regression for it). Three
     structural properties guard its scale shape:
 
     1. the basket-cap filter (`<= COFILTER_BASKET_CAP`) lives INSIDE the
-       cached training relation, i.e. it is applied before the persist —
-       so every consumer, including BOTH sides of the co-purchase
-       self-join, sees capped baskets;
+       checkpointed training relation, i.e. it is applied before the
+       materialization — so every consumer, including BOTH sides of the
+       co-purchase self-join, sees capped baskets;
     2. both sides of the self-join (the join whose condition is the
-       `src <> rec` self-pair exclusion) read the persisted train via
-       InMemoryTableScan — no raw parquet re-scan sneaks in between;
+       `src <> rec` self-pair exclusion) read the checkpointed train via
+       Scan ExistingRDD — no raw parquet re-scan sneaks in between;
     3. the per-item top-k runs as WindowGroupLimit (partial+final, never
        a global sort) and the three scalar counts assemble broadcast,
        with every SinglePartition exchange carrying only count columns.
@@ -1524,32 +1548,24 @@ def test_recsys_caps_baskets_before_self_join_and_broadcasts_counts(spark, sf_di
     plan = formatted_plan(df)
     tree = plan.split("\n\n", 1)[0]
     blocks = re.split(r"^(?=\(\d+\) )", plan, flags=re.MULTILINE)
-
-    # 1. the cap filter exists and sits under an InMemoryRelation
-    cap_ids = [
-        re.match(r"\((\d+)\)", b).group(1)
-        for b in blocks
-        if b.startswith(f"(")
-        and re.match(r"\(\d+\) Filter", b)
-        and f"<= {COFILTER_BASKET_CAP})" in b
-    ]
-    assert cap_ids, "basket-cap filter vanished from the plan"
     tree_lines = tree.splitlines()
-    for cid in cap_ids:
-        idx = next(
-            i for i, l in enumerate(tree_lines) if f"Filter ({cid})" in l
-        )
-        indent = tree_lines[idx].index("Filter")
-        ancestors = [
-            l for l in tree_lines[:idx]
-            if re.search(r"\w", l[:indent]) and "InMemoryRelation" in l
-        ]
-        assert ancestors, (
-            f"cap filter ({cid}) is not inside the cached training "
-            "relation — the cap no longer precedes the persist/self-join"
-        )
 
-    # 2. the co self-join consumes the cached train on BOTH sides
+    def cap_filters(p: str) -> list[str]:
+        return [
+            b
+            for b in re.split(r"^(?=\(\d+\) )", p, flags=re.MULTILINE)
+            if re.match(r"\(\d+\) Filter", b) and f"<= {COFILTER_BASKET_CAP})" in b
+        ]
+
+    # 1. the cap filter is applied inside a checkpointed relation only
+    assert any(cap_filters(p) for p in checkpointed), (
+        "basket-cap filter vanished from the checkpointed training relation"
+    )
+    assert not cap_filters(plan), (
+        "the cap filter runs after the materialization, not before it"
+    )
+
+    # 2. the co self-join consumes the checkpointed train on BOTH sides
     self_joins = [
         b for b in blocks
         if re.match(r"\(\d+\) (SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", b)
@@ -1575,15 +1591,14 @@ def test_recsys_caps_baskets_before_self_join_and_broadcasts_counts(spark, sf_di
     assert len(child_starts) == 2, "self-join does not have two children"
     bounds = [(child_starts[0], child_starts[1]), (child_starts[1], end)]
     for lo, hi in bounds:
-        # the FIRST scan each child branch reaches must be the cached
-        # train (the cached relation's own build plan, expanded below
-        # its InMemoryTableScan, is allowed to contain parquet scans)
+        # the FIRST scan each child branch reaches must be the
+        # checkpointed train
         first = next(
             l for l in tree_lines[lo:hi]
-            if "InMemoryTableScan" in l or "Scan parquet" in l
+            if "Scan ExistingRDD" in l or "Scan parquet" in l
         )
-        assert "InMemoryTableScan" in first, (
-            "co self-join reads raw parquet instead of the persisted "
+        assert "Scan ExistingRDD" in first, (
+            "co self-join reads raw parquet instead of the checkpointed "
             "capped train:\n" + first
         )
 

@@ -158,42 +158,50 @@ def test_retrieval_suite_reconciles_with_standalone_evals(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def _cache_entries(spark) -> int:
-    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
-
-
-def test_retrieval_rankings_share_one_cache_entry_within_a_session(spark, sf_dir):
-    """A second eval in the same session reads the cache entries the
-    first registered (Spark's CacheManager keys them by plan), so the
-    suite builds each index once."""
+def test_retrieval_suite_legs_read_the_shared_rankings(spark, sf_dir, monkeypatch):
+    """Both suite legs run while the exact and IVF rankings are cached,
+    so the suite builds each index once; the cache is gone when the
+    suite returns."""
+    from bigdata_2025_1_spark.functions import overlap
     from bigdata_2025_1_spark.operators.similarity import retrieval_rankings
+    from bigdata_2025_1_spark.oracle import cache_entries
 
-    spark.catalog.clearCache()
-    first = retrieval_rankings(spark, sf_dir)
-    entries = _cache_entries(spark)
-    assert entries >= 2
-    second = retrieval_rankings(spark, sf_dir)
-    assert _cache_entries(spark) == entries
-    for df in (*first, *second):
-        assert df.storageLevel.useMemory
-    spark.catalog.clearCache()
+    levels = []
+    materialize = overlap.materialize_legs
+
+    def spy(*builders):
+        levels.extend(df.storageLevel for df in retrieval_rankings(spark, sf_dir))
+        return materialize(*builders)
+
+    monkeypatch.setattr(overlap, "materialize_legs", spy)
+    before = cache_entries(spark)
+    assert len(all_queries()["retrieval_eval_suite"](spark, sf_dir).collect()) == 1
+    assert len(levels) == 2 and all(lvl.useMemory for lvl in levels), levels
+    assert cache_entries(spark) == before
 
 
 def test_gates_free_their_shared_frames(spark, sf_dir):
-    """Each gate persists the subtree its legs share while the legs run
-    and frees it when they have returned."""
+    """Each gate persists the subtrees its legs share while the legs
+    run and frees them when they have returned."""
     from bigdata_2025_1_spark.operators.backfill_ops import _flagged
+    from bigdata_2025_1_spark.operators.dedup import _signatures
     from bigdata_2025_1_spark.operators.shared_text import doc_lt_toks
-    from bigdata_2025_1_spark.operators.similarity import _corpus_cells
+    from bigdata_2025_1_spark.operators.similarity import (
+        _corpus_cells,
+        retrieval_rankings,
+    )
 
     qs = all_queries()
     spark.catalog.clearCache()
     for gate, shared in [
-        ("backfill_release_gate", _flagged),
-        ("ann_release_gate", _corpus_cells),
-        ("platform_release_gate", doc_lt_toks),
+        ("backfill_release_gate", lambda: [_flagged(spark, sf_dir)]),
+        ("ann_release_gate", lambda: [_corpus_cells(spark, sf_dir)]),
+        ("platform_release_gate", lambda: [doc_lt_toks(spark, sf_dir)]),
+        ("dedup_release_gate", lambda: [_signatures(spark, sf_dir)]),
+        ("retrieval_eval_suite", lambda: retrieval_rankings(spark, sf_dir)),
     ]:
         assert len(qs[gate](spark, sf_dir).collect()) == 1
-        level = shared(spark, sf_dir).storageLevel
-        assert not (level.useMemory or level.useDisk), (gate, level)
+        for df in shared():
+            level = df.storageLevel
+            assert not (level.useMemory or level.useDisk), (gate, level)
     spark.catalog.clearCache()

@@ -24,6 +24,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -41,7 +42,16 @@ def main() -> None:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
+    # the uncompressed event log runs to hundreds of MB: remove it once
+    # profile() has parsed it
     evdir = tempfile.mkdtemp(prefix="spark-events-")
+    try:
+        profile(args, evdir)
+    finally:
+        shutil.rmtree(evdir, ignore_errors=True)
+
+
+def profile(args: argparse.Namespace, evdir: str) -> None:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     cpus = os.environ["SPARK_GRAFT_CPUS"]
     # the tuned session (driver memory, AQE, shuffle partitions, UTC)

@@ -67,9 +67,8 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             problems = [f"error: {e}"]
         finally:
-            # queries that persist() intermediates (LSH signatures etc.)
-            # cannot unpersist before the caller's action — drop their
-            # cached blocks between queries
+            # check_query reports any CacheManager entry a query leaves;
+            # clearing here keeps one leak from masking the next query's
             spark.catalog.clearCache()
         dt = time.monotonic() - t0
         if problems:
