@@ -27,13 +27,16 @@ reference is cited by file:line in docstrings for semantic parity only).
 Materialization
 ---------------
 No registered query leaves a CacheManager entry. A frame read more than
-once is ``localCheckpoint()``-ed: its blocks live as long as the
-returned DataFrame and need no ``unpersist()``. The one ``persist()`` is
-``functions.overlap.release_gate(shared=...)``, which frees its shared
-frames before it returns. The trade: local checkpoints have no lineage,
-so losing an executor loses their blocks and fails the query, which
-reruns from its source tables; ``functions.iterate.iterate`` offers
-``reliable=True`` for loops long enough to need a checkpoint directory.
+once is ``localCheckpoint()``-ed and needs no ``unpersist()``: Spark's
+ContextCleaner frees its blocks once the returned DataFrame is
+garbage-collected on the driver, which waits for a driver JVM GC (at
+the latest ``spark.cleaner.periodicGC.interval``, 30 min by default).
+The one ``persist()`` is ``functions.overlap.release_gate(shared=...)``,
+which frees its shared frames before it returns. The trade: local
+checkpoints have no lineage, so losing an executor loses their blocks
+and fails the query, which reruns from its source tables when called
+again; ``functions.iterate.iterate`` offers ``reliable=True`` for loops
+long enough to need a checkpoint directory.
 """
 
 __version__ = "0.1.0"

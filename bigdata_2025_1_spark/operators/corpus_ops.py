@@ -1296,12 +1296,14 @@ def encoded_word_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer INFERENCE artifact: ``(w, n_sub)`` — each word type's
     BPE token count under the merge table trained on this corpus
     (``_bpe_train``; merges applied exhaustively in rank order, exactly
-    the segmentation training itself produced). Vocabulary-sized and
-    checkpointed as the training loop's final state."""
-    _log, v = _bpe_train(spark, sf_dir)
-    return v.select(
-        "w",
-        F.size(F.split(F.trim(F.col("s")), " ")).cast("bigint").alias("n_sub"),
+    the segmentation training itself produced). Vocabulary-sized: the
+    character-split vocabulary with every logged merge folded over it
+    in one projection, so the frame reruns from its source tables."""
+    s = F.col("s")
+    for _step, pair, _n, merged in _bpe_train(spark, sf_dir):
+        s = bpe_apply_merge(s, pair, merged)
+    return _bpe_vocab(spark, sf_dir).select(
+        "w", F.size(F.split(F.trim(s), " ")).cast("bigint").alias("n_sub")
     )
 _BPE_FINAL = "\n      UNION ALL\n      ".join(
     f"SELECT {t} AS step, pair, CAST(n AS BIGINT) AS n, "
@@ -1357,7 +1359,7 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary is a lazy local checkpoint, so the plan stays one round
     deep and a superseded round's blocks go with its frame. The oracle
     unrolls the same {BPE_MERGES} rounds."""
-    log, _v = _bpe_train(spark, sf_dir)
+    log = _bpe_train(spark, sf_dir)
     if not log:
         return spark.createDataFrame([], "step int, pair string, n bigint, merged string")
     return spark.createDataFrame(
@@ -1457,44 +1459,33 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mannwhitney_fertility_drift, corpus_release_gate's fertility leg)
 # trains the tokenizer once. Training runs on the driver (one argmax
 # collect per merge round), so Spark's CacheManager cannot share it:
-# only the merge log held here skips those jobs. Bounded: the oldest
-# entry is evicted past 8 keys, and its checkpointed vocabulary's
-# blocks go when nothing references the frame. Keys
-# are path identity: the test corpus is immutable; a mutable deployment
-# should key on a table snapshot id.
-_BPE_MEMO: dict[tuple[str, str], tuple[list, DataFrame]] = {}
+# only the merge log held here skips those jobs. It holds no frame, so
+# nothing it keeps can lose its blocks. Bounded: the oldest entry is
+# evicted past 8 keys. Keys are path identity: the test corpus is
+# immutable; a mutable deployment should key on a table snapshot id.
+_BPE_MEMO: dict[tuple[str, str], list[tuple[int, str, int, str]]] = {}
 
 
 def _bpe_train(
     spark: SparkSession, sf_dir: str
-) -> "tuple[list[tuple[int, str, int, str]], DataFrame]":
-    """Session-memoized BPE training: returns the memoized
-    ``(merge_log, encoded_vocab)`` for this (applicationId, sf_dir) if
-    the session has already trained. The vocabulary is a local
-    checkpoint, which ``spark.catalog.clearCache()`` does not touch.
+) -> "list[tuple[int, str, int, str]]":
+    """Session-memoized BPE training: the merge log (step, pair, n,
+    merged) for this (applicationId, sf_dir), trained on the first call.
     Callers must treat the returned log as immutable."""
     key = (spark.sparkContext.applicationId, sf_dir)
     hit = _BPE_MEMO.get(key)
     if hit is not None:
         return hit
-    log, v = _bpe_train_uncached(spark, sf_dir)
+    log = _bpe_train_uncached(spark, sf_dir)
     while len(_BPE_MEMO) >= 8:
         _BPE_MEMO.pop(next(iter(_BPE_MEMO)))
-    _BPE_MEMO[key] = (log, v)
-    return log, v
+    _BPE_MEMO[key] = log
+    return log
 
 
-def _bpe_train_uncached(
-    spark: SparkSession, sf_dir: str
-) -> "tuple[list[tuple[int, str, int, str]], DataFrame]":
-    """Run the BPE merge-training loop on the documents word-type
-    vocabulary and return ``(merge_log, encoded_vocab)``: the merge
-    table (step, pair, n, merged) AND the final re-segmented vocabulary
-    ``(w, s, cnt)`` — the padded symbol string after every applied
-    merge, i.e. the trained tokenizer's ENCODING of each word type.
-    ``encoded_vocab`` is the last round's lazy local checkpoint
-    (vocabulary-sized). Use the memoized
-    ``_bpe_train`` wrapper — this body is one training run."""
+def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents' word-type vocabulary ``(w, s, cnt)``, each type
+    character-split into the padded ``' a b c '`` symbol string."""
     docs = spread(load(spark, sf_dir, "documents"))
     vocab = (
         docs.select(F.explode(T.ws_tokens(F.lower(F.col("text")))).alias("w"))
@@ -1504,9 +1495,8 @@ def _bpe_train_uncached(
     )
     # split(w, '') yields one element per char in Spark 4 (no trailing
     # empty); the padded ' a b ' form makes every pair replacement a
-    # boundary-safe literal substring. ``w`` rides along untouched so
-    # the final state doubles as the word-type encode table.
-    v = vocab.select(
+    # boundary-safe literal substring.
+    return vocab.select(
         "w",
         F.concat(
             F.lit(" "),
@@ -1514,7 +1504,18 @@ def _bpe_train_uncached(
             F.lit(" "),
         ).alias("s"),
         "cnt",
-    ).localCheckpoint(eager=False)
+    )
+
+
+def _bpe_train_uncached(
+    spark: SparkSession, sf_dir: str
+) -> "list[tuple[int, str, int, str]]":
+    """Run the BPE merge-training loop on the documents word-type
+    vocabulary and return its merge log (step, pair, n, merged). Each
+    round's re-segmented vocabulary is a lazy local checkpoint, so the
+    plan stays one round deep. Use the memoized ``_bpe_train`` wrapper
+    — this body is one training run."""
+    v = _bpe_vocab(spark, sf_dir).select("s", "cnt").localCheckpoint(eager=False)
     log = []
     for step in range(1, BPE_MERGES + 1):
         # single-symbol guard: sequence(1, 0) counts DOWN (the repo-wide
@@ -1545,9 +1546,9 @@ def _bpe_train_uncached(
         merged = pair.replace(" ", "")
         log.append((step, pair, n, merged))
         v = v.select(
-            "w", bpe_apply_merge(F.col("s"), pair, merged).alias("s"), "cnt"
+            bpe_apply_merge(F.col("s"), pair, merged).alias("s"), "cnt"
         ).localCheckpoint(eager=False)
-    return log, v
+    return log
 
 
 # --- unseen-mass estimation (round 7) ---------------------------------------

@@ -103,11 +103,15 @@ def _cand_jaccard(sig: DataFrame) -> DataFrame:
     under the deployed (BANDS x rows-per-band) config — the shared
     verify pass of the LSH family.
 
-    ``dedup_minhash_lsh`` (threshold filter + order), ``lsh_recall_eval``
-    (candidate count + verified count) and, through them, the
-    connected-components chain and ``dedup_release_gate`` all consume
-    exactly this frame, so the band self-join and the array-intersect
-    verify exist once. Each consumer reads it once.
+    ``dedup_minhash_lsh`` (threshold filter + order) and
+    ``lsh_recall_eval`` (candidate count + verified count in one
+    aggregate) and, through them, the connected-components chain and
+    ``dedup_release_gate`` all consume exactly this frame, so the band
+    self-join and the array-intersect verify are written once. Each
+    consumer reads it once, plain. Inside ``dedup_release_gate`` the
+    verify pass runs once per leg (the recall leg and the canonical-doc
+    leg's connected-components chain): the gate shares the signature
+    frame, not this one.
 
     Scale shape: unchanged from the shapes it merges — the candidate
     join moves (band, band_key, doc_id) only; shingle sets join back
@@ -2038,7 +2042,8 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(shingle); prefix rank is a doc_id-partitioned window
     (never single-partition); both candidate joins are equi-joins on
     short postings (band keys / globally-rare prefix shingles); the
-    final assembly cross-joins three broadcast 1-row aggregates.
+    final assembly crosses the truth count with one broadcast 1-row
+    aggregate of candidate and verified counts.
     Prefix postings are frequency-ordered so their lengths shrink as
     the corpus grows (the PPJoin argument); a pathological
     shared-prefix corpus degrades the TRUTH side only — the LSH side

@@ -32,13 +32,14 @@ def plan_has(df: DataFrame, *needles: str) -> dict[str, bool]:
     return {n: (n in plan) for n in needles}
 
 
-def single_partition_exchange_inputs(df: DataFrame) -> list[str]:
+def single_partition_exchange_inputs(plan: str) -> list[str]:
     """The ``Input`` column list of every ``Exchange SinglePartition``
-    node in the formatted plan. The scale pin: none of these may carry a
-    row-per-document/row-per-fact column (e.g. ``doc_id``) — a
-    SinglePartition exchange is only acceptable for scalar-aggregate
-    rows and distinct-value-domain tables."""
-    plan = formatted_plan(df)
+    node in formatted-plan text (several plans may be concatenated: a
+    query's plan and the plans of the frames it local-checkpointed).
+    The scale pin: none of these may carry a row-per-document/row-per-
+    fact column (e.g. ``doc_id``) — a SinglePartition exchange is only
+    acceptable for scalar-aggregate rows and distinct-value-domain
+    tables."""
     out = []
     blocks = re.split(r"^\(\d+\) ", plan, flags=re.MULTILINE)
     for b in blocks:
@@ -51,13 +52,12 @@ def single_partition_exchange_inputs(df: DataFrame) -> list[str]:
     return out
 
 
-def window_node_inputs(df: DataFrame) -> list[str]:
-    """The ``Input`` column list of every ``Window`` node in the
-    formatted plan. The row-width pin: a window's sort buffers its whole
-    input rows, so no wide payload column (e.g. a document ``text``
-    body) may enter a window — compute on skinny keys first, join the
-    payload back after."""
-    plan = formatted_plan(df)
+def window_node_inputs(plan: str) -> list[str]:
+    """The ``Input`` column list of every ``Window`` node in
+    formatted-plan text. The row-width pin: a window's sort buffers its
+    whole input rows, so no wide payload column (e.g. a document
+    ``text`` body) may enter a window — compute on skinny keys first,
+    join the payload back after."""
     out = []
     blocks = re.split(r"^\(\d+\) ", plan, flags=re.MULTILINE)
     for b in blocks:

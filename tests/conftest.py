@@ -22,3 +22,34 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def checkpointed(spark, monkeypatch):
+    """Formatted plans of the frames local-checkpointed while the test
+    builds its queries, in order. A checkpoint's plan no longer shows in
+    the plan of a frame that reads it, so a pin on a query's whole shape
+    reads these too."""
+    from bigdata_2025_1_spark.plans.explain import formatted_plan
+
+    plans = []
+    frame = type(spark.range(1))
+    checkpoint = frame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(formatted_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    return plans
+
+
+@pytest.fixture
+def query_plan(checkpointed):
+    """``query_plan(df)``: ``df``'s formatted plan followed by the plans
+    of the frames the test has local-checkpointed so far — the whole
+    shape the query runs, as the plan-text helpers of
+    ``plans/explain.py`` read it."""
+    from bigdata_2025_1_spark.plans.explain import formatted_plan
+
+    return lambda df: "\n".join([formatted_plan(df), *checkpointed])

@@ -239,47 +239,52 @@ def test_encode_unicode_matches_scalar_and_oracle(spark, tmp_path):
 
 def test_bpe_train_memo_is_shared_within_a_session(spark, sf_dir):
     """VERDICT r10 ask #2: a second BPE-family query in the same
-    session must receive the SAME trained (log, vocabulary) pair, not
-    re-run the merge-training loop."""
+    session must receive the SAME trained merge log, not re-run the
+    merge-training loop."""
     from bigdata_2025_1_spark.operators import corpus_ops as C
 
     C._BPE_MEMO.clear()
-    log1, v1 = C._bpe_train(spark, sf_dir)
-    log2, v2 = C._bpe_train(spark, sf_dir)
-    assert log1 is log2 and v1 is v2
+    log1 = C._bpe_train(spark, sf_dir)
+    log2 = C._bpe_train(spark, sf_dir)
+    assert log1 is log2
     assert len(C._BPE_MEMO) == 1
     spark.catalog.clearCache()
 
 
 def test_bpe_train_memo_survives_clearcache(spark, sf_dir):
-    """The memoized vocabulary is a local checkpoint, not a cache
-    entry: training leaves no CacheManager entry, and after
-    spark.catalog.clearCache() a memo hit is still the one-round-deep
-    checkpointed frame, so a suite keeps its one-train contract across
-    per-query cache clears."""
+    """The memo holds only the merge log, never a frame: training
+    leaves no CacheManager entry, and after spark.catalog.clearCache()
+    a memo hit is the same log and runs no Spark job, so a suite keeps
+    its one-train contract across per-query cache clears. The encode
+    table is rebuilt from the log and gives the same rows."""
     from bigdata_2025_1_spark.operators import corpus_ops as C
     from bigdata_2025_1_spark.oracle import cache_entries
 
     C._BPE_MEMO.clear()
     before = cache_entries(spark)
-    log1, v1 = C._bpe_train(spark, sf_dir)
-    n = v1.count()
+    log1 = C._bpe_train(spark, sf_dir)
+    enc1 = sorted(C.encoded_word_types(spark, sf_dir).collect())
     assert cache_entries(spark) == before
+    assert all(isinstance(v, list) for v in C._BPE_MEMO.values())
     spark.catalog.clearCache()
-    log2, v2 = C._bpe_train(spark, sf_dir)
-    assert v2 is v1 and log2 is log1
-    assert v2._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
-    assert v2.count() == n
+    sc = spark.sparkContext
+    sc.setJobGroup("bpe-memo-hit", "memo hit")
+    try:
+        log2 = C._bpe_train(spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert log2 is log1
+    assert list(sc.statusTracker().getJobIdsForGroup("bpe-memo-hit")) == []
+    assert sorted(C.encoded_word_types(spark, sf_dir).collect()) == enc1
 
 
 def test_bpe_train_memo_evicts_oldest(spark, sf_dir):
-    """The memo holds at most 8 trainings: a new key evicts the oldest,
-    whose vocabulary's blocks then go with the dropped frame."""
+    """The memo holds at most 8 trainings: a new key evicts the oldest."""
     from bigdata_2025_1_spark.operators import corpus_ops as C
 
     C._BPE_MEMO.clear()
     for i in range(8):
-        C._BPE_MEMO[(f"fake-app-{i}", sf_dir)] = ([], spark.range(1))
+        C._BPE_MEMO[(f"fake-app-{i}", sf_dir)] = []
     C._bpe_train(spark, sf_dir)
     assert ("fake-app-0", sf_dir) not in C._BPE_MEMO
     assert ("fake-app-1", sf_dir) in C._BPE_MEMO

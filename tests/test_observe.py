@@ -42,19 +42,39 @@ def test_observe_on_streaming_batch(spark, sf_dir, tmp_path):
 def test_queries_leave_no_cache_entries(spark, sf_dir):
     """Materialization rule (bigdata_2025_1_spark/__init__.py): a
     registered query leaves no CacheManager entry behind, with no
-    clearCache() by the caller — pinned on queries that read a frame
-    several times, one from each family (LSH dedup, graph, corpus
-    capstone). ``oracle.check_query`` applies the same rule to every
-    query it checks."""
+    clearCache() by the caller, and the RDD blocks it materializes go
+    once its result is dropped (Spark's ContextCleaner frees a local
+    checkpoint after a driver JVM garbage collection) — pinned on
+    queries that read a frame several times, one from each family (LSH
+    dedup, graph, corpus capstone). ``oracle.check_query`` applies the
+    entry rule to every query it checks."""
+    import gc
+    import time
+
     from bigdata_2025_1_spark.oracle import cache_entries
     from bigdata_2025_1_spark.registry import all_queries
 
+    sc = spark.sparkContext
+
+    def stored() -> set[int]:
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
     queries = all_queries()
+    materialized = 0
     for q in (
         "dedup_minhash_lsh",
         "hyperball_harmonic_trade",
         "corpus_curation_v2",
     ):
-        before = cache_entries(spark)
+        before, held = cache_entries(spark), stored()
         queries[q](spark, sf_dir).collect()
         assert cache_entries(spark) == before, f"{q} left cache entries"
+        made = stored() - held
+        materialized += len(made)
+        deadline = time.monotonic() + 60
+        while made & stored() and time.monotonic() < deadline:
+            gc.collect()
+            sc._jvm.System.gc()
+            time.sleep(0.2)
+        assert not made & stored(), f"{q} left RDD blocks {sorted(made & stored())}"
+    assert materialized, "no query materialized a block: the block check is vacuous"

@@ -22,23 +22,6 @@ pytestmark = _pytest_mark.mark.slow
 QUERIES = all_queries()
 
 
-@_pytest_mark.fixture
-def checkpointed(spark, monkeypatch):
-    """Formatted plans of the frames a query local-checkpoints while it
-    is built, in order: what a checkpoint materializes no longer shows
-    in the returned frame's plan."""
-    plans = []
-    frame = type(spark.range(1))
-    checkpoint = frame.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        plans.append(formatted_plan(self))
-        return checkpoint(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame, "localCheckpoint", spy)
-    return plans
-
-
 def test_q1_scan_pushdown_and_codegen(spark, sf_dir):
     plan = formatted_plan(QUERIES["q1_pricing_summary"](spark, sf_dir))
     # the shipdate filter reaches the parquet reader
@@ -85,7 +68,7 @@ def test_flagship_single_aggregate_two_exchanges(spark, sf_dir):
     assert len(re.findall(r"^\(\d+\) HashAggregate", plan, re.M)) == 2
 
 
-def test_lsh_band_join_no_cartesian(spark, sf_dir):
+def test_lsh_band_join_no_cartesian(spark, sf_dir, checkpointed, query_plan):
     # dedup_char_ngram_jaccard included: its candidate join's equi-key
     # (minhash bucket equality) must stay a hash/merge join — a
     # BroadcastNestedLoop/Cartesian here is the all-pairs scale-killer
@@ -100,7 +83,8 @@ def test_lsh_band_join_no_cartesian(spark, sf_dir):
         # never become the join condition itself
         "dedup_lsh_arrival_log",
     ):
-        plan = formatted_plan(QUERIES[q](spark, sf_dir))
+        checkpointed.clear()
+        plan = query_plan(QUERIES[q](spark, sf_dir))
         assert "CartesianProduct" not in plan, q
         assert "BroadcastNestedLoopJoin" not in plan, q
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan, q
@@ -353,14 +337,14 @@ def test_salted_join_beats_unsalted_on_skew(spark):
         dim.unpersist()
 
 
-def test_ann_pq_adc_recall(spark, sf_dir):
+def test_ann_pq_adc_recall(spark, sf_dir, query_plan):
     """PQ-ADC shortlist + exact re-rank: the compressed-domain scoring
     pass must stay broadcast-shaped (probe LUTs broadcast against corpus
     codes, no cartesian materialization of raw embeddings), and recall@5
     vs the exact brute-force twin must stay high enough that the 32×
     compression is buying a real shortlist, not noise."""
     df = QUERIES["ann_pq_adc_topk"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     exact = {
         (r.query_id, r.neighbor_id)
@@ -417,7 +401,7 @@ def test_cms_cells_never_shuffle_by_word(spark, sf_dir):
     assert len(ha) >= 2
 
 
-def test_ann_ivfpq_recall_and_plan(spark, sf_dir):
+def test_ann_ivfpq_recall_and_plan(spark, sf_dir, query_plan):
     """IVFPQ composition: candidate join must stay an equi-join on the
     cell key (probes broadcast, no cartesian), and recall@5 vs brute
     force must show the two approximations compose usefully (IVF skips
@@ -425,7 +409,7 @@ def test_ann_ivfpq_recall_and_plan(spark, sf_dir):
     is below the single-technique pins — the price of reading ~1/80th
     of the bytes)."""
     df = QUERIES["ann_ivfpq_topk"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
     exact = {
@@ -491,12 +475,12 @@ def test_q2_window_over_aggregate_not_facts(spark, sf_dir):
     assert re.search(r"HashAggregate", head)
 
 
-def test_ann_sq8_recall(spark, sf_dir):
+def test_ann_sq8_recall(spark, sf_dir, query_plan):
     """SQ8 keeps near-exact recall at 4x compression (its selling point
     vs PQ's 32x): top-5 agreement with the brute-force twin on the
     shared probe set must be high."""
     df = QUERIES["ann_sq8_topk"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "CartesianProduct" not in plan
     exact = {
         (r.query_id, r.neighbor_id)
@@ -508,12 +492,12 @@ def test_ann_sq8_recall(spark, sf_dir):
     assert recall >= 0.85, recall
 
 
-def test_duplicate_spans_shuffle_hashed_keys(spark, sf_dir):
+def test_duplicate_spans_shuffle_hashed_keys(spark, sf_dir, query_plan):
     """corpus_duplicate_spans must shuffle md5 keys, never raw span
     strings: every hashpartitioning exchange in its plan is keyed by the
     fixed-width hash column (the wire carries 32-char hex, not 50-char
     text spans — and at 100 TB that difference is the shuffle budget)."""
-    plan = formatted_plan(QUERIES["corpus_duplicate_spans"](spark, sf_dir))
+    plan = query_plan(QUERIES["corpus_duplicate_spans"](spark, sf_dir))
     exchanges = [l for l in plan.splitlines() if "hashpartitioning" in l]
     assert exchanges
     assert all("span" not in l for l in exchanges), exchanges
@@ -552,11 +536,11 @@ def test_lateral_rewrites_to_group_limit(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_containment_candidate_join_no_cartesian(spark, sf_dir):
+def test_containment_candidate_join_no_cartesian(spark, sf_dir, query_plan):
     # rare-shingle blocking must stay equi-join (postings vs rarest):
     # all-pairs here is the quadratic scale-killer the prefix filter
     # exists to avoid.
-    plan = formatted_plan(QUERIES["dedup_containment"](spark, sf_dir))
+    plan = query_plan(QUERIES["dedup_containment"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -600,12 +584,12 @@ def test_equi_depth_aggregates_before_global_window(spark, sf_dir):
     assert min(agg_ids) < min(win_ids), (agg_ids, win_ids)
 
 
-def test_kmeans_broadcasts_centroids(spark, sf_dir):
+def test_kmeans_broadcasts_centroids(spark, sf_dir, query_plan):
     # each Lloyd pass joins the corpus with the BROADCAST k x d centroid
     # table; the corpus itself must never cartesian against anything
     # bigger than k rows (BroadcastNestedLoop with a k-row build side IS
     # the intended cross join).
-    plan = formatted_plan(QUERIES["kmeans_lloyd_clusters"](spark, sf_dir))
+    plan = query_plan(QUERIES["kmeans_lloyd_clusters"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastExchange" in plan
 
@@ -619,12 +603,12 @@ def test_logprob_broadcasts_vocabulary(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_rfm_aggregates_before_ntile_windows(spark, sf_dir):
+def test_rfm_aggregates_before_ntile_windows(spark, sf_dir, query_plan):
     # round-5 strengthening of the r4 pin: the three NTILE(4)s are now
     # computed CLOSED-FORM from with_global_rank ranks, so the plan has
     # NO Window node at all (r4 shape: windows above the custkey
     # aggregate; r5 shape: aggregate + distributed ranks + arithmetic).
-    plan = formatted_plan(QUERIES["customer_rfm_segments"](spark, sf_dir))
+    plan = query_plan(QUERIES["customer_rfm_segments"](spark, sf_dir))
     assert not re.findall(r"Window \(\d+\)", plan)
     assert re.findall(r"HashAggregate \(\d+\)", plan)
 
@@ -635,7 +619,9 @@ def test_vocab_growth_no_cartesian_two_aggs(spark, sf_dir):
     assert len(re.findall(r"^\(\d+\) HashAggregate", plan, re.M)) >= 4  # 2 aggs x partial/final
 
 
-def test_no_doc_sized_single_partition_exchange(spark, sf_dir):
+def test_no_doc_sized_single_partition_exchange(
+    spark, sf_dir, checkpointed, query_plan
+):
     """Round-5 fix pins (VERDICT r4 "What's wrong" #1-3): the former
     unpartitioned-window family must keep per-document rows out of
     SinglePartition exchanges. Scalar aggregates (one row per input
@@ -656,10 +642,11 @@ def test_no_doc_sized_single_partition_exchange(spark, sf_dir):
         ("parts_abc_pareto", ("partkey",)),
         ("join_key_skew_profile", ("key#", "custkey")),
     ):
+        checkpointed.clear()
         df = QUERIES[q](spark, sf_dir)
         bad = [
             i
-            for i in single_partition_exchange_inputs(df)
+            for i in single_partition_exchange_inputs(query_plan(df))
             if any(c in i for c in entity_cols)
         ]
         assert not bad, (q, bad)
@@ -667,8 +654,9 @@ def test_no_doc_sized_single_partition_exchange(spark, sf_dir):
     # the sorted-neighborhood rewrite has NO single-partition exchange at
     # all (no scalar aggregate in its plan; the rank offsets come from a
     # partition-count-sized triangular broadcast join)
+    checkpointed.clear()
     df = QUERIES["dedup_sorted_neighborhood"](spark, sf_dir)
-    assert single_partition_exchange_inputs(df) == []
+    assert single_partition_exchange_inputs(query_plan(df)) == []
     spark.catalog.clearCache()
 
 
@@ -779,8 +767,8 @@ def test_benford_digit_pushdown(spark, sf_dir):
     assert "o_totalprice" in read_schema and "o_orderkey" not in read_schema
 
 
-def test_cross_source_overlap_no_cartesian(spark, sf_dir):
-    plan = formatted_plan(QUERIES["cross_source_overlap"](spark, sf_dir))
+def test_cross_source_overlap_no_cartesian(spark, sf_dir, query_plan):
+    plan = query_plan(QUERIES["cross_source_overlap"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -794,28 +782,27 @@ def test_cdc_window_input_is_skinny(spark, sf_dir):
     from bigdata_2025_1_spark.plans.explain import window_node_inputs
 
     df = QUERIES["cdc_chunk_dedup"](spark, sf_dir)
-    inputs = window_node_inputs(df)
+    inputs = window_node_inputs(formatted_plan(df))
     assert inputs, "expected a span-assembly Window node"
     wide = [i for i in inputs if "text" in i]
     assert not wide, wide
 
 
-def test_decontamination_postings_join_no_cartesian(spark, sf_dir):
+def test_decontamination_postings_join_no_cartesian(spark, sf_dir, query_plan):
     """The eval x train pairing must stay an equi-join on the capped
     shingle key — a nested-loop here is the all-pairs scale-killer the
     DF cap exists to prevent."""
-    plan = formatted_plan(QUERIES["benchmark_decontamination"](spark, sf_dir))
+    plan = query_plan(QUERIES["benchmark_decontamination"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     spark.catalog.clearCache()
 
 
-def test_margin_ivf_broadcasts_probes_no_cartesian(spark, sf_dir, checkpointed):
-    plan = formatted_plan(QUERIES["margin_candidate_mining_ivf"](spark, sf_dir))
-    plans = "\n".join([plan, *checkpointed])
-    assert "CartesianProduct" not in plans
-    assert "BroadcastNestedLoopJoin" not in plans
-    assert "BroadcastHashJoin" in plans  # probes broadcast against corpus cells
+def test_margin_ivf_broadcasts_probes_no_cartesian(spark, sf_dir, query_plan):
+    plan = query_plan(QUERIES["margin_candidate_mining_ivf"](spark, sf_dir))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "BroadcastHashJoin" in plan  # probes broadcast against corpus cells
     spark.catalog.clearCache()
 
 
@@ -827,24 +814,24 @@ def test_char_entropy_single_pass_no_udf(spark, sf_dir):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_semdedup_pair_join_is_keyed(spark, sf_dir):
+def test_semdedup_pair_join_is_keyed(spark, sf_dir, query_plan):
     """The (cell, subkey) pair join must stay a hash/merge equi-join —
     with the re-split live (sf0.01 has 8 over-cap cells) a nested loop
     here would be the quadratic the cap exists to bound."""
     df = QUERIES["semantic_dedup_pairs"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     spark.catalog.clearCache()
 
 
-def test_hyperball_state_is_node_times_buckets(spark, sf_dir):
+def test_hyperball_state_is_node_times_buckets(spark, sf_dir, query_plan):
     """HyperBall's whole point: iterated state is O(|V|*m) register rows,
     never |V|^2. Drive the final round's state row count out via the
     registered query's own plan inputs — here, just re-derive the bound
     from the output (each nation appears once) and pin no-cartesian."""
     df = QUERIES["hyperball_harmonic_trade"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "CartesianProduct" not in plan
     rows = df.collect()
     n_nations = 25
@@ -870,7 +857,7 @@ def test_kcore_collapses_facts_before_kernel(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_density_clusters_roles_and_truncated_lineage(spark, sf_dir):
+def test_density_clusters_roles_and_truncated_lineage(spark, sf_dir, query_plan):
     """DBSCAN roles obey the definition, and the iterated label state is
     localCheckpoint'd — the final plan reads ExistingRDD scans instead of
     chaining the whole loop lineage. persist()-only looping doubles the
@@ -879,9 +866,8 @@ def test_density_clusters_roles_and_truncated_lineage(spark, sf_dir):
     from bigdata_2025_1_spark.operators.similarity import DENS_MINPTS
 
     df = QUERIES["density_core_clusters"](spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "Scan ExistingRDD" in plan  # checkpointed loop state
+    assert "CartesianProduct" not in query_plan(df)
+    assert "Scan ExistingRDD" in formatted_plan(df)  # checkpointed loop state
     rows = df.collect()
     by_role: dict[str, list] = {}
     for r in rows:
@@ -899,7 +885,7 @@ def test_density_clusters_roles_and_truncated_lineage(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_cusum_prefix_sum_is_distributed(spark, sf_dir, checkpointed):
+def test_cusum_prefix_sum_is_distributed(spark, sf_dir, query_plan):
     """The CUSUM running sum must come from the distributed prefix-sum
     primitive, not a global unpartitioned window over the hour spine:
     no SinglePartition exchange carries hour-spine rows (the only
@@ -908,13 +894,12 @@ def test_cusum_prefix_sum_is_distributed(spark, sf_dir, checkpointed):
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES["cusum_changepoint"](spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "TakeOrderedAndProject" in plan
+    assert "TakeOrderedAndProject" in formatted_plan(df)
+    plan = query_plan(df)
     # with_global_rank: the range exchange (inside its checkpointed
     # partitions), numbered without a Python kernel
-    plans = "\n".join([plan, *checkpointed])
-    assert "rangepartitioning" in plans and "MapInPandas" not in plans
-    bad = [i for i in single_partition_exchange_inputs(df) if "hour_ts" in i or ("h#" in i and "cnt#" in i)]
+    assert "rangepartitioning" in plan and "MapInPandas" not in plan
+    bad = [i for i in single_partition_exchange_inputs(plan) if "hour_ts" in i or ("h#" in i and "cnt#" in i)]
     assert not bad, bad
     spark.catalog.clearCache()
 
@@ -938,16 +923,16 @@ def test_chi_square_collapses_before_arithmetic(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_naive_bayes_argmax_is_doc_partitioned(spark, sf_dir):
+def test_naive_bayes_argmax_is_doc_partitioned(spark, sf_dir, query_plan):
     """The class-argmax window partitions by doc_id (n_classes rows per
     key) — never a global window; the evidence join fans out by at most
     n_classes; confusion-matrix mass equals the document count."""
     df = QUERIES["naive_bayes_source_classifier"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "CartesianProduct" not in plan
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
-    assert [i for i in single_partition_exchange_inputs(df) if "doc_id" in i] == []
+    assert [i for i in single_partition_exchange_inputs(plan) if "doc_id" in i] == []
     rows = df.collect()
     from bigdata_2025_1_spark.io import load
 
@@ -997,7 +982,9 @@ def test_greedy_allocation_invariants(spark, sf_dir):
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES["greedy_stock_allocation"](spark, sf_dir)
-    assert [i for i in single_partition_exchange_inputs(df) if "l_partkey" in i] == []
+    assert [
+        i for i in single_partition_exchange_inputs(formatted_plan(df)) if "l_partkey" in i
+    ] == []
     rows = df.collect()
     assert rows
     for r in rows:
@@ -1006,12 +993,12 @@ def test_greedy_allocation_invariants(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_cofiltering_caps_and_broadcasts(spark, sf_dir):
+def test_cofiltering_caps_and_broadcasts(spark, sf_dir, query_plan):
     """The co-purchase self-join must stay a customer-keyed equi-join
     with broadcast popularity sides, and the cosine algebra holds:
     co <= min(n_a, n_b) and cosine in (0, 1]."""
     df = QUERIES["item_cofiltering_similarity"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
     rows = df.collect()
@@ -1021,12 +1008,12 @@ def test_cofiltering_caps_and_broadcasts(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_theil_sen_bounded_domain(spark, sf_dir):
+def test_theil_sen_bounded_domain(spark, sf_dir, query_plan):
     """Theil-Sen's all-pairs table is month-domain-sized: n_pairs is
     exactly C(n_months, 2), the output is one row, and no
     CartesianProduct appears (the 1-row assembly frames are broadcast)."""
     df = QUERIES["theil_sen_trend"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "CartesianProduct" not in plan
     rows = df.collect()
     assert len(rows) == 1
@@ -1035,7 +1022,7 @@ def test_theil_sen_bounded_domain(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_zipf_fit_single_scalar_pass(spark, sf_dir, checkpointed):
+def test_zipf_fit_single_scalar_pass(spark, sf_dir, query_plan):
     """The Zipf fit is one vocabulary groupBy + one distributed rank +
     one scalar moment aggregate; r2 is a valid coefficient and n_types
     matches the true vocabulary size."""
@@ -1045,10 +1032,10 @@ def test_zipf_fit_single_scalar_pass(spark, sf_dir, checkpointed):
     from bigdata_2025_1_spark.io import load
 
     df = QUERIES["zipf_exponent_fit"](spark, sf_dir)
-    plans = "\n".join([formatted_plan(df), *checkpointed])
+    plan = query_plan(df)
     # with_global_rank: the range exchange (inside its checkpointed
     # partitions), numbered without a Python kernel
-    assert "rangepartitioning" in plans and "MapInPandas" not in plans
+    assert "rangepartitioning" in plan and "MapInPandas" not in plan
     rows = df.collect()
     assert len(rows) == 1
     r = rows[0]
@@ -1064,14 +1051,14 @@ def test_zipf_fit_single_scalar_pass(spark, sf_dir, checkpointed):
     spark.catalog.clearCache()
 
 
-def test_slo_burn_rolling_is_bounded_explode(spark, sf_dir):
+def test_slo_burn_rolling_is_bounded_explode(spark, sf_dir, query_plan):
     """The trailing window must be the bounded contribution explode —
     equi-joins only, no range-join BroadcastNestedLoop — and the alert
     column is exactly the conjunction of the two burn thresholds."""
     from bigdata_2025_1_spark.operators.events_ops import SLO_BURN_ALERT
 
     df = QUERIES["slo_burn_rate"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     rows = df.collect()
@@ -1121,7 +1108,7 @@ def test_ab_split_is_balanced_null_read(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_abc_xyz_matrix_reconciles(spark, sf_dir):
+def test_abc_xyz_matrix_reconciles(spark, sf_dir, query_plan):
     """The planning matrix covers every part exactly once, the class
     axes stay in their alphabets, and the ABC prefix runs through the
     distributed rank primitive (a range exchange), never a global window."""
@@ -1130,7 +1117,7 @@ def test_abc_xyz_matrix_reconciles(spark, sf_dir):
     from bigdata_2025_1_spark.io import load
 
     df = QUERIES["abc_xyz_matrix"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "CartesianProduct" not in plan
     assert "rangepartitioning" in plan and "MapInPandas" not in plan
     rows = df.collect()
@@ -1178,13 +1165,13 @@ def test_retrieval_eval_bounds(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_funnel_latency_is_ordered_and_distributed(spark, sf_dir, checkpointed):
+def test_funnel_latency_is_ordered_and_distributed(spark, sf_dir, query_plan):
     """The percentile ladder is monotone, conversions never exceed the
     signup cohort, and the rank selection runs through the distributed
     primitive (a range exchange), not a global window over users."""
     df = QUERIES["funnel_latency_percentiles"](spark, sf_dir)
-    plans = "\n".join([formatted_plan(df), *checkpointed])
-    assert "rangepartitioning" in plans and "MapInPandas" not in plans
+    plan = query_plan(df)
+    assert "rangepartitioning" in plan and "MapInPandas" not in plan
     rows = df.collect()
     assert len(rows) == 1
     r = rows[0]
@@ -1193,12 +1180,12 @@ def test_funnel_latency_is_ordered_and_distributed(spark, sf_dir, checkpointed):
     spark.catalog.clearCache()
 
 
-def test_autocorrelation_is_lag_equi_join(spark, sf_dir):
+def test_autocorrelation_is_lag_equi_join(spark, sf_dir, query_plan):
     """The lag pairing must be an integer equi-join on hidx+lag (the
     3-row lag table broadcast), never a range join; r values are valid
     correlations and the dense fixture pairs almost the whole spine."""
     df = QUERIES["hourly_autocorrelation"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "CartesianProduct" not in plan
     rows = {r.lag_hours: r for r in df.collect()}
     from bigdata_2025_1_spark.operators.events_ops import ACF_LAGS
@@ -1248,7 +1235,7 @@ def test_expectations_report_all_checks_present(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_semantic_decontamination_covers_eval_set(spark, sf_dir):
+def test_semantic_decontamination_covers_eval_set(spark, sf_dir, query_plan):
     """Every eval item gets exactly one row; verdicts follow the
     threshold; the pairing stays a keyed equi-join (no cartesian)."""
     from bigdata_2025_1_spark.operators.similarity import (
@@ -1257,7 +1244,7 @@ def test_semantic_decontamination_covers_eval_set(spark, sf_dir):
     )
 
     df = QUERIES["semantic_decontamination"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "CartesianProduct" not in plan
     rows = df.collect()
     assert len(rows) == min(N_EVAL_VECS, 500)
@@ -1294,12 +1281,12 @@ def test_jain_fairness_bounds(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_recsys_eval_counts_reconcile(spark, sf_dir):
+def test_recsys_eval_counts_reconcile(spark, sf_dir, query_plan):
     """Hits never exceed covered, covered never exceeds test, the
     hit rate matches its own counts, and the per-item top-k compiles to
     WindowGroupLimit (partitioned, pushed-down)."""
     df = QUERIES["recsys_holdout_hitrate"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "WindowGroupLimit" in plan
     assert "CartesianProduct" not in plan
     rows = df.collect()
@@ -1328,7 +1315,7 @@ def test_kaplan_meier_curve_monotone(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_supplier_latency_no_single_partition(spark, sf_dir):
+def test_supplier_latency_no_single_partition(spark, sf_dir, query_plan):
     """Round-7 fix pin (VERDICT r6 "What's wrong" #1): suppliers are a
     data-proportional entity (~1e9 at 100 TB), so the slowest-first
     ranking must route through with_global_rank — no SinglePartition
@@ -1337,12 +1324,12 @@ def test_supplier_latency_no_single_partition(spark, sf_dir):
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES["supplier_shipping_latency"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     # with_global_rank: the range exchange, numbered without a Python kernel
     assert "rangepartitioning" in plan and "MapInPandas" not in plan
     bad = [
         i
-        for i in single_partition_exchange_inputs(df)
+        for i in single_partition_exchange_inputs(plan)
         if "supplier" in i or "suppkey" in i or "slow_key" in i
     ]
     assert not bad, bad
@@ -1373,17 +1360,16 @@ def test_holdout_score_map_broadcasts(spark, sf_dir):
     assert flags["BroadcastHashJoin"], flags
 
 
-def test_crossval_is_one_scan_no_global_window(spark, sf_dir, checkpointed):
+def test_crossval_is_one_scan_no_global_window(spark, sf_dir, query_plan):
     """One-pass CV: the fold cum window partitions BY FOLD (no
     whole-histogram funnel), and the complement model is subtraction,
     not a second scan: exactly one parquet scan of lineitem feeds both
     aggregates via the broadcast score map."""
-    df = QUERIES["crossval_auc_folds"](spark, sf_dir)
-    plans = "\n".join([formatted_plan(df), *checkpointed])
+    plan = query_plan(QUERIES["crossval_auc_folds"](spark, sf_dir))
     # exactly one numbered scan node in the detail sections, the
     # checkpointed contingency's included
-    assert len(re.findall(r"\(\d+\) Scan parquet", plans)) == 1
-    assert "BroadcastHashJoin" in plans
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
+    assert "BroadcastHashJoin" in plan
 
 
 def test_negative_sampling_anti_join_keyed(spark, sf_dir):
@@ -1468,22 +1454,19 @@ def test_holt_runs_one_grouped_kernel(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2  # partial + final collapse
 
 
-def test_scc_broadcasts_dims(spark, sf_dir):
-    flags = plan_has(
-        QUERIES["scc_trade_graph"](spark, sf_dir),
-        "BroadcastHashJoin",
-        "MapInPandas",
-    )
+def test_scc_broadcasts_dims(spark, sf_dir, query_plan):
+    plan = query_plan(QUERIES["scc_trade_graph"](spark, sf_dir))
+    flags = {n: n in plan for n in ("BroadcastHashJoin", "MapInPandas")}
     assert all(flags.values()), flags
 
 
-def test_logrank_no_fact_scale_single_partition(spark, sf_dir):
+def test_logrank_no_fact_scale_single_partition(spark, sf_dir, query_plan):
     """The only SinglePartition exchanges may carry scalar/day-domain
     rows — never per-order spans (l_orderkey must not ride one)."""
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES["logrank_priority_survival"](spark, sf_dir)
-    for inputs in single_partition_exchange_inputs(df):
+    for inputs in single_partition_exchange_inputs(query_plan(df)):
         assert "l_orderkey" not in inputs, inputs
 
 
@@ -1510,7 +1493,7 @@ import pytest as _pytest
 
 
 @_pytest.mark.parametrize("name", ROUND8_QUERIES)
-def test_round8_no_fact_scale_single_partition(name, spark, sf_dir):
+def test_round8_no_fact_scale_single_partition(name, spark, sf_dir, query_plan):
     """Every SinglePartition exchange in the round-8 batch may carry
     only scalar-aggregate or bounded-value-domain rows — a fact-keyed
     column riding one means a whole-data funnel crept in (audited clean
@@ -1518,13 +1501,13 @@ def test_round8_no_fact_scale_single_partition(name, spark, sf_dir):
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES[name](spark, sf_dir)
-    for inputs in single_partition_exchange_inputs(df):
+    for inputs in single_partition_exchange_inputs(query_plan(df)):
         assert not any(c in inputs for c in _FACT_COLS), (name, inputs)
     spark.catalog.clearCache()
 
 
 def test_recsys_caps_baskets_before_self_join_and_broadcasts_counts(
-    spark, sf_dir, checkpointed
+    spark, sf_dir, checkpointed, query_plan
 ):
     """Pin for the repo's most expensive query (round-8 verdict: wall-
     clock alone cannot distinguish noise from regression for it). Three
@@ -1603,9 +1586,10 @@ def test_recsys_caps_baskets_before_self_join_and_broadcasts_counts(
         )
 
     # 3. top-k pushdown + broadcast scalar assembly
-    assert "WindowGroupLimit" in plan
-    assert "BroadcastNestedLoopJoin" in plan
-    for inputs in single_partition_exchange_inputs(df):
+    whole = query_plan(df)
+    assert "WindowGroupLimit" in whole
+    assert "BroadcastNestedLoopJoin" in whole
+    for inputs in single_partition_exchange_inputs(whole):
         assert "count#" in inputs, inputs
     spark.catalog.clearCache()
 
@@ -1631,14 +1615,14 @@ ROUND9_QUERIES = [
 
 
 @_pytest.mark.parametrize("name", ROUND9_QUERIES)
-def test_round9_no_fact_scale_single_partition(name, spark, sf_dir):
+def test_round9_no_fact_scale_single_partition(name, spark, sf_dir, query_plan):
     """Every SinglePartition exchange in the round-9 batch may carry
     only scalar-aggregate or bounded-value-domain rows — a fact-keyed
     column riding one means a whole-data funnel crept in."""
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES[name](spark, sf_dir)
-    for inputs in single_partition_exchange_inputs(df):
+    for inputs in single_partition_exchange_inputs(query_plan(df)):
         assert not any(c in inputs for c in _FACT_COLS), (name, inputs)
     spark.catalog.clearCache()
 
@@ -1727,7 +1711,7 @@ ROUND13_QUERIES = [
 
 
 @_pytest.mark.parametrize("name", ROUND14_QUERIES)
-def test_round14_no_fact_scale_single_partition(name, spark, sf_dir):
+def test_round14_no_fact_scale_single_partition(name, spark, sf_dir, query_plan):
     """Every SinglePartition exchange in the round-14 batch may carry
     only scalar-aggregate or bounded-value-domain rows — a fact-keyed
     column riding one means a whole-data funnel crept in (the
@@ -1737,59 +1721,59 @@ def test_round14_no_fact_scale_single_partition(name, spark, sf_dir):
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES[name](spark, sf_dir)
-    for inputs in single_partition_exchange_inputs(df):
+    for inputs in single_partition_exchange_inputs(query_plan(df)):
         assert not any(c in inputs for c in _FACT_COLS), (name, inputs)
     spark.catalog.clearCache()
 
 
 @_pytest.mark.parametrize("name", ROUND13_QUERIES)
-def test_round13_no_fact_scale_single_partition(name, spark, sf_dir):
+def test_round13_no_fact_scale_single_partition(name, spark, sf_dir, query_plan):
     """Every SinglePartition exchange in the round-13 batch may carry
     only scalar-aggregate or bounded-value-domain rows — a fact-keyed
     column riding one means a whole-data funnel crept in."""
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES[name](spark, sf_dir)
-    for inputs in single_partition_exchange_inputs(df):
+    for inputs in single_partition_exchange_inputs(query_plan(df)):
         assert not any(c in inputs for c in _FACT_COLS), (name, inputs)
     spark.catalog.clearCache()
 
 
 @_pytest.mark.parametrize("name", ROUND12_QUERIES)
-def test_round12_no_fact_scale_single_partition(name, spark, sf_dir):
+def test_round12_no_fact_scale_single_partition(name, spark, sf_dir, query_plan):
     """Every SinglePartition exchange in the round-12 batch may carry
     only scalar-aggregate or bounded-value-domain rows — a fact-keyed
     column riding one means a whole-data funnel crept in."""
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES[name](spark, sf_dir)
-    for inputs in single_partition_exchange_inputs(df):
+    for inputs in single_partition_exchange_inputs(query_plan(df)):
         assert not any(c in inputs for c in _FACT_COLS), (name, inputs)
     spark.catalog.clearCache()
 
 
 @_pytest.mark.parametrize("name", ROUND11_QUERIES)
-def test_round11_no_fact_scale_single_partition(name, spark, sf_dir):
+def test_round11_no_fact_scale_single_partition(name, spark, sf_dir, query_plan):
     """Every SinglePartition exchange in the round-11 batch may carry
     only scalar-aggregate or bounded-value-domain rows — a fact-keyed
     column riding one means a whole-data funnel crept in."""
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES[name](spark, sf_dir)
-    for inputs in single_partition_exchange_inputs(df):
+    for inputs in single_partition_exchange_inputs(query_plan(df)):
         assert not any(c in inputs for c in _FACT_COLS), (name, inputs)
     spark.catalog.clearCache()
 
 
 @_pytest.mark.parametrize("name", ROUND10_QUERIES)
-def test_round10_no_fact_scale_single_partition(name, spark, sf_dir):
+def test_round10_no_fact_scale_single_partition(name, spark, sf_dir, query_plan):
     """Every SinglePartition exchange in the round-10 batch may carry
     only scalar-aggregate or bounded-value-domain rows — a fact-keyed
     column riding one means a whole-data funnel crept in."""
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES[name](spark, sf_dir)
-    for inputs in single_partition_exchange_inputs(df):
+    for inputs in single_partition_exchange_inputs(query_plan(df)):
         assert not any(c in inputs for c in _FACT_COLS), (name, inputs)
     spark.catalog.clearCache()
 
@@ -1817,7 +1801,7 @@ def test_bpe_encode_spine_scan_is_pruned(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_label_propagation_collapses_before_iterating(spark, sf_dir):
+def test_label_propagation_collapses_before_iterating(spark, sf_dir, query_plan):
     """The last unpinned heavy query (3.6 s at sf0.1): the fact-fact
     edge collapse must broadcast BOTH dimension sides, every
     SinglePartition exchange may carry only nation-domain rows, and the
@@ -1827,9 +1811,9 @@ def test_label_propagation_collapses_before_iterating(spark, sf_dir):
     from bigdata_2025_1_spark.plans.explain import single_partition_exchange_inputs
 
     df = QUERIES["label_propagation_communities"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert plan.count("BroadcastHashJoin") >= 2  # customer + supplier dims
     assert "WindowGroupLimit" in plan  # rk=1 pushed into the window
-    for inputs in single_partition_exchange_inputs(df):
+    for inputs in single_partition_exchange_inputs(plan):
         assert not any(c in inputs for c in _FACT_COLS), inputs
     spark.catalog.clearCache()

@@ -7,7 +7,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from bigdata_2025_1_spark.plans.explain import (
-    formatted_plan,
     single_partition_exchange_inputs,
     window_node_inputs,
 )
@@ -48,13 +47,13 @@ def test_prefix_min_matches_sequential(spark, points):
         run = v if run is None else min(run, v)
 
 
-def test_skyline_no_single_partition_window(spark, sf_dir):
+def test_skyline_no_single_partition_window(spark, sf_dir, query_plan):
     df = QUERIES["skyline_price_size"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "Exchange SinglePartition" not in plan
-    assert single_partition_exchange_inputs(df) == []
+    assert single_partition_exchange_inputs(plan) == []
     # sweep, not a global window: every window is partition-local
-    assert all("_pid" in i for i in window_node_inputs(df))
+    assert all("_pid" in i for i in window_node_inputs(plan))
     rows = df.collect()
     # frontier shape: strictly increasing price, strictly decreasing size
     prices = [r.price_cents for r in rows]
@@ -173,7 +172,7 @@ def test_global_rank_prefix_rejects_nulls(spark):
         with_global_rank(df, ["k"], prefix_of="v").collect()
 
 
-def test_rank_helpers_start_no_python_worker(spark):
+def test_rank_helpers_start_no_python_worker(spark, query_plan):
     """Every form of the ranking helpers plans with native expressions
     only: no Python evaluation node, so no Python worker starts."""
     from pyspark.sql import functions as F
@@ -186,7 +185,7 @@ def test_rank_helpers_start_no_python_worker(spark):
         with_global_rank(df, ["k"], prefix_of="v"),
         with_prefix_min(df, ["k"], "v"),
     ):
-        plan = formatted_plan(out)
+        plan = query_plan(out)
         for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
             assert node not in plan, node
     spark.catalog.clearCache()

@@ -13,9 +13,9 @@ from bigdata_2025_1_spark.registry import all_queries
 QUERIES = all_queries()
 
 
-def test_semantic_dedup_cell_join_no_cartesian(spark, sf_dir):
+def test_semantic_dedup_cell_join_no_cartesian(spark, sf_dir, query_plan):
     df = QUERIES["semantic_dedup_pairs"](spark, sf_dir)
-    plan = formatted_plan(df)
+    plan = query_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     rows = df.collect()
