@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_2025_1_spark.functions import text as T
+from bigdata_2025_1_spark.functions.pairs import rarest_shingle_pairs
 from bigdata_2025_1_spark.functions.ranks import (
     boundary_rank_keep,
     cum_counts_over_values,
@@ -467,27 +468,10 @@ def corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("sz") > 0)
         .localCheckpoint()
     )
-    posts = sh2.select("doc_id", "sz", F.explode("grams").alias("g"))
-    gdf = posts.groupBy("g").agg(F.count("*").alias("df"))
-    rarest = (
-        posts.join(gdf, "g")
-        .groupBy("doc_id")
-        .agg(F.min(F.struct(F.col("df"), F.col("g"))).alias("r"), F.min("sz").alias("sz"))
-        .select("doc_id", F.col("r.g").alias("g"), "sz")
-    )
-    r = rarest.select(F.col("doc_id").alias("doc_small"), "g", F.col("sz").alias("sz_a"))
-    p = posts.select(F.col("doc_id").alias("doc_big"), "g", F.col("sz").alias("sz_b"))
     sa = sh2.select(F.col("doc_id").alias("doc_small"), F.col("grams").alias("ga"))
     sb = sh2.select(F.col("doc_id").alias("doc_big"), F.col("grams").alias("gb"))
     contained = (
-        r.join(p, "g")
-        .filter(
-            (F.col("doc_small") != F.col("doc_big"))
-            & (
-                (F.col("sz_a") < F.col("sz_b"))
-                | ((F.col("sz_a") == F.col("sz_b")) & (F.col("doc_small") < F.col("doc_big")))
-            )
-        )
+        rarest_shingle_pairs(sh2, "grams")
         .join(sa, "doc_small")
         .join(sb, "doc_big")
         .filter(F.size(F.array_intersect("ga", "gb")) * 10 >= 8 * F.col("sz_a"))

@@ -18,6 +18,9 @@ md5s, which is a valid random permutation and needs no hex→int casting.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_, or_
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -25,6 +28,13 @@ from bigdata_2025_1_spark.functions import text as T
 from bigdata_2025_1_spark.functions.hashing import md5_int, sql_md5_int
 from bigdata_2025_1_spark.functions.iterate import min_label_propagate
 from bigdata_2025_1_spark.functions.overlap import ratio, release_gate
+from bigdata_2025_1_spark.functions.pairs import (
+    band_pairs,
+    jaccard,
+    overlap_sizes,
+    pair_sides,
+    rarest_shingle_pairs,
+)
 from bigdata_2025_1_spark.functions.ranks import with_global_rank
 from bigdata_2025_1_spark.io import load, spread
 from bigdata_2025_1_spark.registry import query
@@ -48,18 +58,23 @@ def _sql_rot_min(i: int) -> str:
 
 _SQL_SIG = ", ".join(f"{_sql_rot_min(i)} AS mh{i}" for i in range(NUM_HASHES))
 
-# The band layout is GENERATED from NUM_HASHES/BANDS exactly like the
-# Spark side (band b = md5 of the contiguous signature slice
-# [b*rows_per_band, (b+1)*rows_per_band)) so changing either constant
-# can never desynchronize oracle and implementation.
+
+def _sql_bands_for(bands: int) -> str:
+    """DuckDB band rows over the ``sig`` CTE, GENERATED from NUM_HASHES
+    exactly like the Spark side (band b = md5 of the contiguous
+    signature slice [b*per, (b+1)*per)), so changing either constant
+    can never desynchronize oracle and implementation."""
+    per = NUM_HASHES // bands
+    return "\n      UNION ALL\n      ".join(
+        f"SELECT doc_id, {b} AS band, "
+        f"md5({' || '.join(f'mh{i}' for i in range(b * per, (b + 1) * per))})"
+        f" AS band_key FROM sig"
+        for b in range(bands)
+    )
+
+
 assert NUM_HASHES % BANDS == 0, "band layout requires BANDS | NUM_HASHES"
-_ROWS_PER_BAND = NUM_HASHES // BANDS
-_SQL_BANDS = "\n      UNION ALL\n      ".join(
-    f"SELECT doc_id, {b} AS band, "
-    f"md5({' || '.join(f'mh{i}' for i in range(b * _ROWS_PER_BAND, (b + 1) * _ROWS_PER_BAND))})"
-    f" AS band_key FROM sig"
-    for b in range(BANDS)
-)
+_SQL_BANDS = _sql_bands_for(BANDS)
 
 
 def signatures_from_docs(docs: DataFrame) -> DataFrame:
@@ -106,40 +121,16 @@ def _cand_jaccard(sig: DataFrame) -> DataFrame:
     ``dedup_minhash_lsh`` (threshold filter + order) and
     ``lsh_recall_eval`` (candidate count + verified count in one
     aggregate) and, through them, the connected-components chain and
-    ``dedup_release_gate`` all consume exactly this frame, so the band
-    self-join and the array-intersect verify are written once. Each
-    consumer reads it once, plain. Inside ``dedup_release_gate`` the
-    verify pass runs once per leg (the recall leg and the canonical-doc
-    leg's connected-components chain): the gate shares the signature
-    frame, not this one.
+    ``dedup_release_gate`` each read this frame once, plain. Inside
+    ``dedup_release_gate`` the verify pass runs once per leg (the
+    recall leg and the canonical-doc leg's connected-components chain):
+    the gate shares the signature frame, not this one.
 
-    Scale shape: unchanged from the shapes it merges — the candidate
-    join moves (band, band_key, doc_id) only; shingle sets join back
-    for candidate pairs alone; jaccard is computed once per pair here
-    instead of once per consuming query."""
-    bands = _band_rows(sig)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sh = sig.select("doc_id", "shingles")
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_distinct(F.concat("sh_a", "sh_b")))
-    jaccard = inter.cast("double") / union
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jaccard.alias("jaccard"))
+    Scale shape: the candidate join moves (band, band_key, doc_id)
+    only; shingle sets join back for candidate pairs alone."""
+    cand = band_pairs(_band_rows(sig), "doc_id")
+    return pair_sides(cand, sig, ["shingles"]).select(
+        "doc_a", "doc_b", jaccard("shingles_a", "shingles_b").alias("jaccard")
     )
 
 
@@ -265,15 +256,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The candidate join carries only (band, band_key, doc_id); shingle sets
     rejoin just for the (few) candidates. Jaccard = |∩|/|∪| is a single
-    int division — bit-stable cross-engine.
-
-    Bench note (r2→r3): the 1.28 s → 2.12 s BENCH_r02 delta was measured
-    on byte-identical code (git diff r1..r2 of this function and its
-    helpers is empty) — it is first-run codegen/JIT variance under
-    best-of-2, not a plan change. Steady-state at sf0.1/local[32] is
-    1.15–1.35 s; a sig-only materialization (re-deriving shingles for
-    the verify joins) was measured SLOWER (3 shingle computations vs 1),
-    so the wide one stays."""
+    int division — bit-stable cross-engine. The checkpointed frame
+    keeps the shingles beside the signature: re-deriving them for the
+    verify joins was measured slower (3 shingle computations vs 1)."""
     # Signatures are expensive (8 seeded md5 passes over every shingle) and
     # feed BOTH the band join (twice) and the verify join (twice), so they
     # are checkpointed: the lineage computes them exactly once.
@@ -514,15 +499,9 @@ def dedup_char_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(sig_matches >= 6)
         .select("doc_a", "doc_b")
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("gb"))
-    inter = F.size(F.array_intersect("ga", "gb"))
-    union = F.size(F.array_distinct(F.concat("ga", "gb")))
-    jaccard = inter.cast("double") / union
     return (
-        pre.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jaccard.alias("jaccard"))
+        pair_sides(pre, sh, ["grams"])
+        .select("doc_a", "doc_b", jaccard("grams_a", "grams_b").alias("jaccard"))
         .filter(F.col("jaccard") >= 0.7)
         .orderBy("doc_a", "doc_b")
     )
@@ -849,34 +828,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", T.word_shingles(F.col("text"), k=3).alias("shingles")
     ).localCheckpoint()
     sh = sh0.withColumn("sz", F.size("shingles")).filter(F.col("sz") > 0)
-    posts = sh.select("doc_id", "sz", F.explode("shingles").alias("shingle"))
-    df = posts.groupBy("shingle").agg(F.count("*").alias("df"))
-    rarest = (
-        posts.join(df, "shingle")
-        .groupBy("doc_id")
-        .agg(
-            F.min(F.struct(F.col("df"), F.col("shingle"))).alias("r"),
-            F.min("sz").alias("sz"),
-        )
-        .select("doc_id", F.col("r.shingle").alias("shingle"), "sz")
-    )
-    r = rarest.select(
-        F.col("doc_id").alias("doc_small"),
-        F.col("shingle").alias("shingle"),
-        F.col("sz").alias("sz_a"),
-    )
-    p = posts.select(
-        F.col("doc_id").alias("doc_big"),
-        F.col("shingle").alias("shingle"),
-        F.col("sz").alias("sz_b"),
-    )
-    cand = r.join(p, "shingle").filter(
-        (F.col("doc_small") != F.col("doc_big"))
-        & (
-            (F.col("sz_a") < F.col("sz_b"))
-            | ((F.col("sz_a") == F.col("sz_b")) & (F.col("doc_small") < F.col("doc_big")))
-        )
-    ).select("doc_small", "doc_big")
+    cand = rarest_shingle_pairs(sh, "shingles").select("doc_small", "doc_big")
     sa = sh.select(
         F.col("doc_id").alias("doc_small"), F.col("shingles").alias("ga"), F.col("sz").alias("sza")
     )
@@ -987,16 +939,10 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least("doc_a", "doc_b").alias("doc_a"),
         F.greatest("doc_a", "doc_b").alias("doc_b"),
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("ga"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("gb"))
-    inter = F.size(F.array_intersect("ga", "gb"))
-    union = F.size(F.array_distinct(F.concat("ga", "gb")))
-    jaccard = inter.cast("double") / union
     return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter((F.size("ga") > 0) & (F.size("gb") > 0))
-        .select("doc_a", "doc_b", jaccard.alias("jaccard"))
+        pair_sides(pairs, sh, ["shingles"])
+        .filter((F.size("shingles_a") > 0) & (F.size("shingles_b") > 0))
+        .select("doc_a", "doc_b", jaccard("shingles_a", "shingles_b").alias("jaccard"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .orderBy("doc_a", "doc_b")
     )
@@ -1088,43 +1034,24 @@ def minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     back for candidates only) — the audit costs one more projection on
     the pairs the pipeline already computes."""
     sig = _signatures(spark, sf_dir).localCheckpoint()
-    bands = _band_rows(sig)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("ga"),
-        *[F.col("sig")[i].alias(f"ma{i}") for i in range(NUM_HASHES)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("gb"),
-        *[F.col("sig")[i].alias(f"mb{i}") for i in range(NUM_HASHES)],
+    cand = band_pairs(_band_rows(sig), "doc_id")
+    # signature elements are extracted once per doc, not once per pair
+    mh = [f"mh{i}" for i in range(NUM_HASHES)]
+    flat = sig.select(
+        "doc_id", "shingles", *[F.col("sig")[i].alias(m) for i, m in enumerate(mh)]
     )
     n_agree = sum(
-        F.when(F.col(f"ma{i}") == F.col(f"mb{i}"), 1).otherwise(0)
-        for i in range(NUM_HASHES)
+        F.when(F.col(f"{m}_a") == F.col(f"{m}_b"), 1).otherwise(0) for m in mh
     )
-    inter = F.size(F.array_intersect("ga", "gb"))
-    uni = F.size(F.array_distinct(F.concat("ga", "gb")))
+    inter, uni = overlap_sizes("shingles_a", "shingles_b")
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        pair_sides(cand, flat, ["shingles", *mh])
         .select(
             "doc_a",
             "doc_b",
             n_agree.cast("bigint").alias("n_agree"),
             (n_agree.cast("double") / NUM_HASHES).alias("jaccard_est"),
-            (inter.cast("double") / uni).alias("jaccard_exact"),
+            jaccard("shingles_a", "shingles_b").alias("jaccard_exact"),
             F.abs(n_agree * uni - NUM_HASHES * inter).cast("bigint").alias(
                 "abs_err_scaled"
             ),
@@ -1178,27 +1105,11 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical candidate discipline to the LSH query; the
     sweep adds conditional sums on the already-joined pairs."""
     sig = _signatures(spark, sf_dir).localCheckpoint()
-    bands = _band_rows(sig)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("ga"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("gb"))
+    cand = band_pairs(_band_rows(sig), "doc_id")
+    inter, uni = overlap_sizes("shingles_a", "shingles_b")
     scored = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            F.size(F.array_intersect("ga", "gb")).alias("inter"),
-            F.size(F.array_distinct(F.concat("ga", "gb"))).alias("uni"),
-        )
+        pair_sides(cand, sig, ["shingles"])
+        .select(inter.alias("inter"), uni.alias("uni"))
         .localCheckpoint()
     )
     outs = []
@@ -1303,42 +1214,7 @@ def lsh_admission_log(new_sig: DataFrame, corpus_sig: DataFrame) -> DataFrame:
         F.col("doc_id").alias("doc_old"), "band", "band_key"
     )
     cand = nb.join(ob, ["band", "band_key"]).select("doc_new", "doc_old").distinct()
-    sa = new_sig.select(
-        F.col("doc_id").alias("doc_new"), F.col("shingles").alias("sh_a")
-    )
-    sb = corpus_sig.select(
-        F.col("doc_id").alias("doc_old"), F.col("shingles").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_distinct(F.concat("sh_a", "sh_b")))
-    scored = (
-        cand.join(sa, "doc_new")
-        .join(sb, "doc_old")
-        .filter((F.size("sh_a") > 0) & (F.size("sh_b") > 0))
-        .select("doc_new", "doc_old", (inter.cast("double") / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
-    wn = Window.partitionBy("doc_new")
-    best = (
-        scored.withColumn("n_dups", F.count("*").over(wn))
-        .withColumn(
-            "rn",
-            F.row_number().over(wn.orderBy(F.desc("jaccard"), "doc_old")),
-        )
-        .filter(F.col("rn") == 1)
-    )
-    new_docs = new_sig.select(F.col("doc_id").alias("doc_new"))
-    return (
-        new_docs.join(best, "doc_new", "left")
-        .select(
-            "doc_new",
-            F.coalesce(F.col("n_dups"), F.lit(0)).alias("n_dups"),
-            F.col("doc_old").alias("dup_of"),
-            "jaccard",
-            F.col("doc_old").isNull().alias("is_new_content"),
-        )
-        .orderBy("doc_new")
-    )
+    return _admission_from_candidates(new_sig, corpus_sig, cand)
 
 
 # --- arrival-ordered incremental LSH (growing index) ----------------------
@@ -1463,23 +1339,20 @@ def lsh_ingest_step(batch_sig: DataFrame, standing_sig: DataFrame) -> DataFrame:
 def _admission_from_candidates(
     new_sig: DataFrame, old_sig: DataFrame, cand: DataFrame
 ) -> DataFrame:
-    """Shared verify+log tail: exact-Jaccard verification of candidate
-    pairs, per-new-doc best-match window, LEFT-JOIN admission log (the
-    lsh_admission_log tail, factored so the arrival/ingest variants
-    cannot drift from it)."""
+    """Shared verify+log tail of the frozen-corpus, arrival and ingest
+    admission logs: exact-Jaccard verification of candidate pairs,
+    per-new-doc best-match window, LEFT-JOIN admission log."""
     sa = new_sig.select(
         F.col("doc_id").alias("doc_new"), F.col("shingles").alias("sh_a")
     )
     sb = old_sig.select(
         F.col("doc_id").alias("doc_old"), F.col("shingles").alias("sh_b")
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_distinct(F.concat("sh_a", "sh_b")))
     scored = (
         cand.join(sa, "doc_new")
         .join(sb, "doc_old")
         .filter((F.size("sh_a") > 0) & (F.size("sh_b") > 0))
-        .select("doc_new", "doc_old", (inter.cast("double") / union).alias("jaccard"))
+        .select("doc_new", "doc_old", jaccard("sh_a", "sh_b").alias("jaccard"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
     wn = Window.partitionBy("doc_new")
@@ -1908,16 +1781,9 @@ def _prefix_truth(sh2: DataFrame) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sa = sh2.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh2.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    jaccard = (
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.size(F.array_distinct(F.concat("sh_a", "sh_b")))
-    )
     return (
-        tcand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jaccard >= JACCARD_THRESHOLD)
+        pair_sides(tcand, sh2, ["shingles"])
+        .filter(jaccard("shingles_a", "shingles_b") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b")
     )
 
@@ -2251,18 +2117,6 @@ SWEEP_CONFIGS: "tuple[tuple[int, int], ...]" = tuple(
 )
 
 
-def _sql_bands_for(bands: int) -> str:
-    """Per-config DuckDB band rows over the ``sig`` CTE (generalizes
-    the module-level _SQL_BANDS, which is this at bands=BANDS)."""
-    per = NUM_HASHES // bands
-    return "\n      UNION ALL\n      ".join(
-        f"SELECT doc_id, {b} AS band, "
-        f"md5({' || '.join(f'mh{i}' for i in range(b * per, (b + 1) * per))})"
-        f" AS band_key FROM sig"
-        for b in range(bands)
-    )
-
-
 def _sweep_oracle() -> str:
     blocks = []
     selects = []
@@ -2348,66 +2202,31 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     finest (8x1) banding's candidate set is a superset of every coarser
     config's (slice agreement implies sub-band agreement), so all four
     configs reduce to membership flags over that single candidate frame
-    (never all-pairs; round 14 collapsed the former one-join-per-config
-    grid into this). The truth side is the prefix-filter machinery
+    (never all-pairs). The truth side is the prefix-filter machinery
     already scale-audited in ``lsh_recall_eval``; assembly explodes a
     4-struct array out of one aggregate row cross-joined with one
     broadcast scalar."""
     sig = _signatures(spark, sf_dir).localCheckpoint()
     sh = sig.select("doc_id", "shingles", F.size("shingles").alias("sz"))
     sh2 = sh.filter(F.col("sz") > 0)
-    # ONE band self-join for all four configs (optimization round 14;
-    # was: one join + distinct + persist + verify join per config). The
-    # finest banding (8 bands of 1 row) admits every pair ANY coarser
-    # banding admits: agreeing on a 4/2/1-band slice means agreeing on
-    # each single-hash sub-band of that slice. So the 8-band candidate
-    # set is the superset grid, and each config's membership is decided
-    # per pair by direct signature-slice equality (band_key = md5 of
-    # the concatenated fixed-width mh slice, so md5-key equality <=>
-    # slice equality — the same predicate the per-config joins tested).
-    br8 = _band_rows(sig, 8)
-    ba, bb = br8.alias("a"), br8.alias("b")
-    cand8 = (
-        ba.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")
-    )
+    # ONE band self-join for all four configs (the 8x1 superset, see
+    # above); a config's membership is signature-slice equality (its
+    # band_key is the md5 of the fixed-width slice, so key equality <=>
+    # slice equality).
+    cand8 = band_pairs(_band_rows(sig, 8), "doc_id")
 
     def member(bands_n: int) -> F.Column:
         per = NUM_HASHES // bands_n
-        band_eq = []
-        for b in range(bands_n):
-            eqs = [
-                F.col("sig_a")[i] == F.col("sig_b")[i]
-                for i in range(b * per, (b + 1) * per)
-            ]
-            conj = eqs[0]
-            for e in eqs[1:]:
-                conj = conj & e
-            band_eq.append(conj)
-        disj = band_eq[0]
-        for e in band_eq[1:]:
-            disj = disj | e
-        return disj
+        eq = [F.col("sig_a")[i] == F.col("sig_b")[i] for i in range(NUM_HASHES)]
+        return reduce(
+            or_,
+            (reduce(and_, eq[b * per : (b + 1) * per]) for b in range(bands_n)),
+        )
 
     # Candidate counts per config: membership flags over the superset
     # pairs need only the SIGNATURES (8 fixed-width md5 strings), never
     # the shingle arrays — no per-pair jaccard here.
-    cflags = cand8.join(sa, "doc_a").join(sb, "doc_b").select(
+    cflags = pair_sides(cand8, sig, ["sig"]).select(
         *[member(b).alias(f"m{b}") for b, _ in SWEEP_CONFIGS],
     )
     c_counts = cflags.agg(
@@ -2422,15 +2241,11 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefix-filter guarantee) and config verify applies the SAME exact
     # jaccard, so verified(config) == truth-pairs that the config
     # banding admits — flag the (tiny) truth pair set instead of
-    # re-verifying tens of thousands of superset candidates (round-14
-    # measurement: the jaccard verify over the 8x1 candidate set was
-    # the sweep's dominant stage; this replaces it with a ~truth-sized
-    # flag pass). n_true_pairs rides the same aggregate.
-    truth_flags = (
-        _prefix_truth(sh2)
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(*[member(b).alias(f"m{b}") for b, _ in SWEEP_CONFIGS])
+    # re-verifying the far larger superset candidate set, whose jaccard
+    # verify would be the sweep's dominant stage. n_true_pairs rides the
+    # same aggregate.
+    truth_flags = pair_sides(_prefix_truth(sh2), sig, ["sig"]).select(
+        *[member(b).alias(f"m{b}") for b, _ in SWEEP_CONFIGS]
     )
     v_counts = truth_flags.agg(
         F.count("*").cast("bigint").alias("n_true_pairs"),
@@ -2444,7 +2259,7 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = c_counts.crossJoin(F.broadcast(v_counts))
     # the 4-row grid explodes out of the ONE aggregate row (a union of
     # four selects over it would re-run the whole candidate pipeline
-    # once per config — the exact duplication this rewrite removes)
+    # once per config)
     grid = counts.select(
         "n_true_pairs",
         F.explode(

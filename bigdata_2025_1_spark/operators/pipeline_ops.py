@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from bigdata_2025_1_spark.functions import text as T
 from bigdata_2025_1_spark.functions.hashing import md5_int, sql_md5_int
 from bigdata_2025_1_spark.functions.overlap import ratio, release_gate
+from bigdata_2025_1_spark.functions.pairs import jaccard
 from bigdata_2025_1_spark.io import load, spread
 from bigdata_2025_1_spark.registry import query
 
@@ -343,12 +344,9 @@ def corpus_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = sig.select("doc_id", "shingles", band_key.alias("bk"))
     a = keyed.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa"), F.col("bk").alias("bk_a"))
     b = keyed.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sb"), F.col("bk").alias("bk_b"))
-    jacc = F.size(F.array_intersect("sa", "sb")).cast("double") / F.size(
-        F.array_distinct(F.concat("sa", "sb"))
-    )
     near_dropped = (
         a.join(b, (F.col("bk_a") == F.col("bk_b")) & (F.col("doc_a") < F.col("doc_b")))
-        .filter(jacc >= 0.8)
+        .filter(jaccard("sa", "sb") >= 0.8)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from bigdata_2025_1_spark.functions import vectors as V
 from bigdata_2025_1_spark.functions.iterate import min_label_propagate
 from bigdata_2025_1_spark.functions.overlap import release_gate
+from bigdata_2025_1_spark.functions.pairs import band_pairs, pair_sides
 from bigdata_2025_1_spark.io import load, spread
 from bigdata_2025_1_spark.functions.ranks import rank_after_limit
 from bigdata_2025_1_spark.registry import query
@@ -171,29 +172,17 @@ def ann_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = sig.select("vec_id", "srp_sig")
     hi = keyed.select("vec_id", F.lit(0).alias("band"), F.expr("srp_sig div 256").alias("band_key"))
     lo = keyed.select("vec_id", F.lit(1).alias("band"), (F.col("srp_sig") % 256).alias("band_key"))
-    banded = hi.unionByName(lo)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    qa = sig.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"), F.col("nsq").alias("nsq_a"))
-    qb = sig.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"), F.col("nsq").alias("nsq_b"))
+    cand = band_pairs(hi.unionByName(lo), "vec_id")
     # verify stage has the large pair count → Arrow-vectorized dot kernel
     # (bit-identical to the expression version; see make_dot_scaled_pandas)
     dot_pd = V.make_dot_scaled_pandas()
     cosine = V.cosine_from_scaled(
-        dot_pd(F.col("emb_a"), F.col("emb_b")), F.col("nsq_a"), F.col("nsq_b")
+        dot_pd(F.col("embedding_a"), F.col("embedding_b")),
+        F.col("nsq_a"),
+        F.col("nsq_b"),
     )
     return (
-        cand.join(qa, "vec_a")
-        .join(qb, "vec_b")
+        pair_sides(cand, sig, ["embedding", "nsq"])
         .select("vec_a", "vec_b", cosine.alias("cosine"))
         .filter(F.col("cosine") >= NEAR_DUP_COS)
         .orderBy("vec_a", "vec_b")
