@@ -10,14 +10,42 @@ blocks pushdown fails CI, not a 100 TB run.
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
     )
+
+
+@contextmanager
+def checkpointed_plans(spark: SparkSession) -> Iterator[list[str]]:
+    """Collect, in order, the formatted plans of the frames
+    local-checkpointed inside the block. A checkpoint's plan no longer
+    shows in the plan of a frame that reads it, so a query's whole shape
+    is its returned plan followed by these (``whole_plan``)."""
+    plans: list[str] = []
+    frame = type(spark.range(1))
+    checkpoint = frame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(formatted_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    frame.localCheckpoint = spy
+    try:
+        yield plans
+    finally:
+        frame.localCheckpoint = checkpoint
+
+
+def whole_plan(df: DataFrame, checkpointed: list[str]) -> str:
+    """``df``'s formatted plan followed by the ``checkpointed`` plans."""
+    return "\n".join([formatted_plan(df), *checkpointed])
 
 
 def executed_plan(df: DataFrame) -> str:

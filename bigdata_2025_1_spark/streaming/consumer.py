@@ -12,26 +12,31 @@ This version:
   maxRatePerPartition, consumer.py:25), file/memory streams in tests;
 - ONE distributed aggregate per micro-batch, a per-domain groupBy whose
   few rows fold into the stats row in Python (the reference runs 4+
-  aggregations and counts twice — consumer.py:36,47,53,71); with the
-  one-row parquet append that is 3 Spark jobs per batch, and nothing
-  is cached;
-- stats go to a STRUCTURED sink (parquet append / in-memory list), shaped
-  per export_stats.py:36-42, never scraped from logs;
+  aggregations and counts twice — consumer.py:36,47,53,71); that is 2
+  Spark jobs per batch, and nothing is cached;
+- stats go to a STRUCTURED sink (in-memory list, and optionally one
+  parquet file per batch written without a Spark job), shaped per
+  export_stats.py:36-42, never scraped from logs; a replayed batch
+  overwrites its own file, so the parquet table holds one row per batch;
 - registers the batch as temp view ``documents`` so the reference's SQL
   entry point (spark/visualize.py:27) works live.
 """
 
 from __future__ import annotations
 
-import json
+import functools
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, TimestampType
 
 from bigdata_2025_1_spark.sources.kafka_shape import consumer_parse
 
@@ -79,38 +84,61 @@ def batch_stats(batch_df: DataFrame) -> dict:
 @dataclass
 class StatsSink:
     """Structured replacement for A11 log-scraping: collects one stats row
-    per micro-batch; optionally appends to a parquet table."""
+    per micro-batch; optionally also writes it to a parquet table."""
 
     parquet_path: str | None = None
     rows: list[dict] = field(default_factory=list)
 
     def write(self, batch_id: int, stats: dict) -> None:
-        """Stamp a ``batch_stats`` row and store it. The parquet copy is a
-        one-row frame of JVM literals, so the append runs no Python-RDD
-        scan and never re-reads the batch; it finishes before returning."""
+        """Stamp a ``batch_stats`` row and store it. The parquet copy is
+        written on the driver, with no Spark job, before returning."""
         ts_us = time.time_ns() // 1000
         if self.parquet_path:
-            (
-                SparkSession.active()
-                .range(1, numPartitions=1)
-                .select(
-                    F.lit(batch_id).cast("bigint").alias("batch_id"),
-                    F.timestamp_micros(F.lit(ts_us)).alias("ts"),
-                    F.from_json(F.lit(json.dumps(stats)), STATS_BODY).alias("s"),
-                )
-                .select("batch_id", "ts", "s.*")
-                .write.mode("append")
-                .parquet(self.parquet_path)
-            )
+            _write_row_file(self.parquet_path, batch_id, {"batch_id": batch_id, "ts": ts_us, **stats})
         # ts as a collect of the parquet copy would return it
         ts = TimestampType().fromInternal(ts_us).isoformat()
         self.rows.append({"batch_id": batch_id, "ts": ts, **stats})
 
 
+@functools.cache
+def _stats_arrow_schema() -> pa.Schema:
+    return to_arrow_schema(StructType.fromDDL(STATS_SCHEMA))
+
+
+def _write_row_file(path: str, batch_id: int, row: dict) -> None:
+    """Write ``row`` as the one-row parquet file of its micro-batch under
+    ``path``, through the Hadoop FileSystem of ``path``'s scheme.
+
+    The file is named by the streaming query's id and the batch id, so a
+    batch replayed after a crash overwrites its own row, and a query run
+    from another checkpoint into the same path adds rows beside it. The
+    bytes go to a hidden temp name first and are renamed into place, so
+    a reader sees either no file or the whole file."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist([row], _stats_arrow_schema()), buf)
+    sc = SparkSession.active().sparkContext
+    # unset when the sink is called outside a streaming query
+    query_id = sc.getLocalProperty("sql.streaming.queryId") or "batch"
+    hpath = sc._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    final = hpath(path, f"{query_id}-{batch_id:020d}.parquet")
+    tmp = hpath(path, f".{uuid.uuid4().hex}.tmp")
+    fs = final.getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
+    out = fs.create(tmp, True)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        # a replayed batch: Hadoop's rename does not replace a file
+        fs.delete(final, False)
+        if not fs.rename(tmp, final):
+            raise OSError(f"could not rename {tmp} to {final}")
+
+
 def make_foreach_batch(sink: StatsSink) -> Callable[[DataFrame, int], None]:
-    """foreachBatch body (F3). Reads the batch once: ``batch_stats``'s
-    aggregate (2 jobs under AQE) plus the sink's parquet append (1 job);
-    nothing is cached. Registers the batch as a temp view for the
+    """foreachBatch body (F3). Reads the batch once, in ``batch_stats``'s
+    aggregate (2 jobs under AQE); the sink's parquet write runs no job,
+    and nothing is cached. Registers the batch as a temp view for the
     live-SQL path (EP2)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

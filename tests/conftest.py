@@ -25,23 +25,13 @@ def sf_dir() -> str:
 
 
 @pytest.fixture
-def checkpointed(spark, monkeypatch):
+def checkpointed(spark):
     """Formatted plans of the frames local-checkpointed while the test
-    builds its queries, in order. A checkpoint's plan no longer shows in
-    the plan of a frame that reads it, so a pin on a query's whole shape
-    reads these too."""
-    from bigdata_2025_1_spark.plans.explain import formatted_plan
+    builds its queries, in order (``plans.explain.checkpointed_plans``)."""
+    from bigdata_2025_1_spark.plans.explain import checkpointed_plans
 
-    plans = []
-    frame = type(spark.range(1))
-    checkpoint = frame.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        plans.append(formatted_plan(self))
-        return checkpoint(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame, "localCheckpoint", spy)
-    return plans
+    with checkpointed_plans(spark) as plans:
+        yield plans
 
 
 @pytest.fixture
@@ -50,6 +40,6 @@ def query_plan(checkpointed):
     of the frames the test has local-checkpointed so far — the whole
     shape the query runs, as the plan-text helpers of
     ``plans/explain.py`` read it."""
-    from bigdata_2025_1_spark.plans.explain import formatted_plan
+    from bigdata_2025_1_spark.plans.explain import whole_plan
 
-    return lambda df: "\n".join([formatted_plan(df), *checkpointed])
+    return lambda df: whole_plan(df, checkpointed)

@@ -14,6 +14,12 @@ engine (``tools/ab.py`` ``checkout``/``run_side``): the OLD side a
 ``git archive REF bigdata_2025_1_spark`` extract, so a change to a
 shared helper module shows up in every query that calls it.
 
+A query's plan is its returned frame's plan followed by the plan of
+every frame it local-checkpointed while it was built
+(``plans/explain.py`` ``checkpointed_plans``/``whole_plan``, loaded
+from this tree on both sides), so a stage materialized by an eager
+checkpoint is compared too.
+
 Usage:
     python tools/plandiff.py [--ref REF] [--sf DIR] [--full] query ...
     python tools/plandiff.py --all            # every registered query
@@ -49,15 +55,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.ab import REPO, checkout, run_side
 
-# Child program: the formatted plan of each named query, or the class of
-# the error its planning raised; a query the side does not register is
-# left out. argv[1] is JSON: {"sf", "queries", "session": get_spark kwargs}.
+# Child program: the whole plan of each named query, or the class of the
+# error its planning raised; a query the side does not register is left
+# out. argv[1] is JSON: {"sf", "queries", "session": get_spark kwargs,
+# "explain": path of the plan-capture module both sides use}.
 PLANS = """
-import json, sys
-from bigdata_2025_1_spark.plans.explain import formatted_plan
+import importlib.util, json, sys
 from bigdata_2025_1_spark.registry import all_queries
 from bigdata_2025_1_spark.session import get_spark
 spec = json.loads(sys.argv[1])
+mod = importlib.util.spec_from_file_location("plan_capture", spec["explain"])
+explain = importlib.util.module_from_spec(mod)
+mod.loader.exec_module(explain)
 spark = get_spark("plans", **spec["session"])
 qs = all_queries()
 out = {}
@@ -65,17 +74,19 @@ for q in spec["queries"]:
     if q in qs:
         spark.catalog.clearCache()
         try:
-            out[q] = formatted_plan(qs[q](spark, spec["sf"]))
+            with explain.checkpointed_plans(spark) as checkpointed:
+                out[q] = explain.whole_plan(qs[q](spark, spec["sf"]), checkpointed)
         except Exception as e:
             out[q] = {"error": e.__class__.__name__}
 spark.stop()
 print("SIDE_RESULT " + json.dumps(out))
 """
+EXPLAIN = os.path.join(REPO, "bigdata_2025_1_spark", "plans", "explain.py")
 
 
 def side_plans(root: str, sf: str, queries: list[str], **session) -> dict:
-    """Formatted plans of ``queries`` from the engine under ``root``."""
-    spec = {"sf": sf, "queries": queries, "session": session}
+    """Whole plans of ``queries`` from the engine under ``root``."""
+    spec = {"sf": sf, "queries": queries, "session": session, "explain": EXPLAIN}
     return run_side(root, PLANS, json.dumps(spec))
 
 _NOISE = [
